@@ -21,43 +21,42 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(cpus, conf = Map(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.debug.maxToStringFields" -> "2000"))
 
+    // a bad table or gate costs only the queries that touch it (-1 in
+    // `queries`), never the whole run — but it says so: stderr now, and
+    // the gate's exception under `errors` in the full line
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def failed(what: String, e: Throwable): Unit = {
+      System.err.println(s"[bench] $what failed: $e")
+      errors.getOrElseUpdate(what, e.toString)
+    }
     graft.core.Tables.names.foreach { t =>
       // noop-write scans every column's data pages, not just the footer,
       // so timed runs never pay cold page-cache I/O
       try graft.core.Tables.t(spark, sfDir, t)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] table $t warm-up failed: $e") }
     }
-    // same swallow-and-continue as the table loop: a bad table should cost
-    // only the queries that touch it (-1), not the whole bench run
-    try graft.queries.SparqlQueries.warm(spark, sfDir)
-    catch { case _: Throwable => }
-    // untimed pass over every query: pays Catalyst analysis, whole-stage
-    // codegen compilation, and JIT once, so the timed runs below measure
-    // the steady state a long-lived engine serves (the reference harness
-    // likewise reports over repeated runs, `tests/benchmark/run.pl:47-80`)
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (sys.env.get("SPARK_GRAFT_ONLY")
-          .forall(re => re.r.findFirstIn(name).isDefined))
-        try fn(spark, sfDir).count() catch { case _: Throwable => }
-    }
-
+    graft.queries.SparqlQueries.warm(spark, sfDir)
     // SPARK_GRAFT_ONLY: regex over query names for family rehearsals
     // (e.g. the sf10 dedup run) — a filtered run also skips the ingest
     // bench (it reads lineitem, which a family dataset may not carry)
     val onlyRe = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
     def selected(name: String): Boolean =
       onlyRe.forall(_.findFirstIn(name).isDefined)
+    // untimed pass over every query: pays Catalyst analysis, whole-stage
+    // codegen compilation, and JIT once, so the timed runs below measure
+    // the steady state a long-lived engine serves (the reference harness
+    // likewise reports over repeated runs, `tests/benchmark/run.pl:47-80`)
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      if (selected(name))
+        try fn(spark, sfDir).count()
+        catch { case e: Throwable => failed(name, e) }
+    }
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(t => selected(t._1)).map {
       case (name, fn) =>
@@ -77,7 +76,7 @@ object Bench {
         def once(): Double = {
           val t0 = System.nanoTime()
           try { fn(spark, sfDir).count() }
-          catch { case _: Throwable => return -1.0 }
+          catch { case e: Throwable => failed(name, e); return -1.0 }
           (System.nanoTime() - t0) / 1e9
         }
         val samples = Iterator.continually(once()).take(3).toSeq
@@ -98,8 +97,11 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = results.map(_._2.head).sum
     val ingest = if (onlyRe.isDefined) "" else ingestBench(spark, sfDir)
+    val errs = errors.map { case (k, v) =>
+      s""""$k":"${graft.sinks.Results.jsonEscape(v)}""""
+    }.mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,$ingest"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"errors":$errs,$ingest"sf":"$sfDir"}"""
     println(fullLine)
     // r18 (VERDICT_r17 item 1): the driver captures only a ~2000-char
     // stdout TAIL, which the full line above (~10 KB at 130 queries) has
@@ -184,19 +186,6 @@ object Bench {
       // the ingest pipeline, not old-gen GC against unrelated caches
       spark.catalog.clearCache()
       System.gc()
-      def phase(name: String): Unit = if (sys.env.contains("SPARK_GRAFT_INGEST_DEBUG")) {
-        import scala.jdk.CollectionConverters._
-        val gc = java.lang.management.ManagementFactory
-          .getGarbageCollectorMXBeans.asScala
-          .map(b => s"${b.getName}=${b.getCollectionTime}ms").mkString(",")
-        val cc = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
-          .asScala.filter(_.getName.contains("CodeHeap"))
-          .map(p => s"${p.getName}=${p.getUsage.getUsed / 1024 / 1024}m")
-          .mkString(",")
-        System.err.println(
-          s"[ingest-debug] $name t=${System.nanoTime() / 1e9} gc[$gc] cc[$cc]")
-      }
-      phase("start")
       var n = 0L
       def once(): Double = {
         Seq("bench_ingest_quads", "bench_ingest_resources").foreach { tn =>
@@ -210,11 +199,8 @@ object Bench {
         }
         val t0 = System.nanoTime()
         val st = graft.rdf.QuadStore.fromNTriples(spark, ntPath, "urn:g/bench")
-        phase("built")
         st.saveBucketed("bench_ingest")
-        phase("saved")
         n = spark.table("bench_ingest_quads").count()
-        phase("counted")
         (System.nanoTime() - t0) / 1e9
       }
       // best-of-2, the query-timing convention: the first pass after the

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the frozen BPE merge table
   * (`src/main/resources/graft/bpe_canonical_merges.tsv`) from the driver
   * corpus — see [[graft.operators.Bpe.canonicalMerges]]. Run once per
@@ -15,12 +13,7 @@ object BpeFreeze {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1)
       .getOrElse("src/main/resources/graft/bpe_canonical_merges.tsv")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("8")
     val docs = graft.core.Tables.t(spark, sfDir, "documents")
     val merges = graft.operators.Bpe.train(docs, "text", numMerges = 200)
     val p = java.nio.file.Paths.get(out)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.rdf.{QuadStore, Rid}
 
@@ -29,14 +28,7 @@ object InfoCli {
         "usage: InfoCli <data> <noop|freq|uuid|size|bind|resolve> [args]")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.cli()
     val store =
       if (new java.io.File(args(0)).isDirectory) {
         val dir = new java.io.File(args(0))

@@ -59,14 +59,7 @@ object QueryCli {
       if (rest.length >= 3 && formats(rest(1))) (rest(1), rest(2))
       else ("text", rest(1))
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.cli()
     spark.conf.set("spark.graft.optLevel", optLevel.toString)
 
     val store =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only generator for the sf1 scale-rehearsal dataset (10× the
@@ -38,11 +38,7 @@ object Sf1Gen {
     val way = args.lift(3).map(_.toInt).getOrElse(copies)
     def wanted(t: String): Boolean = only.forall(_.contains(t))
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("32")
 
     val off = 100000000L
     def rep(t: String, keys: Seq[String],

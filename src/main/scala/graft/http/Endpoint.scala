@@ -54,13 +54,14 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
     * effectively uncancellable — Catalyst's ConvertToLocalRelation
     * folds filters over LocalRelation into driver-side optimizer work
     * (no task to kill), and LocalTableScan-fed stages were observed to
-    * ignore task-kill until partition end (KillProbe: rdd-backed dies
-    * in 30 ms, local-relation runs 18 min to completion). A timed
-    * endpoint must never serve one, so any LocalRelation leaf in the
-    * initial store's plans is converted to an RDD-backed plan via an
-    * eager localCheckpoint at construction — before the first query.
-    * In-memory stores are small by nature (they were built from a
-    * driver-side Seq), so the one-off checkpoint cost is trivial. */
+    * ignore task-kill until partition end (the KillProbe at commit
+    * 61b514e: rdd-backed dies in 30 ms, local-relation runs 18 min to
+    * completion). A timed endpoint must never serve one, so any
+    * LocalRelation leaf in the initial store's plans is converted to an
+    * RDD-backed plan via an eager localCheckpoint at construction —
+    * before the first query. In-memory stores are small by nature (they
+    * were built from a driver-side Seq), so the one-off checkpoint cost
+    * is trivial. */
   private def killable(st: QuadStore): QuadStore =
     if (queryTimeoutSec <= 0) st
     else {
@@ -257,6 +258,19 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
     ex.close()
   }
 
+  /** The error answer every handler shares. The message goes through
+    * the JSON escaper: a quote or newline in it must not break the
+    * body. */
+  private def failed(ex: HttpExchange): PartialFunction[Throwable, Unit] = {
+    case _: java.util.concurrent.TimeoutException =>
+      respond(ex, 503, """{"error":"query timeout exceeded"}""")
+    case _: Endpoint.BodyTooLarge =>
+      respond(ex, 413, """{"error":"request body too large"}""")
+    case e: Exception =>
+      respond(ex, 400, s"""{"error":"${
+        Results.jsonEscape(String.valueOf(e.getMessage))}"}""")
+  }
+
   /** chunked streaming response — result rows go out as they arrive
     * from `toLocalIterator` (the reference serializes row-at-a-time,
     * `results.c:2598+`); a huge CONSTRUCT/SELECT never materializes in
@@ -275,7 +289,12 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
         // reference's `# warning` comment convention) so a client can
         // tell a failed stream from a complete one, then rethrow for
         // the handler's logging path
-        try { w.write(s"\n# ERROR: ${e.getMessage}\n"); w.flush() }
+        // newlines flattened: the marker must stay ONE comment line
+        try {
+          w.write(s"\n# ERROR: ${
+            String.valueOf(e.getMessage).replaceAll("[\r\n]+", " ")}\n")
+          w.flush()
+        }
         catch { case _: Throwable => }
         throw e
     } finally ex.close()
@@ -503,14 +522,7 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
               Results.writeJson(df, _, p.getOrElse("callback", "")))
           }
       }
-    } catch {
-      case _: java.util.concurrent.TimeoutException =>
-        respond(ex, 503, """{"error":"query timeout exceeded"}""")
-      case _: Endpoint.BodyTooLarge =>
-        respond(ex, 413, """{"error":"request body too large"}""")
-      case e: Exception =>
-        respond(ex, 400, s"""{"error":"${e.getMessage}"}""")
-    }
+    } catch failed(ex)
   })
 
   server.createContext("/update/", new HttpHandler {
@@ -534,14 +546,7 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
       }
       warmed(store)
       respond(ex, 200, """{"ok":true}""")
-    } catch {
-      case _: java.util.concurrent.TimeoutException =>
-        respond(ex, 503, """{"error":"query timeout exceeded"}""")
-      case _: Endpoint.BodyTooLarge =>
-        respond(ex, 413, """{"error":"request body too large"}""")
-      case e: Exception =>
-        respond(ex, 400, s"""{"error":"${e.getMessage}"}""")
-    }
+    } catch failed(ex)
   })
 
   server.createContext("/data/", new HttpHandler {
@@ -572,16 +577,6 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
       // idempotent; POST is an RDF MERGE (GSP §5.5) where a second POST
       // of the same document must mint FRESH bnodes, not unify with the
       // first's — so POST folds in a per-request nonce.
-      // stage-time instrumentation for the import pipeline (enable with
-      // -Dgraft.ep.timing): spool vs parse-plan vs pin vs swap — the
-      // breakdown behind SCALE_REHEARSAL.md's GSP import table
-      val timing = sys.props.contains("graft.ep.timing")
-      var tMark = System.nanoTime()
-      def stage(name: String): Unit = if (timing) {
-        val now = System.nanoTime()
-        System.err.println(f"[gsp-timing] $name ${(now - tMark) / 1e9}%.2f s")
-        tMark = now
-      }
       // Returns a PINNED store (every form localCheckpoint'ed off the
       // spool in ONE parse pass — QuadStore.pinnedFromFlat): after the
       // handler responds the store no longer references the spool file,
@@ -590,7 +585,6 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
       def parsedBody(seedNonce: String): QuadStore = {
         import org.apache.spark.sql.functions.{concat, when}
         val (f, digest) = spoolBody(ex)
-        stage("spool(transport+md5+disk)")
         val scope =
           graft.rdf.Turtle.scopeFor(s"$graph:$digest$seedNonce")
         val suffix = graft.rdf.Turtle.scopeSuffix(scope)
@@ -611,7 +605,7 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
             concat(col("sLex"), lit(suffix))).otherwise(col("sLex")))
           .withColumn("oLex", when(col("oKind") === 2,
             concat(col("oLex"), lit(suffix))).otherwise(col("oLex")))
-        QuadStore.pinnedFromFlat(spark, flat, stage)
+        QuadStore.pinnedFromFlat(spark, flat)
       }
       ex.getRequestMethod match {
         case "GET" => // GSP read: the graph serialized as N-Triples
@@ -642,7 +636,6 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
               storeRef.updateAndGet(_.union(add))
           }
           warmed(store)
-          stage("swap+warm")
           respond(ex, 201, """{"ok":true}""")
         case "PUT" => // REPLACE the graph (reference import start deletes
           // the model before streaming the body in, httpd.c:566)
@@ -662,7 +655,6 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
                 valued = None).union(add))
           }
           warmed(store)
-          stage("swap+warm")
           respond(ex, 201, """{"ok":true}""")
         case "DELETE" =>
           // drop the inline-value scan form too: it would retain the
@@ -686,14 +678,8 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
           respond(ex, 200, """{"ok":true}""")
         case _ => respond(ex, 405, """{"error":"method"}""")
       }
-    } catch {
-      case _: java.util.concurrent.TimeoutException =>
-        respond(ex, 503, """{"error":"query timeout exceeded"}""")
-      case _: Endpoint.BodyTooLarge =>
-        respond(ex, 413, """{"error":"request body too large"}""")
-      case e: Exception =>
-        respond(ex, 400, s"""{"error":"${e.getMessage}"}""")
-    } finally dropSpool(ex) // success AND failure: a failed multi-GB
+    } catch failed(ex)
+    finally dropSpool(ex) // success AND failure: a failed multi-GB
       // import must not leak its spool for the server's lifetime
   })
 
@@ -712,14 +698,7 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
         val n = store.quads.count()
         respond(ex, 200, s"""{"quads":$n,"engine":"graft","ok":true}""")
       }
-    } catch {
-      case _: java.util.concurrent.TimeoutException =>
-        respond(ex, 503, """{"error":"query timeout exceeded"}""")
-      case _: Endpoint.BodyTooLarge =>
-        respond(ex, 413, """{"error":"request body too large"}""")
-      case e: Exception =>
-        respond(ex, 400, s"""{"error":"${e.getMessage}"}""")
-    }
+    } catch failed(ex)
   })
 
   /** service description (`http_service_description`,
@@ -760,14 +739,7 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
              |.
              |""".stripMargin
       respond(ex, 200, body, "text/turtle; charset=utf-8")
-    } catch {
-      case _: java.util.concurrent.TimeoutException =>
-        respond(ex, 503, """{"error":"query timeout exceeded"}""")
-      case _: Endpoint.BodyTooLarge =>
-        respond(ex, 413, """{"error":"request body too large"}""")
-      case e: Exception =>
-        respond(ex, 400, s"""{"error":"${e.getMessage}"}""")
-    }
+    } catch failed(ex)
   })
 
   /** test-query widget (`http_query_widget`, `httpd.c:1070-1100`): a

@@ -154,9 +154,9 @@ object SparqlQueries {
     QDef(name, tables, (s, d) => f(s, d, tables))
 
   /** Ad-hoc SPARQL over the same cached rdfize stores the gates use —
-    * for the scale-rehearsal probes (ScaleProbeSparql), which run
-    * corpus-scale variants of the gate queries (and the compat-pin A/B)
-    * without duplicating the store cache. */
+    * for the `graft.Probe sparql` scale scenario, which runs
+    * corpus-scale variants of the gate queries without duplicating the
+    * store cache. */
   def adhoc(s: SparkSession, dir: String, tables: Seq[String],
             q: String): DataFrame = sparql(s, dir, tables, q)
 
@@ -172,25 +172,21 @@ object SparqlQueries {
     * table any SPARQL query declares. Bench calls this during warm-up so
     * per-query timings measure query execution, not one-time rdfize+cache —
     * mirroring the reference benchmark, which loads the KB before timing
-    * queries (`tests/benchmark/run.pl:40-80`). Per-table failures are
-    * swallowed: a bad table should only affect its own queries. */
+    * queries (`tests/benchmark/run.pl:40-80`). A failing table set is
+    * reported on stderr and skipped: a bad table should only affect its
+    * own queries. */
   def warm(s: SparkSession, dir: String): Unit = {
+    def touch(what: String)(st: => QuadStore): Unit =
+      try { val t = st; t.quads.count(); t.resources.count() }
+      catch { case e: Throwable =>
+        System.err.println(s"[warm] store $what failed: $e") }
     // warm the exact store INSTANCES queries use (single-table compact
     // variants and multi-table unions cache separately)
     defs.map(_.tables).filter(_.nonEmpty).distinct.foreach { ts =>
-      try {
-        val st = store(s, dir, ts: _*)
-        st.quads.count(); st.resources.count()
-      } catch { case _: Throwable => }
+      touch(ts.mkString(","))(store(s, dir, ts: _*))
     }
-    try {
-      val ft = ftStore(s, dir)
-      ft.quads.count(); ft.resources.count()
-    } catch { case _: Throwable => }
-    try {
-      val loc = locStore(s, dir)
-      loc.quads.count(); loc.resources.count()
-    } catch { case _: Throwable => }
+    touch("fulltext(documents)")(ftStore(s, dir))
+    touch("location-hierarchy")(locStore(s, dir))
   }
 
   private lazy val defs: Seq[QDef] = Seq(

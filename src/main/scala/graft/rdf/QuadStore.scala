@@ -342,7 +342,7 @@ object QuadStore {
     // <=5 candidate entries through ONE explode over a single scan.
     // Same rid-dedup shuffle either way — the arms differ only in how
     // the pre-shuffle rows are produced. Kept behind a conf so the GSP
-    // floor-of-N A/B protocol (ScaleProbeGspAb) can interleave both
+    // floor-of-N A/B protocol (`graft.Probe gsp`) can interleave both
     // arms in one process; the measured-better arm is the default.
     val dictStack = spark.conf.getOption("spark.graft.import.dictStack")
       .contains("true")
@@ -399,12 +399,9 @@ object QuadStore {
     * derive the dictionary from the checkpointed blocks) was measured
     * SLOWER (11.7s vs 4.4s for the dictionary stage at 400 MB): the
     * columnar cache's pruned, compressed scans beat re-reading
-    * full-width checkpoint rows five times.
-    *
-    * `stage` is a progress callback for the endpoint's import-timing
-    * instrument. */
-  private[graft] def pinnedFromFlat(spark: SparkSession, flat: DataFrame,
-      stage: String => Unit = _ => ()): QuadStore = {
+    * full-width checkpoint rows five times. */
+  private[graft] def pinnedFromFlat(spark: SparkSession,
+                                    flat: DataFrame): QuadStore = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
@@ -418,20 +415,13 @@ object QuadStore {
       // pathological — three jobs contending on the same cache
       // partition locks turned a 2s populate into 60s.)
       val cfg = FullText.configFrom(f0)
-      stage("parse+cache+ft-config")
       // the two pins DO run concurrently (saveBucketed's future
       // pattern): both only read the populated cache, and neither
       // pin's serial tail idles the other's cores
-      val t0 = System.nanoTime()
-      def lap(n: String): Unit =
-        stage(f"$n +${(System.nanoTime() - t0) / 1e9}%.2f s")
-      val vF = Future {
-        val v = st.valued.map(_.localCheckpoint()); lap("pin-valued"); v }
-      val rF = Future {
-        val r = st.resources.localCheckpoint(); lap("pin-resources"); r }
+      val vF = Future(st.valued.map(_.localCheckpoint()))
+      val rF = Future(st.resources.localCheckpoint())
       val v = Await.result(vF, Duration.Inf)
       val r = Await.result(rF, Duration.Inf)
-      stage("pin-valued||pin-resources")
       if (cfg.isEmpty)
         st.copy(
           quads = v.map(_.select(quadCols.map(col): _*))
@@ -442,9 +432,7 @@ object QuadStore {
         withDerived = // fromFlatRaw caches ITS input too: track the
           // union plan so this branch unpersists both
           Some(f0.unionByName(FullText.derivedQuads(f0, cfg)))
-        val st2 = fromFlatRaw(spark, withDerived.get).pinned()
-        stage("pin-fulltext(derived quads)")
-        st2
+        fromFlatRaw(spark, withDerived.get).pinned()
       }
     } finally {
       f0.unpersist(false)

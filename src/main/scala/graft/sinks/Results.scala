@@ -182,7 +182,9 @@ object Results {
     out.write("  </results>\n</sparql>\n")
   }
 
-  private def jsonEscape(s: String): String = s.flatMap {
+  /** JSON string-body escape: quote, backslash and every control char
+    * (< 0x20). The one escaper for every JSON this engine writes. */
+  def jsonEscape(s: String): String = s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

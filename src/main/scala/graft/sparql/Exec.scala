@@ -471,12 +471,8 @@ final class Exec(store: QuadStore, spark: SparkSession) {
     // blocking job per query, which matters for sub-second gate
     // latency (an eager checkpoint is a synchronous Spark job BEFORE
     // the query even starts).
-    // `graft.compat.pin=off` (diagnostic only, used by the scale
-    // rehearsal's A/B probe) disables the pin so the per-branch
-    // re-execution cost it avoids can be MEASURED, not just asserted.
-    val pin = !sys.props.get("graft.compat.pin").contains("off")
-    val ldf = if (pin) ldf0.localCheckpoint(eager = false) else ldf0
-    val rdf = if (pin) rdf0.localCheckpoint(eager = false) else rdf0
+    val ldf = ldf0.localCheckpoint(eager = false)
+    val rdf = rdf0.localCheckpoint(eager = false)
     val branches = for {
       a <- subsets(lMaybe)
       b <- subsets(rMaybe)

@@ -12,20 +12,11 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // FAIR task scheduling: EndpointSpec runs fast queries concurrent
-      // with a deliberately-monstrous one — under FIFO the fast query's
-      // tasks starve behind the monster's and blow their own request
-      // deadline (the r7 "spurious cancellation" flake)
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val session: SparkSession = Session("4", conf = Map(
+    "spark.app.name" -> "graft-test",
+    // FAIR task scheduling: EndpointSpec runs fast queries concurrent
+    // with a deliberately-monstrous one — under FIFO the fast query's
+    // tasks starve behind the monster's and blow their own request
+    // deadline (the r7 "spurious cancellation" flake)
+    "spark.scheduler.mode" -> "FAIR"))
 }

@@ -11,9 +11,9 @@ class EndpointSpec extends SparkTestBase {
     * is UNKILLABLE — Catalyst's ConvertToLocalRelation folds filters
     * over LocalRelation into driver-side optimizer work, and
     * LocalTableScan-fed stages were observed to ignore task-kill until
-    * partition end (KillProbe: rdd-backed dies in 30ms, local-relation
-    * runs 18 min to completion). Production stores load from parquet =
-    * RDD-backed, so THIS is the representative shape. */
+    * partition end (the KillProbe at commit 61b514e: rdd-backed dies in
+    * 30ms, local-relation runs 18 min to completion). Production stores
+    * load from parquet = RDD-backed, so THIS is the representative shape. */
   private def rddStore(n: Int): QuadStore = {
     // small cache batches: the store caches its parsed triples, and a
     // killed task only notices the kill flag BETWEEN columnar batches —
@@ -113,6 +113,25 @@ class EndpointSpec extends SparkTestBase {
       assert(c9 == 200)
       val (_, b10) = req(s"$base/status/")
       assert(b10.contains("\"quads\":2"))
+    } finally ep.stop()
+  }
+
+  test("an error message with a quote and a newline still answers a " +
+      "parseable JSON body") {
+    val store = QuadStore.fromTerms(spark, Seq(
+      (Uri("urn:a"), Uri("urn:name"), Lit("Alice"))))
+    val ep = new Endpoint(spark, store, 0).start()
+    try {
+      // the parse failure quotes the offending line (with its literal)
+      // under a caret on the next line
+      val (code, body) = req(s"http://localhost:${ep.boundPort}/sparql/" +
+        "?query=" + java.net.URLEncoder.encode(
+          """SELECT ?s WHERE { ?s <urn:name> "Alice" . nonsense }""",
+          "UTF-8"))
+      assert(code == 400, body)
+      val msg = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(body).get("error").asText()
+      assert(msg.contains("\"") && msg.contains("\n"), msg)
     } finally ep.stop()
   }
 
@@ -588,7 +607,8 @@ class EndpointSpec extends SparkTestBase {
     // LocalRelation plans either fold into driver-side optimizer work
     // (ConvertToLocalRelation — no task to cancel) or feed
     // LocalTableScan stages that ignore task-kill until partition end
-    // (KillProbe: observed 18 min to completion). The Endpoint must
+    // (the KillProbe at commit 61b514e: observed 18 min to completion).
+    // The Endpoint must
     // convert such a store to RDD-backed plans BEFORE the first query,
     // so the same backtracking-regex monster dies at its deadline.
     val stmts = (0 until 50000).map(i =>

@@ -4,7 +4,7 @@ import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
 /** The monthly-crawl-drop COMPOSITION at fixture scale — the per-commit
-  * test behind `ScaleProbeMonthly` (which measures the same chain at
+  * test behind `graft.Probe monthly` (which measures the same chain at
   * sf10): WET framing → Gopher quality + repetition gates → language
   * ID → SAVED per-language backoff model scoring → per-language
   * perplexity buckets → incremental dedup against a persisted index.
@@ -109,6 +109,13 @@ class CompositionSpec extends SparkTestBase {
     assert(!plan.contains(modelDir),
       "the monthly plan must consume the pinned model read, not " +
         "rescan the model parquet per query")
+    // ...and it does consume it: the checkpointed (h, c, lang, k) counts
+    // are a leaf of the plan (a chain that dropped the model join would
+    // pass the negative check above)
+    assert(picked.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.output.map(_.name)
+    }.contains(Seq("h", "c", "lang", "k")),
+      "the monthly plan must scan the pinned model counts")
     assert(plan.contains(wetDir), "plan must read the WET snapshot")
     assert(!plan.contains(trainDir),
       "the monthly chain must never rescan the train corpus")
