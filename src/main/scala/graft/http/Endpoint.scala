@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.SparkSession
 import graft.rdf.QuadStore
 import graft.sinks.Results
-import graft.sparql.{Sparql, Update}
+import graft.sparql.{PlanCache, Sparql, Update}
 import graft.streaming.StreamIngest
 
 /** HTTP SPARQL endpoint mirroring the reference's httpd routes
@@ -80,8 +80,45 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
       fixStore(st)
     }
 
-  private val storeRef = new AtomicReference[QuadStore](killable(initial))
-  def store: QuadStore = storeRef.get()
+  /** The served snapshot and its per-apikey ACL views, each built once
+    * per snapshot: a view is a new store instance, so building one per
+    * request would miss the identity-keyed plan cache every time. */
+  private final class Snapshot(val store: QuadStore) {
+    val views = new java.util.concurrent.ConcurrentHashMap[String, QuadStore]()
+  }
+  private val current = new AtomicReference(new Snapshot(killable(initial)))
+  def store: QuadStore = current.get().store
+
+  /** `store` seen through `apikey`'s graph ACL (its graphs plus the
+    * default graph); the whole store when no ACL is configured. */
+  private def visibleTo(snap: Snapshot, apikey: String): QuadStore =
+    if (acl.isEmpty) snap.store
+    else {
+      val v = snap.views.computeIfAbsent(apikey, k =>
+        snap.store.restrictGraphs(acl(k).map(graft.rdf.Rid.uri) :+
+          graft.rdf.WellKnown.defaultGraph))
+      // the snapshot was replaced while this view was being added
+      if (snap.store.released) PlanCache.release(v)
+      v
+    }
+
+  /** Serve `f(current store)`, then release the replaced snapshot's
+    * plan-cache entries (its views' too): they would otherwise keep its
+    * pinned blocks alive until LRU eviction. `f` may run more than once
+    * under contention, so a durable commit goes through [[replace]]. An
+    * `f` that returns its input replaces nothing. */
+  private def swap(f: QuadStore => QuadStore): Unit = {
+    val old = current.getAndUpdate { s =>
+      val next = f(s.store)
+      if (next eq s.store) s else new Snapshot(next)
+    }
+    if (current.get() ne old) {
+      PlanCache.release(old.store)
+      old.views.values.forEach(v => PlanCache.release(v))
+    }
+  }
+
+  private def replace(next: QuadStore): Unit = swap(_ => next)
 
   /** Force per-store lazily-cached infrastructure (the datatype map —
     * two small Spark jobs over the dictionary) so the FIRST query to
@@ -437,11 +474,7 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
             !p.get("apikey").exists(acl.contains) =>
           respond(ex, 403, """{"error":"unknown or missing apikey"}""")
         case Some(q) =>
-          val visible =
-            if (acl.isEmpty) store
-            else store.restrictGraphs(
-              acl(p("apikey")).map(graft.rdf.Rid.uri) :+
-                graft.rdf.WellKnown.defaultGraph)
+          val visible = visibleTo(current.get(), p.getOrElse("apikey", ""))
           // SPARQL 1.1 Protocol dataset override (the reference parses
           // `default-graph-uri=`, httpd.c:1143-1145); repeatable
           val dsDefault =
@@ -449,9 +482,11 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
           val dsNamed =
             pl.collect { case ("named-graph-uri", v) if v.nonEmpty => v }
           // NT-serialized SELECT terms: kind/datatype/lang survive to
-          // the XML/JSON/TSV serializers (and to SERVICE peers)
-          var df = Sparql.runNt(visible, spark, q,
+          // the XML/JSON/TSV serializers (and to SERVICE peers); the one
+          // parse of this request, none on a cache hit
+          val prepared = Sparql.prepareNt(visible, spark, q,
             dsDefault.toList, dsNamed.toList)
+          var df = prepared.df
           // complexity throttle (httpd.c:1131-1139): explicit
           // `soft-limit=` caps result rows; bare `restricted` engages
           // the reference's default cap (FS_FANOUT_LIMIT 998,
@@ -478,11 +513,7 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
           // (`http_answer_query`, httpd.c:404-444)
           val accept =
             Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
-          val isGraph = graft.sparql.Parser.parse(q) match {
-            case _: graft.sparql.Ast.ConstructQ |
-                 _: graft.sparql.Ast.DescribeQ => true
-            case _ => false
-          }
+          val isGraph = prepared.graph
           val fmt = p.get("output").getOrElse {
             if (isGraph && accept.contains("text/turtle")) "turtle"
             else if (isGraph && accept.contains("application/rdf+xml")) "xml"
@@ -496,14 +527,6 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
             else if (accept.contains("text/plain")) "tsv"
             else "json"
           }
-          def writeNt(w: java.io.Writer): Unit = {
-            val it = df.toLocalIterator()
-            while (it.hasNext) {
-              val r = it.next()
-              w.write(s"${r.getString(0)} ${r.getString(1)} ${
-                r.getString(2)} .\n")
-            }
-          }
           fmt match {
             case "xml" => respondStream(ex,
               "application/sparql-results+xml")(
@@ -514,10 +537,11 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
             case "csv" =>
               respondStream(ex, "text/csv")(
                 Results.writeCsv(df, _, warnings))
-            case "turtle" => // N-Triples is valid Turtle, as the
-              respondStream(ex, "text/turtle")(writeNt) // reference emits
+            case "turtle" =>
+              respondStream(ex, "text/turtle")(Results.writeNt(df, _))
             case "ntriples" =>
-              respondStream(ex, "application/n-triples")(writeNt)
+              respondStream(ex, "application/n-triples")(
+                Results.writeNt(df, _))
             case _ => respondStream(ex, "application/sparql-results+json")(
               Results.writeJson(df, _, p.getOrElse("callback", "")))
           }
@@ -537,11 +561,11 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
           // body could double-apply the update — disable the
           // peer-cancellation retry before committing anything
           Endpoint.markRetryUnsafe()
-          storeRef.set(Update.durable(spark, n, text))
+          replace(Update.durable(spark, n, text))
         case None =>
           // the swap IS the commit point (a throw inside the lambda
-          // leaves storeRef untouched, so retry stays safe up to here)
-          storeRef.updateAndGet(st => Update(st, spark, text))
+          // leaves the snapshot untouched, so retry stays safe up to here)
+          swap(st => Update(st, spark, text))
           Endpoint.markRetryUnsafe()
       }
       warmed(store)
@@ -610,11 +634,8 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
       ex.getRequestMethod match {
         case "GET" => // GSP read: the graph serialized as N-Triples
           val gRid = graft.rdf.Rid.uri(graph)
-          val readable = // ACL'd keys read only their graphs
-            if (acl.isEmpty) store
-            else store.restrictGraphs(
-              acl(p("apikey")).map(graft.rdf.Rid.uri) :+
-                graft.rdf.WellKnown.defaultGraph)
+          // ACL'd keys read only their graphs
+          val readable = visibleTo(current.get(), p.getOrElse("apikey", ""))
           val one = readable.copy(quads = readable.quads
               .filter(col("g") === gRid)
               .withColumn("g", lit(graft.rdf.WellKnown.defaultGraph)),
@@ -631,9 +652,9 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
             case Some(n) => // graph-store import: append-only delta
               val before = store
               Update.appendDelta(spark, n, before, before.union(add))
-              storeRef.set(Update.reload(spark, n))
+              replace(Update.reload(spark, n))
             case None => // add is already pinned (parsedBody)
-              storeRef.updateAndGet(_.union(add))
+              swap(_.union(add))
           }
           warmed(store)
           respond(ex, 201, """{"ok":true}""")
@@ -648,9 +669,9 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
                 quads = before.quads.filter(col("g") =!= gRid),
                 valued = None)
               Update.commitDelta(spark, n, before, minus.union(add))
-              storeRef.set(Update.reload(spark, n))
+              replace(Update.reload(spark, n))
             case None => // add is already pinned (parsedBody)
-              storeRef.updateAndGet(st => st.copy(
+              swap(st => st.copy(
                 quads = st.quads.filter(col("g") =!= gRid),
                 valued = None).union(add))
           }
@@ -659,7 +680,7 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
         case "DELETE" =>
           // drop the inline-value scan form too: it would retain the
           // deleted graph's rows
-          storeRef.updateAndGet(st =>
+          swap(st =>
             st.copy(quads = st.quads.filter(
               org.apache.spark.sql.functions.col("g") =!=
                 graft.rdf.Rid.uri(graph)), valued = None))
@@ -672,7 +693,7 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
               .saveAsTable(s"${n}_dels")
             spark.catalog.refreshTable(s"${n}_dels")
             Update.maybeCompact(spark, n)
-            storeRef.set(Update.reload(spark, n))
+            replace(Update.reload(spark, n))
           }
           warmed(store)
           respond(ex, 200, """{"ok":true}""")
@@ -695,8 +716,11 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
           .mkString("{", ",", "}")
         respond(ex, 200, s"""{"graphs":$rows,"ok":true}""")
       } else {
+        // `cache`: the process-wide plan/answer cache counters
+        // (PlanCache.stats), so a slow endpoint explains itself
         val n = store.quads.count()
-        respond(ex, 200, s"""{"quads":$n,"engine":"graft","ok":true}""")
+        respond(ex, 200, s"""{"quads":$n,"engine":"graft",""" +
+          s""""cache":${PlanCache.stats.json},"ok":true}""")
       }
     } catch failed(ex)
   })

@@ -59,6 +59,11 @@ final case class QuadStore(quads: DataFrame, resources: DataFrame,
                            graphRids: Option[Set[Long]] = None,
                            segments: Seq[QuadStore] = Nil) {
 
+  /** set once an endpoint has replaced this snapshot: the plan cache
+    * drops its entries and keeps no new ones
+    * ([[graft.sparql.PlanCache.release]]) */
+  @volatile private[graft] var released = false
+
   /** The scannable parts of this store. A union store keeps its input
     * stores as `segments`, each declaring (a superset of) the predicate
     * and graph RIDs it contains — the Spark analog of the reference's

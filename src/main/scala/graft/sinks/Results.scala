@@ -1,7 +1,8 @@
 package graft.sinks
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.sparql.PlanCache
 
 /** Result serializers mirroring the reference's output formats
   * (`src/frontend/results.c`): TSV (`output_text`, :2014), CSV
@@ -66,21 +67,23 @@ object Results {
       }
     } else v
 
-  /** Driver-side CSV lines (header + rows) with RFC-4180 quoting — the
-    * one shared implementation for the CLI and HTTP emitters
-    * (`output_csv`, `results.c:2143`). */
-  def toCsvLines(df: DataFrame): Seq[String] = {
+  /** One CSV row, RFC-4180 quoting over [[ntPlain]] cells. */
+  private def csvRow(r: Row): String = {
     def cell(v: String): String =
       if (v == null) ""
       else if (v.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
         "\"" + v.replace("\"", "\"\"") + "\""
       else v
-    df.columns.mkString(",") +: df.collect().toSeq.map(r =>
-      (0 until r.length).map(i =>
-        cell(if (r.isNullAt(i)) null
-             else ntPlain(r.get(i).toString)))
-        .mkString(","))
+    (0 until r.length).map(i =>
+      cell(if (r.isNullAt(i)) null else ntPlain(r.get(i).toString)))
+      .mkString(",")
   }
+
+  /** Driver-side CSV lines (header + rows) with RFC-4180 quoting — the
+    * one shared implementation for the CLI and HTTP emitters
+    * (`output_csv`, `results.c:2143`). */
+  def toCsvLines(df: DataFrame): Seq[String] =
+    df.columns.mkString(",") +: PlanCache.rows(df).map(csvRow).toSeq
 
   // ------------------------------------------------- streaming writers
   //
@@ -88,26 +91,19 @@ object Results {
   // `df.toLocalIterator` (one partition in driver memory at a time) —
   // the reference likewise serializes a row per fetch
   // (`results.c:2598+`). A CONSTRUCT dump of a big store then never
-  // materializes on the driver; the response goes out chunked.
+  // materializes on the driver; the response goes out chunked. Every
+  // writer reads through `PlanCache.rows`, which serves a cached frame's
+  // kept answer instead when its first run completed.
 
   /** CSV to a Writer: header + rows, RFC-4180 quoting. `warnings` go out
     * as `# …` lines after the header (`output_csv`, results.c:2184). */
   def writeCsv(df: DataFrame, out: java.io.Writer,
                warnings: Seq[String] = Nil): Unit = {
-    def cell(v: String): String =
-      if (v == null) ""
-      else if (v.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
-        "\"" + v.replace("\"", "\"\"") + "\""
-      else v
     out.write(df.columns.mkString(","))
     warnings.foreach(w => out.write(s"\n# $w"))
-    val it = df.toLocalIterator()
-    while (it.hasNext) {
-      val r = it.next()
+    PlanCache.rows(df).foreach { r =>
       out.write("\n")
-      out.write((0 until r.length).map(i =>
-        cell(if (r.isNullAt(i)) null else ntPlain(r.get(i).toString)))
-        .mkString(","))
+      out.write(csvRow(r))
     }
   }
 
@@ -120,9 +116,7 @@ object Results {
       else v.replace("\\", "\\\\").replace("\t", "\\t").replace("\n", "\\n")
     out.write(df.columns.map("?" + _).mkString("\t"))
     warnings.foreach(w => out.write(s"\n# $w"))
-    val it = df.toLocalIterator()
-    while (it.hasNext) {
-      val r = it.next()
+    PlanCache.rows(df).foreach { r =>
       out.write("\n")
       out.write((0 until r.length).map(i =>
         cell(if (r.isNullAt(i)) null else r.get(i).toString))
@@ -138,10 +132,8 @@ object Results {
     out.write("""{"head":{"vars":""" +
       vars.map(v => "\"" + v + "\"").mkString("[", ",", "]") +
       """},"results":{"bindings":[""")
-    val it = df.toLocalIterator()
     var first = true
-    while (it.hasNext) {
-      val r = it.next()
+    PlanCache.rows(df).foreach { r =>
       if (!first) out.write(",")
       first = false
       out.write(vars.indices.flatMap { i =>
@@ -167,9 +159,7 @@ object Results {
     out.write("  </head>\n")
     warnings.foreach(w => out.write(s"<!-- ${xmlEscape(w)} -->\n"))
     out.write("  <results>\n")
-    val it = df.toLocalIterator()
-    while (it.hasNext) {
-      val r = it.next()
+    PlanCache.rows(df).foreach { r =>
       out.write("    <result>\n")
       vars.indices.foreach { i =>
         Option(r.get(i)).foreach { v =>
@@ -181,6 +171,13 @@ object Results {
     }
     out.write("  </results>\n</sparql>\n")
   }
+
+  /** N-Triples to a Writer: one `s p o .` line per row of an
+    * (`s`, `p`, `o`) CONSTRUCT / DESCRIBE frame. N-Triples is also valid
+    * Turtle, as the reference emits it. */
+  def writeNt(df: DataFrame, out: java.io.Writer): Unit =
+    PlanCache.rows(df).foreach(r =>
+      out.write(s"${r.getString(0)} ${r.getString(1)} ${r.getString(2)} .\n"))
 
   /** JSON string-body escape: quote, backslash and every control char
     * (< 0x20). The one escaper for every JSON this engine writes. */

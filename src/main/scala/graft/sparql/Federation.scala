@@ -13,7 +13,7 @@ import scala.util.DynamicVariable
   * was constructed with an explicit allow predicate.
   *
   * The policy is a [[DynamicVariable]]: it scopes to the executing thread
-  * (and [[Sparql]]'s plan cache keys on [[keyPrefix]], so a plan built
+  * (and the [[PlanCache]] keys on [[keyPrefix]], so a plan built
   * under one policy is never served under another).
   */
 object Federation {

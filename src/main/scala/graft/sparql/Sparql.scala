@@ -20,82 +20,43 @@ import Ast._
 object Sparql {
   import WellKnown._
 
-  /** Prepared-plan cache — the engine's analog of the reference's query
-    * cache (`src/frontend/query-cache.c:39-51`, 1024 entries): repeated
-    * runs of the same query text against the same store instance reuse
-    * the analyzed DataFrame, skipping parse + algebra + Catalyst
-    * analysis. Execution still happens per run (a DataFrame is a plan,
-    * not a result). ASK executes its any-rows probe eagerly, so for ASK
-    * the cached object IS the result — sound because a QuadStore is an
-    * immutable snapshot (updates build a new instance, which misses the
-    * reference-keyed cache), and the same shape as the reference's bind
-    * cache, which keys on the bound pattern and caches the result rid
-    * vectors (`fs_bind_cache.res`). */
-  /** Cache key: store compared by REFERENCE (a mutated store is a new
-    * instance and must never hit), text by value. */
-  private final class PlanKey(val store: QuadStore, val text: String) {
-    override def hashCode: Int =
-      System.identityHashCode(store) * 31 + text.hashCode
-    override def equals(o: Any): Boolean = o match {
-      case k: PlanKey => (k.store eq store) && k.text == text
-      case _ => false
-    }
-  }
-  // access-ordered LRU under a lock: an endpoint serving many distinct
-  // query texts evicts the coldest plan, not the whole cache
-  private val planCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[PlanKey, DataFrame](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[PlanKey, DataFrame]): Boolean =
-          size() > 1024
-      })
-  private def cachedOrBuild(store: QuadStore, key: String, spark: SparkSession,
-                            text: String, terms: Boolean,
-                            dataset: Option[(List[String], List[String])] =
-                              None): DataFrame = {
-    // key carries the federation-policy tag (a plan built where SERVICE
-    // was allowed must not serve a denied context) and any protocol-level
-    // dataset override
-    val fullKey = Federation.keyPrefix +
-      dataset.fold("")(d => s"ds[${d._1.mkString(",")}|${
-        d._2.mkString(",")}]:") + key
-    val k = new PlanKey(store, fullKey)
-    // below opt level 3 the reference skips its query cache
-    // (query-cache.c:270); same gate here
-    val useCache = Exec.optLevel >= 3
-    if (useCache) {
-      val hit = planCache.get(k)
-      if (hit != null) return hit
-    }
-    // SPARQL 1.1 Protocol §2.1.4: a protocol-supplied dataset
-    // (default-graph-uri= / named-graph-uri=) OVERRIDES the query's own
-    // FROM / FROM NAMED clause
-    val parsed = Parser.parse(text)
-    val q = dataset match {
-      case Some((d, n)) => parsed match {
-        case s: SelectQ =>
-          s.copy(mods = s.mods.copy(dataset = d, datasetNamed = n))
-        case a: AskQ => a.copy(dataset = d, datasetNamed = n)
-        case c: ConstructQ =>
-          c.copy(mods = c.mods.copy(dataset = d, datasetNamed = n))
-        case dq: DescribeQ =>
-          dq.copy(mods = dq.mods.copy(dataset = d, datasetNamed = n))
+  /** Parse `text` once and build it through the plan cache
+    * ([[PlanCache]]); `key` tags the output form. SPARQL 1.1 Protocol
+    * §2.1.4: a protocol-supplied `dataset` (default-graph-uri= /
+    * named-graph-uri=) OVERRIDES the query's own FROM / FROM NAMED
+    * clause, and is part of the key. */
+  private def prepare(store: QuadStore, key: String, text: String,
+                      dataset: Option[(List[String], List[String])])(
+      build: Query => DataFrame): PlanCache.Prepared =
+    PlanCache(store, dataset.fold("")(d => s"ds[${d._1.mkString(",")}|${
+        d._2.mkString(",")}]:") + key) {
+      val parsed = Parser.parse(text)
+      val q = dataset match {
+        case Some((d, n)) => parsed match {
+          case s: SelectQ =>
+            s.copy(mods = s.mods.copy(dataset = d, datasetNamed = n))
+          case a: AskQ => a.copy(dataset = d, datasetNamed = n)
+          case c: ConstructQ =>
+            c.copy(mods = c.mods.copy(dataset = d, datasetNamed = n))
+          case dq: DescribeQ =>
+            dq.copy(mods = dq.mods.copy(dataset = d, datasetNamed = n))
+        }
+        case None => parsed
       }
-      case None => parsed
+      (q, build(q))
     }
-    val df = q match {
-      case s: SelectQ    => select(store, spark, s, terms)
-      case a: AskQ       => ask(store, spark, a)
-      case c: ConstructQ => construct(store, spark, c)
-      case d: DescribeQ  => describe(store, spark, d)
-    }
-    if (useCache) planCache.put(k, df)
-    df
+
+  private def build(store: QuadStore, spark: SparkSession,
+                    terms: Boolean)(q: Query): DataFrame = q match {
+    case s: SelectQ    => select(store, spark, s, terms)
+    case a: AskQ       => ask(store, spark, a)
+    case c: ConstructQ => construct(store, spark, c)
+    case d: DescribeQ  => describe(store, spark, d)
   }
 
   def run(store: QuadStore, spark: SparkSession, text: String): DataFrame =
-    cachedOrBuild(store, "run:" + text, spark, text, terms = false)
+    prepare(store, "run:" + text, text, None)(
+      build(store, spark, terms = false)).df
 
   /** Like [[run]], but SELECT projects each item as a full term struct
     * `(rid, lex, dt, lang)` instead of a lexical string — the form result
@@ -105,34 +66,39 @@ object Sparql {
     * term-distinct. ASK/CONSTRUCT/DESCRIBE are unchanged. */
   def runTerms(store: QuadStore, spark: SparkSession,
                text: String): DataFrame =
-    cachedOrBuild(store, "terms:" + text, spark, text, terms = true)
+    prepare(store, "terms:" + text, text, None)(
+      build(store, spark, terms = true)).df
 
   /** Like [[run]], but SELECT columns carry N-Triples-serialized term
     * strings (`<u>`, `"lit"@lang`, `"5"^^<dt>`, `_:b`) so term kind,
     * datatype and language survive the wire — what the HTTP result
     * serializers sniff ([[graft.sinks.Results]] `termJson`/`xmlBinding`)
     * and what SERVICE peers parse back. ASK/CONSTRUCT/DESCRIBE are
-    * [[run]] unchanged. */
-  def runNt(store: QuadStore, spark: SparkSession, text: String,
-            /** SPARQL 1.1 Protocol dataset override: when either list is
-              * non-empty, (default-graph-uri list, named-graph-uri list)
-              * replaces the query's FROM / FROM NAMED clause */
-            dsDefault: List[String] = Nil,
-            dsNamed: List[String] = Nil): DataFrame = {
+    * [[run]] unchanged. A repeat returns the cached frame itself, which
+    * the result writers serve from its kept rows. */
+  def runNt(store: QuadStore, spark: SparkSession, text: String): DataFrame =
+    prepareNt(store, spark, text).df
+
+  /** [[runNt]] with the query form, parsing `text` at most once (not at
+    * all on a cache hit). `dsDefault` / `dsNamed`: the SPARQL 1.1
+    * Protocol dataset override — when either list is non-empty,
+    * (default-graph-uri list, named-graph-uri list) replaces the query's
+    * FROM / FROM NAMED clause. */
+  def prepareNt(store: QuadStore, spark: SparkSession, text: String,
+                dsDefault: List[String] = Nil,
+                dsNamed: List[String] = Nil): PlanCache.Prepared = {
     val ds = if (dsDefault.isEmpty && dsNamed.isEmpty) None
              else Some((dsDefault, dsNamed))
-    Parser.parse(text) match {
-      case _: SelectQ =>
-        val df = cachedOrBuild(store, "terms:" + text, spark, text,
-          terms = true, dataset = ds)
+    prepare(store, "nt:" + text, text, ds) {
+      case s: SelectQ =>
+        val df = select(store, spark, s, terms = true)
         val dtm = store.dtUriMap
         df.select(df.columns.map { c =>
           val st = col(c)
           ntTermCol(V(st.getField("rid"), st.getField("lex"),
             st.getField("dt"), st.getField("lang")), dtm).as(c)
         }: _*)
-      case _ => cachedOrBuild(store, "run:" + text, spark, text,
-        terms = false, dataset = ds)
+      case q => build(store, spark, terms = false)(q)
     }
   }
 

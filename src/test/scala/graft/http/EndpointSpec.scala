@@ -1035,4 +1035,206 @@ class EndpointSpec extends SparkTestBase {
     } finally ep2.stop()
   }
 
+  // ---------------------------------------------------- answer cache
+
+  private def enc(q: String) = java.net.URLEncoder.encode(q, "UTF-8")
+
+  /** `f` with the Spark jobs it submitted counted (the listener bus is
+    * drained around it, so every job of `f` and none before is in). */
+  private def jobsOf[A](f: => A): (A, Int) = {
+    val l = new graft.Probe.Listener
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val (a, w) = l.measure(spark.sparkContext)(f)
+      (a, w.stats("jobs").asInstanceOf[Int])
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private val people = Seq(
+    (Uri("urn:a"), Uri("urn:name"), Lit("Alice")),
+    (Uri("urn:b"), Uri("urn:name"), Lit("Bob", lang = "en")),
+    (Uri("urn:c"), Uri("urn:name"), Lit("Carol \"C\"")),
+    (Uri("urn:c"), Uri("urn:age"), Lit("30", Xsd.integer)))
+
+  test("a repeated request submits 0 Spark jobs and returns a " +
+      "byte-identical body in every output format") {
+    val ep = new Endpoint(spark, QuadStore.fromTerms(spark, people), 0)
+      .start()
+    try {
+      val base = s"http://localhost:${ep.boundPort}"
+      val sel = "SELECT ?s ?o WHERE { ?s ?p ?o } ORDER BY ?o"
+      val con = "CONSTRUCT { ?s <urn:label> ?o } WHERE { ?s <urn:name> ?o }"
+      val ask = "ASK { ?s <urn:name> \"Alice\" }"
+      val cases = Seq(sel -> "json", sel -> "xml", sel -> "tsv",
+        sel -> "csv", con -> "ntriples", con -> "turtle", ask -> "json")
+      cases.zipWithIndex.foreach { case ((q, fmt), i) =>
+        // trailing blanks: a distinct text per case, so every first
+        // request is a cache miss that streams and keeps its rows
+        val url = s"$base/sparql/?query=${enc(q + " " * i)}&output=$fmt"
+        val (c1, b1) = req(url)
+        assert(c1 == 200, s"$fmt: $b1")
+        val ((c2, b2), jobs) = jobsOf(req(url))
+        assert(c2 == 200 && b2 == b1, s"$fmt:\n$b1\n---\n$b2")
+        assert(jobs == 0, s"$fmt repeat submitted $jobs jobs")
+      }
+    } finally ep.stop()
+  }
+
+  test("an apikey request hits the cache: the repeat submits 0 jobs") {
+    val store = QuadStore.fromTerms(spark, people, graph = "urn:open")
+      .union(QuadStore.fromTerms(spark, Seq(
+        (Uri("urn:x"), Uri("urn:name"), Lit("Secret"))), graph = "urn:sec"))
+    val ep = new Endpoint(spark, store, 0,
+      acl = Map("k1" -> Seq("urn:open"))).start()
+    try {
+      val url = s"http://localhost:${ep.boundPort}/sparql/?query=" +
+        enc("SELECT ?n WHERE { ?s <urn:name> ?n } ORDER BY ?n") + "&apikey=k1"
+      val (c1, b1) = req(url)
+      assert(c1 == 200 && b1.contains("Alice") && !b1.contains("Secret"), b1)
+      val ((c2, b2), jobs) = jobsOf(req(url))
+      assert(c2 == 200 && b2 == b1)
+      assert(jobs == 0, s"apikey repeat submitted $jobs jobs")
+      // the key's view is released with its snapshot
+      val entries = graft.sparql.PlanCache.stats.entries
+      req(s"http://localhost:${ep.boundPort}/update/", "POST",
+        """INSERT DATA { <urn:z> <urn:p> 1 }""")
+      assert(graft.sparql.PlanCache.stats.entries == entries - 1)
+    } finally ep.stop()
+  }
+
+  test("after /update/ or a graph-store PUT the next request sees the " +
+      "new data") {
+    val ep = new Endpoint(spark, QuadStore.fromTerms(spark, people.take(1)),
+      0).start()
+    try {
+      val base = s"http://localhost:${ep.boundPort}"
+      val url = s"$base/sparql/?query=" +
+        enc("SELECT ?n WHERE { ?s <urn:name> ?n } ORDER BY ?n")
+      val (_, b1) = req(url)
+      val (_, b2) = req(url)
+      assert(b1 == b2 && b1.contains("Alice") && !b1.contains("Dora"))
+      val (cu, _) = req(s"$base/update/", "POST",
+        """INSERT DATA { <urn:d> <urn:name> "Dora" }""")
+      assert(cu == 200)
+      val (_, b3) = req(url)
+      assert(b3.contains("Alice") && b3.contains("Dora"), b3)
+      // PUT replaces the default graph
+      val (cp, _) = req(s"$base/data/", "PUT",
+        "<urn:e> <urn:name> \"Eve\" .")
+      assert(cp == 201)
+      val (_, b4) = req(url)
+      assert(b4.contains("Eve") && !b4.contains("Dora"), b4)
+    } finally ep.stop()
+  }
+
+  test("the replaced snapshot's entry count reaches 0") {
+    val ep = new Endpoint(spark, QuadStore.fromTerms(spark, people), 0)
+      .start()
+    try {
+      val base = s"http://localhost:${ep.boundPort}"
+      val old = ep.store
+      Seq("SELECT ?n WHERE { ?s <urn:name> ?n }",
+        "ASK { ?s <urn:age> ?a }").foreach(q =>
+        req(s"$base/sparql/?query=${enc(q)}"))
+      assert(graft.sparql.PlanCache.entriesFor(old) == 2)
+      req(s"$base/update/", "POST", """INSERT DATA { <urn:z> <urn:p> 1 }""")
+      assert(graft.sparql.PlanCache.entriesFor(old) == 0)
+      assert(old.released && !ep.store.released)
+    } finally ep.stop()
+  }
+
+  test("an answer of 1001 rows is not kept; one of 1000 is") {
+    val store = QuadStore.fromTerms(spark, (0 until 1001).map(i =>
+      (Uri(s"urn:s$i"), Uri("urn:p"), Lit(i.toString))))
+    val ep = new Endpoint(spark, store, 0).start()
+    try {
+      val base = s"http://localhost:${ep.boundPort}"
+      def twice(q: String): (String, String, Int) = {
+        val url = s"$base/sparql/?query=${enc(q)}&output=tsv"
+        val (_, b1) = req(url)
+        val ((_, b2), jobs) = jobsOf(req(url))
+        (b1, b2, jobs)
+      }
+      val refused = graft.sparql.PlanCache.stats.refusedRows
+      val (a1, a2, jobsAll) = twice("SELECT ?o WHERE { ?s <urn:p> ?o }")
+      assert(a1.linesIterator.size == 1002 && a1 == a2)
+      assert(jobsAll > 0, "a 1001-row answer was served from the cache")
+      assert(graft.sparql.PlanCache.stats.refusedRows >= refused + 2)
+      val (k1, k2, jobsCap) =
+        twice("SELECT ?o WHERE { ?s <urn:p> ?o } LIMIT 1000")
+      assert(k1.linesIterator.size == 1001 && k1 == k2)
+      assert(jobsCap == 0, s"a 1000-row repeat submitted $jobsCap jobs")
+    } finally ep.stop()
+  }
+
+  test("a request cancelled by its deadline keeps nothing; the next run " +
+      "returns the full answer") {
+    // every quad scan passes a UDF that sleeps per row while the gate is
+    // on: the first request is cut by its 1 s deadline mid-stream, the
+    // next runs at full speed over the same snapshot
+    val base0 = rddStore(300)
+    val gate = org.apache.spark.sql.functions.udf((_: Long) => {
+      if (EndpointSpec.slow) Thread.sleep(30); true })
+    val slowScan = (df: org.apache.spark.sql.DataFrame) =>
+      df.filter(gate(org.apache.spark.sql.functions.col("s")))
+    val store = base0.copy(quads = slowScan(base0.quads),
+      valued = base0.valued.map(slowScan))
+    val ep = new Endpoint(spark, store, 0, queryTimeoutSec = 1).start()
+    try {
+      val url = s"http://localhost:${ep.boundPort}/sparql/?query=" +
+        enc("SELECT ?s ?o WHERE { ?s <urn:p> ?o }") + "&output=tsv"
+      EndpointSpec.slow = true
+      val outcome =
+        try {
+          val (code, body) = req(url)
+          if (code == 503) "503"
+          else if (code == 200 && body.contains("# ERROR:")) "marked"
+          else s"completed:$code:${body.take(60)}"
+        } catch { case _: java.io.IOException => "truncated" }
+      assert(Set("503", "marked", "truncated")(outcome), outcome)
+      // the plan was built and cached: the deadline cut the stream
+      assert(graft.sparql.PlanCache.entriesFor(ep.store) == 1)
+      EndpointSpec.slow = false
+      Thread.sleep(1000) // killed tasks finish their current row
+      val ((c2, b2), jobs2) = jobsOf(req(url))
+      assert(jobs2 > 0, "the cancelled run kept rows")
+      assert(c2 == 200 && !b2.contains("# ERROR"), b2.take(200))
+      assert(b2.linesIterator.drop(1).map(_.split("\t")(1)).toSet ==
+        (0 until 300).map(i => s"\"$i\"").toSet)
+      val ((c3, b3), jobs3) = jobsOf(req(url))
+      assert(c3 == 200 && b3 == b2 && jobs3 == 0)
+    } finally { EndpointSpec.slow = false; ep.stop() }
+  }
+
+  test("/status/ reports the plan/answer cache counters") {
+    val ep = new Endpoint(spark, QuadStore.fromTerms(spark, people), 0)
+      .start()
+    try {
+      val base = s"http://localhost:${ep.boundPort}"
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      def cache() = {
+        val (c, b) = req(s"$base/status/")
+        assert(c == 200, b)
+        val n = json.readTree(b).get("cache")
+        Seq("entries", "answers", "hits", "misses", "refused_volatile",
+          "refused_rows").map(k => k -> n.get(k).asLong()).toMap
+      }
+      val before = cache()
+      val q = enc("SELECT ?n WHERE { ?s <urn:name> ?n } ORDER BY DESC(?n)")
+      req(s"$base/sparql/?query=$q")
+      req(s"$base/sparql/?query=$q")
+      req(s"$base/sparql/?query=" +
+        enc("SELECT ?n (RAND() AS ?r) WHERE { ?s <urn:name> ?n }"))
+      val after = cache()
+      assert(after("misses") - before("misses") == 2, (before, after))
+      assert(after("hits") - before("hits") == 1, (before, after))
+      assert(after("refused_volatile") - before("refused_volatile") == 1)
+      assert(after("answers") >= 1 && after("entries") >= after("answers"))
+    } finally ep.stop()
+  }
+}
+
+object EndpointSpec {
+  /** the deadline test's scan gate: each scanned row sleeps while set */
+  @volatile var slow = false
 }

@@ -484,4 +484,62 @@ class SparqlSpec extends SparkTestBase {
     // and the ids are row-unique (the freshness half of the contract)
     assert(joined.map(_.getLong(1)).distinct.length == 1000)
   }
+
+  // ---- volatile functions bypass the plan and answer caches: a cached
+  // plan fixes their seeds and timestamp, so a repeat would return the
+  // first run's values
+
+  /** `q` run twice through [[Sparql.run]] and through the endpoint's
+    * path ([[Sparql.runNt]] + a result writer) gives new values each
+    * time; `pause` ms between the runs (NOW() has second precision). */
+  private def freshEachRun(q: String, pause: Long = 0): Unit = {
+    def nt(): String = {
+      val w = new java.io.StringWriter()
+      graft.sinks.Results.writeJson(Sparql.runNt(store, spark, q), w)
+      w.toString
+    }
+    val (r1, n1) = (rows(q), nt())
+    Thread.sleep(pause)
+    val (r2, n2) = (rows(q), nt())
+    assert(r1 != r2, s"Sparql.run repeated $r1")
+    assert(n1 != n2, s"runNt repeated $n1")
+    assert(PlanCache.volatile(Parser.parse(q)))
+  }
+
+  test("RAND() is fresh on every run") {
+    freshEachRun(
+      "SELECT ?p (RAND() AS ?r) WHERE { ?p a <urn:Person> } ORDER BY ?p")
+    // a plain query still hits the cache: same frame
+    val q = "SELECT ?p WHERE { ?p a <urn:Person> }"
+    assert(run(q) eq run(q))
+  }
+
+  test("NOW() is fresh on every run, in SELECT and CONSTRUCT") {
+    freshEachRun("SELECT (NOW() AS ?t) WHERE { }", pause = 1100)
+    val c = """CONSTRUCT { ?p <urn:at> ?t } WHERE {
+      ?p a <urn:Robot> . BIND(NOW() AS ?t) }"""
+    val t1 = run(c).collect().toSeq
+    Thread.sleep(1100)
+    assert(run(c).collect().toSeq != t1)
+  }
+
+  test("UUID() is fresh on every run") {
+    freshEachRun(
+      "SELECT ?p (UUID() AS ?u) WHERE { ?p a <urn:Person> } ORDER BY ?p")
+  }
+
+  test("STRUUID() is fresh on every run") {
+    freshEachRun("SELECT (STRUUID() AS ?u) WHERE { }")
+  }
+
+  test("zero-arg BNODE() is fresh on every run") {
+    freshEachRun("""SELECT ?p ?b WHERE { ?p a <urn:Person> .
+      BIND(BNODE() AS ?b) } ORDER BY ?p""")
+    // BNODE(str) is a function of its argument: cacheable
+    assert(!PlanCache.volatile(Parser.parse(
+      "SELECT ?b WHERE { ?p a <urn:Person> . BIND(BNODE(STR(?p)) AS ?b) }")))
+    // volatility is found in nested scopes too
+    assert(PlanCache.volatile(Parser.parse("""ASK { ?p a <urn:Person>
+      FILTER EXISTS { { SELECT ?q WHERE { ?q a ?t } ORDER BY RAND() } } }""")))
+  }
 }
