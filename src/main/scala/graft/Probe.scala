@@ -117,20 +117,6 @@ object Probe {
     (a, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** The interleaved both-orders A/B protocol: round r runs `a` then `b`
-    * when r is even and `b` then `a` when it is odd, so a slow phase of
-    * the box lands on both arms alike. Returns each arm's results in run
-    * order. Arms time themselves (see [[lap]]), which keeps their untimed
-    * checks out of the number, and warm up beforehand if they need to. */
-  private[graft] def ab[A](a: () => A, b: () => A,
-                           rounds: Int): (Seq[A], Seq[A]) = {
-    val (ra, rb) = (mutable.ArrayBuffer.empty[A], mutable.ArrayBuffer.empty[A])
-    for (r <- 0 until rounds)
-      if (r % 2 == 0) { ra += a(); rb += b() }
-      else { rb += b(); ra += a() }
-    (ra.toSeq, rb.toSeq)
-  }
-
   private def bracket(when: String): Obj =
     ListMap(s"dd_mbps_$when" -> writeMBps(), s"cpu_ref_sec_$when" -> cpuRefSec())
 
@@ -351,14 +337,14 @@ object Probe {
   private def sparql(spark: SparkSession, queries: Map[String, Gate],
                      sfDir: String, docsDir: String,
                      listener: Listener): Obj = {
-    import graft.queries.SparqlQueries.{adhoc, adhocLocStore, adhocStore}
+    import graft.queries.SparqlQueries.{locStore, store}
     import graft.sparql.{Sparql, Update}
-    def stores = Seq(adhocStore(spark, sfDir, "customer", "orders"),
-      adhocStore(spark, sfDir, "orders"), adhocStore(spark, sfDir, "customer"),
-      adhocLocStore(spark, sfDir))
+    def stores = Seq(store(spark, sfDir, "customer", "orders"),
+      store(spark, sfDir, "orders"), store(spark, sfDir, "customer"),
+      locStore(spark, sfDir))
     val (_, importSec) = lap(stores.foreach(_.quads.count()))
-    val storeQuads = adhocStore(spark, sfDir, "customer", "orders")
-      .quads.count() + adhocLocStore(spark, sfDir).quads.count()
+    val storeQuads = store(spark, sfDir, "customer", "orders")
+      .quads.count() + locStore(spark, sfDir).quads.count()
     val gs = Seq("s01_sparql_bgp_join", "s02_sparql_optional",
         "s04_sparql_minus", "s05_sparql_agg", "s07_sparql_order_limit",
         "s17_sparql_path", "s18_sparql_subselect").map { n =>
@@ -368,7 +354,7 @@ object Probe {
     // update at scale: INSERT…WHERE over the immutable snapshot, then a
     // count over the inserted predicate
     val (updRows, updSec) = lap {
-      val updated = Update(adhocStore(spark, sfDir, "customer", "orders"),
+      val updated = Update(store(spark, sfDir, "customer", "orders"),
         spark, """INSERT { ?o <urn:flag> "big" } WHERE {
                  |  ?o <urn:p:orders:o_totalprice> ?tp .
                  |  FILTER(?tp > 400000) }""".stripMargin)
@@ -379,7 +365,8 @@ object Probe {
     // src/frontend/query.c:1155-1194): a FILTER on lexical values either
     // scans the inline-value form or pays a dictionary decode join; the
     // plan's join count records which
-    val lexical = adhoc(spark, sfDir, Seq("customer"),
+    val lexical = graft.queries.SparqlQueries.sparql(spark, sfDir,
+      Seq("customer"),
       """SELECT ?cname WHERE {
         |  ?c <urn:p:customer:c_name> ?cname .
         |  FILTER(REGEX(?cname, "#0000000(4[0-9])") &&
@@ -663,12 +650,9 @@ object Probe {
   /** The HTTP graph-store import end to end: PUT an N-Triples body of
     * `copies` rdfized lineitem variants (per-copy subject namespaces, so
     * the triples are distinct) through a live Endpoint — transport,
-    * spool, distributed parse, RID encode and store swap — with the two
-    * dictionary arms of `spark.graft.import.dictStack` (base: five
-    * pruned scans of the parse cache; stack: one scan exploding ≤5
-    * entries per row) run by [[ab]] over `rounds`. A disk reading
-    * precedes every PUT; runs below `minMBps` stay in the record but
-    * not in the gated floor. */
+    * spool, distributed parse, RID encode and store swap — `rounds`
+    * times. A disk reading precedes every PUT; runs below `minMBps`
+    * stay in the record but not in the gated floor. */
   private def gsp(spark: SparkSession, sfDir: String, copies: Int,
                   rounds: Int, minMBps: Double): Obj = {
     val ntPath = tmp("gsp_probe") + "/nt"
@@ -688,11 +672,9 @@ object Probe {
       .filter(_.getName.startsWith("part-")).sortBy(_.getName)
     val bytes = parts.map(_.length).sum
     val triples = li.count() * 3 * copies
-    val dictStack = "spark.graft.import.dictStack"
 
-    def put(arm: String): Obj = {
+    def put(): Obj = {
       val dd = writeMBps()
-      if (arm == "stack") spark.conf.set(dictStack, "true")
       val store = graft.rdf.QuadStore.fromTerms(spark, Seq(
         (graft.rdf.Uri("urn:a"), graft.rdf.Uri("urn:p"), graft.rdf.Lit("x"))))
       val ep = new graft.http.Endpoint(spark, store, 0).start()
@@ -713,32 +695,27 @@ object Probe {
           os.close()
           conn.getResponseCode
         }
-        require(code == 201, s"$arm: PUT answered $code")
+        require(code == 201, s"PUT answered $code")
         // checked every run: a check on the first round only would hide
-        // an arm that breaks later
+        // a run that breaks later
         val n = graft.sparql.Sparql.run(ep.store, spark,
           "SELECT ?s WHERE { ?s <urn:p/part> ?o }").count()
-        require(n == triples / 3, s"$arm: expected ${triples / 3}, got $n")
-        note(f"gsp $arm: $sec%.1f s at dd $dd%.0f MB/s")
+        require(n == triples / 3, s"expected ${triples / 3}, got $n")
+        note(f"gsp: $sec%.1f s at dd $dd%.0f MB/s")
         ListMap("dd_mbps" -> dd, "healthy" -> (dd >= minMBps), "sec" -> sec)
       } finally {
-        spark.conf.unset(dictStack)
         ep.stop()
-        // drop the pinned store's blocks before the next arm: the
+        // drop the pinned store's blocks before the next run: the
         // references die with the endpoint; nudge the ContextCleaner
         System.gc()
         Thread.sleep(2000)
       }
     }
-    def arm(runs: Seq[Obj]): Obj = {
-      def floor(rs: Seq[Obj]) =
-        rs.map(_("sec").asInstanceOf[Double]).minOption
-      ListMap("runs" -> runs, "floor_sec" -> floor(runs),
-        "gated_floor_sec" -> floor(runs.filter(_("healthy") == true)))
-    }
-    val (base, stack) = ab(() => put("base"), () => put("stack"), rounds)
+    val runs = Seq.fill(rounds)(put())
+    def floor(rs: Seq[Obj]) = rs.map(_("sec").asInstanceOf[Double]).minOption
     ListMap("sf" -> sfDir, "triples" -> triples, "bytes" -> bytes,
-      "rounds" -> rounds, "min_mbps_gate" -> minMBps,
-      "base" -> arm(base), "stack" -> arm(stack))
+      "rounds" -> rounds, "min_mbps_gate" -> minMBps, "runs" -> runs,
+      "floor_sec" -> floor(runs),
+      "gated_floor_sec" -> floor(runs.filter(_("healthy") == true)))
   }
 }

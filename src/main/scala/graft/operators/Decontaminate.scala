@@ -1,7 +1,9 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Benchmark decontamination for training-data pipelines: flag every
   * training document that shares at least one k-word-gram with a held-out
@@ -164,19 +166,8 @@ object Decontaminate {
                 textCol: String, k: Int = 8, fpp: Double = 0.001,
                 portableHash: Boolean = false,
                 confirm: Boolean = true): DataFrame = {
-    // pinned: the gram set feeds multiple actions (size for bloom
-    // sizing, the bloom build, and the confirmation join). Lazy
-    // localCheckpoint, NOT cache(): cache registers in the shared
-    // cache manager and repeated calls accumulate entries nobody
-    // releases; checkpoint blocks are freed by the ContextCleaner as
-    // soon as the result (and with it this RDD) becomes unreachable.
-    val evalGrams = Dedup
-      .shingleHashRows(eval, idCol, textCol, k, portableHash)
-      .select("h").distinct().localCheckpoint(eager = false)
-    val n = math.max(evalGrams.count(), 1L)
-    val bloom = evalGrams.stat.bloomFilter("h", n, fpp)
-    val spark = train.sparkSession
-    val bc = spark.sparkContext.broadcast(bloom)
+    val (evalGrams, bc) =
+      evalBloom(eval, idCol, textCol, k, fpp, portableHash)
     val might = udf((h: Long) => bc.value.mightContainLong(h))
     val candidates = Dedup
       .shingleHashRows(train, idCol, textCol, k, portableHash)
@@ -191,5 +182,27 @@ object Decontaminate {
       .select(col("id"),
         coalesce(col("n_hits"), lit(0L)).as("n_hits"),
         (coalesce(col("n_hits"), lit(0L)) > 0).as("contaminated"))
+  }
+
+  /** The eval side of the bloom scans ([[flagBloom]] and
+    * [[graft.streaming.StreamIngest.decontaminateStream]]): the distinct
+    * eval k-gram hashes (column `h`) and a broadcast bloom filter over
+    * them at false-positive rate `fpp`. */
+  private[graft] def evalBloom(eval: DataFrame, idCol: String,
+                               textCol: String, k: Int, fpp: Double,
+                               portableHash: Boolean)
+      : (DataFrame, Broadcast[BloomFilter]) = {
+    // pinned: the gram set feeds multiple actions (size for bloom
+    // sizing, the bloom build, and flagBloom's confirmation join). Lazy
+    // localCheckpoint, NOT cache(): cache registers in the shared
+    // cache manager and repeated calls accumulate entries nobody
+    // releases; checkpoint blocks are freed by the ContextCleaner as
+    // soon as the result (and with it this RDD) becomes unreachable.
+    val evalGrams = Dedup
+      .shingleHashRows(eval, idCol, textCol, k, portableHash)
+      .select("h").distinct().localCheckpoint(eager = false)
+    val n = math.max(evalGrams.count(), 1L)
+    val bloom = evalGrams.stat.bloomFilter("h", n, fpp)
+    (evalGrams, eval.sparkSession.sparkContext.broadcast(bloom))
   }
 }

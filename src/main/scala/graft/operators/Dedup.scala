@@ -754,10 +754,10 @@ object Dedup {
     * over the signature slice starting at b·rows+1 (1-based), seeded
     * with the band index — statically unrolled, pure codegen.
     * ORACLE-PINNED: every consumer ([[minhashPairs]],
-    * [[dedupAgainstIndex]], `Decontaminate.nearDupFlag`,
-    * `StreamIngest.minhashDedupBatch`) and every generated DuckDB
-    * oracle replays exactly this banding; it changes in one place or
-    * not at all. */
+    * [[dedupAgainstIndex]] and through it
+    * `StreamIngest.minhashDedupStream`, `Decontaminate.nearDupFlag`)
+    * and every generated DuckDB oracle replays exactly this banding; it
+    * changes in one place or not at all. */
   def bandBucketArray(sig: Column, bands: Int, rows: Int): Column =
     array((0 until bands).map(b =>
       xxhash64(slice(sig, b * rows + 1, rows), lit(b))): _*)
@@ -1109,16 +1109,11 @@ object Dedup {
   /** Incremental snapshot dedup: probe a NEW crawl snapshot against a
     * PERSISTED corpus index and write the snapshot's own delta back,
     * so a monthly crawl drop is deduped against all of history without
-    * re-reading or re-shingling the historical TEXT. The band-index
-    * idea is [[graft.streaming.StreamIngest.minhashDedupBatch]]'s, but
-    * this is NOT that layout: it adds an exact-fingerprint table,
-    * snapshot partitioning (for replay safety), and appends ALL probed
-    * docs where the streaming variant keeps survivors only — each
-    * difference load-bearing for the all-at-once equivalence below,
-    * which the survivors-only stream index deliberately trades away
-    * for size. (The reference has no incremental path at all: its
-    * import always rebuilds rhash/ptree segments over the full store,
-    * `src/backend/import-backend.c`.)
+    * re-reading or re-shingling the historical TEXT; the streaming
+    * near-dup filter ([[graft.streaming.StreamIngest.minhashDedupStream]])
+    * runs this once per micro-batch. (The reference has no incremental
+    * path at all: its import always rebuilds rhash/ptree segments over
+    * the full store, `src/backend/import-backend.c`.)
     *
     * Index layout under `indexDir` (both tables partitioned by
     * `snapshot`, so re-running a snapshot dynamically OVERWRITES ITS

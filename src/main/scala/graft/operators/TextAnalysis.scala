@@ -947,15 +947,9 @@ object TextAnalysis {
                      portableHash: Boolean = false): DataFrame = {
     require(buckets > 0 && (buckets & (buckets - 1)) == 0,
       s"buckets must be a power of two, got $buckets")
-    val F = graft.functions.F
-    def bucketRows(df: DataFrame) =
-      df.select(col(idCol).as("id"),
-          explode(F.shinglePosHashes(col(textCol), 2, portableHash))
-            .as("h"))
-        .select(col("id"), pmod(col("h"), lit(buckets.toLong)).as("b"))
-    val tb = bucketRows(target).groupBy("b").agg(count(lit(1)).as("tb"))
+    val tb = dsirCounts(target, textCol, buckets, portableHash, "tb")
       .localCheckpoint(eager = false) // consumed by total + scoring join
-    val rb = bucketRows(raw).groupBy("b").agg(count(lit(1)).as("rb"))
+    val rb = dsirCounts(raw, textCol, buckets, portableHash, "rb")
       .localCheckpoint(eager = false)
     def total(df: DataFrame, c: String): Double =
       df.agg(sum(col(c))).collect()(0) match {
@@ -964,7 +958,8 @@ object TextAnalysis {
       }
     val tTot = total(tb, "tb")
     val rTot = total(rb, "rb")
-    val scored = bucketRows(raw)
+    val scored = dsirBuckets(raw, col(idCol), textCol, buckets,
+        portableHash)
       .join(broadcast(tb), Seq("b"), "left_outer")
       .join(broadcast(rb), Seq("b"), "left_outer") // always hits: b ∈ raw
       .withColumn("lw",
@@ -985,6 +980,25 @@ object TextAnalysis {
         coalesce(col("n_zero_t"), lit(0L)).as("n_zero_t"),
         coalesce(col("logw"), lit(0.0)).as("logw"))
   }
+
+  /** (id, b) rows: one per bigram occurrence in `textCol`, `b` its
+    * hashed bucket. */
+  private def dsirBuckets(df: DataFrame, id: Column, textCol: String,
+                          buckets: Int, portableHash: Boolean): DataFrame =
+    df.select(id.as("id"), explode(graft.functions.F
+        .shinglePosHashes(col(textCol), 2, portableHash)).as("h"))
+      .select(col("id"), pmod(col("h"), lit(buckets.toLong)).as("b"))
+
+  /** [[dsirImportance]]'s count table of one corpus: (b, `name`) — each
+    * hashed-bigram bucket and its occurrence count, at most `buckets`
+    * rows whatever the corpus size. The streaming scorer
+    * ([[graft.streaming.StreamIngest.dsirScoreStream]]) collects the
+    * same table. */
+  private[graft] def dsirCounts(df: DataFrame, textCol: String,
+                                buckets: Int, portableHash: Boolean,
+                                name: String): DataFrame =
+    dsirBuckets(df, lit(0L), textCol, buckets, portableHash)
+      .groupBy("b").agg(count(lit(1)).as(name))
 
   /** Linear bag-of-words classifier scoring — the fastText-style quality
     * gate of production curation pipelines (e.g. the GPT-3/CCNet "looks

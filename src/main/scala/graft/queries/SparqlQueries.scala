@@ -24,8 +24,8 @@ object SparqlQueries {
   private val cache = scala.collection.concurrent
     .TrieMap[(SparkSession, String, String), QuadStore]()
 
-  private def store(s: SparkSession, dir: String,
-                    tables: String*): QuadStore = {
+  private[graft] def store(s: SparkSession, dir: String,
+                           tables: String*): QuadStore = {
     cache.keys.filter(_._1.sparkContext.isStopped)
       .foreach(cache.remove)
     // memoize the UNIONED store too: a stable instance per table set is
@@ -93,8 +93,8 @@ object SparqlQueries {
           res, Some(v), st.predRids, st.graphRids)
       })
 
-  private def sparql(s: SparkSession, dir: String, tables: Seq[String],
-                     q: String): DataFrame =
+  private[graft] def sparql(s: SparkSession, dir: String,
+                            tables: Seq[String], q: String): DataFrame =
     Sparql.run(store(s, dir, tables: _*), s, q)
 
   /** documents store with full-text derived quads (token/stem/phonetic),
@@ -111,7 +111,7 @@ object SparqlQueries {
         col("text").as("oLex"),
         lit("").as("oDt"),
         lit("").as("oLang"))
-      val st = FullText.withFullText(s, flat, Set("urn:p:documents:text"))
+      val st = FullText.withFullText(flat, Set("urn:p:documents:text"))
       val (v, small) = arrange(st.valued.get, onePart = true)
       val res =
         (if (small) st.resources.coalesce(1) else st.resources).cache()
@@ -122,7 +122,7 @@ object SparqlQueries {
     * nation rows share ONE predicate `urn:p:locIn` (customer->nation,
     * nation->region), so `locIn+` exercises genuine multi-level transitive
     * closure (SPARQL 1.1 §9 — extension; the reference has no paths). */
-  private def locStore(s: SparkSession, dir: String): QuadStore =
+  private[graft] def locStore(s: SparkSession, dir: String): QuadStore =
     cache.getOrElseUpdate((s, dir, "__locin"), {
       def edge(df: DataFrame, sPfx: String, sCol: String,
                oPfx: String, oCol: String): DataFrame =
@@ -152,21 +152,6 @@ object SparqlQueries {
   private def mk(name: String, tables: String*)(
       f: (SparkSession, String, Seq[String]) => DataFrame): QDef =
     QDef(name, tables, (s, d) => f(s, d, tables))
-
-  /** Ad-hoc SPARQL over the same cached rdfize stores the gates use —
-    * for the `graft.Probe sparql` scale scenario, which runs
-    * corpus-scale variants of the gate queries without duplicating the
-    * store cache. */
-  def adhoc(s: SparkSession, dir: String, tables: Seq[String],
-            q: String): DataFrame = sparql(s, dir, tables, q)
-
-  /** The cached store instance for a table set (see [[adhoc]]). */
-  def adhocStore(s: SparkSession, dir: String, tables: String*): QuadStore =
-    store(s, dir, tables: _*)
-
-  /** The cached location-hierarchy store (see [[adhoc]]). */
-  def adhocLocStore(s: SparkSession, dir: String): QuadStore =
-    locStore(s, dir)
 
   /** Materialize the per-table store caches (the import phase) for every
     * table any SPARQL query declares. Bench calls this during warm-up so

@@ -1,6 +1,6 @@
 package graft.rdf
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{ColumnBridge, DMetaphoneCodes, SnowballStem,
@@ -135,19 +135,17 @@ object FullText {
 
   /** Build a store whose quads include the full-text derivations for
     * `indexedPredicates`, indexed every way. */
-  def withFullText(spark: SparkSession, flat: DataFrame,
+  def withFullText(flat: DataFrame,
                    indexedPredicates: Set[String]): QuadStore =
-    withFullText(spark, flat, Config.allKinds(indexedPredicates))
+    withFullText(flat, Config.allKinds(indexedPredicates))
 
   /** Build a store whose quads include the full-text derivations. */
-  def withFullText(spark: SparkSession, flat: DataFrame,
-                   cfg: Config): QuadStore = {
+  def withFullText(flat: DataFrame, cfg: Config): QuadStore = {
     // fromFlatRaw: the derivation happens HERE with the programmatic
     // config; the raw path skips fromFlat's own config scan so derived
     // quads are never re-derived
-    if (cfg.isEmpty) QuadStore.fromFlatRaw(spark, flat)
-    else QuadStore.fromFlatRaw(spark,
-      flat.unionByName(derivedQuads(flat, cfg)))
+    if (cfg.isEmpty) QuadStore.fromFlatRaw(flat)
+    else QuadStore.fromFlatRaw(flat.unionByName(derivedQuads(flat, cfg)))
   }
 
   /** Search: subjects whose indexed text contains the token. */

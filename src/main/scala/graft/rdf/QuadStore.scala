@@ -261,16 +261,34 @@ object QuadStore {
     QuadStore(quads, spark.table(s"${name}_resources"))
   }
 
-  /** Columnar RID of a flat-encoded term. */
-  private def ridOf(kind: Column, lex: Column, dt: Column, lang: Column) =
-    when(kind === 1, Rid.uriCol(lex))
-      .when(kind === 2, Rid.bnodeCol(lex))
-      .otherwise(Rid.literalCol(lex, Rid.attrCol(dt, lang)))
+  /** The flat-row→RID mapping (SURVEY §1.2), written once: every path
+    * that turns flat import rows (the [[FlatQuad]] shape) into RIDs —
+    * the valued projection, the dictionary and the streaming ingest —
+    * hashes a term through these, so the same term gets the same RID
+    * whichever path saw it. An empty or null `gLex` is the default
+    * graph. */
+  private val isDefaultG = col("gLex").isNull || col("gLex") === ""
+  private[graft] val flatG: Column =
+    when(isDefaultG, lit(defaultGraph)).otherwise(Rid.uriCol(col("gLex")))
+  private[graft] val flatGLex: Column =
+    when(isDefaultG, lit(defaultGraphUri)).otherwise(col("gLex"))
+  private[graft] val flatS: Column =
+    when(col("sKind") === 1, Rid.uriCol(col("sLex")))
+      .otherwise(Rid.bnodeCol(col("sLex")))
+  private[graft] val flatP: Column = Rid.uriCol(col("pLex"))
+  private val flatOAttr = Rid.attrCol(col("oDt"), col("oLang"))
+  private[graft] val flatO: Column =
+    when(col("oKind") === 1, Rid.uriCol(col("oLex")))
+      .when(col("oKind") === 2, Rid.bnodeCol(col("oLex")))
+      .otherwise(Rid.literalCol(col("oLex"), flatOAttr))
 
-  /** Build a store from flat statements (any Dataset of FlatQuad rows —
-    * the distributed import path; reference pipeline
-    * `src/frontend/import.c:425-542`). */
-  /** Build a store from flat import rows, honoring any `<pred>
+  /** Flat import rows -> (g, s, p, o) RID columns. */
+  private[graft] val flatQuadCols: Seq[Column] =
+    Seq(flatG.as("g"), flatS.as("s"), flatP.as("p"), flatO.as("o"))
+
+  /** Build a store from flat import rows (any Dataset of [[FlatQuad]]
+    * rows — the distributed import path; reference pipeline
+    * `src/frontend/import.c:425-542`), honoring any `<pred>
     * text:index text:{token,dmetaphone,stem}` statements found in the
     * stream — the reference importer reads the same statements from its
     * config graph and emits derived full-text quads on EVERY import
@@ -281,38 +299,27 @@ object QuadStore {
   def fromFlat(spark: SparkSession, flat: DataFrame): QuadStore = {
     val f0 = flat.cache()
     val cfg = FullText.configFrom(f0)
-    if (cfg.isEmpty) fromFlatRaw(spark, f0)
-    else fromFlatRaw(spark,
-      f0.unionByName(FullText.derivedQuads(f0, cfg)))
+    if (cfg.isEmpty) fromFlatRaw(f0)
+    else fromFlatRaw(f0.unionByName(FullText.derivedQuads(f0, cfg)))
   }
 
-  /** [[fromFlat]] without the text-index pass (used by FullText itself
-    * to avoid re-deriving derived quads). */
   /** The wide valued projection of flat import rows: RID columns
     * g/s/p/o plus the lexical forms the inline-value scan and the term
-    * serializers need. Shared by [[fromFlatRaw]] (classic path) and
-    * [[pinnedFromFlat]] (streaming-import path, which appends the
-    * object-datatype lexical so the dictionary can derive from this
-    * projection alone). */
-  private def valuedCols: Seq[Column] = Seq(
-    when(col("gLex").isNull || col("gLex") === "",
-      lit(defaultGraph)).otherwise(Rid.uriCol(col("gLex"))).as("g"),
-    when(col("sKind") === 1, Rid.uriCol(col("sLex")))
-      .otherwise(Rid.bnodeCol(col("sLex"))).as("s"),
-    Rid.uriCol(col("pLex")).as("p"),
-    ridOf(col("oKind"), col("oLex"), col("oDt"), col("oLang")).as("o"),
-    when(col("gLex").isNull || col("gLex") === "",
-      lit(defaultGraphUri)).otherwise(col("gLex")).as("gLex"),
+    * serializers need. */
+  private def valuedCols: Seq[Column] = flatQuadCols ++ Seq(
+    flatGLex.as("gLex"),
     col("sLex").as("sLex"),
     col("pLex").as("pLex"),
     col("oLex").as("oLex"),
-    when(col("oKind") === 0, Rid.attrCol(col("oDt"), col("oLang")))
-      .otherwise(lit(0L)).as("oDt"),
+    when(col("oKind") === 0, flatOAttr).otherwise(lit(0L)).as("oDt"),
     when(col("oKind") === 0, coalesce(col("oLang"), lit("")))
       .otherwise(lit("")).as("oLang"))
 
-  private[graft] def fromFlatRaw(spark: SparkSession,
-                                 flat: DataFrame): QuadStore = {
+  /** [[fromFlat]] without the text-index pass (used by FullText itself
+    * to avoid re-deriving derived quads). The dictionary is five pruned
+    * scans of the columnar parse cache — subjects, predicates, objects,
+    * graphs, datatypes — unioned and deduplicated on `rid`. */
+  private[graft] def fromFlatRaw(flat: DataFrame): QuadStore = {
     val f = flat.cache()
     val valued = f.select(valuedCols: _*)
     val quads = valued.select(quadCols.map(col): _*)
@@ -322,64 +329,16 @@ object QuadStore {
     def res(rid: Column, lex: Column, dt: Column, lang: Column) =
       Seq(rid.as("rid"), lex.as("lex"), dt.as("dt"), lang.as("lang"))
 
-    val subjects = f.select(res(
-      when(col("sKind") === 1, Rid.uriCol(col("sLex")))
-        .otherwise(Rid.bnodeCol(col("sLex"))),
-      col("sLex"), zero, emptyS): _*)
-    val preds = f.select(res(
-      Rid.uriCol(col("pLex")), col("pLex"), zero, emptyS): _*)
-    val objs = f.select(res(
-      ridOf(col("oKind"), col("oLex"), col("oDt"), col("oLang")),
-      col("oLex"), Rid.attrCol(col("oDt"), col("oLang")),
+    val subjects = f.select(res(flatS, col("sLex"), zero, emptyS): _*)
+    val preds = f.select(res(flatP, col("pLex"), zero, emptyS): _*)
+    val objs = f.select(res(flatO, col("oLex"), flatOAttr,
       coalesce(col("oLang"), emptyS)): _*)
-    val graphs = f.select(res(
-      when(col("gLex").isNull || col("gLex") === "", lit(defaultGraph))
-        .otherwise(Rid.uriCol(col("gLex"))),
-      when(col("gLex").isNull || col("gLex") === "",
-        lit(defaultGraphUri)).otherwise(col("gLex")),
-      zero, emptyS): _*)
+    val graphs = f.select(res(flatG, flatGLex, zero, emptyS): _*)
     val dts = f.filter(col("oDt") =!= "").select(res(
       Rid.uriCol(col("oDt")), col("oDt"), zero, emptyS): _*)
-
-    // A/B-able dictionary derivation (spark.graft.import.dictStack):
-    // the default derives the dictionary as five pruned scans of the
-    // columnar parse cache union'd; the "stack" arm emits each row's
-    // <=5 candidate entries through ONE explode over a single scan.
-    // Same rid-dedup shuffle either way — the arms differ only in how
-    // the pre-shuffle rows are produced. Kept behind a conf so the GSP
-    // floor-of-N A/B protocol (`graft.Probe gsp`) can interleave both
-    // arms in one process; the measured-better arm is the default.
-    val dictStack = spark.conf.getOption("spark.graft.import.dictStack")
-      .contains("true")
-    val resources =
-      if (dictStack) {
-        val sRid = when(col("sKind") === 1, Rid.uriCol(col("sLex")))
-          .otherwise(Rid.bnodeCol(col("sLex")))
-        val gRid = when(col("gLex").isNull || col("gLex") === "",
-          lit(defaultGraph)).otherwise(Rid.uriCol(col("gLex")))
-        val gLex = when(col("gLex").isNull || col("gLex") === "",
-          lit(defaultGraphUri)).otherwise(col("gLex"))
-        val oRid = ridOf(col("oKind"), col("oLex"), col("oDt"),
-          col("oLang"))
-        val dtRid = when(col("oDt") =!= "", Rid.uriCol(col("oDt")))
-        def ent(rid: Column, lex: Column, dt: Column, lang: Column) =
-          struct(rid.as("rid"), lex.as("lex"), dt.as("dt"),
-            lang.as("lang"))
-        f.select(explode(array(
-            ent(sRid, col("sLex"), zero, emptyS),
-            ent(Rid.uriCol(col("pLex")), col("pLex"), zero, emptyS),
-            ent(oRid, col("oLex"), Rid.attrCol(col("oDt"), col("oLang")),
-              coalesce(col("oLang"), emptyS)),
-            ent(gRid, gLex, zero, emptyS),
-            ent(dtRid, col("oDt"), zero, emptyS))).as("e"))
-          .select(col("e.rid").as("rid"), col("e.lex").as("lex"),
-            col("e.dt").as("dt"), col("e.lang").as("lang"))
-          .filter(col("rid").isNotNull)
-          .dropDuplicates("rid")
-      } else
-        subjects.unionByName(preds).unionByName(objs)
-          .unionByName(graphs).unionByName(dts)
-          .dropDuplicates("rid")
+    val resources = subjects.unionByName(preds).unionByName(objs)
+      .unionByName(graphs).unionByName(dts)
+      .dropDuplicates("rid")
     QuadStore(quads, resources, Some(valued))
   }
 
@@ -413,7 +372,7 @@ object QuadStore {
     val f0 = flat.cache()
     var withDerived: Option[DataFrame] = None
     try {
-      val st = fromFlatRaw(spark, f0)
+      val st = fromFlatRaw(f0)
       // the config probe runs FIRST and alone: its collect is the one
       // full parse pass that populates the cache every later job reads.
       // (Racing the probe and the pins concurrently was measured
@@ -437,7 +396,7 @@ object QuadStore {
         withDerived = // fromFlatRaw caches ITS input too: track the
           // union plan so this branch unpersists both
           Some(f0.unionByName(FullText.derivedQuads(f0, cfg)))
-        fromFlatRaw(spark, withDerived.get).pinned()
+        fromFlatRaw(withDerived.get).pinned()
       }
     } finally {
       f0.unpersist(false)

@@ -1,37 +1,16 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 import graft.sparql.PlanCache
 
 /** Result serializers mirroring the reference's output formats
   * (`src/frontend/results.c`): TSV (`output_text`, :2014), CSV
   * (`output_csv`, :2143), SPARQL results JSON (`output_json`, :2248),
-  * SPARQL results XML (`output_sparql`, :1900). TSV/CSV scale out via
-  * df.write; JSON/XML build the (driver-side) response document exactly
-  * like the reference's HTTP serializers.
+  * SPARQL results XML (`output_sparql`, :1900). Each builds the
+  * (driver-side) response document exactly like the reference's HTTP
+  * serializers.
   */
 object Results {
-
-  /** TSV with `?var` header, reference escaping (`results.c:1468-1527`). */
-  def toTsvLines(df: DataFrame): DataFrame = {
-    val header = df.columns.map("?" + _).mkString("\t")
-    val rowCol = concat_ws("\t", df.columns.map { c =>
-      regexp_replace(regexp_replace(regexp_replace(
-        coalesce(col(c).cast("string"), lit("")),
-        "\\\\", "\\\\\\\\"), "\t", "\\\\t"), "\n", "\\\\n")
-    }: _*)
-    val spark = df.sparkSession
-    import spark.implicits._
-    Seq(header).toDF("line").union(df.select(rowCol.as("line")))
-  }
-
-  def writeTsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("sep", "\t").option("header", "true")
-      .csv(path)
-
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path)
 
   /** SPARQL 1.1 CSV results reduce a term to its plain form: IRIs bare
     * (no `<>`), bnodes as `_:label`, literals as the unescaped lexical —

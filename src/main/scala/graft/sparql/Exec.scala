@@ -473,27 +473,8 @@ final class Exec(store: QuadStore, spark: SparkSession) {
     // the query even starts).
     val ldf = ldf0.localCheckpoint(eager = false)
     val rdf = rdf0.localCheckpoint(eager = false)
-    val branches = for {
-      a <- subsets(lMaybe)
-      b <- subsets(rMaybe)
-    } yield {
-      val lb =
-        if (lMaybe.isEmpty) ldf
-        else ldf.filter(lMaybe.map(v =>
-          if (a(v)) col(v).isNull else col(v).isNotNull).reduce(_ && _))
-      val rb =
-        if (rMaybe.isEmpty) rdf
-        else rdf.filter(rMaybe.map(v =>
-          if (b(v)) col(ren(v)).isNull else col(ren(v)).isNotNull)
-          .reduce(_ && _))
-      val conds = shared.filterNot(v => a(v) || b(v))
-        .map(v => col(v) === col(ren(v))) ++ extraCond.toSeq
-      if (conds.isEmpty) {
-        if (joinType == "inner") lb.crossJoin(rb)
-        else lb.join(rb, lit(true), joinType)
-      } else lb.join(rb, conds.reduce(_ && _), joinType)
-    }
-    branches.reduce(_ unionByName _)
+    maskBranches(ldf, rdf, ren, shared, lMaybe, rMaybe,
+      subsets(lMaybe), subsets(rMaybe), extraCond, joinType)
   }
 
   /** [[compatBranches]] for WIDE maybe-null var sets: static enumeration
@@ -528,6 +509,21 @@ final class Exec(store: QuadStore, spark: SparkSession) {
       // one side is empty; lit(false) folds to an empty relation of the
       // joined schema without enumerating branches
       return ldf.join(rdf, lit(false), joinType)
+    maskBranches(ldf, rdf, ren, shared, lMaybe, rMaybe, lMasks, rMasks,
+      extraCond, joinType)
+  }
+
+  /** The branches of a compatibility join, one per (left null-mask,
+    * right null-mask) pair, unioned: a mask is the set of maybe-null
+    * vars that are NULL in that branch, and every shared var outside
+    * both masks joins by equality. */
+  private def maskBranches(ldf: DataFrame, rdf: DataFrame,
+                           ren: String => String, shared: Seq[String],
+                           lMaybe: Seq[String], rMaybe: Seq[String],
+                           lMasks: Seq[Set[String]],
+                           rMasks: Seq[Set[String]],
+                           extraCond: Option[Column],
+                           joinType: String): DataFrame = {
     val branches = for {
       a <- lMasks
       b <- rMasks
@@ -551,13 +547,6 @@ final class Exec(store: QuadStore, spark: SparkSession) {
     branches.reduce(_ unionByName _)
   }
 
-  /** SPARQL join: equi on certainly-bound shared vars, compatibility
-    * (NULL = wildcard) on maybe-null shared vars (SURVEY §7.4 hard part 2;
-    * reference row-compare `query-datatypes.c:476-529`). The compat case
-    * is decomposed into a union of equi-joins (see [[compatBranches]]) so
-    * OPTIONAL/UNION-introduced vars rejoining later patterns still hash
-    * join instead of nested-looping.
-    */
   /** SPARQL OPTIONAL with the §18.2.2.5 semantics: `OPTIONAL { P
     * FILTER(E) }` is LeftJoin(left, P, E) — E is the JOIN CONDITION,
     * evaluated over the MERGED solution, so left-side vars ARE visible
@@ -685,6 +674,13 @@ final class Exec(store: QuadStore, spark: SparkSession) {
     }
   }
 
+  /** SPARQL join: equi on certainly-bound shared vars, compatibility
+    * (NULL = wildcard) on maybe-null shared vars (SURVEY §7.4 hard part 2;
+    * reference row-compare `query-datatypes.c:476-529`). The compat case
+    * is decomposed into a union of equi-joins (see [[compatBranches]]) so
+    * OPTIONAL/UNION-introduced vars rejoining later patterns still hash
+    * join instead of nested-looping.
+    */
   def join(l: Bindings, r: Bindings, joinType: String = "inner",
            extraCond: Option[Column] = None): Bindings = {
     val shared = (l.vars intersect r.vars).toSeq.sorted

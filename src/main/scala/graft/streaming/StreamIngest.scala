@@ -32,17 +32,10 @@ object StreamIngest {
         col("q.oDt").as("oDt"), col("q.oLang").as("oLang"))
       .filter(col("pLex").isNotNull)
 
-  /** Flat rows -> RID quads (columnar hashing, identical to batch). */
-  def toQuads(flat: DataFrame): DataFrame = flat.select(
-    when(col("gLex").isNull || col("gLex") === "",
-      lit(WellKnown.defaultGraph)).otherwise(Rid.uriCol(col("gLex"))).as("g"),
-    when(col("sKind") === 1, Rid.uriCol(col("sLex")))
-      .otherwise(Rid.bnodeCol(col("sLex"))).as("s"),
-    Rid.uriCol(col("pLex")).as("p"),
-    when(col("oKind") === 1, Rid.uriCol(col("oLex")))
-      .when(col("oKind") === 2, Rid.bnodeCol(col("oLex")))
-      .otherwise(Rid.literalCol(col("oLex"),
-        Rid.attrCol(col("oDt"), col("oLang")))).as("o"))
+  /** Flat rows -> RID quads (the batch importer's mapping,
+    * [[QuadStore.flatQuadCols]]). */
+  def toQuads(flat: DataFrame): DataFrame =
+    flat.select(QuadStore.flatQuadCols: _*)
 
   /** Continuous NT ingest: watch a directory, append quads to a parquet
     * table (the streaming analog of `fs_import_commit`). */
@@ -124,75 +117,70 @@ object StreamIngest {
       }
   }
 
-  /** One micro-batch of streaming near-duplicate dedup against a
-    * persistent MinHash band index (the core of [[minhashDedupStream]],
-    * exposed separately so batch callers and tests can drive it without
-    * a streaming query).
+  /** Streaming near-duplicate dedup: filter an ingest feed down to the
+    * documents [[graft.operators.Dedup.dedupAgainstIndex]] keeps — no
+    * exact fingerprint and no MinHash-LSH band bucket shared with an
+    * earlier document, earlier meaning an earlier micro-batch or a
+    * lower `idCol` in the same one. Kept documents append to `outDir`.
     *
-    * A document is dropped when any of its LSH band buckets was already
-    * claimed by (a) an earlier stream document recorded in `indexDir`, or
-    * (b) a lower-id document in the same batch (greedy keep-first, the
-    * same representative rule as batch [[graft.operators.Dedup.exact]]).
-    * Surviving documents' band rows are appended to the index.
-    *
-    * Unlike watermark-bounded exact dedup, near-dup state must span the
-    * whole corpus — the index is a parquet table keyed on (band, bucket),
-    * not a state store, so its size is bounded by the KEPT corpus (dropped
-    * docs add nothing) and the probe is one shuffle-join of the batch's
-    * band rows against it. A replayed batch (foreachBatch at-least-once)
-    * re-appends identical band rows; duplicates in the index are harmless
-    * to the semi-join probe.
-    */
-  def minhashDedupBatch(batch: DataFrame, idCol: String, textCol: String,
-                        indexDir: String, k: Int = 3, h: Int = 32,
-                        bands: Int = 16): DataFrame = {
-    import graft.operators.Dedup
-    val spark = batch.sparkSession
-    val rows = h / bands
-    val sig = Dedup.minhashSignatures(batch, idCol, textCol, k, h)
-    val banded = sig.select(col("id"),
-      posexplode(Dedup.bandBucketArray(col("sig"), bands, rows)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-      .localCheckpoint() // pin: probed, min-reduced, then appended
-    val seen =
-      if (new java.io.File(indexDir).exists())
-        spark.read.parquet(indexDir).select("band", "bucket")
-      else spark.emptyDataFrame.select(lit(0).as("band"),
-        lit(0L).as("bucket")).limit(0)
-    val dupVsIndex = banded.join(seen, Seq("band", "bucket"), "left_semi")
-      .select(col("id")).distinct()
-    // intra-batch: in each bucket the lowest id wins; later ids drop
-    val bucketMin = banded.groupBy("band", "bucket")
-      .agg(min(col("id")).as("first_id"))
-    val dupInBatch = banded.join(bucketMin, Seq("band", "bucket"))
-      .filter(col("id") > col("first_id"))
-      .select(col("id")).distinct()
-    val dropIds = dupVsIndex.unionByName(dupInBatch).distinct()
-    val kept = batch.join(dropIds.withColumnRenamed("id", idCol),
-      Seq(idCol), "left_anti")
-    banded.join(dropIds, Seq("id"), "left_anti")
-      .write.mode("append").parquet(indexDir)
-    kept
-  }
-
-  /** Streaming near-duplicate dedup: filter an ingest feed down to docs
-    * that are not MinHash-LSH near-duplicates of anything already kept,
-    * maintaining the band index across batches (and restarts) in
-    * `indexDir`. Kept documents append to `outDir`. */
+    * A thin foreachBatch shell like [[lineDedupStream]], with the same
+    * zero-padded batch-id snapshot key and the same one-stream-per-index
+    * ownership claim, so the batch operator's guarantees carry over: the
+    * params sidecar fails closed, the index lock serializes probes
+    * against [[graft.operators.Dedup.compactDedupIndex]], every probed
+    * document enters the index (dropped ones too), so cutting the feed
+    * into micro-batches anywhere keeps the same set as one batch, and a
+    * replayed batch probes only strictly-earlier batches, so it keeps
+    * the same documents it kept the first time. */
   def minhashDedupStream(docs: DataFrame, idCol: String, textCol: String,
                          indexDir: String, outDir: String,
                          checkpoint: String, k: Int = 3, h: Int = 32,
                          bands: Int = 16) =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        minhashDedupBatch(batch.toDF(), idCol, textCol, indexDir,
-          k, h, bands)
-          .write.mode("append").parquet(outDir)
-        ()
+      .foreachBatch {
+        (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
+          claimStreamOwner(indexDir, checkpoint, "minhashDedupStream")
+          val kept = graft.operators.Dedup.dedupAgainstIndex(batch.toDF(),
+              idCol, textCol, indexDir, f"batch$bid%010d", k, h, bands)
+            .filter(col("verdict") === "keep").select(col("id").as(idCol))
+          batch.toDF().join(kept, Seq(idCol), "left_semi")
+            .write.mode("append").parquet(outDir)
+          ()
       }
       .outputMode(OutputMode.Append())
       .start()
+
+  /** Claim (or re-verify) exclusive stream ownership of an on-disk
+    * index dir via atomic CREATE_NEW of `stream.owner.txt` holding
+    * this stream's checkpoint path. Two streams with different
+    * checkpoints generate COLLIDING batch ids, silently overwriting
+    * each other's batch-keyed partitions — and the check-then-write
+    * form this replaces let two concurrent FIRST batches both pass
+    * the existence check and both claim the dir. CREATE_NEW makes the
+    * claim race-free; a restart of the same stream (same checkpoint)
+    * passes. */
+  private def claimStreamOwner(indexDir: String, checkpoint: String,
+                               what: String): Unit = {
+    val dir = java.nio.file.Paths.get(indexDir)
+    java.nio.file.Files.createDirectories(dir)
+    val owner = dir.resolve("stream.owner.txt")
+    try java.nio.file.Files.write(owner, checkpoint.getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.CREATE_NEW)
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        val prev = new String(
+          java.nio.file.Files.readAllBytes(owner), "UTF-8").trim
+        if (prev != checkpoint)
+          throw new IllegalStateException(
+            s"$what: index $indexDir is owned by the stream " +
+              s"checkpointed at '$prev' but this stream checkpoints " +
+              s"at '$checkpoint' — batch ids would collide and " +
+              "overwrite the other stream's batch-keyed partitions. " +
+              "Use a fresh indexDir per stream (or restore the " +
+              "original checkpoint).")
+    }
+  }
 
   /** Streaming corpus-global LINE dedup: the C4 global-first rule
     * ([[graft.operators.Dedup.dedupLinesGlobal]]) over an unbounded
@@ -232,37 +220,6 @@ object StreamIngest {
     * instead of corrupting shared history. (The batch API has no such
     * guard because its callers pick explicit date-shaped snapshot ids;
     * here the ids are batch-generated, so the lineage must be pinned.) */
-  /** Claim (or re-verify) exclusive stream ownership of an on-disk
-    * index dir via atomic CREATE_NEW of `stream.owner.txt` holding
-    * this stream's checkpoint path. Two streams with different
-    * checkpoints generate COLLIDING batch ids, silently overwriting
-    * each other's batch-keyed partitions — and the check-then-write
-    * form this replaces let two concurrent FIRST batches both pass
-    * the existence check and both claim the dir. CREATE_NEW makes the
-    * claim race-free; a restart of the same stream (same checkpoint)
-    * passes. */
-  private def claimStreamOwner(indexDir: String, checkpoint: String,
-                               what: String): Unit = {
-    val dir = java.nio.file.Paths.get(indexDir)
-    java.nio.file.Files.createDirectories(dir)
-    val owner = dir.resolve("stream.owner.txt")
-    try java.nio.file.Files.write(owner, checkpoint.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE_NEW)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        val prev = new String(
-          java.nio.file.Files.readAllBytes(owner), "UTF-8").trim
-        if (prev != checkpoint)
-          throw new IllegalStateException(
-            s"$what: index $indexDir is owned by the stream " +
-              s"checkpointed at '$prev' but this stream checkpoints " +
-              s"at '$checkpoint' — batch ids would collide and " +
-              "overwrite the other stream's batch-keyed partitions. " +
-              "Use a fresh indexDir per stream (or restore the " +
-              "original checkpoint).")
-    }
-  }
-
   def lineDedupStream(docs: DataFrame, idCol: String, textCol: String,
                       indexDir: String, outDir: String,
                       checkpoint: String, sep: String = "\n") =
@@ -358,31 +315,21 @@ object StreamIngest {
       .outputMode(OutputMode.Append())
       .start()
 
-  /** Streaming decontamination: annotate documents in-flight with their
-    * k-gram overlap against a STATIC held-out eval set — the streaming
-    * analog of [[graft.operators.Decontaminate.flag]], for screening an
-    * ingest feed before it lands in a training corpus.
-    *
-    * The eval side collapses to a driver-built bloom filter once at plan
-    * time, so the probe is a stateless map over each micro-batch: no
-    * stream-stream join, no state store, executor memory constant in the
-    * eval size. Negatives are exact (bloom one-sided error); positives
-    * over-report by at most `fpp` per gram and can be re-checked exactly
-    * downstream in batch.
-    */
   /** Streaming DSIR scoring: annotate an ingest feed in-flight with its
     * log importance weight against FIXED target/raw hashed-bigram
     * bucket distributions trained on static corpora — the streaming
     * analog of [[graft.operators.TextAnalysis.dsirImportance]], for
     * domain-match screening before documents land in a training corpus.
     *
-    * Both count tables are bounded at `buckets` entries regardless of
-    * corpus size, so they collapse to two driver-built long arrays
-    * broadcast once at plan time; the scorer is a stateless map over
-    * each micro-batch — no stream-stream join, no state store, executor
-    * memory constant in the training-corpus size. Uses the fast
-    * xxhash64 gram hash (no oracle needs portability here); `buckets`
-    * must be a power of two so the bucket is a mask of the signed hash.
+    * Both count tables are the batch operator's
+    * ([[graft.operators.TextAnalysis.dsirCounts]]), bounded at `buckets`
+    * entries regardless of corpus size, so they collapse to two
+    * driver-built long arrays broadcast once at plan time; the scorer is
+    * a stateless map over each micro-batch — no stream-stream join, no
+    * state store, executor memory constant in the training-corpus size.
+    * Uses the fast xxhash64 gram hash (no oracle needs portability
+    * here); `buckets` must be a power of two so the bucket is a mask of
+    * the signed hash.
     */
   def dsirScoreStream(docs: DataFrame, target: DataFrame, raw: DataFrame,
                       textCol: String, buckets: Int = 4096,
@@ -391,17 +338,12 @@ object StreamIngest {
       s"buckets must be a power of two, got $buckets")
     val spark = docs.sparkSession
     def counts(df: DataFrame): (Array[Long], Long) = {
-      val rows = df.select(explode(graft.functions.F
-          .shinglePosHashes(col(textCol), 2, md5 = false)).as("h"))
-        .select(pmod(col("h"), lit(buckets.toLong)).as("b"))
-        .groupBy("b").agg(count(lit(1)).as("c"))
-        .collect() // <= buckets rows by construction
       val arr = new Array[Long](buckets)
-      var tot = 0L
-      rows.foreach { r =>
-        arr(r.getLong(0).toInt) = r.getLong(1); tot += r.getLong(1)
-      }
-      (arr, tot)
+      graft.operators.TextAnalysis.dsirCounts(df, textCol, buckets,
+          portableHash = false, "c")
+        .collect() // <= buckets rows by construction
+        .foreach(r => arr(r.getLong(0).toInt) = r.getLong(1))
+      (arr, arr.sum)
     }
     val (tArr, tTot) = counts(target)
     val (rArr, rTot) = counts(raw)
@@ -431,18 +373,24 @@ object StreamIngest {
       .drop("__hs")
   }
 
+  /** Streaming decontamination: annotate documents in-flight with their
+    * k-gram overlap against a STATIC held-out eval set — the streaming
+    * analog of [[graft.operators.Decontaminate.flag]], for screening an
+    * ingest feed before it lands in a training corpus.
+    *
+    * The eval side collapses to the driver-built bloom filter of
+    * [[graft.operators.Decontaminate.flagBloom]] once at plan time, so
+    * the probe is a stateless map over each micro-batch: no
+    * stream-stream join, no state store, executor memory constant in
+    * the eval size. Negatives are exact (bloom one-sided error);
+    * positives over-report by at most `fpp` per gram and can be
+    * re-checked exactly downstream in batch.
+    */
   def decontaminateStream(docs: DataFrame, evalDf: DataFrame,
                           idCol: String, textCol: String, k: Int = 8,
                           fpp: Double = 0.001): DataFrame = {
-    val spark = docs.sparkSession
-    val evalGrams = graft.operators.Dedup
-      .shingleHashRows(evalDf, idCol, textCol, k)
-      .select("h").distinct().cache()
-    val n = math.max(evalGrams.count(), 1L)
-    val bloom =
-      try evalGrams.stat.bloomFilter("h", n, fpp)
-      finally evalGrams.unpersist(blocking = false)
-    val bc = spark.sparkContext.broadcast(bloom)
+    val (_, bc) = graft.operators.Decontaminate.evalBloom(evalDf, idCol,
+      textCol, k, fpp, portableHash = false)
     val hits = udf((hs: Seq[Long]) =>
       if (hs == null) 0 else hs.count(bc.value.mightContainLong))
     docs.select(col("*"),

@@ -84,11 +84,26 @@ class ProbeSpec extends SparkTestBase {
       txt.contains("Scan ExistingRDD"), txt)
   }
 
-  test("ab interleaves the two arms in both orders") {
-    val order = scala.collection.mutable.ArrayBuffer.empty[String]
-    val (a, b) = Probe.ab(() => { order += "a"; 1 },
-      () => { order += "b"; 2 }, rounds = 3)
-    assert(order == Seq("a", "b", "b", "a", "a", "b"))
-    assert(a == Seq(1, 1, 1) && b == Seq(2, 2, 2))
+  test("gsp PUTs the lineitem body once per round and reports the run " +
+      "floors") {
+    val dir = java.nio.file.Files.createTempDirectory("probe-gsp").toString
+    spark.range(1, 21).selectExpr("id AS l_orderkey",
+        "CAST(id % 3 + 1 AS INT) AS l_linenumber", "id % 5 AS l_partkey",
+        "CAST(id AS DECIMAL(15,2)) AS l_quantity",
+        "IF(id % 2 = 0, 'R', 'N') AS l_returnflag")
+      .write.parquet(s"$dir/lineitem.parquet")
+    // each PUT must answer 201 and its triple count must check, or the
+    // scenario throws
+    val (line, _) = Probe.run(spark, Seq("gsp", dir, "1", "2", "0"))
+    assert(!line.contains("\n"), "one line")
+    val j = new ObjectMapper().readTree(line)
+    assert(j.get("scenario").asText() == "gsp")
+    assert(j.get("triples").asLong() == 60)
+    val runs = j.get("runs")
+    assert(runs.size() == 2, runs)
+    runs.elements().asScala.foreach(r =>
+      assert(r.get("sec").asDouble() > 0 && r.get("healthy").asBoolean(), r))
+    val floor = j.get("floor_sec").asDouble()
+    assert(floor > 0 && j.get("gated_floor_sec").asDouble() == floor, line)
   }
 }

@@ -75,28 +75,31 @@ class RidSpec extends SparkTestBase {
       WellKnown.defaultGraph)
   }
 
-  test("dictStack import arm builds a dictionary identical to the " +
-      "default five-scan union (the GSP A/B conf must not rot)") {
-    val nt = Seq(
-      """<urn:s1> <urn:p> <urn:o1> .""",
-      """<urn:s1> <urn:q> "lit"@en .""",
-      """_:b <urn:p> "5"^^<http://www.w3.org/2001/XMLSchema#integer> <urn:g> .""",
-      """<urn:s2> <urn:q> "plain" .""")
-    def dict(stack: Boolean): Seq[(Long, String, Long, String)] = {
-      if (stack) spark.conf.set("spark.graft.import.dictStack", "true")
-      else spark.conf.unset("spark.graft.import.dictStack")
-      try {
-        val flat = graft.streaming.StreamIngest.parseNtLines(
-          spark.createDataset(nt)(org.apache.spark.sql.Encoders.STRING))
-        QuadStore.fromFlat(spark, flat).resources
-          .select("rid", "lex", "dt", "lang")
-          .as[(Long, String, Long, String)].collect().sortBy(_._1).toSeq
-      } finally spark.conf.unset("spark.graft.import.dictStack")
-    }
-    val base = dict(stack = false)
-    val stacked = dict(stack = true)
-    assert(base.nonEmpty && base == stacked,
-      s"arms diverged:\nbase   : $base\nstacked: $stacked")
+  test("flat import builds one dictionary entry per term; streamed " +
+      "quads hash alike") {
+    val xsdInt = "http://www.w3.org/2001/XMLSchema#integer"
+    val flat = graft.streaming.StreamIngest.parseNtLines(
+      spark.createDataset(Seq(
+        """<urn:s1> <urn:p> <urn:o1> .""",
+        """<urn:s1> <urn:q> "lit"@en .""",
+        s"""_:b <urn:p> "5"^^<$xsdInt> <urn:g> .""",
+        """<urn:s2> <urn:q> "plain" ."""))(
+        org.apache.spark.sql.Encoders.STRING))
+    val st = QuadStore.fromFlat(spark, flat)
+    val dict = st.resources.select("rid", "lex", "dt", "lang")
+      .as[(Long, String, Long, String)].collect().sortBy(_._1).toSeq
+    def uri(u: String) = (Rid.uri(u), u, 0L, "")
+    val expect = (Seq(uri("urn:s1"), uri("urn:s2"), uri("urn:p"),
+      uri("urn:q"), uri("urn:o1"), uri("urn:g"), uri(xsdInt),
+      uri(WellKnown.defaultGraphUri), (Rid.bnode("b"), "b", 0L, ""),
+      (Rid.literal("lit", lang = "en"), "lit", Rid.attr("", "en"), "en"),
+      (Rid.literal("5", xsdInt), "5", Rid.uri(xsdInt), ""),
+      (Rid.literal("plain"), "plain", 0L, ""))).sortBy(_._1)
+    assert(dict == expect, s"\ngot   : $dict\nexpect: $expect")
+    val streamed = graft.streaming.StreamIngest.toQuads(flat)
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(streamed.size == 4 &&
+      streamed == st.quads.as[(Long, Long, Long, Long)].collect().toSet)
   }
 
   test("TriG: graph blocks, label-only blocks, default graph, nesting") {

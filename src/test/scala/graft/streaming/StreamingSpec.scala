@@ -81,7 +81,7 @@ class StreamingSpec extends SparkTestBase {
       FlatQuad("", 1, "urn:doc2", "urn:title", 0, "engine rooms", "", ""),
       FlatQuad("", 1, "urn:doc3", "urn:other", 0, "not indexed", "", "")
     ).toDF()
-    val store = FullText.withFullText(spark, flat, Set("urn:title"))
+    val store = FullText.withFullText(flat, Set("urn:title"))
     // searching a token finds the right subjects
     val hits = FullText.searchToken(store, "engines")
       .as[Long].collect().toSet
@@ -247,31 +247,6 @@ class StreamingSpec extends SparkTestBase {
     q.stop()
   }
 
-  test("minhash dedup batch: drops near-dups vs index and within batch") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("neardup_idx")
-    val idx = dir.resolve("index").toString
-    val base = "the quick brown fox jumps over the lazy dog near the " +
-      "river bank today and tomorrow and every day after that"
-    val b1 = Seq(
-      (1L, base),
-      (2L, base + " extra"), // near-dup of 1, same batch -> dropped
-      (3L, "completely different text about spark engines and data flow")
-    ).toDF("doc_id", "text")
-    val kept1 = StreamIngest.minhashDedupBatch(b1, "doc_id", "text", idx)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(kept1 == Seq(1L, 3L))
-    // second batch: near-dup of an INDEXED doc drops, novel doc survives
-    val b2 = Seq(
-      (4L, base.replace("quick", "slow")), // near-dup of kept doc 1
-      (5L, "entirely novel content with nothing shared at all anywhere " +
-        "in this corpus of streaming documents")
-    ).toDF("doc_id", "text")
-    val kept2 = StreamIngest.minhashDedupBatch(b2, "doc_id", "text", idx)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(kept2 == Seq(5L))
-  }
-
   test("line dedup stream: the C4 global-first rule across " +
       "micro-batches — later docs lose lines earlier batches kept, " +
       "intra-batch election included, docs reassembled in order") {
@@ -327,34 +302,97 @@ class StreamingSpec extends SparkTestBase {
     q2.stop()
   }
 
-  test("minhash dedup stream filters the feed across micro-batches") {
-    import spark.implicits._
+  /** Runs [[StreamIngest.minhashDedupStream]] over `batches` (one
+    * micro-batch each) with its index, output and checkpoint under
+    * `dir`: the kept ids. */
+  private def nearDupStream(dir: java.nio.file.Path,
+                            batches: Seq[(Long, String)]*): Seq[Long] = {
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("neardup_stream")
-    val idx = dir.resolve("index").toString
     val out = dir.resolve("out").toString
-    val ckpt = dir.resolve("ckpt").toString
+    val mem = MemoryStream[(Long, String)]
+    // added before start: a query restarted on an uncommitted batch
+    // replays it first thing
+    mem.addData(batches.head: _*)
+    val q = StreamIngest.minhashDedupStream(mem.toDS().toDF("doc_id", "text"),
+      "doc_id", "text", dir.resolve("index").toString, out,
+      dir.resolve("ckpt").toString)
+    try {
+      q.processAllAvailable()
+      batches.tail.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+    } finally q.stop()
+    spark.read.parquet(out).select("doc_id").as[Long].collect().sorted.toSeq
+  }
+
+  test("minhash dedup batch: drops near-dups vs index and within batch") {
+    val base = "the quick brown fox jumps over the lazy dog near the " +
+      "river bank today and tomorrow and every day after that"
+    val kept = nearDupStream(
+      java.nio.file.Files.createTempDirectory("neardup_idx"),
+      Seq((1L, base),
+        (2L, base + " extra"), // near-dup of 1, same batch -> dropped
+        (3L, "completely different text about spark engines and data flow")),
+      Seq((4L, base.replace("quick", "slow")), // near-dup of kept doc 1
+        (5L, "entirely novel content with nothing shared at all anywhere " +
+          "in this corpus of streaming documents")))
+    assert(kept == Seq(1L, 3L, 5L), kept)
+  }
+
+  test("minhash dedup stream filters the feed across micro-batches") {
     val base = "one two three four five six seven eight nine ten eleven " +
       "twelve thirteen fourteen fifteen sixteen"
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamIngest.minhashDedupStream(mem.toDS().toDF("doc_id", "text"),
-      "doc_id", "text", idx, out, ckpt)
-    mem.addData((1L, base),
-      (2L, "some wholly unrelated document about query planners and " +
+    val kept = nearDupStream(
+      java.nio.file.Files.createTempDirectory("neardup_stream"),
+      Seq((1L, base),
+        (2L, "some wholly unrelated document about query planners and " +
+          "columnar execution engines")),
+      Seq((3L, base + " seventeen"))) // near-dup of 1 from batch 1
+    assert(kept == Seq(1L, 2L), kept)
+  }
+
+  test("minhash dedup stream: a replayed micro-batch keeps the same " +
+      "documents") {
+    val base = "one two three four five six seven eight nine ten eleven " +
+      "twelve thirteen fourteen fifteen sixteen"
+    val docs = Seq((1L, base), (2L, base + " seventeen"),
+      (3L, "some wholly unrelated document about query planners and " +
         "columnar execution engines"))
-    q.processAllAvailable()
-    mem.addData((3L, base + " seventeen")) // near-dup of 1 from batch 1
-    q.processAllAvailable()
-    q.stop()
-    val kept = spark.read.parquet(out)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(kept == Seq(1L, 2L))
+    val dir = java.nio.file.Files.createTempDirectory("neardup_replay")
+    val first = nearDupStream(dir, docs)
+    assert(first == Seq(1L, 3L), first)
+    // a crash after the index delta landed but before the batch's
+    // output and commit: the restarted query replays batch 0
+    def rmTree(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete()
+    }
+    Seq("ckpt/commits/0", "ckpt/commits/.0.crc", "out")
+      .foreach(f => rmTree(dir.resolve(f).toFile))
+    val replayed = nearDupStream(dir, docs)
+    assert(replayed == first, s"replay kept $replayed, first run $first")
+  }
+
+  test("minhash dedup stream: the batch cut does not change the kept " +
+      "set") {
+    // A~B and B~C share LSH buckets; A and C share no 3-token shingle.
+    // B drops against A, and C against B whether or not B was kept.
+    val ws = (1 to 40).map(i => s"w$i")
+    val a = (1L, ws.slice(0, 20).mkString(" "))
+    val b = (2L, ws.slice(2, 38).mkString(" "))
+    val c = (3L, ws.slice(18, 40).mkString(" "))
+    val whole = nearDupStream(
+      java.nio.file.Files.createTempDirectory("neardup_whole"), Seq(a, b, c))
+    val split = nearDupStream(
+      java.nio.file.Files.createTempDirectory("neardup_split"),
+      Seq(a, b), Seq(c))
+    assert(whole == Seq(1L), whole)
+    assert(split == whole, s"split $split vs one batch $whole")
   }
 
   test("result sinks: TSV lines, SPARQL JSON and XML") {
     val df = Seq(("<urn:a>", "\"Alice\"@en"), ("_:b1", "\"5\"^^<urn:int>"))
       .toDF("s", "o")
-    val tsv = Results.toTsvLines(df).as[String].collect()
+    val w = new java.io.StringWriter()
+    Results.writeTsv(df, w)
+    val tsv = w.toString.split("\n")
     assert(tsv.head == "?s\t?o")
     assert(tsv.length == 3)
     val json = Results.toJson(df)
