@@ -43,7 +43,7 @@ import graft.sinks.Results
   */
 object Probe {
   type Gate = (SparkSession, String) => DataFrame
-  private type Obj = ListMap[String, Any]
+  private[graft] type Obj = ListMap[String, Any]
 
   private val usage =
     "usage: graft.Probe gates|sparql|incr|monthly|gsp <args> (see Probe.scala)"
@@ -73,13 +73,11 @@ object Probe {
       throw new IllegalArgumentException(usage))
     val scenario = arg(0).getOrElse("")
     require(Set("gates", "sparql", "incr", "monthly", "gsp")(scenario), usage)
-    val listener = new Listener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val start = bracket("start")
-      val (body, out) = scenario match {
+    val (start, (body, out), end) = instrumented(spark) { listener =>
+      scenario match {
         case "gates" =>
-          (gates(spark, queries, need(1), need(2), flags, listener), arg(3))
+          (gatesScenario(spark, queries, need(1), need(2), flags, listener),
+            arg(3))
         case "sparql" =>
           (sparql(spark, queries, need(1), arg(3).getOrElse(need(1)),
             listener), arg(2))
@@ -91,9 +89,23 @@ object Probe {
           (gsp(spark, need(1), arg(2).fold(10)(_.toInt),
             arg(3).fold(3)(_.toInt), arg(4).fold(350.0)(_.toDouble)), arg(5))
       }
-      val head = ListMap("scenario" -> scenario,
-        "master" -> spark.sparkContext.master)
-      (json(head ++ start ++ body ++ bracket("end")), out)
+    }
+    val head = ListMap("scenario" -> scenario,
+      "master" -> spark.sparkContext.master)
+    (json(head ++ start ++ body ++ end), out)
+  }
+
+  /** `f` with a fresh [[Listener]] on `spark`'s bus, between two
+    * dd/cpuRef readings: the start readings, `f`'s result, the end
+    * readings. */
+  private[graft] def instrumented[A](spark: SparkSession)(
+      f: Listener => A): (Obj, A, Obj) = {
+    val listener = new Listener
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val start = bracket("start")
+      val a = f(listener)
+      (start, a, bracket("end"))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -164,7 +176,7 @@ object Probe {
 
   /** Compact JSON of maps, sequences, strings and numbers; strings go
     * through the engine's one escaper. Doubles keep 4 decimals. */
-  private def json(v: Any): String = v match {
+  private[graft] def json(v: Any): String = v match {
     case null | None => "null"
     case Some(x) => json(x)
     case s: String => "\"" + Results.jsonEscape(s) + "\""
@@ -263,18 +275,25 @@ object Probe {
 
   // ---- gates -----------------------------------------------------------
 
-  /** Every gate whose name matches `regex`: first, untimed, its rows and
-    * an order-insensitive, multiplicity-sensitive content digest (the
-    * sum of row xxhash64s as decimal(38,0)), so runs under two masters
-    * compare gate by gate; that pass is also the warm-up. Then it is
-    * timed `--repeats` times per action, with the listener's work of its
-    * last run. `count` is Bench's action, which column-prunes map-only
-    * gates down to the scan; `noop` writes every output column. A gate
-    * that throws records its exception instead. `--explain dir` writes
-    * each gate's executed plans to `dir/<gate>.txt`. */
-  private def gates(spark: SparkSession, queries: Map[String, Gate],
-                    regex: String, sfDir: String, flags: Map[String, String],
-                    listener: Listener): Obj = {
+  /** One gate that answered: its rows and content digest, and per action
+    * the seconds of each timed run with the listener's work of the last. */
+  private[graft] final case class Timed(rows: Long, digest: String,
+      runs: ListMap[String, (Seq[Double], Obj)])
+
+  /** A gate's JSON object: rows, digest and per action `sec` plus the
+    * listener stats, or its exception under `error`. */
+  private[graft] def gateObj(g: Either[Throwable, Timed]): Obj = g match {
+    case Left(e) => ListMap("error" -> e.toString)
+    case Right(t) => ListMap("rows" -> t.rows, "digest" -> t.digest) ++
+      t.runs.map { case (a, (secs, stats)) =>
+        a -> (ListMap("sec" -> secs) ++ stats) }
+  }
+
+  /** The `gates` scenario: its flags parsed for [[gates]]. */
+  private def gatesScenario(spark: SparkSession, queries: Map[String, Gate],
+                            regex: String, sfDir: String,
+                            flags: Map[String, String],
+                            listener: Listener): Obj = {
     val actions = flags.getOrElse("action", "count") match {
       case "both" => Seq("count", "noop")
       case a @ ("count" | "noop") => Seq(a)
@@ -284,20 +303,41 @@ object Probe {
     val repeats = flags.get("repeats").fold(1)(_.toInt)
     val explain = flags.get("explain").map(Paths.get(_))
     explain.foreach(Files.createDirectories(_))
+    ListMap("sf" -> sfDir, "actions" -> actions, "repeats" -> repeats,
+      "gates" -> gates(spark, queries, regex, sfDir, actions, repeats,
+        listener, explain).map { case (n, g) => n -> gateObj(g) })
+  }
+
+  /** The one gate runner. Every gate whose name matches `regex`, in name
+    * order: first, untimed, its rows and an order-insensitive,
+    * multiplicity-sensitive content digest (the sum of row xxhash64s as
+    * decimal(38,0)), so runs under two masters compare gate by gate; that
+    * pass is also the warm-up. Then it is timed `repeats` times per
+    * action, with the listener's work of its last run. `count` is Bench's
+    * action, which column-prunes map-only gates down to the scan; `noop`
+    * writes every output column. A gate that throws on any pass records
+    * its exception instead. `explain` is a directory that gets each
+    * gate's executed plans as `<gate>.txt`. */
+  private[graft] def gates(spark: SparkSession, queries: Map[String, Gate],
+                           regex: String, sfDir: String, actions: Seq[String],
+                           repeats: Int, listener: Listener,
+                           explain: Option[java.nio.file.Path])
+      : ListMap[String, Either[Throwable, Timed]] = {
     val re = regex.r
     val names = queries.keys.toSeq.sorted.filter(re.findFirstIn(_).isDefined)
-    val results = names.map { n =>
+    ListMap(names.map { n =>
       note(s"gate $n")
-      n -> gate(spark, queries(n), sfDir, actions, repeats, listener,
+      val g = gate(spark, queries(n), sfDir, actions, repeats, listener,
         explain.map(_.resolve(s"$n.txt")))
-    }
-    ListMap("sf" -> sfDir, "actions" -> actions, "repeats" -> repeats,
-      "gates" -> ListMap(results: _*))
+      g.left.foreach(e => note(s"gate $n failed: $e"))
+      n -> g
+    }: _*)
   }
 
   private def gate(spark: SparkSession, fn: Gate, sfDir: String,
                    actions: Seq[String], repeats: Int, listener: Listener,
-                   explainTo: Option[java.nio.file.Path]): Obj =
+                   explainTo: Option[java.nio.file.Path])
+      : Either[Throwable, Timed] =
     try {
       // rows and digest first: the untimed pass doubles as the warm-up,
       // so every timed run of every action is a warm one
@@ -320,12 +360,10 @@ object Probe {
             s"---- $d ----\n$p" }.mkString("\n")
         }.mkString("\n"))
       }
-      ListMap("rows" -> d.getLong(0),
-        "digest" -> d.getDecimal(1).toBigInteger.toString) ++
-        runs.map { case (a, rs) =>
-          a -> (ListMap("sec" -> rs.map(_._1)) ++ rs.last._2.stats)
-        }
-    } catch { case NonFatal(e) => ListMap("error" -> e.toString) }
+      Right(Timed(d.getLong(0), d.getDecimal(1).toBigInteger.toString,
+        ListMap(runs.map { case (a, rs) =>
+          a -> (rs.map(_._1), rs.last._2.stats) }: _*)))
+    } catch { case NonFatal(e) => Left(e) }
 
   // ---- sparql ----------------------------------------------------------
 
@@ -349,7 +387,8 @@ object Probe {
         "s04_sparql_minus", "s05_sparql_agg", "s07_sparql_order_limit",
         "s17_sparql_path", "s18_sparql_subselect").map { n =>
       note(s"gate $n")
-      n -> gate(spark, queries(n), sfDir, Seq("count"), 1, listener, None)
+      n -> gateObj(gate(spark, queries(n), sfDir, Seq("count"), 1,
+        listener, None))
     }
     // update at scale: INSERT…WHERE over the immutable snapshot, then a
     // count over the inserted predicate

@@ -9,12 +9,11 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Session(cpus, logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
-    // dev-only subset filter (comma-separated name prefixes); the
-    // driver sets no env, so its runs always dump everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    // dev-only subset filter, Bench's regex over gate names; the driver
+    // sets no env, so its runs always dump everything
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
     def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
+      only.forall(_.findFirstIn(name).isDefined)
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -37,8 +37,4 @@ object Tables {
       // mapping under the engine-wide UTC session timezone
       raw.withColumn("ts", col("ts").cast("timestamp"))
   }
-
-  /** Register all tables as temp views (idempotent per session). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
 }

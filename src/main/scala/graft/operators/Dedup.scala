@@ -965,59 +965,6 @@ object Dedup {
       .select("id1", "id2", "jaccard")
   }
 
-  /** Prefix-filtered n-gram Jaccard join (SSJoin/PPJoin family) — the
-    * 100 TB formulation of [[ngramJaccardPairs]], same EXACT output.
-    *
-    * The plain inverted-index join materializes a candidate row for
-    * every shared shingle of every co-occurring pair — on web-scale
-    * corpora the common shingles ("the quick") each produce a quadratic
-    * bucket. Prefix filtering shrinks the index to each document's
-    * `n - ceil(t*n) + 1` globally-RAREST shingles: for Jaccard >= t the
-    * overlap is at least ceil(t*max(|A|,|B|)), so two qualifying
-    * documents MUST share a shingle inside those prefixes (any global
-    * total order works; ascending document frequency prunes hardest).
-    * Candidates then verify exactly against the full per-document
-    * shingle arrays with one `array_intersect` per pair — no quadratic
-    * bucket ever forms on frequent shingles.
-    */
-  def ngramJaccardPairsPrefix(df: DataFrame, idCol: String,
-                              textCol: String, k: Int = 3,
-                              threshold: Double = 0.8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val sigs = df.select(col(idCol).as("id"),
-        graft.functions.F.shingleHashes(col(textCol), k)
-          .as("hs"))
-      .repartition(par)
-      .filter(size(col("hs")) > 0).cache()
-    val inv = sigs.select(col("id"), size(col("hs")).as("nsh"),
-      explode(col("hs")).as("h"))
-    // global document frequency = the canonical shingle order
-    val freq = inv.groupBy("h").agg(count(lit(1)).as("df"))
-    val ranked = inv.join(freq, "h")
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("id").orderBy(col("df"), col("h"))))
-    val prefix = ranked.filter(
-      col("rnk") <= col("nsh") - ceil(col("nsh") * threshold) + 1)
-      .select("id", "nsh", "h")
-    val a = prefix.as("a")
-    val b = prefix.as("b")
-    val cand = a.join(b,
-        col("a.h") === col("b.h") && col("a.id") < col("b.id") &&
-        col("a.nsh") * threshold <= col("b.nsh") &&
-        col("b.nsh") * threshold <= col("a.nsh"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2")).distinct()
-    cand
-      .join(sigs.select(col("id").as("id1"), col("hs").as("hs1")), "id1")
-      .join(sigs.select(col("id").as("id2"), col("hs").as("hs2")), "id2")
-      .withColumn("common",
-        size(array_intersect(col("hs1"), col("hs2"))).cast("double"))
-      .withColumn("jaccard", col("common") /
-        (size(col("hs1")) + size(col("hs2")) - col("common")))
-      .filter(col("jaccard") >= threshold)
-      .select("id1", "id2", "jaccard")
-  }
-
   /** Near-duplicate CLUSTERING: connected components over a similarity
     * pair graph, labeling every id with the minimum id reachable from it
     * (singletons label themselves). Iterative min-label propagation on

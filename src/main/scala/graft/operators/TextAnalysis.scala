@@ -1699,8 +1699,4 @@ object TextAnalysis {
 
   def fingerprintMd5(text: Column): Column =
     md5(trim(regexp_replace(lower(text), "\\s+", " ")).cast("binary"))
-
-  /** 64-bit rolling-hash fingerprint (xxhash64 of normalized text). */
-  def fingerprint64(text: Column): Column =
-    xxhash64(trim(regexp_replace(lower(text), "\\s+", " ")))
 }

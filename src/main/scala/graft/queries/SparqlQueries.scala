@@ -79,19 +79,22 @@ object SparqlQueries {
     (sized.sortWithinPartitions("p").cache(), small)
   }
 
+  /** `st` cached for the gates: the VALUED (wide) form [[arrange]]d and
+    * cached once, the narrow quads view a projection over the same cached
+    * relation (columnar cache prunes the value columns for RID-only
+    * scans), and the resources cached in one partition when the store is
+    * small. */
+  private def cached(st: QuadStore, onePart: Boolean): QuadStore = {
+    val (v, small) = arrange(st.valued.get, onePart)
+    val res = (if (small) st.resources.coalesce(1) else st.resources).cache()
+    QuadStore(v.select(QuadStore.quadCols.map(col): _*),
+      res, Some(v), st.predRids, st.graphRids)
+  }
+
   private def singleStore(s: SparkSession, dir: String, t: String,
                           onePart: Boolean): QuadStore =
-      cache.getOrElseUpdate((s, dir, t + (if (onePart) "@1" else "")), {
-        val st = QuadStore.rdfizeDir(s, dir, Seq(t))
-        // cache the VALUED (wide) form once; the narrow quads view is a
-        // projection over the same cached relation (columnar cache prunes
-        // the value columns for RID-only scans)
-        val (v, small) = arrange(st.valued.get, onePart)
-        val res =
-          (if (small) st.resources.coalesce(1) else st.resources).cache()
-        QuadStore(v.select(QuadStore.quadCols.map(col): _*),
-          res, Some(v), st.predRids, st.graphRids)
-      })
+      cache.getOrElseUpdate((s, dir, t + (if (onePart) "@1" else "")),
+        cached(QuadStore.rdfizeDir(s, dir, Seq(t)), onePart))
 
   private[graft] def sparql(s: SparkSession, dir: String,
                             tables: Seq[String], q: String): DataFrame =
@@ -111,11 +114,8 @@ object SparqlQueries {
         col("text").as("oLex"),
         lit("").as("oDt"),
         lit("").as("oLang"))
-      val st = FullText.withFullText(flat, Set("urn:p:documents:text"))
-      val (v, small) = arrange(st.valued.get, onePart = true)
-      val res =
-        (if (small) st.resources.coalesce(1) else st.resources).cache()
-      QuadStore(v.select(QuadStore.quadCols.map(col): _*), res, Some(v))
+      cached(FullText.withFullText(flat, Set("urn:p:documents:text")),
+        onePart = true)
     })
 
   /** Location-hierarchy store for the property-path gate: customer and
@@ -136,45 +136,16 @@ object SparqlQueries {
           "urn:t:customer:", "c_custkey", "urn:t:nation:", "c_nationkey")
         .unionByName(edge(Tables.t(s, dir, "nation"),
           "urn:t:nation:", "n_nationkey", "urn:t:region:", "n_regionkey"))
-      val st = QuadStore.fromFlat(s, flat)
-      val (v, small) = arrange(st.valued.get, onePart = true)
-      val res =
-        (if (small) st.resources.coalesce(1) else st.resources).cache()
-      QuadStore(v.select(QuadStore.quadCols.map(col): _*), res, Some(v))
+      cached(QuadStore.fromFlat(s, flat), onePart = true)
     })
 
-  /** One query definition: the declared table set is the single source of
-    * truth for both execution and [[warm]] (so adding a query over a new
-    * table can't silently leave its rdfize+cache cost in bench timings). */
-  final case class QDef(name: String, tables: Seq[String],
-                        run: (SparkSession, String) => DataFrame)
-
+  /** One gate: its name, and its program given the tables it rdfizes. */
   private def mk(name: String, tables: String*)(
-      f: (SparkSession, String, Seq[String]) => DataFrame): QDef =
-    QDef(name, tables, (s, d) => f(s, d, tables))
+      f: (SparkSession, String, Seq[String]) => DataFrame)
+      : (String, (SparkSession, String) => DataFrame) =
+    name -> ((s, d) => f(s, d, tables))
 
-  /** Materialize the per-table store caches (the import phase) for every
-    * table any SPARQL query declares. Bench calls this during warm-up so
-    * per-query timings measure query execution, not one-time rdfize+cache —
-    * mirroring the reference benchmark, which loads the KB before timing
-    * queries (`tests/benchmark/run.pl:40-80`). A failing table set is
-    * reported on stderr and skipped: a bad table should only affect its
-    * own queries. */
-  def warm(s: SparkSession, dir: String): Unit = {
-    def touch(what: String)(st: => QuadStore): Unit =
-      try { val t = st; t.quads.count(); t.resources.count() }
-      catch { case e: Throwable =>
-        System.err.println(s"[warm] store $what failed: $e") }
-    // warm the exact store INSTANCES queries use (single-table compact
-    // variants and multi-table unions cache separately)
-    defs.map(_.tables).filter(_.nonEmpty).distinct.foreach { ts =>
-      touch(ts.mkString(","))(store(s, dir, ts: _*))
-    }
-    touch("fulltext(documents)")(ftStore(s, dir))
-    touch("location-hierarchy")(locStore(s, dir))
-  }
-
-  private lazy val defs: Seq[QDef] = Seq(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // BGP chain join over two rdfized tables (fs_bind + fs_binding_merge)
     mk("s01_sparql_bgp_join", "nation", "region")((s, d, ts) =>
       sparql(s, d, ts,
@@ -359,9 +330,6 @@ object SparqlQueries {
               ?s <${FullText.phoneticPred}> "KSTM" }""")
         .orderBy("s"))
   )
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map(q => q.name -> q.run).toMap
 
   private val xsdInt = "http://www.w3.org/2001/XMLSchema#integer"
 

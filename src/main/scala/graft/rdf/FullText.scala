@@ -3,8 +3,7 @@ package graft.rdf
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{ColumnBridge, DMetaphoneCodes, SnowballStem,
-  SnowballStemEn}
+import graft.functions.{ColumnBridge, DMetaphoneCodes, SnowballStem}
 
 /** Full-text index sink: at import time, literals of configured predicates
   * additionally emit derived (token / phonetic / stem) quads, mirroring
@@ -77,8 +76,6 @@ object FullText {
   private def tokens(lex: Column): Column =
     filter(split(lex, boundaryRe), t => length(t) > 0)
 
-  def stemCol(lowerTok: Column): Column =
-    ColumnBridge.column(SnowballStemEn(ColumnBridge.expression(lowerTok)))
   def stemLangCol(lowerTok: Column, lang: Column): Column =
     ColumnBridge.column(SnowballStem(ColumnBridge.expression(lowerTok),
       ColumnBridge.expression(lang)))

@@ -145,11 +145,6 @@ final case class QuadStore(quads: DataFrame, resources: DataFrame,
       for (a <- graphRids; b <- other.graphRids) yield a ++ b,
       leaves ++ other.leaves)
 
-  /** Repartition quads by subject — the reference's segment layout; makes
-    * subject-subject joins co-partitioned after one shuffle. */
-  def bySubject(n: Int): QuadStore =
-    copy(quads = quads.repartition(n, col("s")))
-
   /** Serialize the store as N-Quads lines (the reference's dump,
     * `src/frontend/dump.c` — TriX there, N-Quads here; `restore` =
     * [[QuadStore.fromNTriples]], which accepts the 4-term form). Terms

@@ -1,15 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 import graft.rdf._
 
 /** Structured Streaming ingest & event-time processing. The reference has
   * no continuous queries (SURVEY §2.9) — its chunked bulk import
-  * (`fs_import_stream_*`, `src/frontend/import.c:191-331`) maps to a
-  * file-source stream appending to the quads table; event-time windowed
-  * aggregation and stateful sessionization are additive capabilities.
+  * (`fs_import_stream_*`, `src/frontend/import.c:191-331`) maps to
+  * [[parseNtLines]] and [[toQuads]] over a file-source stream; event-time
+  * windowed aggregation and the streaming curation shells are additive
+  * capabilities.
   */
 object StreamIngest {
 
@@ -37,20 +38,6 @@ object StreamIngest {
   def toQuads(flat: DataFrame): DataFrame =
     flat.select(QuadStore.flatQuadCols: _*)
 
-  /** Continuous NT ingest: watch a directory, append quads to a parquet
-    * table (the streaming analog of `fs_import_commit`). */
-  def ingestNtDirectory(spark: SparkSession, inDir: String, outDir: String,
-                        checkpoint: String) = {
-    val lines = spark.readStream.textFile(inDir)
-    toQuads(parseNtLines(lines))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .start()
-  }
-
   /** Streaming exact dedup on the ingest path: drop quads (or any keyed
     * rows) already seen within the watermark horizon. State is bounded by
     * the horizon — the streaming analog of the batch `Dedup.exact` pass;
@@ -74,48 +61,6 @@ object StreamIngest {
           .as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"))
-
-  final case class Ev(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  final case class SessionState(start: Long, last: Long, n: Int, sum: Double)
-  final case class SessionOut(user_id: Long, startTs: Long, nEvents: Int,
-                              sumValue: Double)
-
-  /** Stateful sessionization via flatMapGroupsWithState: emits a session
-    * when a user is idle past the gap (processing-time timeout). */
-  def sessionize(events: Dataset[Ev], gapSeconds: Long = 1800)
-      : Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout()) {
-        (user: Long, rows: Iterator[Ev], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionOut(user, s.start, s.n, s.sum))
-          } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var out = List.empty[SessionOut]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val t = e.ts.getTime / 1000
-              cur match {
-                case Some(s) if t - s.last > gapSeconds =>
-                  out ::= SessionOut(user, s.start, s.n, s.sum)
-                  cur = Some(SessionState(t, t, 1, e.value))
-                case Some(s) =>
-                  cur = Some(s.copy(last = t, n = s.n + 1,
-                    sum = s.sum + e.value))
-                case None =>
-                  cur = Some(SessionState(t, t, 1, e.value))
-              }
-            }
-            cur.foreach(state.update)
-            state.setTimeoutDuration(gapSeconds * 1000)
-            out.reverseIterator
-          }
-      }
-  }
 
   /** Streaming near-duplicate dedup: filter an ingest feed down to the
     * documents [[graft.operators.Dedup.dedupAgainstIndex]] keeps — no

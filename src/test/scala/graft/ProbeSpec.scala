@@ -3,23 +3,26 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import scala.jdk.CollectionConverters._
 
-class ProbeSpec extends SparkTestBase {
-
-  /** A one-table sf dir and gates over it: one answers, one throws, one
-    * aggregates a lazily pinned read. */
-  private lazy val sfDir = {
+/** A one-table sf dir and gates over it: one answers, one throws, one
+  * aggregates a lazily pinned read. */
+object ProbeSpec {
+  lazy val sfDir: String = {
     val d = java.nio.file.Files.createTempDirectory("probe-sf").toString
-    spark.range(1000).selectExpr("id", "id % 7 AS k")
+    SparkTestBase.session.range(1000).selectExpr("id", "id % 7 AS k")
       .write.parquet(s"$d/t.parquet")
     d
   }
-  private val gates: Map[String, Probe.Gate] = Map(
+  val gates: Map[String, Probe.Gate] = Map(
     "g01_agg" -> ((s, d) =>
       s.read.parquet(s"$d/t.parquet").groupBy("k").count()),
     "g00_boom" -> ((_, _) =>
       throw new IllegalStateException("boom \"quoted\"\nsecond line")),
     "p01_pinned" -> ((s, d) => s.read.parquet(s"$d/t.parquet")
       .filter("k > 1").localCheckpoint(eager = false).groupBy("k").count()))
+}
+
+class ProbeSpec extends SparkTestBase {
+  import ProbeSpec.{gates, sfDir}
 
   test("gates prints one parseable JSON line bracketed by dd/cpuRef " +
       "readings; a throwing gate records its exception, not -1") {

@@ -46,18 +46,6 @@ class OperatorsSpec extends SparkTestBase {
     assert(pairs.map(p => (p._1, p._2)) == Set((0L, 4L))) // only exact dup
   }
 
-  test("prefix-filtered jaccard join equals the inverted-index join") {
-    for (t <- Seq(0.4, 0.7, 0.99)) {
-      val full = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-          k = 3, threshold = t)
-        .as[(Long, Long, Double)].collect().toSet
-      val pref = Dedup.ngramJaccardPairsPrefix(docs, "doc_id", "text",
-          k = 3, threshold = t)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(pref == full, s"threshold $t")
-    }
-  }
-
   test("brute-force cosine top-k ranks the identical vector first") {
     val vecs = Seq(
       (0L, Array(1.0f, 0.0f, 0.0f)),
