@@ -210,22 +210,6 @@ object Dedup {
           "half-compacted index as empty")
   }
 
-  /** Single-writer mutual exclusion for a persisted dedup index:
-    * probes append snapshot deltas and compaction swaps whole tables,
-    * so a probe racing a compaction (or two probes of the SAME
-    * snapshot id racing each other's dynamic partition overwrite) can
-    * interleave into a state no replay contract covers. Every
-    * index-mutating entry point runs under an atomic-create `lock`
-    * file in the index dir and FAILS CLOSED when it is held — the
-    * params-sidecar philosophy: serialize your crawl drops; a probe
-    * that cannot safely run must refuse, not silently interleave.
-    * A crash leaves the lock behind (deliberate — there is no safe
-    * auto-expiry without fencing): the error says what to verify and
-    * delete. Probes of DISTINCT snapshots are semantically
-    * commutative (disjoint partitions, strictly-earlier reads), so
-    * serializing them costs ordering only, never correctness
-    * (spec-proven: a lock-refused probe retried after release returns
-    * the verdicts a serialized run produces). */
   /** Identity string written into the index `lock` file: host +
     * process start-time beside the pid, because on shared storage the
     * index dir is visible from many machines and a bare pid cannot be
@@ -242,8 +226,25 @@ object Dedup {
       s"start=$started"
   }
 
-  // shared with Ranking's text-index writers — the same single-writer
-  // discipline applies to any on-disk index this engine grows in place
+  /** Single-writer mutual exclusion for a dir this engine grows in
+    * place: a persisted dedup index, [[Ranking]]'s text index, and a
+    * saved LM model ([[TextAnalysis.saveLmModel]] and
+    * [[TextAnalysis.addLmModelLanguages]]). In a dedup index
+    * probes append snapshot deltas and compaction swaps whole tables,
+    * so a probe racing a compaction (or two probes of the SAME
+    * snapshot id racing each other's dynamic partition overwrite) can
+    * interleave into a state no replay contract covers. Every
+    * index-mutating entry point runs under an atomic-create `lock`
+    * file in the index dir and FAILS CLOSED when it is held — the
+    * params-sidecar philosophy: serialize your crawl drops; a probe
+    * that cannot safely run must refuse, not silently interleave.
+    * A crash leaves the lock behind (deliberate — there is no safe
+    * auto-expiry without fencing): the error says what to verify and
+    * delete. Probes of DISTINCT snapshots are semantically
+    * commutative (disjoint partitions, strictly-earlier reads), so
+    * serializing them costs ordering only, never correctness
+    * (spec-proven: a lock-refused probe retried after release returns
+    * the verdicts a serialized run produces). */
   private[graft] def withIndexLock[T](indexDir: String, op: String)
                                      (body: => T): T = {
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
@@ -259,9 +260,9 @@ object Dedup {
           try new String(java.nio.file.Files.readAllBytes(lock), utf8)
           catch { case _: Exception => "unreadable" }
         throw new IllegalStateException(
-          s"$op: index at $indexDir is locked by [$held] — probes " +
-            "and compaction are single-writer and must be " +
-            "serialized. If the holder crashed, verify on the named " +
+          s"$op: $indexDir is locked by [$held] — the writers of " +
+            "this dir are single-writer and must be serialized. If " +
+            "the holder crashed, verify on the named " +
             "host that no writer with that pid/start-time is " +
             s"running, then delete $lock")
     }
@@ -452,39 +453,6 @@ object Dedup {
     compact("lines", Seq("lh"))
     }
 
-  /** PER-DOMAIN boilerplate line scrub — the site-level extraction
-    * cleanup of CCNet/trafilatura-style pipelines: a line that occurs
-    * in at least `minDocs` DISTINCT documents of the SAME domain (nav
-    * bars, cookie banners, footers — template text stamped on every
-    * page of a site) is dropped from every document of that domain.
-    * The domain key is caller-supplied — compose with
-    * [[graft.operators.UrlOps.registrableHost]] so user1.github.io and
-    * user2.github.io scrub independently. Sits between the intra-doc
-    * scrub ([[TextAnalysis.scrubRepeatedLines]]: repeats WITHIN one
-    * doc) and the corpus-global dedup ([[dedupLinesGlobal]]: first
-    * occurrence anywhere wins): here the unit of repetition is the
-    * SITE, which is where template boilerplate actually lives — a
-    * legitimate quote shared by two docs on different sites survives,
-    * the same site's cookie banner on 10k pages does not.
-    *
-    * Output: input columns + `out` (scrubbed text, lines rejoined in
-    * original order; "" when everything was boilerplate) +
-    * `n_dropped_lines`.
-    *
-    * Shape at 100 TB: one hash-shuffle on (domain, line) with
-    * map-side-combined distinct-doc counting, one anti-join of the
-    * exploded lines against the (small) boilerplate set — AQE
-    * broadcasts it when a domain-shard's boilerplate fits — and one
-    * reassembly shuffle keyed by id. Skew caveat (measured in the r13
-    * viral-line probe, SCALE_BENCH_sf10_r13.json): the anti-join keys
-    * are (domain, line) WITHOUT a unique disambiguator, so a
-    * boilerplate line concentrates its domain's occurrences on one
-    * reducer — bounded by the largest domain's doc count, not the
-    * corpus — and AQE's byte-based skew detector under-reports
-    * duplicate-key partitions (identical lines compress to almost
-    * nothing). If one domain dominates a shard, pre-aggregate per
-    * (domain, line, id-bucket) or broadcast the boilerplate set
-    * explicitly. */
   /** URL latest-wins dedup — the recrawl rule of C4/Dolma-style
     * pipelines: when the same (canonicalized) URL appears in multiple
     * crawl snapshots, keep only its NEWEST fetch (highest
@@ -520,6 +488,39 @@ object Dedup {
         .select(col(idCol), col(urlCol), lit(true).as("kept")))
   }
 
+  /** PER-DOMAIN boilerplate line scrub — the site-level extraction
+    * cleanup of CCNet/trafilatura-style pipelines: a line that occurs
+    * in at least `minDocs` DISTINCT documents of the SAME domain (nav
+    * bars, cookie banners, footers — template text stamped on every
+    * page of a site) is dropped from every document of that domain.
+    * The domain key is caller-supplied — compose with
+    * [[graft.operators.UrlOps.registrableHost]] so user1.github.io and
+    * user2.github.io scrub independently. Sits between the intra-doc
+    * scrub ([[TextAnalysis.scrubRepeatedLines]]: repeats WITHIN one
+    * doc) and the corpus-global dedup ([[dedupLinesGlobal]]: first
+    * occurrence anywhere wins): here the unit of repetition is the
+    * SITE, which is where template boilerplate actually lives — a
+    * legitimate quote shared by two docs on different sites survives,
+    * the same site's cookie banner on 10k pages does not.
+    *
+    * Output: input columns + `out` (scrubbed text, lines rejoined in
+    * original order; "" when everything was boilerplate) +
+    * `n_dropped_lines`.
+    *
+    * Shape at 100 TB: one hash-shuffle on (domain, line) with
+    * map-side-combined distinct-doc counting, one anti-join of the
+    * exploded lines against the (small) boilerplate set — AQE
+    * broadcasts it when a domain-shard's boilerplate fits — and one
+    * reassembly shuffle keyed by id. Skew caveat (measured in the r13
+    * viral-line probe, SCALE_BENCH_sf10_r13.json): the anti-join keys
+    * are (domain, line) WITHOUT a unique disambiguator, so a
+    * boilerplate line concentrates its domain's occurrences on one
+    * reducer — bounded by the largest domain's doc count, not the
+    * corpus — and AQE's byte-based skew detector under-reports
+    * duplicate-key partitions (identical lines compress to almost
+    * nothing). If one domain dominates a shard, pre-aggregate per
+    * (domain, line, id-bucket) or broadcast the boilerplate set
+    * explicitly. */
   def scrubBoilerplateLines(df: DataFrame, idCol: String,
                             domainCol: String, textCol: String,
                             minDocs: Int = 3, sep: String = "\n",
@@ -578,25 +579,6 @@ object Dedup {
       .filter(col("h").isNotNull)
   }
 
-  /** Winnowing document fingerprints (Schleimer, Wilkerson, Aiken 2003
-    * — the MOSS local fingerprinting algorithm): hash every k-gram,
-    * slide a window of `w` consecutive gram hashes, keep the minimum of
-    * each window, return the distinct selected hashes sorted. The
-    * guarantee that makes it a dedup primitive: any substring match of
-    * at least w+k-1 tokens between two documents shares at least one
-    * fingerprint — so fingerprint-equality is a candidate filter for
-    * LOCAL (substring-level) duplication that MinHash's global
-    * signatures dilute away on long documents.
-    *
-    * Hashes are masked to 63 bits so min-selection is order-identical
-    * for an engine comparing them unsigned (the portable md5 hash read
-    * as UBIGINT in SQL) and for Spark's signed longs — one bit of hash
-    * width for a cross-engine-stable fingerprint set.
-    *
-    * Scale: entirely map-only — per-row native gram hashing plus
-    * codegen'd array ops (`transform`/`slice`/`array_min`), no explode,
-    * no shuffle, no UDF. Fingerprint-set size per doc is bounded by the
-    * gram count / ~(w/2) windows-per-selection expectation. */
   /** (id, hs, fps) projection shared by the winnowing family: hs = the
     * POSITIONAL 63-bit-masked gram hashes, fps = the sorted-distinct
     * window minima. */
@@ -627,6 +609,25 @@ object Dedup {
         .as("fps"))
   }
 
+  /** Winnowing document fingerprints (Schleimer, Wilkerson, Aiken 2003
+    * — the MOSS local fingerprinting algorithm): hash every k-gram,
+    * slide a window of `w` consecutive gram hashes, keep the minimum of
+    * each window, return the distinct selected hashes sorted. The
+    * guarantee that makes it a dedup primitive: any substring match of
+    * at least w+k-1 tokens between two documents shares at least one
+    * fingerprint — so fingerprint-equality is a candidate filter for
+    * LOCAL (substring-level) duplication that MinHash's global
+    * signatures dilute away on long documents.
+    *
+    * Hashes are masked to 63 bits so min-selection is order-identical
+    * for an engine comparing them unsigned (the portable md5 hash read
+    * as UBIGINT in SQL) and for Spark's signed longs — one bit of hash
+    * width for a cross-engine-stable fingerprint set.
+    *
+    * Scale: entirely map-only — per-row native gram hashing plus
+    * codegen'd array ops (`transform`/`slice`/`array_min`), no explode,
+    * no shuffle, no UDF. Fingerprint-set size per doc is bounded by the
+    * gram count / ~(w/2) windows-per-selection expectation. */
   def winnowingFingerprints(df: DataFrame, idCol: String, textCol: String,
                             k: Int = 5, w: Int = 8,
                             portableHash: Boolean = false): DataFrame =
@@ -731,17 +732,6 @@ object Dedup {
           .cast("long").as("max_span_tokens"))
   }
 
-  /** MinHash signatures via explode + 32 codegen'd min-aggregates.
-    *
-    * NOT the nested-HOF formulation: array HOF lambdas are interpreted and
-    * Catalyst does not share the common shingle/hash subexpression across
-    * the h permutations, which recomputes string hashing h times per
-    * shingle (measured 115s for 5k docs). Exploding hashed shingle rows
-    * (native kernel, hashed once) keeps everything in whole-stage codegen,
-    * and the h permutations are h parallel min() aggregates with map-side
-    * partial aggregation — the formulation that scales on a cluster as
-    * well.
-    */
   /** MinHash permutation modulus and seeds — shared with the DuckDB
     * oracle generator so both engines apply identical permutations. */
   val minhashP = 2147483647L // 2^31 - 1 (Mersenne prime)
@@ -762,6 +752,13 @@ object Dedup {
     array((0 until bands).map(b =>
       xxhash64(slice(sig, b * rows + 1, rows), lit(b))): _*)
 
+  /** MinHash signatures: one `(id, sig)` row per doc with at least one
+    * k-shingle, `sig` the `h` per-permutation minima of its shingle
+    * hashes under [[minhashSeeds]] modulo [[minhashP]]. One in-row
+    * kernel (`MinHashSig`) reads the native shingle-hash array, so the
+    * signature stage is map-only: no explode, no min-aggregate shuffle,
+    * and no interpreted array-HOF lambdas (the nested-HOF formulation
+    * rehashed every shingle h times: 115 s for 5k docs). */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         k: Int, h: Int,
                         portableHash: Boolean = false): DataFrame = {

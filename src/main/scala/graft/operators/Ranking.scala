@@ -192,15 +192,10 @@ object Ranking {
       .filter(col("snap").isin(manifest: _*))
       .filter(col("term") === "")
       .agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl")).first()
-    val tmp = java.nio.file.Files.createTempFile(
-      java.nio.file.Paths.get(indexDir), ".params", ".tmp")
-    java.nio.file.Files.write(tmp,
-      (s"analyzer=ws-lower layout=sentinel n=${st.getAs[Long]("n")} " +
+    Sidecar.publish(indexSidecar(indexDir),
+      s"analyzer=ws-lower layout=sentinel n=${st.getAs[Long]("n")} " +
         s"avgdl=${st.getAs[Double]("avgdl")} " +
-        s"snaps=${manifest.mkString(",")}").getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, indexSidecar(indexDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        s"snaps=${manifest.mkString(",")}")
   }
 
   private def readIndexSidecar(indexDir: String, who: String,
@@ -211,10 +206,7 @@ object Ranking {
       s"$who: no complete index at $indexDir — params.index.txt is " +
         "missing (wrong dir, or an interrupted buildTextIndex; " +
         "(re)build the index)")
-    val kv = new String(java.nio.file.Files.readAllBytes(side), "UTF-8")
-      .trim.split("\\s+").map { t =>
-        val Array(a, v) = t.split("=", 2); (a, v)
-      }.toMap
+    val kv = Sidecar.read(side).head
     // append recomputes corpus stats from the sentinel postings, which
     // a pre-r18 index (separate doclens table) does not have — appending
     // there would silently undercount every earlier snapshot's docs.

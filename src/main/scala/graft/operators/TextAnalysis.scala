@@ -246,6 +246,78 @@ object TextAnalysis {
           exp(-col("logprob") / col("n_bigrams"))).as("ppl"))
   }
 
+  /** The lang key of a single-language model. Every train and score row
+    * of such a model carries it, so a single-language model is the
+    * one-language case of the per-language shape. It is code-shaped (it
+    * passes [[requireLangCodes]]) and never reaches disk or the output. */
+  private val OneLang = "_"
+
+  /** [[OneLang]] as a zero-argument UDF, which Catalyst cannot fold:
+    * the key the score rows carry into the (N, V) join. As a literal
+    * it would fold out of that join's condition and leave the join no
+    * equi-key, a nested-loop join; PlanSpec "ngramLmScoreBackoff: one
+    * explode, …" fails on that join. */
+  private val oneLang = udf(() => OneLang)
+
+  /** The model key of a train, count or score row: `langCol` cast to
+    * string (a non-string lang column — an int lang id, say — keys
+    * models by its decimal rendering on both sides instead of dying in
+    * [[saveLmModel]]'s sidecar collect with an opaque
+    * ClassCastException), or [[OneLang]] without one: a literal, which
+    * Catalyst folds out of the aggregates and joins it meets, or with
+    * `opaque` the [[oneLang]] UDF. */
+  private def langKey(langCol: Option[String],
+                      opaque: Boolean = false): Column =
+    langCol.fold(if (opaque) oneLang() else lit(OneLang))(lc =>
+      col(lc).cast("string")).as("lang")
+
+  /** The fused KenLM-style count step of [[ngramLmScoreBackoff]],
+    * factored out so its physical shape is plan-gateable (the public
+    * API checkpoints the result, which hides the aggregate from
+    * `explain`): every order's positional gram stream rides the same
+    * two generates — (k, array) rows, then (k, hash) grams — into ONE
+    * map-side-combined (lang, k, h) aggregate, so the train corpus is
+    * scanned and shuffled once, not `order` times, and counts EVERY
+    * language's tables (the CCNet §3.3 shape: one model per language,
+    * trained in one pass over the multilingual corpus instead of a
+    * per-language corpus rescan). Without `langCol` the lang key is the
+    * constant [[OneLang]]. Null text yields null arrays, which the
+    * inner explode drops (exactly as per-order explodes would).
+    * `minCount` > 1 prunes orders ≥ 3 below the threshold; orders 1–2
+    * always survive. Null-lang train rows are dropped (a doc that can't
+    * name its model trains none of them). */
+  private[graft] def lmCountTables(train: DataFrame, textCol: String,
+                                   order: Int, minCount: Int,
+                                   portableHash: Boolean,
+                                   langCol: Option[String] = None)
+      : DataFrame = {
+    val F = graft.functions.F
+    // the multi-order kernel tokenizes each doc ONCE for all orders
+    // (the per-order kernel re-ran the regex split per order — the
+    // dominant map-side cost of the count pass)
+    val src = langCol.fold(train)(lc => train.filter(col(lc).isNotNull))
+    val fused = src
+      .select(langKey(langCol), posexplode(
+          F.shinglePosHashesUpTo(col(textCol), order, portableHash))
+        .as(Seq("k0", "arr")))
+      .select(col("lang"), (col("k0") + 1).as("k"),
+        explode(col("arr")).as("h"))
+      .groupBy(col("lang"), col("k"), col("h"))
+      .agg(count(lit(1)).as("c"))
+    if (minCount > 1) fused.filter(col("k") <= 2 || col("c") >= minCount)
+    else fused
+  }
+
+  /** The per-order views of a (lang, k, h, c) count table: view k is
+    * (lang, nk<k>, cn<k>), the numerator table at order k and the
+    * denominator table at order k+1. */
+  private def lmOrderTables(counts: DataFrame,
+                            order: Int): Seq[DataFrame] =
+    (1 to order).map { k =>
+      counts.filter(col("k") === k)
+        .select(col("lang"), col("h").as(s"nk$k"), col("c").as(s"cn$k"))
+    }
+
   /** Order-n language-model scoring with STUPID BACKOFF (Brants et al.
     * 2007, "Large Language Models in Machine Translation" §4 — the
     * smoothing built for distributed count-based LMs; the shape of the
@@ -300,8 +372,8 @@ object TextAnalysis {
     * web scale. Scoring explodes the score side once (positions carry
     * only 64-bit keys, the parent arrays never ride a shuffle) and
     * joins each per-order table twice at most (numerator key at k,
-    * denominator prefix at k−1). No driver-side state beyond the 1-row
-    * (N, V) collect.
+    * denominator prefix at k−1). No driver-side state: the (N, V)
+    * totals ride in as a broadcast languages-sized frame.
     *
     * `broadcastModel` (default true) pins every count-table join to a
     * BROADCAST join — the KenLM operating shape: the pruned model
@@ -324,57 +396,13 @@ object TextAnalysis {
     * language's model): count tables are keyed (lang, k, h) by the
     * SAME single train pass — one multilingual scan, `nlangs` models,
     * never a per-language corpus loop — and scoring joins on
-    * (lang, hash) with each language's own (N, V) floor riding in as
-    * a broadcast languages-sized frame. Output gains a `lang` column
-    * after `id`. A language's slice is bit-identical to a
-    * single-language model trained on that slice alone (spec-proven);
-    * docs whose lang has no model degenerate deterministically (see
-    * the scoring-half scaladoc). */
-  /** The fused KenLM-style count step of [[ngramLmScoreBackoff]],
-    * factored out so its physical shape is plan-gateable (the public
-    * API checkpoints the result, which hides the aggregate from
-    * `explain`): every order's positional gram stream rides the same
-    * two generates — (k, array) rows, then (k, hash) grams — into ONE
-    * map-side-combined (k, h) aggregate, so the train corpus is
-    * scanned and shuffled once, not `order` times. Null text yields
-    * null arrays, which the inner explode drops (exactly as per-order
-    * explodes would). `minCount` > 1 prunes orders ≥ 3 below the
-    * threshold; orders 1–2 always survive.
-    *
-    * With `langCol` set the aggregate is keyed (lang, k, h) — ONE
-    * scan and ONE shuffle still count EVERY language's tables (the
-    * CCNet §3.3 shape: one model per language, trained in one pass
-    * over the multilingual corpus instead of a per-language corpus
-    * rescan). Null-lang train rows are dropped (a doc that can't name
-    * its model trains none of them). The lang key is cast to string
-    * here (and on the score side, symmetrically) so a non-string lang
-    * column — an int lang id, say — keys models by its decimal
-    * rendering instead of dying in [[saveLmModel]]'s sidecar collect
-    * with an opaque ClassCastException. */
-  private[graft] def lmCountTables(train: DataFrame, textCol: String,
-                                   order: Int, minCount: Int,
-                                   portableHash: Boolean,
-                                   langCol: Option[String] = None)
-      : DataFrame = {
-    val F = graft.functions.F
-    // the multi-order kernel tokenizes each doc ONCE for all orders
-    // (the per-order kernel re-ran the regex split per order — the
-    // dominant map-side cost of the count pass)
-    val langKey = langCol.map(lc => col(lc).cast("string").as("lang")).toSeq
-    val src = langCol.fold(train)(lc => train.filter(col(lc).isNotNull))
-    val fused = src
-      .select(langKey :+ posexplode(
-          F.shinglePosHashesUpTo(col(textCol), order, portableHash))
-        .as(Seq("k0", "arr")): _*)
-      .select(langCol.map(_ => col("lang")).toSeq ++
-        Seq((col("k0") + 1).as("k"), explode(col("arr")).as("h")): _*)
-      .groupBy(langCol.map(_ => col("lang")).toSeq ++
-        Seq(col("k"), col("h")): _*)
-      .agg(count(lit(1)).as("c"))
-    if (minCount > 1) fused.filter(col("k") <= 2 || col("c") >= minCount)
-    else fused
-  }
-
+    * (lang, hash) with each language's own (N, V) floor. Output gains
+    * a `lang` column after `id`. Without `langCol` the model is the
+    * one-language case of the same path, keyed by a constant. A
+    * language's slice is bit-identical to a single-language model
+    * trained on that slice alone (spec-proven); docs whose lang has no
+    * model degenerate deterministically (see the scoring-half
+    * scaladoc). */
   def ngramLmScoreBackoff(train: DataFrame, score: DataFrame,
                           idCol: String, textCol: String, order: Int = 3,
                           alphaNum: Int = 2, alphaDen: Int = 5,
@@ -389,70 +417,43 @@ object TextAnalysis {
     require(minCount >= 1,
       s"ngramLmScoreBackoff: minCount=$minCount must be >= 1")
     // ONE fused count pass (plan-gated via lmCountTables), pinned: the
-    // per-order filtered views below feed 2·order−1 joins plus the
-    // N/V step. With langCol the SAME single pass counts every
-    // language's tables keyed (lang, k, h) and scoring joins on
-    // (lang, hash) — one multilingual corpus scan, `nlangs` models.
+    // per-order views feed 2·order−1 joins plus the (N, V) step
     val fused = lmCountTables(train, textCol, order, minCount,
       portableHash, langCol).localCheckpoint(eager = false)
-    langCol match {
-      case None =>
-        // per-order occurrence-count tables (each feeds the numerator
-        // join at k and the denominator join at k+1; c1 also feeds N/V)
-        val cnts: Seq[DataFrame] = (1 to order).map { k =>
-          fused.filter(col("k") === k)
-            .select(col("h").as(s"nk$k"), col("c").as(s"cn$k"))
-        }
-        val nv = cnts.head
-          .agg(coalesce(sum(col("cn1")), lit(0L)), count(lit(1)))
-          .collect()(0)
-        lmBackoffScore(score, idCol, textCol, cnts,
-          Left((nv.getLong(0), nv.getLong(1))), order, alphaNum,
-          alphaDen, portableHash, langCol = None, broadcastModel)
-      case Some(_) =>
-        val cnts: Seq[DataFrame] = (1 to order).map { k =>
-          fused.filter(col("k") === k)
-            .select(col("lang"), col("h").as(s"nk$k"),
-              col("c").as(s"cn$k"))
-        }
-        // per-language (N, V): a languages-sized frame, broadcast into
-        // the scoring positions — never collected
-        val nv = fused.filter(col("k") === 1).groupBy("lang")
-          .agg(sum(col("c")).as("__n"), count(lit(1)).as("__v"))
-        lmBackoffScore(score, idCol, textCol, cnts, Right(nv), order,
-          alphaNum, alphaDen, portableHash, langCol, broadcastModel)
-    }
+    // per-language (N, V): a languages-sized frame, broadcast into the
+    // scoring positions — never collected
+    val nv = fused.filter(col("k") === 1).groupBy("lang")
+      .agg(sum(col("c")).as("__n"), count(lit(1)).as("__v"))
+    lmBackoffScore(score, idCol, textCol, lmOrderTables(fused, order), nv,
+      order, alphaNum, alphaDen, portableHash, langCol, broadcastModel)
   }
 
   /** The scoring half of [[ngramLmScoreBackoff]], shared with the
     * saved-model path ([[ngramLmScoreWithModel]]): the backoff cascade
-    * over caller-supplied per-order count tables + (N, V) totals.
+    * over caller-supplied per-order (lang, nk<k>, cn<k>) count tables
+    * and a (lang, __n, __v) totals frame, broadcast onto the positions
+    * so the unigram floor and OOV event space are each language's own.
+    * Every join keys on lang; without `langCol` every score row carries
+    * the constant [[OneLang]], which Catalyst folds out of the
+    * count-table joins, and the output drops it.
     *
-    * `nv` is `Left((n, v))` for a single-language model (driver-side
-    * literals, the original plan) or `Right(df)` for per-language —
-    * a (lang, __n, __v) frame broadcast onto the positions so the
-    * unigram floor and OOV event space are each language's own.
-    * Per-language count tables carry a `lang` column and every join
-    * adds `lang` to its key. A scored doc whose lang has NO model
-    * (absent from the nv frame / count tables) degenerates
-    * deterministically: every token OOV against an empty event space
-    * (num=den=0, floor probability 1), logscore = Σ steps·ln α — keep
-    * such docs out or route them by filtering on the model's language
-    * set; they are NOT nulled because a quota pipeline downstream
-    * must still see a row per doc. A score-side row with NULL lang
-    * takes the SAME degenerate path (a null key matches nothing in
-    * the lang joins) — deliberate asymmetry with the train side,
-    * which DROPS null-lang rows: training can't key a model without a
-    * language, but a scored doc must keep its row. Since a null lang
-    * at scoring time usually means an upstream langId bug rather than
-    * a missing model, count or route `lang IS NULL` rows before
-    * scoring if that distinction matters. */
-  // private[graft] (was private) so the dev A/B probe can drive the
-  // scoring tail with an unpinned count read (the r17-shape replica)
-  private[graft] def lmBackoffScore(score: DataFrame, idCol: String,
+    * A scored doc whose lang has NO model (absent from the nv frame /
+    * count tables) degenerates deterministically: every token OOV
+    * against an empty event space (num=den=0, floor probability 1),
+    * logscore = Σ steps·ln α — keep such docs out or route them by
+    * filtering on the model's language set; they are NOT nulled
+    * because a quota pipeline downstream must still see a row per doc.
+    * A score-side row with NULL lang takes the SAME degenerate path (a
+    * null key matches nothing in the lang joins) — deliberate
+    * asymmetry with the train side, which DROPS null-lang rows:
+    * training can't key a model without a language, but a scored doc
+    * must keep its row. Since a null lang at scoring time usually
+    * means an upstream langId bug rather than a missing model, count
+    * or route `lang IS NULL` rows before scoring if that distinction
+    * matters. */
+  private def lmBackoffScore(score: DataFrame, idCol: String,
                              textCol: String, cnts: Seq[DataFrame],
-                             nv: Either[(Long, Long), DataFrame],
-                             order: Int,
+                             nv: DataFrame, order: Int,
                              alphaNum: Int, alphaDen: Int,
                              portableHash: Boolean,
                              langCol: Option[String],
@@ -467,34 +468,34 @@ object TextAnalysis {
     // dominant score-side map cost); keys are extracted in the
     // projection fused with the generate, and the nested array rides
     // the Generate as a single attribute — never a shuffle.
-    // cast mirrors lmCountTables' train-side key: a non-string lang
-    // column joins by the same decimal rendering on both sides
-    val langSel = langCol.map(lc => col(lc).cast("string").as("lang")).toSeq
-    val langCar = langCol.map(_ => col("lang")).toSeq
-    val arrs = score.select(Seq(col(idCol).as("id")) ++ langSel ++ Seq(
+    val arrs = score.select(col(idCol).as("id"),
+        langKey(langCol, opaque = true),
         F.shinglePosHashesUpTo(col(textCol), order, portableHash)
-          .as("am")): _*)
-      .select(Seq(col("id")) ++ langCar ++
+          .as("am"))
+      .select(Seq(col("id"), col("lang")) ++
         (1 to order).map(k => element_at(col("am"), k).as(s"a$k")) :+
         posexplode(element_at(col("am"), 1)).as(Seq("i", "nk1")): _*)
-    val pos0 = arrs.select(Seq(col("id")) ++ langCar ++
-      Seq(col("i"), col("nk1")) ++
-      (2 to order).flatMap { k =>
-        val idx = col("i") - (k - 2) // 1-based i-k+2; valid iff i >= k-1
-        Seq(
-          when(col("i") >= k - 1, element_at(col(s"a$k"), idx))
-            .as(s"nk$k"),
-          when(col("i") >= k - 1, element_at(col(s"a${k - 1}"), idx))
-            .as(s"dk$k"))
-      }: _*)
     // per-language (N, V) ride in as broadcast columns; an unmatched
     // lang coalesces to the empty event space (n=v=0), never null —
     // the degenerate-but-deterministic no-model case documented above
-    val pos = nv.fold(_ => pos0, nvDf =>
-      pos0.join(broadcast(nvDf), Seq("lang"), "left_outer")
-        .withColumn("__n", coalesce(col("__n"), lit(0L)))
-        .withColumn("__v", coalesce(col("__v"), lit(0L))))
-    def jkeys(key: String) = langCol.map(_ => "lang").toSeq :+ key
+    val withNv = arrs.select(Seq(col("id"), col("lang"), col("i"),
+        col("nk1")) ++
+        (2 to order).flatMap { k =>
+          val idx = col("i") - (k - 2) // 1-based i-k+2; valid iff i >= k-1
+          Seq(
+            when(col("i") >= k - 1, element_at(col(s"a$k"), idx))
+              .as(s"nk$k"),
+            when(col("i") >= k - 1, element_at(col(s"a${k - 1}"), idx))
+              .as(s"dk$k"))
+        }: _*)
+      .join(broadcast(nv), Seq("lang"), "left_outer")
+      .withColumn("__n", coalesce(col("__n"), lit(0L)))
+      .withColumn("__v", coalesce(col("__v"), lit(0L)))
+    // past the (N, V) join a single-language key may fold: as a literal
+    // it drops out of every count-table join, which then keys on the
+    // BIGINT hash alone (Spark's long hash relation, not (string, long))
+    val pos = langCol.fold(withNv.withColumn("lang", lit(OneLang)))(_ =>
+      withNv)
     // the KenLM operating shape: the pruned model lives in full on
     // every node (kenlm mmaps it; CCNet ships per-language pruned
     // 5-gram models sized for node RAM), so the count tables join as
@@ -514,13 +515,13 @@ object TextAnalysis {
     def side(df: DataFrame) = if (broadcastModel) broadcast(df) else df
     var joined = pos
     for (k <- 1 to order)
-      joined = joined.join(side(cnts(k - 1)), jkeys(s"nk$k"),
+      joined = joined.join(side(cnts(k - 1)), Seq("lang", s"nk$k"),
         "left_outer")
     for (k <- 2 to order)
       joined = joined.join(
         side(cnts(k - 2).withColumnRenamed(s"nk${k - 1}", s"dk$k")
           .withColumnRenamed(s"cn${k - 1}", s"cd$k")),
-        jkeys(s"dk$k"), "left_outer")
+        Seq("lang", s"dk$k"), "left_outer")
     val topk = least(lit(order), col("i") + 1)
     // level = highest order whose count hit (its prefix count is then
     // guaranteed non-null); 0 = OOV (unigram miss)
@@ -530,25 +531,16 @@ object TextAnalysis {
       }
     val num = coalesce(
       (order to 1 by -1).map(k => col(s"cn$k")) :+ lit(0L): _*)
-    // the unigram-floor denominator and the OOV event space: literals
-    // for a single-language model, the broadcast per-lang columns
-    // otherwise. Both branches compute ln(1.0 / max(n+v, 1)) with the
-    // same IEEE ops (divide then Math.log), so a single-language score
-    // and the same language's slice of a per-lang score are
-    // bit-identical (spec-proven).
-    val nBase = nv.fold(
-      { case (nTok, _) => lit(nTok) }, _ => col("__n"))
+    // the unigram-floor denominator and the OOV event space are the
+    // broadcast per-language columns
     val den = (order to 2 by -1).foldRight(
-        when(col("cn1").isNotNull, nBase).otherwise(lit(0L))) {
+        when(col("cn1").isNotNull, col("__n")).otherwise(lit(0L))) {
       (k, els) => when(col(s"cn$k").isNotNull, col(s"cd$k")).otherwise(els)
     }
     val steps = when(level > 0, topk - level).otherwise(topk - 1)
     val lnAlpha = math.log(alphaNum.toDouble / alphaDen)
-    val lnOov = nv.fold(
-      { case (nTok, vocab) =>
-        lit(math.log(1.0 / math.max(nTok + vocab, 1L))) },
-      _ => log(lit(1.0) /
-        greatest(col("__n") + col("__v"), lit(1L)).cast("double")))
+    val lnOov = log(lit(1.0) /
+      greatest(col("__n") + col("__v"), lit(1L)).cast("double"))
     val lp = when(level > 0,
         steps.cast("double") * lnAlpha +
           log(num.cast("double") / den.cast("double")))
@@ -564,9 +556,9 @@ object TextAnalysis {
           sum(col("num")).as("sum_num"), sum(col("den")).as("sum_den"),
           sum(col("steps")).as("sum_steps"),
           sum(col("lp")).as("logscore")): _*)
-    score.select(Seq(col(idCol).as("id")) ++ langSel: _*)
+    score.select(col(idCol).as("id"), langKey(langCol))
       .join(scored, Seq("id"), "left_outer")
-      .select(Seq(col("id")) ++ langCar ++ Seq(
+      .select(Seq(col("id")) ++ langCol.map(_ => col("lang")) ++ Seq(
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens")) ++
         (1 to order).map(k =>
           coalesce(col(s"n_hit$k"), lit(0L)).as(s"n_hit$k")) ++
@@ -580,25 +572,37 @@ object TextAnalysis {
             .as("ppl")): _*)
   }
 
-  /** One sidecar line of space-separated k=v tokens. */
-  private def parseLmKv(line: String): Map[String, String] =
-    line.trim.split(" ").map(_.split("=", 2))
-      .map(a => a(0) -> a(1)).toMap
+  /** A saved model's `params.lm.txt`: the parameters it was trained
+    * under and its per-language (lang, n, v) totals — one [[OneLang]]
+    * row for a single-language model. */
+  private final case class LmSidecar(order: Int, minCount: Int,
+                                     portableHash: Boolean,
+                                     perLang: Boolean,
+                                     langNv: Seq[(String, Long, Long)]) {
+    /** The sidecar text: one header line; a single-language model puts
+      * its n and v on it, a per-language model marks it `perlang=true`
+      * and adds one `lang= n= v=` line per language, in lang order. */
+    def text: String = {
+      val head = s"order=$order minCount=$minCount portable=$portableHash"
+      if (perLang)
+        (s"$head perlang=true" +: langNv.sortBy(_._1).map {
+          case (l, n, v) => s"lang=$l n=$n v=$v" }).mkString("\n")
+      else { val Seq((_, n, v)) = langNv; s"$head n=$n v=$v" }
+    }
+  }
 
-  /** Read a COMPLETE model's sidecar: (header kv, per-language
-    * (lang, n, v) lines — empty for single-language models). None
-    * when params.lm.txt is absent; the CALLER owns the error shape
-    * (scoring fails closed as an illegal state, appending as an
-    * illegal argument). */
-  private def readLmSidecar(modelDir: String)
-      : Option[(Map[String, String], Array[(String, Long, Long)])] = {
+  /** Read a COMPLETE model's sidecar. None when params.lm.txt is
+    * absent; the CALLER owns the error shape (scoring fails closed as
+    * an illegal state, appending as an illegal argument). */
+  private def readLmSidecar(modelDir: String): Option[LmSidecar] = {
     val meta = java.nio.file.Paths.get(modelDir, "params.lm.txt")
-    if (!java.nio.file.Files.exists(meta)) None
-    else {
-      val lines = new String(java.nio.file.Files.readAllBytes(meta),
-        java.nio.charset.StandardCharsets.UTF_8).trim.split("\n")
-      Some((parseLmKv(lines.head), lines.tail.map(parseLmKv)
-        .map(m => (m("lang"), m("n").toLong, m("v").toLong))))
+    Option.when(java.nio.file.Files.exists(meta)) {
+      val head +: langs = Sidecar.read(meta)
+      val perLang = head.get("perlang").contains("true")
+      LmSidecar(head("order").toInt, head("minCount").toInt,
+        head("portable").toBoolean, perLang,
+        if (perLang) langs.map(m => (m("lang"), m("n").toLong, m("v").toLong))
+        else Seq((OneLang, head("n").toLong, head("v").toLong)))
     }
   }
 
@@ -613,18 +617,32 @@ object TextAnalysis {
           "the lang column before saving")
     }
 
-  /** Write the sidecar LAST, temp file + atomic rename: its presence
-    * marks a COMPLETE model and its content is the language manifest
-    * scorers prune to. */
-  private def writeLmSidecar(modelDir: String, content: String): Unit = {
-    val tmp = java.nio.file.Files.createTempFile(
-      java.nio.file.Paths.get(modelDir), ".params.lm.", ".tmp")
-    java.nio.file.Files.write(tmp,
-      content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(modelDir, "params.lm.txt"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  /** `model` grown by the languages of a fused count table: their
+    * (n, v) totals — one languages-sized collect, shared with the
+    * counts write through the pin — checked to be non-empty (an LM
+    * model of NOTHING is a pipeline bug upstream, and its counts dir
+    * would fail every later scorer with an unrelated schema-inference
+    * error), code-shaped, and new to `model` (saved languages are
+    * immutable artifacts). */
+  private def withLangTotals(model: LmSidecar, fused: DataFrame,
+                             caller: String, textCol: String,
+                             modelDir: String): LmSidecar = {
+    val langNv = fused.filter(col("k") === 1).groupBy("lang")
+      .agg(coalesce(sum(col("c")), lit(0L)).as("n"),
+        count(lit(1)).as("v"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .toSeq
+    require(langNv.nonEmpty,
+      s"$caller: train corpus has no tokens (column '$textCol') in " +
+        "any language — refusing to persist an empty model")
+    requireLangCodes(langNv.map(_._1), caller)
+    val overlap = langNv.map(_._1).toSet
+      .intersect(model.langNv.map(_._1).toSet)
+    require(overlap.isEmpty,
+      s"$caller: ${overlap.toSeq.sorted.mkString(", ")} already in the " +
+        s"model at $modelDir — saved languages are immutable; retrain " +
+        "to a NEW dir to replace one")
+    model.copy(langNv = model.langNv ++ langNv)
   }
 
   /** TRAIN-ONCE / SCORE-MANY for the backoff LM: persist the fused
@@ -639,20 +657,25 @@ object TextAnalysis {
     * with per-order partition pruning, and broadcast into the
     * scoring joins exactly like the in-line tables (`broadcastModel`
     * on the scorer, default true — see [[ngramLmScoreBackoff]]).
+    * With `langCol` the counts land partitioned (lang, k) in the same
+    * one pass, so scoring prunes to the languages it joins, and the
+    * sidecar carries one (n, v) line per language.
     *
-    * Layout: `modelDir/counts` (parquet, partitioned by `k`) and
-    * `modelDir/params.lm.txt` (written temp-file + atomic rename
-    * AFTER the counts land, so its presence marks a COMPLETE model —
-    * [[ngramLmScoreWithModel]] fails closed on a counts dir without
-    * it, the interrupted-save case). Re-saving overwrites the model;
-    * train-vs-score parameter drift is impossible by construction
-    * (scoring reads order/hash from the sidecar, never from caller
-    * arguments). Models are immutable artifacts: re-save to a NEW dir
-    * if scorers may be mid-flight on the old one — a re-save deletes
-    * the sidecar first, so concurrent scorers fail closed rather than
-    * read half-written counts, but in-flight jobs that already passed
-    * the sidecar check race the overwrite like any file replaced
-    * under a reader. */
+    * Layout: `modelDir/counts` (parquet, partitioned by `k`, or by
+    * `lang` then `k`) and `modelDir/params.lm.txt` (written temp-file
+    * + atomic rename AFTER the counts land, so its presence marks a
+    * COMPLETE model — [[ngramLmScoreWithModel]] fails closed on a
+    * counts dir without it, the interrupted-save case). Re-saving
+    * overwrites the model; train-vs-score parameter drift is
+    * impossible by construction (scoring reads order/hash from the
+    * sidecar, never from caller arguments). The save runs under the
+    * model dir's single-writer `lock` ([[Dedup.withIndexLock]]) and
+    * fails closed while another save or append holds it. Models are
+    * immutable artifacts: re-save to a NEW dir if scorers may be
+    * mid-flight on the old one — a re-save deletes the sidecar first,
+    * so concurrent scorers fail closed rather than read half-written
+    * counts, but in-flight jobs that already passed the sidecar check
+    * race the overwrite like any file replaced under a reader. */
   def saveLmModel(train: DataFrame, textCol: String, modelDir: String,
                   order: Int = 3, minCount: Int = 1,
                   portableHash: Boolean = false,
@@ -661,54 +684,24 @@ object TextAnalysis {
       s"saveLmModel: order=$order out of [2,6]")
     require(minCount >= 1,
       s"saveLmModel: minCount=$minCount must be >= 1")
-    val meta = java.nio.file.Paths.get(modelDir, "params.lm.txt")
-    java.nio.file.Files.deleteIfExists(meta) // re-save: incomplete
-    // until the new counts land and the sidecar is re-written
-    // pinned: the (N, V) totals and the parquet write share one count
-    // pass (reading N/V back from disk would also die on the
-    // zero-file parquet dir an empty corpus produces — schema
-    // inference, not the real error)
-    val fused = lmCountTables(train, textCol, order, minCount,
-      portableHash, langCol).localCheckpoint(eager = false)
-    val sidecar: String = langCol match {
-      case None =>
-        val nv = fused.filter(col("k") === 1)
-          .agg(coalesce(sum(col("c")), lit(0L)), count(lit(1)))
-          .collect()(0)
-        // an LM model of NOTHING is a pipeline bug upstream (empty
-        // train slice), and its counts dir would fail every later
-        // scorer with an unrelated schema-inference error — refuse
-        // with the real cause
-        require(nv.getLong(1) > 0L,
-          s"saveLmModel: train corpus has no tokens (column " +
-            s"'$textCol') — refusing to persist an empty model")
-        fused.write.mode("overwrite").partitionBy("k")
-          .parquet(s"$modelDir/counts")
-        s"order=$order minCount=$minCount " +
-          s"portable=$portableHash n=${nv.getLong(0)} v=${nv.getLong(1)}"
-      case Some(_) =>
-        // ONE-PASS multilingual save (CCNet §3.3: one model per
-        // language): counts land partitioned (lang, k) so scoring
-        // prunes to the languages it joins, and the sidecar carries
-        // one (n, v) line per language — languages-bounded, tiny
-        val langNv = fused.filter(col("k") === 1).groupBy("lang")
-          .agg(coalesce(sum(col("c")), lit(0L)).as("n"),
-            count(lit(1)).as("v"))
-          .collect().map(r => (r.getString(0), r.getLong(1),
-            r.getLong(2))).sortBy(_._1)
-        require(langNv.nonEmpty,
-          s"saveLmModel: train corpus has no tokens (column " +
-            s"'$textCol') in any language — refusing to persist an " +
-            "empty model")
-        requireLangCodes(langNv.map(_._1).toSeq, "saveLmModel")
-        fused.write.mode("overwrite").partitionBy("lang", "k")
-          .parquet(s"$modelDir/counts")
-        val header = s"order=$order minCount=$minCount " +
-          s"portable=$portableHash perlang=true"
-        (header +: langNv.map { case (l, n, v) =>
-          s"lang=$l n=$n v=$v" }).mkString("\n")
+    Dedup.withIndexLock(modelDir, "saveLmModel") {
+      val meta = java.nio.file.Paths.get(modelDir, "params.lm.txt")
+      java.nio.file.Files.deleteIfExists(meta) // re-save: incomplete
+      // until the new counts land and the sidecar is re-written
+      // pinned: the (N, V) totals and the parquet write share one count
+      // pass (reading N/V back from disk would also die on the
+      // zero-file parquet dir an empty corpus produces — schema
+      // inference, not the real error)
+      val fused = lmCountTables(train, textCol, order, minCount,
+        portableHash, langCol).localCheckpoint(eager = false)
+      val model = withLangTotals(LmSidecar(order, minCount, portableHash,
+        langCol.isDefined, Nil), fused, "saveLmModel", textCol, modelDir)
+      // a single-language model's constant lang key stays off disk
+      (if (model.perLang) fused.write.partitionBy("lang", "k")
+       else fused.drop("lang").write.partitionBy("k"))
+        .mode("overwrite").parquet(s"$modelDir/counts")
+      Sidecar.publish(meta, model.text)
     }
-    writeLmSidecar(modelDir, sidecar)
   }
 
   /** ADD languages to a saved per-language model WITHOUT retraining
@@ -737,40 +730,26 @@ object TextAnalysis {
     * half-added language scores down the documented no-model
     * degenerate path until the append is re-run, and the re-run's
     * dynamic overwrite replaces the orphans cleanly. SINGLE-WRITER:
-    * two concurrent appends race the sidecar rename (last wins,
-    * dropping the other's language list) — serialize appends
-    * externally, exactly as with re-saves. */
+    * the append runs under the model dir's `lock`
+    * ([[Dedup.withIndexLock]]) and reads the sidecar inside it, so a
+    * concurrent append or re-save fails closed instead of dropping
+    * the other's language list. */
   def addLmModelLanguages(train: DataFrame, textCol: String,
-                          modelDir: String, langCol: String): Unit = {
-    val (kv, existing) = readLmSidecar(modelDir).getOrElse(
+                          modelDir: String, langCol: String): Unit =
+      Dedup.withIndexLock(modelDir, "addLmModelLanguages") {
+    val model = readLmSidecar(modelDir).getOrElse(
       throw new IllegalArgumentException(
         s"addLmModelLanguages: no complete model at $modelDir " +
           "(missing params.lm.txt) — the first save is saveLmModel's " +
           "job"))
-    require(kv.get("perlang").contains("true"),
+    require(model.perLang,
       s"addLmModelLanguages: the model at $modelDir is " +
         "single-language — only per-language models (saved with " +
         "langCol) can grow languages")
-    val order = kv("order").toInt
-    val minCount = kv("minCount").toInt
-    val portableHash = kv("portable").toBoolean
-    val existingLangs = existing.map(_._1).toSet
-    val fused = lmCountTables(train, textCol, order, minCount,
-      portableHash, Some(langCol)).localCheckpoint(eager = false)
-    val langNv = fused.filter(col("k") === 1).groupBy("lang")
-      .agg(coalesce(sum(col("c")), lit(0L)).as("n"),
-        count(lit(1)).as("v"))
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        r.getLong(2))).sortBy(_._1)
-    require(langNv.nonEmpty,
-      s"addLmModelLanguages: train corpus has no tokens (column " +
-        s"'$textCol') in any language — nothing to add")
-    requireLangCodes(langNv.map(_._1).toSeq, "addLmModelLanguages")
-    val overlap = langNv.map(_._1).toSet.intersect(existingLangs)
-    require(overlap.isEmpty,
-      s"addLmModelLanguages: ${overlap.toSeq.sorted.mkString(", ")} " +
-        s"already in the model at $modelDir — saved languages are " +
-        "immutable; retrain to a NEW dir to replace one")
+    val fused = lmCountTables(train, textCol, model.order, model.minCount,
+      model.portableHash, Some(langCol)).localCheckpoint(eager = false)
+    val grown = withLangTotals(model, fused, "addLmModelLanguages",
+      textCol, modelDir)
     // new partitions FIRST: dynamic overwrite touches only the lang=
     // dirs present in `fused` (the new languages), so every existing
     // language's files survive byte-for-byte
@@ -780,11 +759,8 @@ object TextAnalysis {
       .parquet(s"$modelDir/counts")
     // sidecar LAST (temp + atomic rename): its language list is what
     // makes the new partitions visible to scorers
-    val header = s"order=$order minCount=$minCount " +
-      s"portable=$portableHash perlang=true"
-    writeLmSidecar(modelDir,
-      (header +: (existing ++ langNv).sortBy(_._1)
-        .map { case (l, n, v) => s"lang=$l n=$n v=$v" }).mkString("\n"))
+    Sidecar.publish(java.nio.file.Paths.get(modelDir, "params.lm.txt"),
+      grown.text)
   }
 
   /** Score documents against a model saved by [[saveLmModel]] — the
@@ -810,20 +786,17 @@ object TextAnalysis {
                             broadcastModel: Boolean = true): DataFrame = {
     require(alphaNum >= 1 && alphaDen > alphaNum,
       s"ngramLmScoreWithModel: alpha=$alphaNum/$alphaDen not in (0,1)")
-    val (kv, sidecarLangNv) = readLmSidecar(modelDir).getOrElse(
+    val model = readLmSidecar(modelDir).getOrElse(
       throw new IllegalStateException(
         s"ngramLmScoreWithModel: no complete model at $modelDir — " +
           "params.lm.txt is missing (either the dir is wrong or a " +
           "saveLmModel was interrupted; re-save the model)"))
-    val order = kv("order").toInt
-    val portableHash = kv("portable").toBoolean
-    val perLang = kv.get("perlang").contains("true")
     // lang-shape mismatch fails CLOSED both ways: scoring a per-lang
     // model without a lang column would join nothing (every doc
     // all-OOV, silently), and scoring a single-lang model "per
     // language" would silently give every language the same model
-    require(perLang == langCol.isDefined,
-      if (perLang)
+    require(model.perLang == langCol.isDefined,
+      if (model.perLang)
         s"ngramLmScoreWithModel: the model at $modelDir is " +
           "PER-LANGUAGE (saved with langCol) — pass langCol so each " +
           "doc scores against its own language's model"
@@ -843,33 +816,17 @@ object TextAnalysis {
     // manifest partition-pruning the r17 revert protected is asserted
     // by PlanSpec on the PRE-pin frame ([[lmSavedCounts]]), which is
     // exactly what materializes here.
-    val counts = lmSavedCounts(spark, modelDir)
+    val counts = lmSavedCounts(spark, modelDir, model)
       .localCheckpoint(eager = false)
-    if (perLang) {
-      val langNv = sidecarLangNv
-      import scala.jdk.CollectionConverters._
-      val nvDf = spark.createDataFrame(
-        langNv.map(t => org.apache.spark.sql.Row(t._1, t._2, t._3))
-          .toSeq.asJava,
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "lang STRING, __n BIGINT, __v BIGINT"))
-      val cnts = (1 to order).map { k =>
-        counts.filter(col("k") === k)
-          .select(col("lang"), col("h").as(s"nk$k"),
-            col("c").as(s"cn$k"))
-      }
-      lmBackoffScore(score, idCol, textCol, cnts, Right(nvDf), order,
-        alphaNum, alphaDen, portableHash, langCol, broadcastModel)
-    } else {
-      val (nTok, vocab) = (kv("n").toLong, kv("v").toLong)
-      val cnts = (1 to order).map { k =>
-        counts.filter(col("k") === k)
-          .select(col("h").as(s"nk$k"), col("c").as(s"cn$k"))
-      }
-      lmBackoffScore(score, idCol, textCol, cnts, Left((nTok, vocab)),
-        order, alphaNum, alphaDen, portableHash, langCol = None,
-        broadcastModel)
-    }
+    import scala.jdk.CollectionConverters._
+    val nv = spark.createDataFrame(
+      model.langNv.map(t => org.apache.spark.sql.Row(t._1, t._2, t._3))
+        .asJava,
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "lang STRING, __n BIGINT, __v BIGINT"))
+    lmBackoffScore(score, idCol, textCol, lmOrderTables(counts, model.order),
+      nv, model.order, alphaNum, alphaDen, model.portableHash, langCol,
+      broadcastModel)
   }
 
   /** The saved-model count READ of [[ngramLmScoreWithModel]], pruned to
@@ -885,7 +842,9 @@ object TextAnalysis {
     * partitions landed but the sidecar rename didn't — is INVISIBLE, so
     * such a language scores down the documented no-model degenerate
     * path instead of hitting count tables with a zero (N, V) event
-    * space (hits with no floor — silently wrong scores).
+    * space (hits with no floor — silently wrong scores). A
+    * single-language model has no lang dirs to prune: its counts gain
+    * the constant [[OneLang]] key instead.
     *
     * Explicit schemas: partition-column TYPE INFERENCE would read a
     * purely numeric lang code (lang=01/, lang=1/) back as int and
@@ -893,18 +852,21 @@ object TextAnalysis {
     * k to INT) so the round trip is shape-exact by construction. */
   private[graft] def lmSavedCounts(
       spark: org.apache.spark.sql.SparkSession,
-      modelDir: String): DataFrame = {
-    val (kv, sidecarLangNv) = readLmSidecar(modelDir).getOrElse(
+      modelDir: String): DataFrame =
+    lmSavedCounts(spark, modelDir, readLmSidecar(modelDir).getOrElse(
       throw new IllegalStateException(
         s"lmSavedCounts: no complete model at $modelDir — " +
-          "params.lm.txt is missing"))
-    if (kv.get("perlang").contains("true"))
+          "params.lm.txt is missing")))
+
+  private def lmSavedCounts(spark: org.apache.spark.sql.SparkSession,
+                            modelDir: String,
+                            model: LmSidecar): DataFrame = {
+    val path = s"$modelDir/counts"
+    if (model.perLang)
       spark.read.schema("h BIGINT, c BIGINT, lang STRING, k INT")
-        .parquet(s"$modelDir/counts")
-        .filter(col("lang").isin(sidecarLangNv.map(_._1).toSeq: _*))
-    else
-      spark.read.schema("h BIGINT, c BIGINT, k INT")
-        .parquet(s"$modelDir/counts")
+        .parquet(path).filter(col("lang").isin(model.langNv.map(_._1): _*))
+    else spark.read.schema("h BIGINT, c BIGINT, k INT").parquet(path)
+      .withColumn("lang", langKey(None))
   }
 
   /** DSIR-style hashed n-gram importance weights (Xie et al. 2023,

@@ -152,26 +152,10 @@ final class Exec(store: QuadStore, spark: SparkSession) {
     val useValued = store.valued.isDefined &&
       (Seq(tp.s, tp.p, tp.o).collect { case PVar(v) => v } ++ gvar)
         .exists(need)
-    // segment pruning: a constant predicate / graph selects only the
-    // store leaves that can contain it (reference: per-predicate ptree
-    // index + model index, `src/backend/ptree.c`, `query-backend.c:291`)
     val pConst = tp.p match {
       case PConst(t) => Some(Rid.of(t)); case _ => None
     }
-    val live = store.leaves.filter { seg =>
-      pConst.forall(r => seg.predRids.forall(_.contains(r))) &&
-        gRids.forall(gs => seg.graphRids.forall(sg => gs.exists(sg)))
-    }
-    var df = live match {
-      case Nil => // no segment can match -> statically empty scan
-        (if (useValued) store.valued.get else store.quads).limit(0)
-      case segs =>
-        segs.map(sg => if (useValued) sg.valued.get else sg.quads)
-          .reduce(_ unionByName _)
-    }
-    gRids.foreach(rs => df =
-      if (rs.isEmpty) df.filter(lit(false))
-      else df.filter(col("g").isin(rs: _*)))
+    var df = prunedScan(pConst, gRids, useValued)
     // §13.3: GRAPH ?g ranges over the dataset's NAMED graphs only — with
     // no FROM NAMED restriction in scope, that is every graph EXCEPT the
     // default graph (which is addressable only without a GRAPH box)
@@ -212,18 +196,22 @@ final class Exec(store: QuadStore, spark: SparkSession) {
 
   // ---------------------------------------------------- property paths
 
-  /** Pruned quads scan shared by [[triplePattern]]-style lookups and path
-    * evaluation: constant-predicate / graph segment pruning plus the
-    * FROM/GRAPH restriction filter. */
-  private def prunedScan(pRid: Option[Long],
-                         gRids: Option[Seq[Long]]): DataFrame = {
+  /** Pruned scan shared by [[triplePattern]] and path evaluation: a
+    * constant predicate / graph selects only the store leaves that can
+    * contain it (reference: per-predicate ptree index + model index,
+    * `src/backend/ptree.c`, `query-backend.c:291`), then the FROM/GRAPH
+    * restriction filter. `valued` scans the leaves' inline-value tables
+    * instead of their RID quads. */
+  private def prunedScan(pRid: Option[Long], gRids: Option[Seq[Long]],
+                         valued: Boolean = false): DataFrame = {
     val live = store.leaves.filter { seg =>
       pRid.forall(r => seg.predRids.forall(_.contains(r))) &&
         gRids.forall(gs => seg.graphRids.forall(sg => gs.exists(sg)))
     }
+    def table(st: QuadStore) = if (valued) st.valued.get else st.quads
     var df = live match {
-      case Nil => store.quads.limit(0)
-      case segs => segs.map(_.quads).reduce(_ unionByName _)
+      case Nil => table(store).limit(0) // no leaf can match
+      case segs => segs.map(table).reduce(_ unionByName _)
     }
     gRids.foreach(rs => df =
       if (rs.isEmpty) df.filter(lit(false))

@@ -485,41 +485,23 @@ class PlanSpec extends SparkTestBase {
     // lost cache hit, an accidental 32-way fan-out of a tiny store, or
     // a new exchange shows up here as a task-count explosion long
     // before it shows up as seconds.
-    import java.util.concurrent.atomic.AtomicInteger
-    val jobs = new AtomicInteger
-    val tasks = new AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        tasks.addAndGet(s.stageInfo.numTasks)
-    }
-    def settled(get: () => Int): Int = {
-      // listener events are async: wait for two stable readings
-      var prev = -1; var cur = get()
-      var spins = 0
-      while (cur != prev && spins < 40) {
-        prev = cur; Thread.sleep(100); cur = get(); spins += 1
-      }
-      cur
-    }
     for (name <- Seq("s05_sparql_agg", "s06_sparql_filter_str",
         "s07_sparql_order_limit")) {
       val fn = graft.SparkEntry.queries(name)
       fn(spark, sf).count() // warm: store build + codegen, uncounted
-      spark.sparkContext.addSparkListener(listener)
+      // the listener drains the bus before and after the run, so the
+      // window holds exactly the warm run's jobs and tasks
+      val l = new graft.Probe.Listener
+      spark.sparkContext.addSparkListener(l)
       try {
-        jobs.set(0); tasks.set(0)
-        fn(spark, sf).count()
-        val j = settled(() => jobs.get)
-        val t = settled(() => tasks.get)
+        val (_, w) = l.measure(spark.sparkContext)(fn(spark, sf).count())
+        val j = w.stats("jobs").asInstanceOf[Int]
+        val t = w.stats("tasks").asInstanceOf[Int]
         assert(j <= 2, s"$name: warm run needed $j jobs (expected <=2)")
         assert(t <= 6,
           s"$name: warm run fanned out to $t tasks (expected <=6: " +
             "compact store lost its single-partition cache shape)")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      } finally spark.sparkContext.removeSparkListener(l)
     }
   }
 

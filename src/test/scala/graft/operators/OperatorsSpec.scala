@@ -889,6 +889,33 @@ class OperatorsSpec extends SparkTestBase {
         s"$pt")
   }
 
+  test("addLmModelLanguages fails closed while the model dir's lock " +
+      "is held: it names the holder and leaves the sidecar as it was") {
+    val train = Seq((1L, "en", "a b c"), (2L, "fr", "a b q"))
+      .toDF("id", "lang", "text")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-lm-locked-").toString
+    TextAnalysis.saveLmModel(train, "text", dir, order = 2,
+      langCol = Some("lang"))
+    val meta = java.nio.file.Paths.get(dir, "params.lm.txt")
+    val before = java.nio.file.Files.readAllBytes(meta).toSeq
+    val lock = java.nio.file.Paths.get(dir, "lock")
+    java.nio.file.Files.write(lock,
+      "op=other-writer host=h pid=1 start=t".getBytes("UTF-8"))
+    try {
+      val e = intercept[IllegalStateException] {
+        TextAnalysis.addLmModelLanguages(
+          Seq((3L, "de", "x y z")).toDF("id", "lang", "text"), "text",
+          dir, "lang")
+      }
+      assert(e.getMessage.contains("op=other-writer host=h pid=1"),
+        e.getMessage)
+      assert(java.nio.file.Files.readAllBytes(meta).toSeq == before)
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(dir, "counts", "lang=de")))
+    } finally java.nio.file.Files.delete(lock)
+  }
+
   test("broadcastModel=false (AQE picks join strategies) returns " +
       "rows identical to the broadcast default, single- and per-lang") {
     val train = Seq(
