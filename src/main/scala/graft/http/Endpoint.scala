@@ -649,9 +649,10 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
             s":post${graft.sparql.Update.bootId}:${
               Endpoint.postNonce.incrementAndGet()}")
           durableName match {
-            case Some(n) => // graph-store import: append-only delta
+            case Some(n) => // the durable delta writer: appends what
+              // is new, and drops the tombstone of a quad the body re-adds
               val before = store
-              Update.appendDelta(spark, n, before, before.union(add))
+              Update.commitDelta(spark, n, before, before.union(add))
               replace(Update.reload(spark, n))
             case None => // add is already pinned (parsedBody)
               swap(_.union(add))

@@ -14,8 +14,7 @@ import org.apache.spark.sql.expressions.Window
   * at or before its timestamp via `last(_, ignoreNulls)` over a
   * partition-ordered window. One shuffle on the key, no candidate-pair
   * explosion, no AQE-hostile non-equi condition — at 100 TB this is a
-  * single sort-based pass per key group, and skewed keys can reuse
-  * [[Skew]] salting upstream.
+  * single sort-based pass per key group.
   */
 object AsOf {
 

@@ -184,8 +184,7 @@ object Decontaminate {
         (coalesce(col("n_hits"), lit(0L)) > 0).as("contaminated"))
   }
 
-  /** The eval side of the bloom scans ([[flagBloom]] and
-    * [[graft.streaming.StreamIngest.decontaminateStream]]): the distinct
+  /** The eval side of [[flagBloom]]'s bloom scan: the distinct
     * eval k-gram hashes (column `h`) and a broadcast bloom filter over
     * them at false-positive rate `fpp`. */
   private[graft] def evalBloom(eval: DataFrame, idCol: String,

@@ -744,8 +744,7 @@ object Dedup {
     * over the signature slice starting at b·rows+1 (1-based), seeded
     * with the band index — statically unrolled, pure codegen.
     * ORACLE-PINNED: every consumer ([[minhashPairs]],
-    * [[dedupAgainstIndex]] and through it
-    * `StreamIngest.minhashDedupStream`, `Decontaminate.nearDupFlag`)
+    * [[dedupAgainstIndex]], `Decontaminate.nearDupFlag`)
     * and every generated DuckDB oracle replays exactly this banding; it
     * changes in one place or not at all. */
   def bandBucketArray(sig: Column, bands: Int, rows: Int): Column =
@@ -1053,11 +1052,9 @@ object Dedup {
   /** Incremental snapshot dedup: probe a NEW crawl snapshot against a
     * PERSISTED corpus index and write the snapshot's own delta back,
     * so a monthly crawl drop is deduped against all of history without
-    * re-reading or re-shingling the historical TEXT; the streaming
-    * near-dup filter ([[graft.streaming.StreamIngest.minhashDedupStream]])
-    * runs this once per micro-batch. (The reference has no incremental
-    * path at all: its import always rebuilds rhash/ptree segments over
-    * the full store, `src/backend/import-backend.c`.)
+    * re-reading or re-shingling the historical TEXT. (The reference has
+    * no incremental path at all: its import always rebuilds rhash/ptree
+    * segments over the full store, `src/backend/import-backend.c`.)
     *
     * Index layout under `indexDir` (both tables partitioned by
     * `snapshot`, so re-running a snapshot dynamically OVERWRITES ITS
@@ -1439,27 +1436,5 @@ object Dedup {
           s"${st.getAs[Long]("n_docs")} docs unexamined past " +
           s"maxCellSize=$maxCellSize) - train centroids or raise the cap")
     res.filter(col("kept")).select(col("id").as(idCol))
-  }
-
-  /** GraphX variant of [[connectedComponents]] for Long ids — the RDD
-    * Pregel implementation (`org.apache.spark.graphx.lib
-    * .ConnectedComponents`). Same labels (lowest member id). The
-    * DataFrame variant is preferred in pipelines (stays columnar /
-    * codegen, no RDD serialization); this one exists for graph-shaped
-    * workloads already in GraphX land. */
-  def connectedComponentsGraphX(ids: DataFrame,
-                                pairs: DataFrame): DataFrame = {
-    import org.apache.spark.graphx.{Edge, Graph}
-    val spark = ids.sparkSession
-    val verts = ids.select(col("id").cast("long")).rdd
-      .map(r => (r.getLong(0), r.getLong(0)))
-    val edges = pairs.select(col("id1").cast("long"),
-        col("id2").cast("long")).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val g = Graph(verts, edges)
-    val cc = org.apache.spark.graphx.lib.ConnectedComponents.run(g)
-    spark.createDataFrame(cc.vertices.map { case (id, comp) =>
-      (id, comp)
-    }).toDF("id", "comp")
   }
 }

@@ -1,32 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Multimodal column handling: image/audio/video as opaque `binary`
-  * columns with typed metadata, processed in batched partition passes.
+/** Multimodal column handling: media as opaque `binary` columns with
+  * typed metadata, processed in batched partition passes (the Scala
+  * analog of the `mapInPandas` batch shape), so a partition's payloads
+  * never co-reside in memory.
   *
-  * IMAGES are decoded for real via `javax.imageio` (pure JDK:
-  * PNG/JPEG/GIF/BMP/WBMP/TIFF) — [[decodeImageMeta]] parses headers
-  * without materializing pixels, [[resizeImages]] re-encodes scaled
-  * pixels. AUDIO container headers are ALSO in the JDK:
-  * `javax.sound.sampled.AudioSystem` parses WAV/AIFF/AU (sample rate,
-  * channels, bit depth, frame count) — [[decodeAudioMeta]] is that real
-  * path. VIDEO container metadata needs no demuxer either: ISO-BMFF
-  * (MP4/MOV) is length-prefixed box structure, and [[decodeVideoMeta]]
-  * walks `ftyp`/`moov`/`mvhd`/`tkhd` in plain JVM code — duration,
-  * timescale, track count, display width/height — without touching a
-  * codec. What the JDK does NOT ship is compressed PAYLOAD decode
-  * (MP3/AAC/Opus audio, H.264/AV1 frames), so payload-level audio
-  * decode and video frame extraction remain deterministic stubs
-  * ([[imageMeta]]'s `fakeDecode`, [[sampleFrames]]) with the real
-  * Spark-side plumbing — schema, binary transport, batched
-  * per-partition processing (the Scala analog of `mapInPandas` batch
-  * shape) — which is what matters at 100 TB: blobs stream through
-  * executors without a partition's payloads ever co-residing in memory.
-  * ([[imageMeta]] additionally stays byte-deterministic so the DuckDB
-  * oracle can replicate it; [[decodeImageMeta]]/[[decodeAudioMeta]] are
-  * the production paths.)
+  * - [[imageMeta]] is a deterministic STUB decode (`fakeDecode`, MD5
+  *   byte reads) that the DuckDB oracle can replicate.
+  * - [[decodeVideoMeta]] is a REAL container read: ISO-BMFF (MP4/MOV)
+  *   is length-prefixed boxes, walked in plain JVM code for duration,
+  *   timescale, track count and display size, without a codec.
+  *   [[syntheticMp4]] generates the fixtures its gate decodes.
+  * - Compressed PAYLOAD decode (H.264/AV1 frames, MP3/AAC/Opus) needs a
+  *   codec the JDK does not ship, so frame extraction goes through the
+  *   pluggable [[MediaDecoder]] boundary ([[decodeFramesWith]]); the
+  *   library ships the codec-free [[ChunkFrameDecoder]].
   */
 object Multimodal {
 
@@ -34,8 +25,6 @@ object Multimodal {
                             content: Array[Byte])
   final case class ImageMeta(media_id: Long, width: Int, height: Int,
                              channels: Int, n_bytes: Long, fp_prefix: String)
-  final case class Frame(media_id: Long, frame_no: Int,
-                         frame: Array[Byte])
 
   /** Wrap text rows as fake media blobs (test/data-gen helper). */
   def asMedia(df: DataFrame, idCol: String, payloadCol: String,
@@ -79,109 +68,6 @@ object Multimodal {
     }
   }
 
-  final case class ImageDecoded(media_id: Long, format: String,
-                                width: Int, height: Int, channels: Int,
-                                n_bytes: Long, error: String)
-
-  /** REAL image metadata via `javax.imageio`: format sniffed from the
-    * bytes (magic, not mime), width/height/channels parsed from the
-    * HEADER ONLY — `ImageReader.getWidth/getImageTypes` never decodes
-    * the pixel raster, so a 50 MB JPEG costs a few KB of reads. Rows
-    * whose bytes no installed reader recognizes (wrong magic,
-    * truncated header) come back with `error` set and -1 dimensions
-    * instead of failing the job — at corpus scale some fraction of
-    * crawl blobs is always mislabeled or corrupt, and one bad row must
-    * not kill a 10^9-row pass. Batched like [[imageMeta]]. */
-  def decodeImageMeta(media: Dataset[MediaRow], batchSize: Int = 64)
-      : Dataset[ImageDecoded] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { m =>
-          val in = new java.io.ByteArrayInputStream(m.content)
-          val iis = javax.imageio.ImageIO.createImageInputStream(in)
-          try {
-            val readers = javax.imageio.ImageIO.getImageReaders(iis)
-            if (!readers.hasNext)
-              ImageDecoded(m.media_id, null, -1, -1, -1,
-                m.content.length.toLong, "unrecognized image format")
-            else {
-              val r = readers.next()
-              try {
-                r.setInput(iis)
-                val types = r.getImageTypes(0)
-                val channels =
-                  if (types.hasNext)
-                    types.next().getColorModel.getNumComponents
-                  else -1
-                ImageDecoded(m.media_id, r.getFormatName.toLowerCase,
-                  r.getWidth(0), r.getHeight(0), channels,
-                  m.content.length.toLong, null)
-              } finally r.dispose()
-            }
-          } catch {
-            case e: Exception =>
-              ImageDecoded(m.media_id, null, -1, -1, -1,
-                m.content.length.toLong,
-                s"decode failed: ${e.getMessage}")
-          } finally if (iis != null) iis.close()
-        }
-      }
-    }
-  }
-
-  final case class AudioDecoded(media_id: Long, format: String,
-                                sample_rate: Float, channels: Int,
-                                sample_bits: Int, frames: Long,
-                                duration_sec: Double, n_bytes: Long,
-                                error: String)
-
-  /** REAL audio metadata via `javax.sound.sampled`:
-    * `AudioSystem.getAudioFileFormat` parses the CONTAINER HEADER only
-    * (WAV/AIFF/AU in the stock JDK — RIFF/FORM/.snd chunk walk, no
-    * payload decode), yielding sample rate, channel count, bit depth
-    * and frame length; duration is derived as frames/rate when both are
-    * specified (AudioSystem.NOT_SPECIFIED maps to -1). Unrecognized or
-    * truncated blobs come back as error rows with -1 fields instead of
-    * failing the job — same corrupt-blob policy as [[decodeImageMeta]],
-    * same batched partition shape. ByteArrayInputStream supports
-    * mark/reset, which the format sniffer requires.
-    * Video container metadata is the same header-only story: see
-    * [[decodeVideoMeta]]. */
-  def decodeAudioMeta(media: Dataset[MediaRow], batchSize: Int = 64)
-      : Dataset[AudioDecoded] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { m =>
-          try {
-            val aff = javax.sound.sampled.AudioSystem.getAudioFileFormat(
-              new java.io.ByteArrayInputStream(m.content))
-            val f = aff.getFormat
-            val frames = aff.getFrameLength.toLong
-            val rate = f.getSampleRate
-            val dur =
-              if (frames >= 0 && rate > 0) frames / rate.toDouble else -1.0
-            AudioDecoded(m.media_id,
-              aff.getType.toString.toLowerCase,
-              rate, f.getChannels, f.getSampleSizeInBits, frames, dur,
-              m.content.length.toLong, null)
-          } catch {
-            case _: javax.sound.sampled.UnsupportedAudioFileException =>
-              AudioDecoded(m.media_id, null, -1f, -1, -1, -1L, -1.0,
-                m.content.length.toLong, "unrecognized audio format")
-            case e: Exception =>
-              AudioDecoded(m.media_id, null, -1f, -1, -1, -1L, -1.0,
-                m.content.length.toLong,
-                s"decode failed: ${e.getMessage}")
-          }
-        }
-      }
-    }
-  }
-
   final case class VideoDecoded(media_id: Long, brand: String,
                                 timescale: Long, duration_sec: Double,
                                 track_count: Int, width: Int, height: Int,
@@ -197,10 +83,10 @@ object Multimodal {
     * video track — audio tracks carry 0×0). `mdat` is skipped by its
     * size field, never read. A blob whose first box is not `ftyp`, or
     * with inconsistent box sizes, yields an error row with -1 fields
-    * instead of failing the job — same corrupt-blob policy and batched
-    * partition shape as [[decodeImageMeta]]/[[decodeAudioMeta]]. Frame
-    * EXTRACTION stays a stub ([[sampleFrames]]): that genuinely needs a
-    * codec the JDK does not ship. */
+    * instead of failing the job: at corpus scale some blobs are always
+    * mislabeled or corrupt, and one bad row must not kill the pass.
+    * Frame EXTRACTION needs a codec the JDK does not ship: see
+    * [[decodeFramesWith]]. */
   def decodeVideoMeta(media: Dataset[MediaRow], batchSize: Int = 64)
       : Dataset[VideoDecoded] = {
     val spark = media.sparkSession
@@ -338,52 +224,6 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** REAL image resize: decode, scale so the longer edge is `maxDim`
-    * (never upscales), re-encode as PNG. Undecodable rows pass through
-    * unchanged (same corrupt-blob policy as [[decodeImageMeta]]). */
-  def resizeImages(media: Dataset[MediaRow], maxDim: Int)
-      : Dataset[MediaRow] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.map { m =>
-      try {
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(m.content))
-        if (img == null) m
-        else {
-          val scale = maxDim.toDouble / math.max(img.getWidth, img.getHeight)
-          if (scale >= 1.0) m
-          else {
-            val w = math.max(1, (img.getWidth * scale).round.toInt)
-            val h = math.max(1, (img.getHeight * scale).round.toInt)
-            val out = new java.awt.image.BufferedImage(w, h,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val g = out.createGraphics()
-            try {
-              g.setRenderingHint(
-                java.awt.RenderingHints.KEY_INTERPOLATION,
-                java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-              g.drawImage(img, 0, 0, w, h, null)
-            } finally g.dispose()
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(out, "png", bos)
-            MediaRow(m.media_id, "image/png", bos.toByteArray)
-          }
-        }
-      } catch { case _: Exception => m }
-    }
-  }
-
-  /** STUB resize: deterministic downsampled payload (every k-th byte). */
-  def resize(media: Dataset[MediaRow], factor: Int): Dataset[MediaRow] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.map(m => m.copy(
-      content = m.content.zipWithIndex.collect {
-        case (b, i) if i % factor == 0 => b
-      }))
-  }
-
   /** THE CODEC BOUNDARY, made explicit and pluggable: compressed
     * payload decode (H.264/AV1 frames, MP3/AAC/Opus PCM) genuinely
     * needs codecs the JDK does not ship and this library will not
@@ -425,7 +265,7 @@ object Multimodal {
     * decoded frame per payload, as (media_id, frame_no, frame, error)
     * rows. Corrupt/unsupported payloads (Left or throw from the
     * decoder) yield ONE error row for that media_id and the job keeps
-    * going — the same corrupt-blob policy as [[decodeImageMeta]].
+    * going — the same corrupt-blob policy as [[decodeVideoMeta]].
     * mapPartitions keeps one decoder instance per partition (native
     * decoders amortize context setup) and only ever holds one
     * payload's frames in memory. */
@@ -450,38 +290,5 @@ object Multimodal {
         }
       }
     }
-  }
-
-  /** Frame sampling via the boundary's shipping fake (kept for the
-    * p-gate and API compatibility): fixed-size pseudo frames, every
-    * `everyN`-th. */
-  def sampleFrames(media: Dataset[MediaRow], frameBytes: Int = 256,
-                   everyN: Int = 2): Dataset[Frame] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    decodeFramesWith(media, new ChunkFrameDecoder(frameBytes), everyN)
-      .filter((r: FrameRow) => r.error == null)
-      .map(r => Frame(r.media_id, r.frame_no, r.frame))
-  }
-
-  /** STUB feature extraction: deterministic pseudo-embedding from bytes
-    * (xxhash-free: simple rolling mix so it's library-independent). */
-  def features(media: Dataset[MediaRow], dim: Int = 16)
-      : DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.map { m =>
-      val v = new Array[Float](dim)
-      var h = 1125899906842597L
-      var i = 0
-      while (i < m.content.length) { h = 31 * h + m.content(i); i += 1 }
-      var d = 0
-      while (d < dim) {
-        val x = h * (d + 2654435761L)
-        v(d) = ((x >>> 40).toInt % 1000) / 1000.0f
-        d += 1
-      }
-      (m.media_id, v)
-    }.toDF("media_id", "embedding")
   }
 }

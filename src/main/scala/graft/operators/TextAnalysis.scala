@@ -953,9 +953,7 @@ object TextAnalysis {
 
   /** [[dsirImportance]]'s count table of one corpus: (b, `name`) — each
     * hashed-bigram bucket and its occurrence count, at most `buckets`
-    * rows whatever the corpus size. The streaming scorer
-    * ([[graft.streaming.StreamIngest.dsirScoreStream]]) collects the
-    * same table. */
+    * rows whatever the corpus size. */
   private[graft] def dsirCounts(df: DataFrame, textCol: String,
                                 buckets: Int, portableHash: Boolean,
                                 name: String): DataFrame =

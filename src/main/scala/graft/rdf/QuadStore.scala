@@ -181,11 +181,6 @@ final case class QuadStore(quads: DataFrame, resources: DataFrame,
       objTerm, gPart, lit(" .")).as("line"))
   }
 
-  /** Dump to an N-Quads text file tree (restore with
-    * [[QuadStore.fromNTriples]]). */
-  def dumpNQuads(path: String): Unit =
-    toNQuadLines.write.mode("overwrite").text(path)
-
   /** Persist as bucketed tables (`<name>_quads` bucketed by subject,
     * `<name>_resources` bucketed by rid). The durable form of the
     * reference's subject-hash segmentation (`src/frontend/import.c:510`):
@@ -220,21 +215,6 @@ final case class QuadStore(quads: DataFrame, resources: DataFrame,
     ss.sql(s"ANALYZE TABLE ${name}_quads COMPUTE STATISTICS NOSCAN")
     ss.sql(s"ANALYZE TABLE ${name}_resources COMPUTE STATISTICS NOSCAN")
   }
-
-  /** Persist quads PARTITIONED BY PREDICATE — the durable form of the
-    * reference's per-predicate ptree indexes (`src/backend/backend.h:45`:
-    * two ptrees per predicate; a constant-predicate bind opens exactly
-    * one). A constant-p pattern scan over the saved table is a partition
-    * filter: at 100 TB it reads only that predicate's files. Predicate
-    * cardinality is low in practice (the reference caps segments at 256
-    * and real vocabularies have tens to thousands of predicates), so the
-    * directory fan-out stays sane; within each predicate partition the
-    * data is bucketed by subject for co-located subject joins. */
-  def savePredicatePartitioned(name: String, buckets: Int = 32): Unit =
-    quads.write.mode("overwrite")
-      .partitionBy("p")
-      .bucketBy(buckets, "s").sortBy("s")
-      .format("parquet").saveAsTable(s"${name}_quads_byp")
 }
 
 object QuadStore {

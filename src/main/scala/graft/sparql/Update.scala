@@ -625,24 +625,6 @@ object Update {
       compact(spark, name)
   }
 
-  /** Append only the delta rows (`after` minus `before`) as new files in
-    * the bucketed tables — O(delta), never O(store). The parquet analog
-    * of the reference's incremental import (`import-backend.c`). */
-  private[graft] def appendDelta(spark: SparkSession, name: String,
-                                 before: QuadStore,
-                                 after: QuadStore): Unit =
-    withWriteLock(spark, name) {
-      val dq = after.quads.join(before.quads, quadKey, "left_anti")
-        .dropDuplicates(quadKey)
-      val dr = after.resources.join(before.resources, Seq("rid"),
-        "left_anti").dropDuplicates("rid")
-      dq.write.mode("append").format("parquet")
-        .bucketBy(32, "s").sortBy("s").saveAsTable(s"${name}_quads")
-      dr.write.mode("append").format("parquet")
-        .bucketBy(32, "rid").sortBy("rid")
-        .saveAsTable(s"${name}_resources")
-    }
-
   /** Rewrite the saved tables to `after`'s contents through a staging
     * table + catalog renames: a concurrent reader sees the old store or
     * the new one, never a torn one. */

@@ -136,32 +136,6 @@ class PlanSpec extends SparkTestBase {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
 
-  test("predicate-partitioned store: constant-p scan is a partition filter") {
-    spark.sql("DROP TABLE IF EXISTS t_nation2_quads_byp")
-    val loc = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-      "t_nation2_quads_byp")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete()
-    }
-    if (loc.exists) rm(loc)
-    val store = QuadStore.rdfize("nation",
-      graft.core.Tables.t(spark, sf, "nation"), "n_nationkey")
-    store.savePredicatePartitioned("t_nation2", buckets = 4)
-    val nameRid = Rid.uri("urn:p:nation:n_name")
-    val scan = spark.table("t_nation2_quads_byp")
-      .filter(col("p") === nameRid)
-    val plan = planOf(scan)
-    // the predicate equality must prune partitions, not filter rows
-    // (the reference opens exactly one ptree per constant predicate)
-    assert(plan.contains("PartitionFilters") &&
-      plan.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1")
-        .contains("p#"),
-      s"constant-p should be a partition filter:\n$plan")
-    assert(scan.count() == 25)
-  }
-
   test("as-of join plans one window pass, no range or nested-loop join") {
     val ev = graft.core.Tables.t(spark, sf, "events")
     val purchases = ev.filter(col("event_type") === "purchase")

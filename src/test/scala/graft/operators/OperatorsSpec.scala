@@ -125,19 +125,6 @@ class OperatorsSpec extends SparkTestBase {
     assert(rTrained > 0.9, s"trained recall too low: $rTrained")
   }
 
-  test("salted join equals plain join on a skewed key") {
-    val fact = (1 to 500).map(i => (if (i % 10 == 0) 7L else i.toLong, i))
-      .toDF("k", "v") // key 7 is hot
-    val dim = Seq((7L, "hot"), (1L, "one"), (2L, "two")).toDF("k", "name")
-    val plain = fact.join(dim, "k").select("k", "v", "name")
-      .collect().map(_.toString).sorted.toSeq
-    val salted = Skew.saltedJoin(fact, dim, "k", salts = 8)
-      .select("k", "v", "name").collect().map(_.toString).sorted.toSeq
-    assert(salted == plain)
-    val hist = Skew.keyHistogram(fact, "k", 1).collect().head
-    assert(hist.getLong(0) == 7L)
-  }
-
   test("language ID picks out en/zh-ish docs") {
     val d = Seq(
       (0L, "the cat and the dog are in the house that is on the hill"),
@@ -219,8 +206,12 @@ class OperatorsSpec extends SparkTestBase {
     val ids = Seq(0L, 1L, 2L, 3L, 5L, 7L, 8L).toDF("id")
     val df = graft.operators.Dedup.connectedComponents(ids, pairs)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val gx = graft.operators.Dedup.connectedComponentsGraphX(ids, pairs)
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
+    // the reference: GraphX's Pregel implementation over the same graph
+    import org.apache.spark.graphx.{Edge, Graph}
+    val g = Graph(ids.as[Long].rdd.map(id => (id, id)),
+      pairs.as[(Long, Long)].rdd.map { case (a, b) => Edge(a, b, ()) })
+    val gx = org.apache.spark.graphx.lib.ConnectedComponents.run(g)
+      .vertices.collect().sortBy(_._1)
     assert(df.toSeq == gx.toSeq)
   }
 
@@ -477,6 +468,12 @@ class OperatorsSpec extends SparkTestBase {
         "id", "text")) ==
       rows(TextAnalysis.ngramLmScoreBackoff(train, score, "id", "text",
         order = 3, minCount = 2)))
+    // a document's score does not depend on what it is scored with:
+    // scoring the docs in two calls equals one call over all of them
+    assert(Seq(col("id") < 12, col("id") === 12)
+        .map(c => rows(TextAnalysis.ngramLmScoreWithModel(dir,
+          score.filter(c), "id", "text"))).reduce(_ ++ _) ==
+      rows(TextAnalysis.ngramLmScoreWithModel(dir, score, "id", "text")))
     // order and hashing come from the sidecar, not the caller — a
     // model trained at order 3 scores at order 3, full stop (the meta
     // line carries order/minCount/portable/n/v)
@@ -1516,78 +1513,6 @@ class OperatorsSpec extends SparkTestBase {
     out.foreach(r => assert(r.getLong(2) == naive(r.getLong(0)).toLong))
   }
 
-  test("decodeImageMeta reads real PNG/JPEG headers; bad magic errors") {
-    def encode(fmt: String, w: Int, h: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      img.setRGB(0, 0, 0xAA5533)
-      val bos = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(img, fmt, bos))
-      bos.toByteArray
-    }
-    val media = Seq(
-      Multimodal.MediaRow(1L, "image/png", encode("png", 37, 21)),
-      Multimodal.MediaRow(2L, "image/jpeg", encode("jpg", 64, 48)),
-      Multimodal.MediaRow(3L, "image/png",
-        "this is not an image at all".getBytes("UTF-8")))
-      .toDS()
-    val out = Multimodal.decodeImageMeta(media).collect()
-      .map(d => d.media_id -> d).toMap
-    assert(out(1L).format == "png" && out(1L).width == 37 &&
-      out(1L).height == 21 && out(1L).channels == 3 &&
-      out(1L).error == null)
-    assert(out(2L).format.startsWith("jp") && out(2L).width == 64 &&
-      out(2L).height == 48 && out(2L).error == null)
-    assert(out(3L).width == -1 && out(3L).error != null, out(3L))
-
-    // real resize: longer edge capped, aspect kept, small rows untouched
-    val resized = Multimodal.resizeImages(media, maxDim = 32).collect()
-      .map(m => m.media_id -> m).toMap
-    val r1 = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(resized(1L).content))
-    assert(r1.getWidth == 32 && r1.getHeight == 18) // 37x21 -> 32x18
-    val r2 = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(resized(2L).content))
-    assert(r2.getWidth == 32 && r2.getHeight == 24)
-    assert(resized(3L).content.sameElements(
-      "this is not an image at all".getBytes("UTF-8")))
-  }
-
-  test("decodeAudioMeta reads real WAV/AIFF headers; bad magic errors") {
-    // real encoder, not hand-rolled bytes: render PCM via the JDK's
-    // own AudioSystem.write so the test covers the same chunk layout
-    // a real capture pipeline produces
-    def encode(fileType: javax.sound.sampled.AudioFileFormat.Type,
-               rate: Float, channels: Int, nFrames: Int): Array[Byte] = {
-      import javax.sound.sampled._
-      val fmt = new AudioFormat(rate, 16, channels, true, false)
-      val pcm = new Array[Byte](nFrames * fmt.getFrameSize)
-      val ais = new AudioInputStream(
-        new java.io.ByteArrayInputStream(pcm), fmt, nFrames.toLong)
-      val bos = new java.io.ByteArrayOutputStream()
-      AudioSystem.write(ais, fileType, bos)
-      bos.toByteArray
-    }
-    import javax.sound.sampled.AudioFileFormat.Type.{WAVE, AIFF}
-    val media = Seq(
-      Multimodal.MediaRow(1L, "audio/wav", encode(WAVE, 16000f, 1, 8000)),
-      Multimodal.MediaRow(2L, "audio/aiff", encode(AIFF, 44100f, 2, 4410)),
-      Multimodal.MediaRow(3L, "audio/wav",
-        "definitely not RIFF data here".getBytes("UTF-8")))
-      .toDS()
-    val out = Multimodal.decodeAudioMeta(media).collect()
-      .map(d => d.media_id -> d).toMap
-    assert(out(1L).format == "wave" && out(1L).sample_rate == 16000f &&
-      out(1L).channels == 1 && out(1L).sample_bits == 16 &&
-      out(1L).frames == 8000L && out(1L).error == null, out(1L))
-    assert(math.abs(out(1L).duration_sec - 0.5) < 1e-9, out(1L))
-    assert(out(2L).format == "aiff" && out(2L).sample_rate == 44100f &&
-      out(2L).channels == 2 && out(2L).frames == 4410L &&
-      math.abs(out(2L).duration_sec - 0.1) < 1e-9, out(2L))
-    assert(out(3L).sample_rate == -1f && out(3L).frames == -1L &&
-      out(3L).error != null, out(3L))
-  }
-
   test("decodeVideoMeta walks real ISO-BMFF boxes; bad magic and bad " +
       "sizes yield error rows") {
     import java.nio.ByteBuffer
@@ -1680,12 +1605,13 @@ class OperatorsSpec extends SparkTestBase {
       byId(2L).head.error.contains("unsupported codec"), byId(2L).toSeq)
     assert(byId(3L).length == 1 &&
       byId(3L).head.error.contains("decoder threw"), byId(3L).toSeq)
-    // and the shipping fake still drives sampleFrames unchanged
-    val frames = Multimodal.sampleFrames(
+    // and the shipping fake drives the same boundary
+    val frames = Multimodal.decodeFramesWith(
       Seq(Multimodal.MediaRow(9L, "video/mp4",
         Array.tabulate(1024)(_.toByte))).toDS(),
-      frameBytes = 256, everyN = 2).collect()
-    assert(frames.map(_.frame_no).sorted.toSeq == Seq(0, 2))
+      new Multimodal.ChunkFrameDecoder(256), everyN = 2).collect()
+    assert(frames.forall(_.error == null) &&
+      frames.map(_.frame_no).sorted.toSeq == Seq(0, 2))
   }
 
   test("syntheticMp4 round-trips through decodeVideoMeta in both " +
@@ -2507,6 +2433,23 @@ class OperatorsSpec extends SparkTestBase {
       .select("id", "fp", "verdict").as[(Long, String, String)]
       .collect().toSet
     assert(incr == once)
+    // a chain across the cut: A~B and B~C share LSH buckets, A and C
+    // share no 3-token shingle. Every probed doc enters the index,
+    // dropped ones too, so C drops against B wherever the cut falls
+    val ws = (1 to 40).map(i => s"w$i")
+    val chain = Seq((1L, ws.slice(0, 20)), (2L, ws.slice(2, 38)),
+        (3L, ws.slice(18, 40)))
+      .map { case (id, w) => (id, w.mkString(" ")) }.toDF("doc_id", "text")
+    def keptIds(parts: Seq[org.apache.spark.sql.DataFrame]): Seq[Long] = {
+      val dir = p68TmpDir()
+      parts.zipWithIndex.flatMap { case (p, i) =>
+        Dedup.dedupAgainstIndex(p, "doc_id", "text", dir, s"s$i")
+          .filter(col("verdict") === "keep").select("id").as[Long].collect()
+      }.sorted
+    }
+    assert(keptIds(Seq(chain)) == Seq(1L))
+    assert(keptIds(Seq(chain.filter(col("doc_id") < 3),
+      chain.filter(col("doc_id") === 3))) == Seq(1L))
   }
 
   test("dedupAgainstIndex: re-probing the same snapshot is idempotent " +

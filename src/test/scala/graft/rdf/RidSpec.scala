@@ -155,7 +155,7 @@ class RidSpec extends SparkTestBase {
       (Uri("urn:b"), Uri("urn:name"), Lit("Bob", lang = "en")),
       (BNode("n1"), Uri("urn:p"), Uri("urn:o"))))
     val dir = java.nio.file.Files.createTempDirectory("dump").toString
-    st.dumpNQuads(dir)
+    st.toNQuadLines.write.mode("overwrite").text(dir)
     val restored = QuadStore.fromNTriples(spark, dir)
     assert(restored.quads.count() == 4)
     // identical quad RID sets (term identity survives the round trip)
