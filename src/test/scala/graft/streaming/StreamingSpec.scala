@@ -168,6 +168,103 @@ class StreamingSpec extends SparkTestBase {
         "in this corpus of streaming documents")) == Seq(5L))
   }
 
+  /** Runs [[graft.operators.Dedup.dedupAgainstIndex]] on each
+    * micro-batch of a stream over `batches` (one micro-batch each), one
+    * zero-padded batch-id snapshot per batch, with its index, output
+    * and checkpoint under `dir`: the kept ids. */
+  private def nearDupStream(dir: java.nio.file.Path,
+                            batches: Seq[(Long, String)]*): Seq[Long] = {
+    implicit val sq = spark.sqlContext
+    val idx = dir.resolve("index").toString
+    val out = dir.resolve("out").toString
+    val mem = MemoryStream[(Long, String)]
+    mem.addData(batches.head: _*)
+    val q = mem.toDS().toDF("doc_id", "text").writeStream
+      .option("checkpointLocation", dir.resolve("ckpt").toString)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
+        val kept = graft.operators.Dedup.dedupAgainstIndex(batch,
+            "doc_id", "text", idx, f"batch$bid%010d")
+          .filter(col("verdict") === "keep").select(col("id").as("doc_id"))
+        batch.join(kept, Seq("doc_id"), "left_semi")
+          .write.mode("append").parquet(out)
+        ()
+      }
+      .start()
+    try {
+      q.processAllAvailable()
+      batches.tail.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+    } finally q.stop()
+    spark.read.parquet(out).select("doc_id").as[Long].collect().sorted.toSeq
+  }
+
+  test("minhash dedup stream: the batch cut does not change the kept " +
+      "set") {
+    // A~B and B~C share LSH buckets; A and C share no 3-token shingle.
+    // B drops against A, and C against B whether or not B was kept.
+    val ws = (1 to 40).map(i => s"w$i")
+    val a = (1L, ws.slice(0, 20).mkString(" "))
+    val b = (2L, ws.slice(2, 38).mkString(" "))
+    val c = (3L, ws.slice(18, 40).mkString(" "))
+    val whole = nearDupStream(
+      java.nio.file.Files.createTempDirectory("neardup_whole"), Seq(a, b, c))
+    val split = nearDupStream(
+      java.nio.file.Files.createTempDirectory("neardup_split"),
+      Seq(a, b), Seq(c))
+    assert(whole == Seq(1L), whole)
+    assert(split == whole, s"split $split vs one batch $whole")
+  }
+
+  test("LM score stream: per-micro-batch scoring against a saved " +
+      "model is bit-identical to the batch scorer") {
+    implicit val sq = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("lmstream")
+    val modelDir = dir.resolve("model").toString
+    val out = dir.resolve("out").toString
+    val train = Seq((1L, "a b c a b"), (2L, "a b c d e"),
+      (3L, "c d e a b")).toDF("doc_id", "text")
+    graft.operators.TextAnalysis.saveLmModel(train, "text", modelDir,
+      order = 3, minCount = 1)
+    val evalDocs = Seq((10L, "a b c"), (11L, "zz zz zz"),
+      (12L, "c d e a"))
+    val batchDf = graft.operators.TextAnalysis.ngramLmScoreWithModel(
+      modelDir, evalDocs.toDF("doc_id", "text"), "doc_id", "text")
+    val cols = batchDf.columns
+    val expect = batchDf.collect().map(r => r.getLong(0) -> r.toSeq).toMap
+
+    // the batch scorer on each micro-batch, scores partitioned by batch
+    // id (dynamic overwrite: a replayed batch replaces its partition)
+    val mem = MemoryStream[(Long, String)]
+    val q = mem.toDS().toDF("doc_id", "text").writeStream
+      .option("checkpointLocation", dir.resolve("ckpt").toString)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
+        graft.operators.TextAnalysis.ngramLmScoreWithModel(modelDir,
+            batch, "doc_id", "text")
+          .withColumn("batch", lit(f"batch$bid%010d"))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch")
+          .parquet(out)
+        ()
+      }
+      .start()
+    mem.addData((10L, "a b c"), (11L, "zz zz zz"))
+    q.processAllAvailable()
+    mem.addData((12L, "c d e a")) // second batch: no cross-batch state
+    q.processAllAvailable()
+    q.stop()
+
+    val got = spark.read.parquet(out)
+    assert(got.columns.toSet == cols.toSet + "batch")
+    val gotRows = got.select(cols.head, cols.tail: _*).collect()
+      .map(r => r.getLong(0) -> r.toSeq).toMap
+    assert(gotRows == expect, s"stream scores diverge:\n$gotRows\n$expect")
+    val bids = got.select("id", "batch").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(bids(10L) == "batch0000000000" &&
+      bids(11L) == "batch0000000000" &&
+      bids(12L) == "batch0000000001", bids)
+  }
+
   test("result sinks: TSV lines, SPARQL JSON and XML") {
     val df = Seq(("<urn:a>", "\"Alice\"@en"), ("_:b1", "\"5\"^^<urn:int>"))
       .toDF("s", "o")
