@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Generate src/main/resources/graft/psl_snapshot.dat — the Public
 Suffix List snapshot behind `registrable_host` (functions/UrlExprs.scala)
-and the p53/p55 DuckDB oracles (queries/PipelineQueries.scala reads the
+and the crawl DuckDB oracles (queries/CrawlGates.scala reads the
 SAME resource to inline the rule table, so cross-engine agreement is by
 construction).
 

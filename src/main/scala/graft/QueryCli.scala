@@ -143,9 +143,11 @@ object QueryCli {
           case "xml" =>
             emit(RefFormat.sparqlXml(Sparql.runTerms(store, spark, q),
               dtUris()))
-          case "json" => emit(Results.toJson(Sparql.run(store, spark, q)))
+          // NT-serialized terms, as the endpoint serves them: JSON types
+          // each cell (uri / bnode / literal), CSV reduces it to plain
+          case "json" => emit(Results.toJson(Sparql.runNt(store, spark, q)))
           case "csv" =>
-            Results.toCsvLines(Sparql.run(store, spark, q)).foreach(emit)
+            Results.toCsvLines(Sparql.runNt(store, spark, q)).foreach(emit)
           case _ => // ascii: the reference test harness format
             Sparql.run(store, spark, q).collect().foreach(r =>
               emit((0 until r.length).map(i =>

@@ -5,9 +5,10 @@ import graft.queries._
 
 /** Driver contract — see SURVEY.md §7 + TESTDATA.md.
   *
-  * `queries` maps one entry per implemented operator (SURVEY.md §2) to a
-  * DataFrame program over the driver's parquet tables; `oracleSql` holds the
-  * value-identical DuckDB SQL for each (omitted => rows-only check).
+  * `registry` holds one [[Gate]] per implemented operator (SURVEY.md §2):
+  * a DataFrame program over the driver's parquet tables and the
+  * value-identical DuckDB SQL for it. `queries` and `oracleSql` are the
+  * two views of it the driver reads.
   */
 object SparkEntry {
 
@@ -15,11 +16,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q03_join_customer_nation_region")(spark, "/root/testdata/sf0.001")
 
+  /** Every family's gates by name; a name declared twice throws. */
+  private lazy val registry: Map[String, Gate] = Gate.registry(
+    RelationalQueries.gates ++ SparqlQueries.gates ++ PipelineQueries.gates)
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.queries ++ SparqlQueries.queries ++
-      PipelineQueries.queries
+    registry.map { case (n, g) => n -> g.run }
 
   def oracleSql: Map[String, String] =
-    RelationalQueries.oracles ++ SparqlQueries.oracles ++
-      PipelineQueries.oracles
+    registry.map { case (n, g) => n -> g.oracle }
 }

@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.SparkSession
 import graft.rdf.QuadStore
-import graft.sinks.Results
+import graft.sinks.{RefFormat, Results}
 import graft.sparql.{PlanCache, Sparql, Update}
 import graft.streaming.StreamIngest
 
@@ -527,7 +527,15 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
             else if (accept.contains("text/plain")) "tsv"
             else "json"
           }
+          // ASK answers json/xml in the SPARQL 1.1 boolean form; the
+          // boolean is read (to the end) through PlanCache.rows, so a
+          // repeat is served from the kept answer
+          def askResult: Boolean =
+            PlanCache.rows(df).toList.exists(_.getBoolean(0))
           fmt match {
+            case "xml" if prepared.ask => respondStream(ex,
+              "application/sparql-results+xml")(
+              _.write(RefFormat.askXml(askResult)))
             case "xml" => respondStream(ex,
               "application/sparql-results+xml")(
               Results.writeXml(df, _, warnings))
@@ -542,6 +550,10 @@ final class Endpoint(spark: SparkSession, initial: QuadStore, port: Int = 0,
             case "ntriples" =>
               respondStream(ex, "application/n-triples")(
                 Results.writeNt(df, _))
+            case _ if prepared.ask =>
+              respondStream(ex, "application/sparql-results+json")(
+                _.write(Results.toAskJson(askResult,
+                  p.getOrElse("callback", ""))))
             case _ => respondStream(ex, "application/sparql-results+json")(
               Results.writeJson(df, _, p.getOrElse("callback", "")))
           }

@@ -1,4051 +1,26 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
-import graft.operators.{Bpe, Chunking, Curation, Dedup, Multimodal,
-  Ranking, Similarity, TextAnalysis, UrlOps}
 
 /** Training-data pipeline operators over the documents/embeddings/events
-  * tables: dedup family, similarity search, text analysis, sessionization.
-  * SQL-expressible ops carry DuckDB oracles; LSH variants (engine-specific
-  * hash seeds) are rows-only checked here and semantics-tested in
-  * OperatorsSpec with planted near-duplicates.
+  * tables, one file per family: [[DedupGates]], [[GraphGates]],
+  * [[LmGates]], [[RetrievalGates]], [[CrawlGates]], [[CurationGates]] and
+  * [[MultimodalGates]]. Every gate carries a DuckDB oracle; operators
+  * whose engine-specific parts (LSH seeds, float scores) cannot hash
+  * expose a portable variant or integer statistics to the gate, and their
+  * semantics are tested in OperatorsSpec with planted near-duplicates.
   */
 object PipelineQueries {
 
-  private def t(s: SparkSession, d: String, n: String) = Tables.t(s, d, n)
+  val gates: Seq[Gate] = DedupGates.gates ++ GraphGates.gates ++
+    LmGates.gates ++ RetrievalGates.gates ++ CrawlGates.gates ++
+    CurationGates.gates ++ MultimodalGates.gates
 
-  /** Adversarial crawl-URL template derived deterministically from
-    * doc_id — shared by the p53 gate, the p55 composition, and (CASE
-    * for CASE) their DuckDB oracles: uppercase schemes/hosts, default
-    * and non-default ports, duplicate slashes, ./ and ../ segments,
-    * tracking params, fragments, multi-part ccTLDs (co.uk, com.au,
-    * com.br), a PRIVATE-section suffix (github.io), mixed-case
-    * userinfo (must survive verbatim), an IPv4 literal, and a
-    * non-URL. */
-  private def crawlUrl: org.apache.spark.sql.Column = {
-    val m5 = (col("doc_id") % 5).cast("string")
-    val ids = col("doc_id").cast("string")
-    val t10 = col("doc_id") % 10
-    when(t10 === 0, concat(lit("HTTP://WWW.Example"), m5,
-        lit(".COM:80/a/b/../c/./d.html?utm_source=feed&id="), ids,
-        lit("#frag")))
-      .when(t10 === 1, concat(lit("https://Sub.Host"), m5,
-        lit(".co.uk:443/path//to/../x/?fbclid=abc"), ids))
-      .when(t10 === 2, concat(lit("http://example"), m5, lit(".org")))
-      .when(t10 === 3, concat(lit("https://www.site"), m5,
-        lit(".com.au/deep/./../a/b/c?id="), ids,
-        lit("&utm_campaign=x&gclid=g")))
-      .when(t10 === 4, concat(lit("http://192.168.1."), m5,
-        lit(":8080/a/../b#x")))
-      .when(t10 === 5, concat(lit("https://blog.example"), m5,
-        lit(".net/a/b/c/")))
-      .when(t10 === 6, concat(lit("HTTPS://X"), m5,
-        lit(".IO:443/~user/../home?x=1&y=2")))
-      .when(t10 === 7, concat(lit("HTTPS://Leitor:PW"), m5,
-        lit("@News.Portal"), m5, lit(".COM.BR:443/artigo//"), ids,
-        lit("?gclid=x")))
-      .when(t10 === 8, concat(lit("http://Pages.Fan"), m5,
-        lit(".GitHub.IO/p/"), ids, lit("?utm_medium=x")))
-      .otherwise(concat(lit("not a url at all "), ids))
-  }
+  private val registry = Gate.registry(gates)
 
-  /** Per-JVM cache of the shared near-dup pair graph (k=3, 0.5): four
-    * gates (p02 pairs, p15 components, p18 triangles, p40 pagerank)
-    * consume the SAME similarity join; like SparqlQueries' store cache,
-    * the bench should time each operator, not four rebuilds of their
-    * common input. */
-  private val pairCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private def jaccardPairs(s: SparkSession, d: String): DataFrame = {
-    // keyed by (session, path): a cached DataFrame is bound to the
-    // session that built it — after a restart in the same JVM a
-    // path-only key would hand back a plan referencing a STOPPED
-    // session. Entries of dead sessions are dropped on sight.
-    pairCache.filterInPlace { case ((sess, _), _) =>
-      !sess.sparkContext.isStopped }
-    pairCache.getOrElseUpdate((s, d),
-      Dedup.ngramJaccardPairs(t(s, d, "documents"), "doc_id", "text",
-        k = 3, threshold = 0.5).cache())
-  }
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, g) => n -> g.run }
 
-  /** Per-JVM cache of the p32 bigram-LM scoring (train = %10!=0,
-    * score = %10==0, addK 0.1, portable hash): p32 gates the integer
-    * statistics and p62 ranks on a surrogate derived from the SAME
-    * scored table — the bench should time the bucketing operator, not
-    * a second LM count over the train corpus. Session-keyed like
-    * [[pairCache]] (the r12 restarted-session lesson). */
-  private val lmCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private def lmScored(s: SparkSession, d: String): DataFrame = {
-    lmCache.filterInPlace { case ((sess, _), _) =>
-      !sess.sparkContext.isStopped }
-    lmCache.getOrElseUpdate((s, d), {
-      val docs = t(s, d, "documents")
-      TextAnalysis.ngramLmScore(docs.filter(col("doc_id") % 10 =!= 0),
-        docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-        addK = 0.1, portableHash = true).cache()
-    })
-  }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // exact dedup: one representative per identical text
-    "p01_dedup_exact" -> ((s, d) =>
-      Dedup.exact(t(s, d, "documents"), col("text"), col("doc_id"))
-        .select("doc_id", "n_chars")
-        .orderBy("doc_id")),
-
-    // n-gram Jaccard similarity join (inverted index, exact)
-    "p02_ngram_jaccard" -> ((s, d) =>
-      jaccardPairs(s, d).orderBy("id1", "id2")),
-
-    // MinHash-LSH near-dup candidates. portableHash (MD5-derived) lets a
-    // generated DuckDB oracle replicate the exact permutations + banding.
-    "p03_minhash_pairs" -> ((s, d) =>
-      Dedup.minhashPairs(t(s, d, "documents"), "doc_id", "text",
-          k = 3, h = 32, bands = 16, threshold = 0.35, minBands = 2,
-          portableHash = true)
-        .select("id1", "id2")
-        .orderBy("id1", "id2")),
-
-    // SimHash near-dup candidates (portable hash -> oracle-checked)
-    "p04_simhash_pairs" -> ((s, d) =>
-      Dedup.simhashPairs(t(s, d, "documents"), "doc_id", "text",
-          maxHamming = 8, portableHash = true)
-        .orderBy("id1", "id2")),
-
-    // document fingerprint + token counts
-    "p05_fingerprint_tokens" -> ((s, d) =>
-      t(s, d, "documents").select(
-        col("doc_id"),
-        TextAnalysis.fingerprintMd5(col("text")).as("fp"),
-        TextAnalysis.tokenCount(col("text")).as("n_tokens"))
-        .orderBy("doc_id")),
-
-    // quality signals (map-only scoring pass)
-    "p06_quality" -> ((s, d) =>
-      TextAnalysis.qualitySignals(t(s, d, "documents"), "text")
-        .select("doc_id", "n_tokens", "punct_ratio", "digit_ratio",
-          "quality_score")
-        .orderBy("doc_id")),
-
-    // language ID heuristic (stopword-ratio fold + CJK share; the DuckDB
-    // oracle replicates the fold in sorted-language order)
-    "p07_langid" -> ((s, d) =>
-      t(s, d, "documents").select(col("doc_id"),
-        TextAnalysis.langId(col("text")).as("lang_pred"))
-        .orderBy("doc_id")),
-
-    // BPE-ish subword count estimate
-    "p08_subword_count" -> ((s, d) =>
-      t(s, d, "documents").select(col("doc_id"),
-        TextAnalysis.subwordCountEstimate(col("text")).as("n_subwords"))
-        .orderBy("doc_id")),
-
-    // brute-force cosine top-k (rank compare; scores are FP-sensitive)
-    "p09_embed_topk" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-      Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 5)
-        .select("query_id", "rank", "item_id")
-        .orderBy("query_id", "rank")
-    }),
-
-    // LSH ANN variant (rows-only; recall asserted in spec)
-    "p10_embed_lsh" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-      Similarity.lshTopK(emb, queries, "vec_id", "embedding",
-          k = 5, dim = 64, nPlanes = 16, bands = 8)
-        .select("query_id", "rank", "item_id")
-        .orderBy("query_id", "rank")
-    }),
-
-    // multimodal plumbing: opaque binary media column -> typed metadata
-    // via batched per-partition decode (STUB codec, real Spark shape)
-    "p12_multimodal_meta" -> ((s, d) => {
-      val media = Multimodal.asMedia(t(s, d, "documents"),
-        "doc_id", "text", "image/fake")
-      Multimodal.imageMeta(media).toDF()
-        .select("media_id", "width", "height", "channels", "n_bytes",
-          "fp_prefix")
-        .orderBy("media_id")
-    }),
-
-    // embedding-cosine near-dup pairs (exact verification path)
-    "p13_embed_neardup" -> ((s, d) =>
-      Dedup.embedNearDupPairs(t(s, d, "embeddings"), "vec_id", "embedding",
-          threshold = 0.4)
-        .select(col("id1"), col("id2"), round(col("cosine"), 6).as("cos6"))
-        .orderBy("id1", "id2")),
-
-    // IVF ANN: coarse-quantizer cells + nProbe probing (the second scale
-    // path beside LSH; deterministic quantizer -> oracle-checkable)
-    "p14_embed_ivf" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-      Similarity.ivfTopK(emb, queries, "vec_id", "embedding",
-          k = 5, nCells = 16, nProbe = 4)
-        .select("query_id", "rank", "item_id")
-        .orderBy("query_id", "rank")
-    }),
-
-    // sessionization: 30-min-gap sessions per user over the event stream
-    "p11_events_sessionize" -> ((s, d) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val gapped = t(s, d, "events")
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-        .withColumn("new_sess",
-          when(col("prev_ts").isNull ||
-            unix_micros(col("ts")) - unix_micros(col("prev_ts")) >
-              1800L * 1000000L, 1)
-            .otherwise(0))
-        .withColumn("sess_id", sum(col("new_sess")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      gapped.groupBy("user_id", "sess_id")
-        .agg(count(lit(1)).as("n_events"),
-          min(col("ts")).as("sess_start"))
-        .orderBy("user_id", "sess_id")
-    }),
-
-    // near-dup CLUSTERING: connected components over the exact n-gram
-    // Jaccard pair graph — every doc labeled with its component's min id
-    "p15_neardup_components" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val pairs = jaccardPairs(s, d)
-      Dedup.connectedComponents(
-          docs.select(col("doc_id").as("id")),
-          pairs.select("id1", "id2"))
-        .select(col("id").as("doc_id"), col("comp").as("component"))
-        .orderBy("doc_id")
-    }),
-
-    // duplicate-bigram fraction (Gopher repetition rule): map-only pass
-    // through the native tokenCount + ShingleHashes kernels
-    "p17_ngram_repetition" -> ((s, d) =>
-      TextAnalysis.ngramRepetition(t(s, d, "documents"), "doc_id", "text",
-          n = 2)
-        .orderBy("doc_id")),
-
-    // graph analytics on the near-dup pair graph: GraphX triangle counts
-    // (a true variant-clique has triangles; a hub false-positive doesn't)
-    "p18_graph_triangles" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val pairs = jaccardPairs(s, d)
-      graft.operators.GraphAnalytics.triangleCounts(
-          docs.select(col("doc_id").as("id")), pairs.select("id1", "id2"))
-        .select(col("id").as("doc_id"), col("triangles"))
-        .orderBy("doc_id")
-    }),
-
-    // benchmark decontamination: training docs sharing any 5-gram with
-    // the held-out eval slice (doc_id % 10 == 0); eval grams broadcast
-    "p19_decontaminate" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      graft.operators.Decontaminate.flag(
-          docs.filter(col("doc_id") % 10 =!= 0),
-          docs.filter(col("doc_id") % 10 === 0),
-          "doc_id", "text", k = 5, portableHash = true)
-        .select(col("id").as("doc_id"), col("n_hits"), col("contaminated"))
-        .orderBy("doc_id")
-    }),
-
-    // as-of join: each purchase event picks up the latest view event at
-    // or before it for the same user (union+window, no range join)
-    "p16_events_asof" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("user_id", "event_id", "ts")
-      val views = ev.filter(col("event_type") === "view")
-      graft.operators.AsOf.backward(purchases, views,
-          keyCol = "user_id", tsCol = "ts",
-          payload = col("event_id"), asofCol = "view_id",
-          tiebreak = col("event_id"))
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("view_id"))
-        .orderBy("purchase_id")
-    }),
-
-    // concat-and-chunk sequence packing into 2048-token context bins
-    "p20_pack_sequences" -> ((s, d) => {
-      val toks = t(s, d, "documents").select(col("doc_id"),
-        TextAnalysis.subwordCountEstimate(col("text")).as("n_tok"))
-      Curation.packSequences(toks, "doc_id", "n_tok", capacity = 2048)
-        .select("doc_id", "n_tok", "bin_id", "bin_offset")
-        .orderBy("doc_id")
-    }),
-
-    // per-language token-budget mixture draw (seeded order, whole docs)
-    "p21_mix_budget" -> ((s, d) => {
-      val toks = t(s, d, "documents").select(col("doc_id"), col("lang"),
-        TextAnalysis.subwordCountEstimate(col("text")).as("n_tok"))
-      Curation.budgetSample(toks, "lang", "doc_id", "n_tok",
-          budget = 3000, seed = 42)
-        .orderBy("doc_id")
-    }),
-
-    // PII redaction. The driver corpus carries no PII, so deterministic
-    // synthetic contact lines derived from doc_id are appended — by this
-    // query and the oracle identically — before masking; planted-string
-    // semantics are tested in OperatorsSpec.
-    "p22_pii_redact" -> ((s, d) =>
-      t(s, d, "documents").select(col("doc_id"),
-        concat(col("text"), lit(" contact user"), col("doc_id"),
-          lit("@example.com or call "),
-          (col("doc_id") * 7919 + 10000000L).cast("long")).as("text"))
-        .select(col("doc_id"),
-          Curation.piiCount(col("text")).as("n_pii"),
-          Curation.redactPii(col("text")).as("redacted"))
-        .orderBy("doc_id")),
-
-    // deterministic seeded shuffle into 32 shards with stable positions
-    "p23_seeded_shuffle" -> ((s, d) =>
-      Curation.seededShuffle(t(s, d, "documents").select("doc_id"),
-          "doc_id", shards = 32, seed = 42)
-        .select("doc_id", "shard", "pos")
-        .orderBy("doc_id")),
-
-    // leakage-safe split: whole source domains assigned to one split
-    "p24_leakage_split" -> ((s, d) =>
-      Curation.leakageSafeSplit(
-          t(s, d, "documents").select("doc_id", "source"), "source",
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), seed = 42)
-        .select("doc_id", "source", "split")
-        .orderBy("doc_id")),
-
-    // context-window chunking: 64-token tiles, map-only
-    "p25_chunk_documents" -> ((s, d) =>
-      Chunking.chunk(t(s, d, "documents").select("doc_id", "text"),
-          "doc_id", "text", window = 64, stride = 64)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id", "chunk_id")),
-
-    // verbatim duplicated 14-token spans between documents
-    "p26_duplicated_spans" -> ((s, d) =>
-      Chunking.duplicatedSpans(t(s, d, "documents"), "doc_id", "text",
-          k = 14, maxDocs = 50, portableHash = true)
-        .orderBy("id1", "id2")),
-
-    // BPE encode against the FROZEN canonical merge table (trained once
-    // from this corpus by graft.BpeFreeze, deterministic): map-only
-    // encode, fully oracle-gated — the DuckDB oracle replays the same
-    // merges as a literal relation (sequential-by-rank exhaustive
-    // replacement, equivalent to lowest-rank-first because a merge's
-    // product can only appear in LATER-trained pairs). Corpus-driven
-    // TRAINING stays spec-gated in BpeSpec (iterative argmax is not
-    // expressible as a static oracle string).
-    "p27_bpe_tokens" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Bpe.encode(docs, "doc_id", "text", Bpe.canonicalMerges)
-        .select(col("id").as("doc_id"), col("n_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // bloom-filter decontamination, two-phase EXACT (constant executor
-    // memory: bloom scan prunes the gram stream, a semi-join against
-    // the true gram set removes the bloom's false positives) — the
-    // result equals p19's exact op, so it carries the same SQL oracle
-    "p28_decontaminate_bloom" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val eval = docs.filter(col("doc_id") % 10 === 0)
-      val train = docs.filter(col("doc_id") % 10 =!= 0)
-      graft.operators.Decontaminate.flagBloom(train, eval, "doc_id",
-          "text", k = 5, fpp = 0.001, portableHash = true)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // temperature-based mixture resampling: domain d contributes
-    // ∝ count_d^0.5 of the 600-row target — rare languages replicated
-    // up, the dominant one sampled down (seeded md5, engine-portable)
-    "p29_temperature_mix" -> ((s, d) =>
-      Curation.temperatureMix(
-          t(s, d, "documents").select("doc_id", "lang"), "lang", "doc_id",
-          temperature = 0.5, targetRows = 600, seed = 42)
-        .select("doc_id", "lang", "copy")
-        .orderBy("doc_id", "copy")),
-
-    // boilerplate span scrub: delete tokens covered by any verbatim
-    // 13-gram occurring in >= 2 distinct docs (C4 repeated-line rule /
-    // RefinedWeb line dedup, quantized to token grams)
-    "p31_scrub_spans" -> ((s, d) =>
-      Chunking.scrubDuplicatedSpans(t(s, d, "documents"), "doc_id",
-          "text", k = 13, minDocs = 2, portableHash = true)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")),
-
-    // stratified sample: exactly 10 docs per language in seeded order
-    "p33_stratified_sample" -> ((s, d) =>
-      Curation.stratifiedSample(
-          t(s, d, "documents").select("doc_id", "lang"), "lang", "doc_id",
-          k = 10, seed = 42)
-        .select("doc_id", "lang", "rank")
-        .orderBy("doc_id")),
-
-    // bigram LM scoring (CCNet/KenLM-style quality filter): eval slice
-    // scored against a model counted on the train slice; the gate pins
-    // the engine-exact integer stats, the log-space score is spec-tested
-    "p32_ngram_lm" -> ((s, d) =>
-      lmScored(s, d)
-        .select(col("id").as("doc_id"), col("n_bigrams"), col("n_oov"),
-          col("sum_c12"), col("sum_c1"))
-        .orderBy("doc_id")),
-
-    // END-TO-END curation: exact dedup -> quality filter -> benchmark
-    // decontamination, composed as ONE lazy DAG (each stage is the same
-    // operator its standalone gate checks; Catalyst fuses the pipeline).
-    // With an embedding column available, the semantic stage slots in
-    // between dedup and quality via Dedup.semanticDedupGated — the
-    // variant that ABORTS when the cell-cap exposure metric
-    // (semanticDedupStats.capped_fraction) exceeds tolerance, so an
-    // under-quantized pass can't silently ship an unexamined corpus.
-    // (Not in this oracle-gated query: FP cosines aren't DuckDB-
-    // replicable; the composed path is spec-gated in OperatorsSpec.)
-    "p30_curate_corpus" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val deduped = Dedup.exact(docs, col("text"), col("doc_id"))
-      val kept = TextAnalysis.qualitySignals(deduped, "text")
-        .filter(col("quality_score") >= 0.5)
-      val train = kept.filter(col("doc_id") % 10 =!= 0)
-      val eval = docs.filter(col("doc_id") % 10 === 0)
-      graft.operators.Decontaminate.flag(train, eval, "doc_id", "text",
-          k = 5, portableHash = true)
-        .filter(!col("contaminated"))
-        .join(train.select(col("doc_id"), col("n_tokens")),
-          col("id") === col("doc_id"))
-        .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // BM25 ranked retrieval over the corpus (query-time counterpart of
-    // the import-time token index): mixed-idf query, global top-20.
-    // Integer columns oracle-checked; the FP score drives ranking only.
-    "p34_bm25_topk" -> ((s, d) =>
-      Ranking.bm25TopK(t(s, d, "documents"), "doc_id", "text",
-          Seq("dup", "join", "spark"), k = 20)
-        .select(col("rank"), col("doc_id"), col("dl"), col("tf_total"))
-        .orderBy("rank")),
-
-    // fastText-style linear quality classifier: binary-fraction weights
-    // make the score exact in double, so the oracle hash-matches the
-    // score itself, not just the integer features
-    "p35_linear_classifier" -> ((s, d) =>
-      TextAnalysis.linearScore(t(s, d, "documents"), "doc_id", "text",
-          Seq("spark" -> 0.5, "data" -> 0.25, "join" -> 0.25,
-            "slow" -> -0.5, "dup" -> -1.5), bias = -0.5)
-        .orderBy("doc_id")),
-
-    // SemDeDup semantic dedup: coarse-quantizer cells, within-cell
-    // cosine >= threshold drops all but the lowest-id representative
-    // (deterministic quantizer -> oracle-checkable end to end)
-    "p36_semantic_dedup" -> ((s, d) =>
-      Dedup.semanticDedup(t(s, d, "embeddings"), "vec_id", "embedding",
-          threshold = 0.4, nCells = 16)
-        .select(col("id").as("vec_id"), col("cell_id").cast("long")
-          .as("cell_id"), col("kept"))
-        .orderBy("vec_id")),
-
-    // contamination overlap fraction: per-doc share of 5-grams present
-    // in the held-out eval slice (reporting companion to p19's flag)
-    "p37_overlap_fraction" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      graft.operators.Decontaminate.overlapFraction(
-          docs.filter(col("doc_id") % 10 =!= 0),
-          docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-          k = 5, portableHash = true)
-        .select(col("id").as("doc_id"), col("n_grams"), col("n_hits"),
-          col("overlap_frac"))
-        .orderBy("doc_id")
-    }),
-
-    // canonical text normalization (NFC + control strip + whitespace
-    // collapse). The corpus is clean ASCII, so a planted dirty suffix
-    // (decomposed e+◌́, a BEL control, ragged whitespace) makes the gate
-    // exercise every normalization step; results are fingerprinted so
-    // the oracle checks the normalized bytes without hauling full texts
-    // through the compare
-    "p38_normalize_text" -> ((s, d) => {
-      val dirty = concat(col("text"),
-        lit("  cafe\u0301\u0007 \u00e9tude\t"))
-      t(s, d, "documents").select(col("doc_id"),
-        md5(TextAnalysis.normalizeText(dirty)).as("norm_md5"),
-        length(TextAnalysis.normalizeText(dirty))
-          .cast("long").as("norm_len"))
-        .orderBy("doc_id")
-    }),
-
-    // corpus profile per language: counts, token totals, exact token
-    // percentiles — the curation audit table
-    "p39_corpus_stats" -> ((s, d) =>
-      TextAnalysis.corpusStats(t(s, d, "documents"), "lang", "text")
-        .withColumnRenamed("grp", "lang")
-        .orderBy("lang")),
-
-    // PageRank centrality over the near-dup pair graph (5 fixed power
-    // iterations; DataFrame-native, no GraphX hop)
-    "p40_pagerank" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val pairs = jaccardPairs(s, d)
-      graft.operators.GraphAnalytics.pageRank(
-          docs.select(col("doc_id").as("id")),
-          pairs.select("id1", "id2"), iterations = 5)
-        .select(col("id").as("doc_id"), round(col("rank"), 6).as("rank6"))
-        .orderBy("doc_id")
-    }),
-
-    // random-projection dimensionality reduction: 64 -> 4 dims through
-    // the deterministic exact-binary-fraction hyperplanes
-    "p41_random_project" -> ((s, d) =>
-      Similarity.randomProject(t(s, d, "embeddings"), "vec_id",
-          "embedding", dim = 64, outDim = 4)
-        .select(col("id").as("vec_id"),
-          round(element_at(col("proj"), 1), 6).as("d0"),
-          round(element_at(col("proj"), 2), 6).as("d1"),
-          round(element_at(col("proj"), 3), 6).as("d2"),
-          round(element_at(col("proj"), 4), 6).as("d3"))
-        .orderBy("vec_id")),
-
-    // sketch-based corpus overlap: MinHash signature compare between the
-    // even- and odd-id halves of the corpus (no cross-corpus join)
-    "p42_corpus_overlap" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Dedup.corpusOverlapEstimate(
-        docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1),
-        "doc_id", "text", k = 3, h = 32, portableHash = true)
-    }),
-
-    // deterministic domain interleaving: global training order that
-    // cycles languages so no sequential reader sees a one-domain run
-    "p44_interleave" -> ((s, d) =>
-      Curation.interleave(
-          t(s, d, "documents").select("doc_id", "lang"), "lang", "doc_id",
-          seed = 42)
-        .select(col("doc_id"), col("lang"), col("grp_rank"),
-          col("ord_in_rank"))
-        .orderBy("grp_rank", "ord_in_rank")),
-
-    // quality-aware near-dup representative selection: for each
-    // connected near-duplicate cluster, keep the HIGHEST-QUALITY member
-    // (tie -> lowest doc_id) instead of the lowest-id default — the
-    // curation rule real pipelines want (drop the OCR-mangled copy,
-    // keep the clean one). Composition of p15's components with p06's
-    // quality signals; map-side max_by on an ordered struct, one
-    // aggregate over the component id.
-    "p46_cluster_best" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val comp = Dedup.connectedComponents(
-        docs.select(col("doc_id").as("id")),
-        jaccardPairs(s, d).select("id1", "id2"))
-      val q = TextAnalysis.qualitySignals(docs, "text")
-        .select(col("doc_id").as("id"), col("quality_score"))
-      comp.join(q, Seq("id"))
-        .groupBy(col("comp").as("component"))
-        .agg(
-          max_by(col("id"),
-            struct(col("quality_score"), (-col("id")).as("negid")))
-            .as("rep_doc_id"),
-          count(lit(1)).as("n_members"),
-          round(max(col("quality_score")), 6).as("best_q6"))
-        .orderBy("component")
-    }),
-
-    // REAL video container metadata, oracle-gated: each document row
-    // becomes a structurally valid ISO-BMFF blob whose header facts
-    // (brand, timescale, duration, track count, display dims) are pure
-    // functions of doc_id (Multimodal.syntheticMp4), so the DuckDB
-    // oracle predicts what the box walk MUST extract — the parser under
-    // test is the production decodeVideoMeta, not a fake codec. Every
-    // 97th row is a wrong-magic blob exercising the corrupt-crawl-blob
-    // error path (error row, not job failure). Odd rows take the
-    // 64-bit mvhd v1 layout + a second zero-dimension (audio) track.
-    "p47_video_meta" -> ((s, d) => {
-      import s.implicits._
-      val media = t(s, d, "documents").select("doc_id", "text")
-        .as[(Long, String)].map { case (id, text) =>
-          if (id % 97 == 0)
-            Multimodal.MediaRow(id, "video/mp4",
-              Array[Byte](0, 0, 0, 8, 'F', 'A', 'K', 'E') ++
-                text.getBytes("UTF-8"))
-          else
-            Multimodal.MediaRow(id, "video/mp4",
-              Multimodal.syntheticMp4(
-                durationS = 60 + id % 86400,
-                width = (320 + 16 * (id % 8)).toInt,
-                height = (180 + 9 * (id % 8)).toInt,
-                twoTracks = id % 2 == 1, v1 = id % 2 == 1))
-        }
-      Multimodal.decodeVideoMeta(media).toDF()
-        .select(col("media_id"),
-          coalesce(col("brand"), lit("")).as("brand"),
-          col("timescale"),
-          col("duration_sec").cast("long").as("duration_s"),
-          col("track_count"), col("width"), col("height"),
-          col("n_bytes"), col("error").isNotNull.as("is_err"))
-        .orderBy("media_id")
-    }),
-
-    // local-duplicate candidate pairs via shared winnowing fingerprints
-    // (cross-validates the planted near-dups p02/p03 find globally)
-    "p51_winnowing_pairs" -> ((s, d) =>
-      Dedup.winnowingPairs(t(s, d, "documents"), "doc_id", "text",
-          k = 5, w = 8, portableHash = true)
-        .select(col("id1"), col("id2"),
-          col("n_shared").cast("long").as("n_shared"))
-        .orderBy("id1", "id2")),
-
-    // winnowing candidates VERIFIED into exact spans: anchor at each
-    // shared fingerprint, extend over the positional gram hashes
-    // (native map-side kernel after the same fp join as p51), report
-    // the longest exact common substring per pair in tokens — the Lee
-    // et al. 2021 exact-substring fidelity without a suffix array
-    "p52_winnowing_spans" -> ((s, d) =>
-      Dedup.winnowingSpans(t(s, d, "documents"), "doc_id", "text",
-          k = 5, w = 8, portableHash = true)
-        .select(col("id1"), col("id2"),
-          col("n_shared").cast("long").as("n_shared"),
-          col("max_span_tokens"))
-        .orderBy("id1", "id2")),
-
-    // URL canonicalization + registrable-host keying over adversarial
-    // URLs derived deterministically from doc_id (uppercase scheme and
-    // host, default and non-default ports, duplicate slashes, ./ and
-    // ../ segments, tracking params, fragments, multi-part ccTLDs, an
-    // IPv4 literal, and a non-URL) — every rewrite mirrored verbatim
-    // in the DuckDB oracle, so cross-engine agreement is by
-    // construction (see functions.UrlKernel)
-    "p53_url_canonicalize" -> ((s, d) =>
-      t(s, d, "documents").select(col("doc_id"), crawlUrl.as("url"))
-        .select(col("doc_id"),
-          UrlOps.canonicalizeUrl(col("url")).as("url_canon"),
-          UrlOps.registrableHost(col("url")).as("reg_host"))
-        .orderBy("doc_id")),
-
-    // Gopher doc-quality rule battery (Rae et al. 2021 Table A1):
-    // exact integer sufficient statistics + an integer-only pass
-    // verdict. minStopwords = 1 AT THE GATE (like p55): this synthetic
-    // corpus carries only "the" from the required-stopword set, so the
-    // paper default of 2 would make gopher_pass constant-false and the
-    // oracle could never catch a broken verdict — at 1 the hashed
-    // output carries BOTH verdict values (word floor still rejects
-    // ~45%), so the gate bifurcates on its own corpus
-    "p54_gopher_quality" -> ((s, d) =>
-      TextAnalysis.gopherQuality(
-          t(s, d, "documents").select("doc_id", "text"), "text",
-          minStopwords = 1)
-        .select(col("doc_id"), col("n_words"),
-          col("sum_word_len"), col("n_alpha_words"), col("n_hash"),
-          col("n_ellipsis"), col("n_stopwords"), col("gopher_pass"))
-        .orderBy("doc_id")),
-
-    // the crawl-curation front door COMPOSED: doc_id-derived URLs ->
-    // registrable-host keying -> Gopher quality filter -> per-domain
-    // frequency cap (the p53 + p54 + p50 operators in one DAG).
-    // minStopwords = 1: the corpus carries only "the" from the
-    // required set, so the paper default of 2 would pass NOTHING —
-    // thresholds are corpus-tuned (as in the paper itself), and 1
-    // keeps every other rule binding (the word floor rejects ~45%,
-    // the host filter drops the non-URL template)
-    "p55_crawl_curate" -> ((s, d) => {
-      val keyed = t(s, d, "documents")
-        .select(col("doc_id"), col("text"), crawlUrl.as("url"))
-        .withColumn("reg_host", UrlOps.registrableHost(col("url")))
-      val good = TextAnalysis.gopherQuality(keyed, "text",
-          minStopwords = 1)
-        .filter(col("gopher_pass") && col("reg_host") =!= "")
-        .select("doc_id", "reg_host")
-      Curation.capPerGroup(good, "reg_host", "doc_id",
-          maxPerGroup = 5, seed = 7)
-        .orderBy("doc_id")
-    }),
-
-    // intra-document repeated-line scrub (C4/Gopher boilerplate
-    // cleanup): keep first occurrences in order, rejoin. The corpus is
-    // single-line, so the gate derives a word-per-line view
-    // (translate ' '->'\n') — repetition is natural ("batch batch
-    // batch"); integer line counts + md5 of the scrubbed text
-    "p56_scrub_repeated_lines" -> ((s, d) => {
-      val lined = t(s, d, "documents").select(col("doc_id"),
-        translate(col("text"), " ", "\n").as("text"))
-      TextAnalysis.scrubRepeatedLines(lined, "text")
-        .select(col("doc_id"),
-          size(split(col("text"), "\n")).cast("long").as("n_lines"),
-          size(array_distinct(split(col("text"), "\n"))).cast("long")
-            .as("n_distinct_lines"),
-          md5(col("scrubbed")).as("scrubbed_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // crawl domain blocklist: drop docs whose eTLD+1 is blocked —
-    // exercises registrable-host precision (a github.io TENANT is
-    // blocked without touching the platform; a com.au domain
-    // regardless of subdomain; an IPv4 literal). Each blocked host
-    // kills one whole corpus arm (~10%)
-    "p57_domain_blocklist" -> ((s, d) =>
-      UrlOps.dropBlockedHosts(
-          t(s, d, "documents").select(col("doc_id"), crawlUrl.as("url")),
-          "url", Seq("site3.com.au", "fan3.github.io", "192.168.1.4"))
-        .select(col("doc_id"),
-          UrlOps.registrableHost(col("url")).as("reg_host"))
-        .orderBy("doc_id")),
-
-    // CORPUS-GLOBAL line dedup (C4-style): all but the globally-first
-    // occurrence of each line dropped, docs reassembled in order.
-    // Word-per-line view like p56 — the corpus's heavy word repetition
-    // makes the election bind hard (late docs keep almost nothing)
-    "p58_global_line_dedup" -> ((s, d) => {
-      val lined = t(s, d, "documents").select(col("doc_id"),
-        translate(col("text"), " ", "\n").as("text"))
-      Dedup.dedupLinesGlobal(lined, "doc_id", "text")
-        .select(col("doc_id"), col("n_kept_lines"),
-          md5(col("deduped")).as("deduped_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // frame extraction through the pluggable MediaDecoder boundary:
-    // payload = the doc text's bytes (pure-ASCII corpus, so the
-    // oracle's char-based substr chunks are the same bytes), decoder =
-    // the shipping ChunkFrameDecoder(64), everyN=2; every doc_id%97==0
-    // gets an EMPTY payload so the error-row contract is oracle-hashed
-    // too (one classified error row, job never fails)
-    "p59_frame_extract" -> ((s, d) => {
-      import s.implicits._
-      val media = t(s, d, "documents")
-        .select(col("doc_id").as("media_id"),
-          lit("application/octet-stream").as("mime"),
-          when(col("doc_id") % 97 === 0,
-            lit(Array.emptyByteArray))
-            .otherwise(col("text").cast("binary")).as("content"))
-        .as[Multimodal.MediaRow]
-      Multimodal.decodeFramesWith(media,
-          new Multimodal.ChunkFrameDecoder(64), everyN = 2)
-        .toDF()
-        .select(col("media_id").as("doc_id"), col("frame_no"),
-          md5(col("frame")).as("frame_md5"),
-          coalesce(col("error"), lit("")).as("error"))
-        .orderBy("doc_id", "frame_no")
-    }),
-
-    // table/column profiling preflight: per-column null count, EXACT
-    // distinct count, min/max-as-string in ONE aggregation pass. Gate
-    // columns are the bigint/varchar ones (timestamp/double string
-    // RENDERING differs across engines — the operator profiles them
-    // too, but the hash gate pins the portably-rendered types)
-    "p61_table_profile" -> ((s, d) =>
-      graft.operators.Profiling.profile(t(s, d, "orders"),
-          Seq("o_orderkey", "o_custkey", "o_orderstatus",
-            "o_orderpriority"))
-        .orderBy("col_name")),
-
-    // per-DOMAIN boilerplate line scrub: each doc is wrapped with a
-    // site banner (same line for all ~50 docs of its registrable
-    // host -> scrubbed at minDocs=3), its own unique text (kept), and
-    // a "buddy" line shared by exactly 2 docs of the same domain
-    // (kept: 2 < 3 — the threshold boundary is exercised on BOTH
-    // sides; buddy keys repeat across domains, proving (domain, line)
-    // cell isolation)
-    "p63_boilerplate_lines" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .select(col("doc_id"), col("text"), crawlUrl.as("url"))
-        .withColumn("reg_host", UrlOps.registrableHost(col("url")))
-      val lined = docs.select(col("doc_id"), col("reg_host"),
-        concat(lit("welcome to "), col("reg_host"), lit("\n"),
-          col("text"), lit("\nbuddy "),
-          expr("doc_id DIV 20").cast("string")).as("text"))
-      Dedup.scrubBoilerplateLines(lined, "doc_id", "reg_host", "text",
-          minDocs = 3)
-        .select(col("doc_id"), col("reg_host"),
-          col("n_dropped_lines"), md5(col("cleaned")).as("cleaned_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // corpus curation report: per-source pass counts for BOTH rule
-    // batteries + exact volume/repetition mass counters, on the same
-    // wrapped corpus as p64 (so the repetition verdict bifurcates) at
-    // the same corpus-tuned thresholds as p54 (minStopwords = 1)
-    "p65_curation_report" -> ((s, d) => {
-      val wrapped = when(col("doc_id") % 3 === 0,
-        concat(col("text"), lit("\nrepeat me\nrepeat me\n\n"),
-          substring(col("text"), 1, 50), lit("\n\n"),
-          substring(col("text"), 1, 50)))
-        .otherwise(concat(col("text"), lit("\nuq"), col("doc_id"),
-          lit("\n\nuq2"), col("doc_id")))
-      TextAnalysis.curationReport(
-          t(s, d, "documents").select(col("doc_id"), col("source"),
-            wrapped.as("text")),
-          "source", "text", minStopwords = 1)
-        .orderBy("source")
-    }),
-
-    // Gopher Table A1 REPETITION battery: every doc is wrapped so the
-    // signals bind — doc_id%3==0 gets a repeated line ("repeat me"x2),
-    // a repeated paragraph (the doc's first 50 chars twice), and the
-    // blank-line dup the "\n\n" wrapping creates (verdict fails);
-    // other docs get unique tails (verdict passes unless natural word
-    // repetition trips the n-gram signals) — both verdicts in the hash
-    "p64_repetition_signals" -> ((s, d) => {
-      val wrapped = when(col("doc_id") % 3 === 0,
-        concat(col("text"), lit("\nrepeat me\nrepeat me\n\n"),
-          substring(col("text"), 1, 50), lit("\n\n"),
-          substring(col("text"), 1, 50)))
-        .otherwise(concat(col("text"), lit("\nuq"), col("doc_id"),
-          lit("\n\nuq2"), col("doc_id")))
-      TextAnalysis.repetitionSignals(
-          t(s, d, "documents").select(col("doc_id"),
-            wrapped.as("text")), "text")
-        .select(col("doc_id"), col("n_lines"), col("n_dup_lines"),
-          col("chars_dup_lines"), col("n_paras"), col("n_dup_paras"),
-          col("chars_dup_paras"), col("total_chars"),
-          col("top2_chars"), col("dup5_chars"), col("rep_pass"))
-        .orderBy("doc_id")
-    }),
-
-    // CCNet perplexity bucketing: per-LANGUAGE head/middle/tail rank
-    // buckets over LM-scored eval docs (p32's model), quota-sampled at
-    // 5 per bucket (binds only on the biggest language group, so both
-    // quota'd and complete groups are in the gate). The ranking key is
-    // the EXACT negated fluency ratio −(sum_c12·10⁶ div n_bigrams)
-    // from the LM's integer sufficient statistics — float ppl (a sum
-    // of transcendental logs) never hashes in a gate (p45 playbook);
-    // the gate exercises BOTH bucket boundaries in every group (group
-    // sizes 7..20 → bucket splits 3/2/2, 3/3/2, 7/7/6)
-    "p62_perplexity_buckets" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val scored = lmScored(s, d)
-        .join(docs.select(col("doc_id").as("id"), col("lang")), Seq("id"))
-        .withColumn("ppl_proxy",
-          expr("0L - ((sum_c12 * 1000000L) DIV greatest(n_bigrams, 1L))"))
-        .select("id", "lang", "n_bigrams", "sum_c12", "ppl_proxy")
-      TextAnalysis.perplexityBuckets(scored, "id", "ppl_proxy",
-          groupCols = Seq("lang"), k = 3, quota = Some(5L))
-        .select(col("id").as("doc_id"), col("lang"), col("ppl_proxy"),
-          col("rank_in_group"), col("n_in_group"), col("bucket"),
-          col("bucket_name"), col("bucket_rank"))
-        .orderBy("doc_id")
-    }),
-
-    // order-3 stupid-backoff LM scoring (the CCNet/KenLM order-n shape;
-    // p32 is the order-2 add-k variant): eval slice scored against
-    // per-order count tables from the train slice. The gate hashes the
-    // integer sufficient statistics — per-level hit counts, Σnum, Σden,
-    // Σ backoff steps — which pin tokenization, portable hashing, all
-    // three count tables, and the backoff cascade; both backoff levels
-    // and the OOV floor are exercised (eval trigram misses back off to
-    // bigram/unigram at gate scale). Float logscore never hashes.
-    "p66_lm_backoff" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      TextAnalysis.ngramLmScoreBackoff(
-          docs.filter(col("doc_id") % 10 =!= 0),
-          docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-          order = 3, portableHash = true)
-        .select(col("id").as("doc_id"), col("n_tokens"), col("n_hit3"),
-          col("n_hit2"), col("n_hit1"), col("n_oov"), col("sum_num"),
-          col("sum_den"), col("sum_steps"))
-        .orderBy("doc_id")
-    }),
-
-    // the PRUNED variant of p66 — KenLM-style singleton pruning
-    // (minCount=2 drops count-1 trigrams from the order-3 table; CCNet
-    // §3.3 ships pruned 5-gram models): eval trigrams whose train
-    // count was 1 now BACK OFF to the bigram level instead of hitting,
-    // so the hashed statistics differ from p66 wherever pruning bites
-    // (a no-op pruning implementation fails this gate against p66's
-    // own oracle with a HAVING clause). Orders 1–2 stay unpruned.
-    "p71_lm_backoff_pruned" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      TextAnalysis.ngramLmScoreBackoff(
-          docs.filter(col("doc_id") % 10 =!= 0),
-          docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-          order = 3, minCount = 2, portableHash = true)
-        .select(col("id").as("doc_id"), col("n_tokens"), col("n_hit3"),
-          col("n_hit2"), col("n_hit1"), col("n_oov"), col("sum_num"),
-          col("sum_den"), col("sum_steps"))
-        .orderBy("doc_id")
-    }),
-
-    // TRAIN-ONCE/SCORE-MANY round trip as a gate: the pruned model is
-    // SAVED to disk (partitioned count tables + the meta sidecar) and
-    // the eval slice scored through ngramLmScoreWithModel — hashed
-    // against the SAME oracle as p71, so green proves the disk round
-    // trip (fused counts → parquet → sidecar-pinned rescore) is
-    // bit-identical to the in-line path. This is CCNet's operating
-    // shape: one KenLM per language trained once, every crawl drop
-    // scored against it.
-    "p72_lm_saved_model" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-p72-").toString
-      TextAnalysis.saveLmModel(docs.filter(col("doc_id") % 10 =!= 0),
-        "text", dir, order = 3, minCount = 2, portableHash = true)
-      TextAnalysis.ngramLmScoreWithModel(dir,
-          docs.filter(col("doc_id") % 10 === 0), "doc_id", "text")
-        .select(col("id").as("doc_id"), col("n_tokens"), col("n_hit3"),
-          col("n_hit2"), col("n_hit1"), col("n_oov"), col("sum_num"),
-          col("sum_den"), col("sum_steps"))
-        .orderBy("doc_id")
-    }),
-
-    // PER-LANGUAGE LM (CCNet §3.3's actual operating shape: one KenLM
-    // per language, each doc scored against ITS OWN language's model)
-    // through the SAVED-model path: one-pass multilingual save
-    // (counts keyed (lang, k, h), partitioned (lang, k); per-lang
-    // (N, V) sidecar lines), then the eval slice scored THREE ways —
-    // under its own lang, pinned to 'en', and pinned to 'zz' (a
-    // language ABSENT from the saved model) — so the gate hashes the
-    // same text scoring DIFFERENTLY under two languages' models (a
-    // lang-blind implementation collapses the pairs and fails) AND
-    // the documented no-model degenerate path (every token OOV
-    // against an empty event space: num=den=0, steps = Σ(topk−1),
-    // row preserved) lands in the hashed output instead of resting
-    // on spec assertions alone. Hashed columns are the per-(doc,
-    // lang) integer sufficient statistics; float logscore never
-    // hashes.
-    "p73_lm_perlang" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-p73-").toString
-      TextAnalysis.saveLmModel(docs.filter(col("doc_id") % 10 =!= 0),
-        "text", dir, order = 3, minCount = 2, portableHash = true,
-        langCol = Some("lang"))
-      val ev = docs.filter(col("doc_id") % 10 === 0)
-      val tripled = ev.select((col("doc_id") * 3).as("sid"),
-          col("lang"), col("text"))
-        .unionAll(ev.select((col("doc_id") * 3 + 1).as("sid"),
-          lit("en").as("lang"), col("text")))
-        .unionAll(ev.select((col("doc_id") * 3 + 2).as("sid"),
-          lit("zz").as("lang"), col("text")))
-      TextAnalysis.ngramLmScoreWithModel(dir, tripled, "sid", "text",
-          langCol = Some("lang"))
-        .select(col("id").as("sid"), col("lang"), col("n_tokens"),
-          col("n_hit3"), col("n_hit2"), col("n_hit1"), col("n_oov"),
-          col("sum_num"), col("sum_den"), col("sum_steps"))
-        .orderBy("sid")
-    }),
-
-    // ...and the per-language CCNet chain COMPOSED: in-line per-lang
-    // pruned scoring -> integer ppl surrogate (backoff distance per
-    // token; the p62 playbook — floats never rank a gate) ->
-    // perplexityBuckets per language with a head/middle/tail quota.
-    // This is the monthly-drop selection motion end-to-end: each
-    // language ranks against its own model's scores only.
-    "p74_lm_perlang_buckets" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val scored = TextAnalysis.ngramLmScoreBackoff(
-          docs.filter(col("doc_id") % 10 =!= 0),
-          docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-          order = 3, minCount = 2, portableHash = true,
-          langCol = Some("lang"))
-        .withColumn("ppl_proxy", expr(
-          "(sum_steps * 1000000L) DIV greatest(n_tokens, 1L)"))
-        .select("id", "lang", "n_tokens", "sum_steps", "ppl_proxy")
-      TextAnalysis.perplexityBuckets(scored, "id", "ppl_proxy",
-          groupCols = Seq("lang"), k = 3, quota = Some(5L))
-        .select(col("id").as("doc_id"), col("lang"), col("ppl_proxy"),
-          col("rank_in_group"), col("n_in_group"), col("bucket"),
-          col("bucket_name"), col("bucket_rank"))
-        .orderBy("doc_id")
-    }),
-
-    // THE FULL CRAWL FRONT DOOR AS ONE DAG (r16 verdict task 1 — the
-    // C4 §2.1 + CCNet §3 order with the line-grain and URL stages
-    // that the doc-grain compositions p55/p30 omit): URL canonicalize
-    // + registrable-host keying + domain blocklist → per-domain
-    // boilerplate-line scrub → Gopher quality + repetition gates ON
-    // THE SCRUBBED TEXT → INCREMENTAL corpus-global line dedup across
-    // two snapshots (even ids = snapA seeds the index, odd ids =
-    // snapB probes it). The corpus is reshaped so EVERY stage binds
-    // (the r16 adjudication b22a9e7: single-line docs degenerate the
-    // line stages): each doc becomes a site banner line (~50 docs per
-    // domain share it → scrubbed at minDocs=3), its body line
-    // (doc-unique), an "xline" shared by exactly 2 CONSECUTIVE docs
-    // (different domains → survives the per-domain scrub; the even
-    // doc is snapA, the odd snapB → the line-dedup index binds
-    // CROSS-snapshot), a "buddy" line shared by 2 docs per domain
-    // (under the scrub threshold → kept; 20 docs corpus-wide → the
-    // global-first election binds hard), and — for doc_id%3==0 — the
-    // doc's own 50-char prefix three times (doc-unique lines, so the
-    // scrub keeps them, but the REPETITION battery fails the doc:
-    // both gate verdicts land in the hash). Output: every front-door
-    // survivor with its canonical URL, domain key, per-stage integer
-    // counters and verdicts, and — for gate passers — the line-dedup
-    // row (n_kept_lines = −1 / final_md5 = '' mark gate failures,
-    // distinct from a passer that lost every line). The DuckDB
-    // oracle composes the p53 URL CTEs + p63 election + p54 battery
-    // + p64 repetition chain + p70 (snap, id, pos) winner election —
-    // green means the PIPELINE the brief describes runs as one DAG,
-    // not just its stages in isolation.
-    "p75_crawl_pipeline" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val front = UrlOps.dropBlockedHosts(
-          docs.select(col("doc_id"), col("text"), crawlUrl.as("url")),
-          "url", Seq("site3.com.au", "fan3.github.io", "192.168.1.4"))
-        .withColumn("url_canon", UrlOps.canonicalizeUrl(col("url")))
-        .withColumn("reg_host", UrlOps.registrableHost(col("url")))
-        .filter(col("reg_host") =!= "")
-      val sub50 = substring(col("text"), 1, 50)
-      val lined = front.select(col("doc_id"), col("url_canon"),
-        col("reg_host"),
-        concat(
-          lit("welcome to "), col("reg_host"), lit("\n"),
-          col("text"), lit("\n"),
-          lit("xline "), expr("doc_id DIV 2").cast("string"),
-          lit("\n"),
-          lit("buddy "), expr("doc_id DIV 20").cast("string"),
-          when(col("doc_id") % 3 === 0,
-            concat(lit("\n"), sub50, lit("\n"), sub50, lit("\n"),
-              sub50)).otherwise(lit(""))).as("text"))
-      val scrubbed = Dedup.scrubBoilerplateLines(lined, "doc_id",
-        "reg_host", "text", minDocs = 3)
-      // pinned EAGER: the front-door + scrub + battery chain feeds BOTH
-      // snapshots' line-dedup probes AND the final verdict join —
-      // without the checkpoint the 3-shuffle scrub election replays
-      // three times (measured 5.5 s → pinned wins the recomputation).
-      // r18 adjudication: a LAZY pin (the §4 dedup-index pattern) was
-      // measured SLOWER here — isolated bench bracket lazy 3.07/3.72 →
-      // eager 2.31/2.49 → lazy 3.70/4.11 best/med — because gated
-      // feeds TWO subtrees of snapshot A's first job (the probe's
-      // lines explode AND electAndRebuild's doc join), whose
-      // concurrent stages duplicate the battery-kernel map work
-      // before the block cache fills; the eager pin runs it exactly
-      // once. Unlike §4's probe inputs, this pin guards EXPENSIVE
-      // map compute, not just job count.
-      val gated = TextAnalysis.repetitionSignals(
-        TextAnalysis.gopherQuality(scrubbed, "cleaned",
-          minStopwords = 1), "cleaned").localCheckpoint()
-      val surv = gated.filter(col("gopher_pass") && col("rep_pass"))
-        .select(col("doc_id"), col("cleaned"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-p75-").toString
-      val a = Dedup.dedupLinesAgainstIndex(
-        surv.filter(col("doc_id") % 2 === 0), "doc_id", "cleaned",
-        dir, "snapA")
-      val b = Dedup.dedupLinesAgainstIndex(
-        surv.filter(col("doc_id") % 2 === 1), "doc_id", "cleaned",
-        dir, "snapB")
-      val dd = a.unionByName(b).select(col("doc_id"),
-        col("n_kept_lines"), md5(col("deduped")).as("final_md5"))
-      gated.select(col("doc_id"), col("reg_host"), col("url_canon"),
-          col("n_dropped_lines"), col("n_words"), col("gopher_pass"),
-          col("n_lines"), col("rep_pass"))
-        .join(dd, Seq("doc_id"), "left")
-        .withColumn("n_kept_lines",
-          coalesce(col("n_kept_lines"), lit(-1L)))
-        .withColumn("final_md5", coalesce(col("final_md5"), lit("")))
-        .orderBy("doc_id")
-    }),
-
-    // the ADD-LANGUAGE model lifecycle as a gate (r17): the model is
-    // saved WITHOUT 'en', then 'en' is appended via
-    // addLmModelLanguages — and the eval slice scored under its own
-    // lang hashes against the SAME oracle a full retrain would (the
-    // oracle recomputes all languages' tables at once), so green IS
-    // the append == retrain-all equivalence through the driver's
-    // oracle, not just the spec's file-md5 argument. Languages
-    // trained under drifted params would shift the integer hit
-    // statistics and fail the hash.
-    "p76_lm_addlang" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val train = docs.filter(col("doc_id") % 10 =!= 0)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-p76-").toString
-      TextAnalysis.saveLmModel(train.filter(col("lang") =!= "en"),
-        "text", dir, order = 3, minCount = 2, portableHash = true,
-        langCol = Some("lang"))
-      TextAnalysis.addLmModelLanguages(
-        train.filter(col("lang") === "en"), "text", dir, "lang")
-      TextAnalysis.ngramLmScoreWithModel(dir,
-          docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-          langCol = Some("lang"))
-        .select(col("id").as("doc_id"), col("lang"), col("n_tokens"),
-          col("n_hit3"), col("n_hit2"), col("n_hit1"), col("n_oov"),
-          col("sum_num"), col("sum_den"), col("sum_steps"))
-        .orderBy("doc_id")
-    }),
-
-    // hybrid retrieval: the sparse BM25 list (p34's ranker at k=50)
-    // and the dense cosine list (p09's ranker, query = vec 0) fused by
-    // reciprocal rank — absent ranks surface as -1 so the nullable
-    // columns stay hash-stable
-    "p77_hybrid_rrf" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val emb = t(s, d, "embeddings")
-      val sparse = Ranking.bm25TopK(docs, "doc_id", "text",
-          Seq("dup", "join", "spark"), k = 50)
-        .select(col("doc_id"), col("rank"))
-      val dense = Similarity.bruteForceTopK(emb,
-          emb.filter(col("vec_id") === 0), "vec_id", "embedding", k = 50)
-        .select(col("item_id").as("doc_id"), col("rank"))
-      Ranking.rrfFuse(Seq(sparse, dense), "doc_id", "rank", k = 20)
-        .withColumn("rank_0", coalesce(col("rank_0"), lit(-1)))
-        .withColumn("rank_1", coalesce(col("rank_1"), lit(-1)))
-        .orderBy("rank")
-    }),
-
-    // product-quantization ENCODE: every vector -> m=4 subspace codes
-    // against the deterministic lowest-id codebook (integer output,
-    // engine-exact end to end)
-    "p78_embed_pq_codes" -> ((s, d) =>
-      Similarity.pqEncode(t(s, d, "embeddings"), "vec_id", "embedding",
-          dim = 64, m = 4, nCodes = 8)
-        .orderBy("item_id")),
-
-    // PQ asymmetric-distance top-k: the memory-bound ANN scale path —
-    // the corpus side of the scoring join is ONLY the p78 codes
-    "p79_embed_pq_topk" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      Similarity.pqTopK(emb, emb.filter(col("vec_id") < 5), "vec_id",
-          "embedding", k = 5, dim = 64, m = 4, nCodes = 8)
-        .orderBy("query_id", "rank")
-    }),
-
-    // corpus-level top-k n-grams (heavy hitters): the dataset-report
-    // table — most frequent trigrams with document reach
-    "p80_top_ngrams" -> ((s, d) =>
-      TextAnalysis.topNgrams(t(s, d, "documents"), "doc_id", "text",
-          n = 3, k = 20)
-        .orderBy("rank")),
-
-    // BM25 via a PERSISTED inverted index: build once (postings with
-    // denormalized dl, sidecar-last), query touching only the queried
-    // terms' posting lists — the oracle is the DIRECT path's SQL, so
-    // green IS the index == rescans equivalence (the p72 saved-model
-    // motion applied to retrieval)
-    "p81_bm25_index" -> ((s, d) => {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-p81-").toString
-      Ranking.buildTextIndex(t(s, d, "documents"), "doc_id", "text", dir)
-      Ranking.bm25TopKFromIndex(s, dir, Seq("dup", "join", "spark"),
-          k = 20)
-        .select(col("rank"), col("doc_id"), col("dl"), col("tf_total"))
-        .orderBy("rank")
-    }),
-
-    // index LIFECYCLE: build on the even half, APPEND the odd half
-    // (bulk files first, sidecar rename last), query the grown index —
-    // the oracle is still the direct path over the FULL corpus, so
-    // green == append is equivalent to a fresh build of everything
-    "p83_bm25_index_append" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-p83-").toString
-      Ranking.buildTextIndex(docs.filter(col("doc_id") % 2 === 0),
-        "doc_id", "text", dir)
-      Ranking.appendToTextIndex(docs.filter(col("doc_id") % 2 === 1),
-        "doc_id", "text", dir, "drop1")
-      Ranking.bm25TopKFromIndex(s, dir, Seq("dup", "join", "spark"),
-          k = 20)
-        .select(col("rank"), col("doc_id"), col("dl"), col("tf_total"))
-        .orderBy("rank")
-    }),
-
-    // stochastic quality filter: keep with probability = clamped
-    // linear score; the uniform draw is a portable md5 residue so
-    // every compared quantity is an exact integer in both engines
-    "p82_soft_filter" -> ((s, d) =>
-      TextAnalysis.softQualityFilter(t(s, d, "documents"), "doc_id",
-          "text", Seq("spark" -> 0.5, "data" -> 0.25, "join" -> 0.25,
-            "slow" -> -0.5, "dup" -> -1.5), bias = -0.5)
-        .orderBy("doc_id")),
-
-    // per-language tokenizer fertility (bytes/token audit table):
-    // exact totals, exact-quotient ratio
-    "p84_token_fertility" -> ((s, d) =>
-      TextAnalysis.tokenizerFertility(t(s, d, "documents"), "lang",
-          "text")
-        .orderBy("lang")),
-
-    // URL latest-wins recrawl dedup: non-monotone version so the
-    // (version, id) winner ordering is actually exercised
-    "p85_url_latest_wins" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        concat(lit("https://example.com/page/"),
-          (col("doc_id") % 50).cast("string")).as("url"),
-        (col("doc_id") * 7 % 11).as("version"))
-      Dedup.urlLatestWins(docs, "doc_id", "url", "version")
-        .orderBy("doc_id")
-    }),
-
-    // classifier TRAINING as a gate: 3 unrolled fixed-point GD
-    // iterations over 64 hashed-BoW buckets, label = (lang = 'en').
-    // The learned weights themselves hash against the oracle's unrolled
-    // replay — every margin, hard-sigmoid clamp, residual, gradient and
-    // floor-division update is an exact integer on both engines
-    "p67_train_classifier" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      TextAnalysis.trainLinearClassifier(
-          docs.withColumn("y", col("lang") === "en"),
-          "doc_id", "text", "y", buckets = 64, iters = 3,
-          fracBits = 20, lrShift = 26, portableHash = true)
-        .select(col("b"), col("w"))
-        .orderBy("b")
-    }),
-
-    // INCREMENTAL snapshot dedup: snapshot A (even ids) bootstraps a
-    // fresh on-disk index, snapshot B (odd ids) probes A's index —
-    // exactly the monthly-crawl-drop motion. Output is BOTH snapshots'
-    // verdicts; the oracle recomputes them ALL-AT-ONCE from scratch
-    // under the (snapshot, id) precedence order, so green == the
-    // incremental path is bit-identical to the one-shot path on this
-    // corpus (the operator's core claim)
-    "p68_dedup_incremental" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-p68-").toString
-      val decA = Dedup.dedupAgainstIndex(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-        dir, "snapA", portableHash = true)
-      val decB = Dedup.dedupAgainstIndex(
-        docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-        dir, "snapB", portableHash = true)
-      decA.unionByName(decB)
-        .select(col("id").as("doc_id"), col("fp"), col("verdict"))
-        .orderBy("doc_id")
-    }),
-
-    // INCREMENTAL corpus-global line dedup: snapshot A (even ids)
-    // seeds a line-digest index, snapshot B (odd ids) loses every line
-    // A kept — the C4 global-first rule riding the p68 index motion.
-    // The oracle recomputes all verdicts ALL-AT-ONCE under the
-    // (snapshot, id, pos) precedence order, so green == incremental
-    // line dedup is bit-identical to one dedupLinesGlobal over the
-    // union (same space->newline corpus reshaping as p58)
-    "p70_incr_line_dedup" -> ((s, d) => {
-      val lined = t(s, d, "documents").select(col("doc_id"),
-        translate(col("text"), " ", "\n").as("text"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-p70-").toString
-      val a = Dedup.dedupLinesAgainstIndex(
-        lined.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-        dir, "snapA")
-      val b = Dedup.dedupLinesAgainstIndex(
-        lined.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-        dir, "snapB")
-      a.unionByName(b)
-        .select(col("doc_id"), col("n_kept_lines"),
-          md5(col("deduped")).as("deduped_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // WET/WARC record framing: each source's docs become one synthetic
-    // WET file body (conversion records with real Content-Length
-    // framing), with THREE adversarial plants — every 7th doc's payload
-    // embeds a full decoy record header (only a Content-Length-driven
-    // walk keeps it in the payload; a split-on-marker parser mis-frames
-    // and fails the hash), each blob ends in an overrun-length garbage
-    // tail (exercises the valid=false classification), and one extra
-    // blob is a non-WARC text that still carries a CRLFCRLF-terminated
-    // Content-Length block (a kernel without the "WARC/" version-magic
-    // check frames it as a VALID record and fails the hash). The
-    // oracle rebuilds the identical blobs and walks them with a
-    // recursive CTE
-    "p69_warc_records" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val decoy = "\r\n\r\nWARC/1.0\r\nWARC-Type: decoy\r\n" +
-        "Content-Length: 0\r\n\r\n"
-      val payload = concat(col("text"),
-        when(col("doc_id") % 7 === 0, lit(decoy)).otherwise(lit("")))
-      val rec = concat(
-        lit("WARC/1.0\r\nWARC-Type: conversion\r\n" +
-          "WARC-Target-URI: urn:doc:"), col("doc_id"),
-        lit("\r\nWARC-Date: 2026-08-16T00:00:00Z\r\nContent-Length: "),
-        octet_length(payload),
-        lit("\r\n\r\n"), payload, lit("\r\n\r\n"))
-      val blobs = docs
-        .select(col("source"),
-          struct(col("doc_id"), rec.as("rec")).as("r"))
-        .groupBy("source")
-        .agg(concat(
-          array_join(transform(array_sort(collect_list(col("r"))),
-            x => x("rec")), ""),
-          lit("WARC/1.0\r\nContent-Length: 999999\r\n\r\noops"))
-          .as("raw"))
-        .unionByName(s.range(1).select(lit("__garbage").as("source"),
-          lit("Not-A-Warc: decoy\r\nContent-Length: 3\r\n\r\nabc")
-            .as("raw")))
-      blobs.select(col("source"),
-          posexplode(graft.functions.F.warcRecords(col("raw")))
-            .as(Seq("rec_index", "rec")))
-        .select(col("source"),
-          col("rec_index").cast("long").as("rec_index"),
-          col("rec.rec_type").as("rec_type"),
-          col("rec.uri").as("uri"),
-          col("rec.date").as("warc_date"),
-          col("rec.content_length").as("content_length"),
-          md5(col("rec.payload")).as("payload_md5"),
-          col("rec.valid").as("valid"))
-        .orderBy("source", "rec_index")
-    }),
-
-    // FUZZY decontamination: train docs near-duplicate (MinHash-LSH,
-    // same banded rule as p03) to ANY eval doc (the %10==0 slice, like
-    // p19's exact-gram gate) — catches the reworded-benchmark leakage
-    // exact grams miss; planted near-dups straddle the slice boundary
-    "p60_decontaminate_neardup" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      graft.operators.Decontaminate.nearDupFlag(
-          docs.filter(col("doc_id") % 10 =!= 0),
-          docs.filter(col("doc_id") % 10 === 0),
-          "doc_id", "text", portableHash = true)
-        .select(col("id").as("doc_id"), col("n_near_eval"),
-          col("contaminated"))
-        .orderBy("doc_id")
-    }),
-
-    // per-source frequency capping (domain caps): at most 17 docs per
-    // source (sources carry 25 docs at the smallest gate SF, so the cap
-    // BINDS at every scale), chosen by the seeded portable shuffle order
-    "p50_cap_per_group" -> ((s, d) =>
-      Curation.capPerGroup(
-          t(s, d, "documents").select("doc_id", "source"),
-          "source", "doc_id", maxPerGroup = 17, seed = 42)
-        .orderBy("doc_id")),
-
-    // winnowing fingerprints (MOSS): per-doc local fingerprint set,
-    // fully oracle-gated via the portable hash (63-bit masked so signed
-    // and unsigned engines select identical window minima)
-    "p49_winnowing" -> ((s, d) => {
-      Dedup.winnowingFingerprints(t(s, d, "documents"),
-          "doc_id", "text", k = 5, w = 8, portableHash = true)
-        .select(col("id").as("doc_id"),
-          size(col("fps")).cast("long").as("n_fps"),
-          md5(concat_ws(",",
-            transform(col("fps"), h => h.cast("string"))))
-            .as("fps_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // DSIR importance resampling: hashed-bigram bucket distributions
-    // (target = the src0 slice, raw = everything else), integer
-    // sufficient statistics oracle-gated (they pin tokenization,
-    // portable md5 hashing, power-of-two bucketing, and both count
-    // tables); the derived log-weight is spec-tested in OperatorsSpec
-    "p48_dsir_importance" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      TextAnalysis.dsirImportance(
-          docs.filter(col("source") =!= "src0"),
-          docs.filter(col("source") === "src0"),
-          "doc_id", "text", buckets = 4096, portableHash = true)
-        .select(col("id").as("doc_id"), col("n_grams"), col("sum_tb"),
-          col("sum_rb"), col("n_zero_t"))
-        .orderBy("doc_id")
-    }),
-
-    // corpus distribution-shift monitor: per-source unigram
-    // total-variation distance against the src0 slice — exact integer
-    // numerator (see TextAnalysis.distributionShift), so the statistic
-    // itself is oracle-gated, not just its count features
-    "p45_distribution_shift" -> ((s, d) =>
-      TextAnalysis.distributionShift(t(s, d, "documents"),
-          "source", "text", "src0")
-        .select(col("grp").as("source"), col("n_tokens"), col("n_words"),
-          col("overlap_ref"), col("tv_num").cast("long").as("tv_num"),
-          round(col("tv"), 6).as("tv6"))
-        .orderBy("source")),
-
-    // markup stripping: the corpus is plain text, so each doc is wrapped
-    // in a synthetic HTML template (style payload, tags, comment,
-    // double-escaped entity) that the extractor must undo; fingerprinted
-    // like p38
-    "p43_strip_markup" -> ((s, d) => {
-      val wrapped = concat(
-        lit("<html><head><style>p{color:red}</style></head><body><p id=\"x\">"),
-        col("text"),
-        lit("</p><!-- note --> &amp;lt; tail &nbsp;</body></html>"))
-      t(s, d, "documents").select(col("doc_id"),
-        md5(TextAnalysis.stripMarkup(wrapped)).as("strip_md5"),
-        length(TextAnalysis.stripMarkup(wrapped))
-          .cast("long").as("strip_len"))
-        .orderBy("doc_id")
-    })
-  )
-
-  /** DuckDB analog of TextAnalysis.subwordCountEstimate (same expression
-    * the p08 oracle uses), shared by the packing/budget oracles. */
-  private val duckSubwordTok: String =
-    """CAST(list_sum(list_transform(
-      |      list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-      |        p -> len(p) > 0),
-      |      p -> greatest(CAST(ceil(len(p)/4.0) AS BIGINT), 1)))
-      |    AS BIGINT)""".stripMargin
-
-  /** DuckDB analog of the portable 64-bit hash (TextHash.md5be64):
-    * big-endian first 8 MD5 digest bytes, masked to 63 bits so signed
-    * (Spark Long) and unsigned (UBIGINT) reads agree, mod the MinHash
-    * modulus. */
-  private def duckShingleHash(p: Long): String =
-    s"((('0x'||substr(md5(s),1,16))::UBIGINT & " +
-      s"9223372036854775807::UBIGINT)::BIGINT) % $p"
-
-  /** Generated MinHash oracle: identical permutations + band structure as
-    * Dedup.minhashPairs(k=3, h=32, bands=16, threshold=0.35, minBands=2,
-    * portableHash=true). */
-  private lazy val p03Oracle: String = {
-    val p = Dedup.minhashP
-    val seeds = Dedup.minhashSeeds(32)
-    val mins = seeds.zipWithIndex.map { case ((a, b), i) =>
-      s"list_min(list_transform(hs, x -> ($a * x + $b) % $p)) AS m$i"
-    }.mkString(",\n    ")
-    val eqSum = (0 until 32).map(i => s"(a.m$i = b.m$i)::INT")
-      .mkString(" + ")
-    val bandJoins = (0 until 16).map { bi =>
-      s"""SELECT a.doc_id AS id1, b.doc_id AS id2, $eqSum AS eqc
-         |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-         |    AND a.m${2 * bi} = b.m${2 * bi}
-         |    AND a.m${2 * bi + 1} = b.m${2 * bi + 1}""".stripMargin
-    }.mkString("\n  UNION ALL\n  ")
-    s"""WITH ws AS (SELECT doc_id,
-       |    list_filter(regexp_split_to_array(lower(text), '\\s+'),
-       |      x -> len(x) > 0) AS ws
-       |  FROM documents),
-       |sh0 AS (SELECT doc_id, list_distinct(list_transform(
-       |    range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]))
-       |    AS shingles FROM ws),
-       |hs0 AS (SELECT doc_id, list_transform(shingles,
-       |    s -> ${duckShingleHash(p)}) AS hs
-       |  FROM sh0 WHERE len(shingles) > 0),
-       |sig AS (SELECT doc_id,
-       |    $mins
-       |  FROM hs0),
-       |cand AS (
-       |  $bandJoins),
-       |agg AS (SELECT id1, id2, count(*) AS nb, max(eqc) AS eqc
-       |  FROM cand GROUP BY id1, id2)
-       |SELECT id1, id2 FROM agg
-       |WHERE nb >= 2 AND eqc / 32.0 >= 0.35
-       |ORDER BY id1, id2""".stripMargin
-  }
-
-  /** Generated classifier-training oracle: unrolls
-    * TextAnalysis.trainLinearClassifier's fixed GD iterations in SQL —
-    * per iteration one margin aggregate, one hard-sigmoid residual, one
-    * gradient aggregate, one exact-floor-division weight update. The
-    * bucket is the UNMASKED md5-prefix UBIGINT mod the power-of-two B
-    * (== Spark's pmod of the signed read, 2^64 ≡ 0 mod B — the p48
-    * idiom); sums cast back to BIGINT from DuckDB's HUGEINT. */
-  private def p67Oracle(buckets: Int, iters: Int, fracBits: Int,
-                        lrShift: Int): String = {
-    val s2 = 2L << fracBits       // 2S
-    val s4 = 4L << fracBits       // 4S
-    val p = 1L << lrShift
-    val steps = (1 to iters).map { i =>
-      s"""z$i AS (SELECT f.doc_id, any_value(f.y) AS y,
-         |    sum(w${i - 1}.w * f.x)::BIGINT AS z
-         |  FROM f JOIN w${i - 1} USING (b) GROUP BY f.doc_id),
-         |r$i AS (SELECT doc_id,
-         |    GREATEST(0, LEAST($s4, $s2 + z)) - $s4 * y AS r FROM z$i),
-         |g$i AS (SELECT f.b, sum(r$i.r * f.x)::BIGINT AS g
-         |  FROM f JOIN r$i USING (doc_id) GROUP BY f.b),
-         |w$i AS (SELECT w${i - 1}.b, w${i - 1}.w -
-         |    (coalesce(g, 0) - ((coalesce(g, 0) % $p) + $p) % $p) // $p
-         |    AS w
-         |  FROM w${i - 1} LEFT JOIN g$i USING (b))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH tok AS (SELECT doc_id, (lang = 'en')::BIGINT AS y,
-       |    unnest(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-       |      x -> len(x) > 0)) AS w
-       |  FROM documents),
-       |f AS (SELECT doc_id, y,
-       |    (('0x'||substr(md5(w),1,16))::UBIGINT % $buckets)::BIGINT AS b,
-       |    count(*)::BIGINT AS x
-       |  FROM tok GROUP BY doc_id, y, b),
-       |w0 AS (SELECT unnest(range($buckets))::BIGINT AS b,
-       |    0::BIGINT AS w),
-       |$steps
-       |SELECT CAST(b AS BIGINT) AS b, CAST(w AS BIGINT) AS w
-       |FROM w$iters ORDER BY b""".stripMargin
-  }
-
-  /** Generated fuzzy-decontamination oracle: p03's signature + band
-    * structure, asymmetric (train x eval slice) join, per-train-doc
-    * distinct-eval count. */
-  /** Generated incremental-dedup oracle: recomputes
-    * Dedup.dedupAgainstIndex's verdicts ALL-AT-ONCE — no index, no
-    * snapshot sequencing — under the (snapshot, id) precedence order
-    * the incremental path realizes, from p03's portable signature +
-    * band structure and p05's exact fingerprint. A hash match
-    * therefore IS the incremental == all-at-once equivalence, checked
-    * on real data end to end through the on-disk index. */
-  private lazy val p68Oracle: String = {
-    val p = Dedup.minhashP
-    val seeds = Dedup.minhashSeeds(32)
-    val mins = seeds.zipWithIndex.map { case ((a, b), i) =>
-      s"list_min(list_transform(hs, x -> ($a * x + $b) % $p)) AS m$i"
-    }.mkString(",\n    ")
-    val earlier =
-      "(b.snap < a.snap OR (b.snap = a.snap AND b.doc_id < a.doc_id))"
-    val bandJoins = (0 until 16).map { bi =>
-      s"""SELECT a.doc_id FROM sigd a JOIN sigd b
-         |    ON a.m${2 * bi} = b.m${2 * bi}
-         |    AND a.m${2 * bi + 1} = b.m${2 * bi + 1}
-         |    AND $earlier""".stripMargin
-    }.mkString("\n  UNION ALL\n  ")
-    s"""WITH fps AS (SELECT doc_id, doc_id % 2 AS snap,
-       |    md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
-       |      AS fp
-       |  FROM documents),
-       |ws AS (SELECT doc_id, doc_id % 2 AS snap,
-       |    list_filter(regexp_split_to_array(lower(text), '\\s+'),
-       |      x -> len(x) > 0) AS ws
-       |  FROM documents),
-       |sh0 AS (SELECT doc_id, snap, list_distinct(list_transform(
-       |    range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]))
-       |    AS shingles FROM ws),
-       |hs0 AS (SELECT doc_id, snap, list_transform(shingles,
-       |    s -> ${duckShingleHash(p)}) AS hs
-       |  FROM sh0 WHERE len(shingles) > 0),
-       |sigd AS (SELECT doc_id, snap,
-       |    $mins
-       |  FROM hs0),
-       |ex AS (SELECT DISTINCT a.doc_id FROM fps a JOIN fps b
-       |  ON a.fp = b.fp AND $earlier),
-       |nr0 AS (
-       |  $bandJoins),
-       |nr AS (SELECT DISTINCT doc_id FROM nr0)
-       |SELECT f.doc_id, f.fp,
-       |  CASE WHEN ex.doc_id IS NOT NULL THEN 'drop_exact'
-       |       WHEN nr.doc_id IS NOT NULL THEN 'drop_near'
-       |       ELSE 'keep' END AS verdict
-       |FROM fps f LEFT JOIN ex ON ex.doc_id = f.doc_id
-       |           LEFT JOIN nr ON nr.doc_id = f.doc_id
-       |ORDER BY f.doc_id""".stripMargin
-  }
-
-  /** WET/WARC framing oracle: rebuilds the gate's synthetic blobs
-    * byte-for-byte (ASCII corpus, so DuckDB's char ops equal the
-    * kernel's byte walk — the p59 precedent), then walks them with a
-    * RECURSIVE CTE that replays the Content-Length-driven frame
-    * advance: each step consumes one record (header block to
-    * CRLFCRLF, payload = declared length, +4 terminator — the builder
-    * emits exactly that framing, so the kernel's general CR/LF-run
-    * skip reduces to +4 on this corpus) and the overrun tail emits the
-    * same valid=false record the kernel classifies. */
-  /** The p66/p71 stupid-backoff replay, parametric in the order-3
-    * count table's pruning threshold (minCount3=1 = unpruned p66;
-    * minCount3=2 = KenLM singleton pruning, p71). Orders 1–2 are
-    * never pruned, matching the operator. */
-  private def lmBackoffOracle(minCount3: Int): String =
-    s"""WITH ws AS (SELECT doc_id,
-       |    list_filter(regexp_split_to_array(lower(text), '\\s+'),
-       |      x -> len(x) > 0) AS ws
-       |  FROM documents),
-       |tr AS (SELECT ws FROM ws WHERE doc_id % 10 <> 0),
-       |c1 AS (SELECT g, count(*) AS c FROM (
-       |    SELECT unnest(ws) AS g FROM tr) GROUP BY 1),
-       |c2 AS (SELECT g, count(*) AS c FROM (
-       |    SELECT unnest(list_transform(range(1, len(ws)),
-       |      i -> ws[i]||' '||ws[i+1])) AS g FROM tr) GROUP BY 1),
-       |c3 AS (SELECT g, count(*) AS c FROM (
-       |    SELECT unnest(list_transform(range(1, len(ws)-1),
-       |      i -> ws[i]||' '||ws[i+1]||' '||ws[i+2])) AS g FROM tr)
-       |  GROUP BY 1 HAVING count(*) >= $minCount3),
-       |nt AS (SELECT coalesce(sum(c), 0)::BIGINT AS n FROM c1),
-       |pos AS (SELECT doc_id, i, ws[i] AS g1,
-       |    CASE WHEN i >= 2 THEN ws[i-1]||' '||ws[i] END AS g2,
-       |    CASE WHEN i >= 3
-       |      THEN ws[i-2]||' '||ws[i-1]||' '||ws[i] END AS g3,
-       |    CASE WHEN i >= 2 THEN ws[i-1] END AS d2,
-       |    CASE WHEN i >= 3 THEN ws[i-2]||' '||ws[i-1] END AS d3,
-       |    LEAST(3, i) AS topk
-       |  FROM (SELECT doc_id, unnest(range(1, len(ws)+1)) AS i, ws
-       |    FROM ws WHERE doc_id % 10 = 0)),
-       |j AS (SELECT p.doc_id, p.topk,
-       |    n3.c AS cn3, n2.c AS cn2, n1.c AS cn1,
-       |    p3.c AS cd3, p2.c AS cd2
-       |  FROM pos p
-       |  LEFT JOIN c3 n3 ON n3.g = p.g3
-       |  LEFT JOIN c2 n2 ON n2.g = p.g2
-       |  LEFT JOIN c1 n1 ON n1.g = p.g1
-       |  LEFT JOIN c2 p3 ON p3.g = p.d3
-       |  LEFT JOIN c1 p2 ON p2.g = p.d2),
-       |tok AS (SELECT doc_id,
-       |    CASE WHEN cn3 IS NOT NULL THEN 3 WHEN cn2 IS NOT NULL THEN 2
-       |         WHEN cn1 IS NOT NULL THEN 1 ELSE 0 END AS lvl,
-       |    coalesce(cn3, cn2, cn1, 0) AS num,
-       |    CASE WHEN cn3 IS NOT NULL THEN cd3
-       |         WHEN cn2 IS NOT NULL THEN cd2
-       |         WHEN cn1 IS NOT NULL THEN (SELECT n FROM nt)
-       |         ELSE 0 END AS den,
-       |    CASE WHEN cn3 IS NOT NULL THEN topk - 3
-       |         WHEN cn2 IS NOT NULL THEN topk - 2
-       |         ELSE topk - 1 END AS steps
-       |  FROM j),
-       |agg AS (SELECT doc_id, count(*) AS n_tokens,
-       |    sum((lvl = 3)::INT) AS n_hit3, sum((lvl = 2)::INT) AS n_hit2,
-       |    sum((lvl = 1)::INT) AS n_hit1, sum((lvl = 0)::INT) AS n_oov,
-       |    sum(num) AS sum_num, sum(den) AS sum_den,
-       |    sum(steps) AS sum_steps
-       |  FROM tok GROUP BY 1)
-       |SELECT d.doc_id,
-       |  CAST(coalesce(n_tokens, 0) AS BIGINT) AS n_tokens,
-       |  CAST(coalesce(n_hit3, 0) AS BIGINT) AS n_hit3,
-       |  CAST(coalesce(n_hit2, 0) AS BIGINT) AS n_hit2,
-       |  CAST(coalesce(n_hit1, 0) AS BIGINT) AS n_hit1,
-       |  CAST(coalesce(n_oov, 0) AS BIGINT) AS n_oov,
-       |  CAST(coalesce(sum_num, 0) AS BIGINT) AS sum_num,
-       |  CAST(coalesce(sum_den, 0) AS BIGINT) AS sum_den,
-       |  CAST(coalesce(sum_steps, 0) AS BIGINT) AS sum_steps
-       |FROM documents d LEFT JOIN agg USING (doc_id)
-       |WHERE d.doc_id % 10 = 0 ORDER BY d.doc_id""".stripMargin
-
-  /** The per-language generalization of [[lmBackoffOracle]]: count
-    * tables, (N, V) totals, joins, and the OOV floor are all keyed by
-    * `lang`, replaying the one-pass multilingual train + per-language
-    * scoring of `ngramLmScoreBackoff(langCol=...)`. `evSql` supplies
-    * the score-side (sid, lang, ws) rows — p73 doubles each eval doc
-    * under its own lang AND 'en'; p74 keeps own-lang only — and
-    * `tailSql` the final projection (plain stats for p73, the
-    * rank/bucket/quota chain for p74). minCount3 prunes the order-3
-    * table exactly like the operator (orders 1–2 never prune). */
-  private def lmPerLangOracle(minCount3: Int, evSql: String,
-                              tailSql: String): String =
-    s"""WITH ws0 AS (SELECT doc_id, lang,
-       |    list_filter(regexp_split_to_array(lower(text), '\\s+'),
-       |      x -> len(x) > 0) AS ws
-       |  FROM documents),
-       |tr AS (SELECT lang, ws FROM ws0 WHERE doc_id % 10 <> 0),
-       |c1 AS (SELECT lang, g, count(*) AS c FROM (
-       |    SELECT lang, unnest(ws) AS g FROM tr) GROUP BY 1, 2),
-       |c2 AS (SELECT lang, g, count(*) AS c FROM (
-       |    SELECT lang, unnest(list_transform(range(1, len(ws)),
-       |      i -> ws[i]||' '||ws[i+1])) AS g FROM tr) GROUP BY 1, 2),
-       |c3 AS (SELECT lang, g, count(*) AS c FROM (
-       |    SELECT lang, unnest(list_transform(range(1, len(ws)-1),
-       |      i -> ws[i]||' '||ws[i+1]||' '||ws[i+2])) AS g FROM tr)
-       |  GROUP BY 1, 2 HAVING count(*) >= $minCount3),
-       |nt AS (SELECT lang, sum(c)::BIGINT AS n FROM c1 GROUP BY 1),
-       |ev AS ($evSql),
-       |pos AS (SELECT sid, lang, i, ws[i] AS g1,
-       |    CASE WHEN i >= 2 THEN ws[i-1]||' '||ws[i] END AS g2,
-       |    CASE WHEN i >= 3
-       |      THEN ws[i-2]||' '||ws[i-1]||' '||ws[i] END AS g3,
-       |    CASE WHEN i >= 2 THEN ws[i-1] END AS d2,
-       |    CASE WHEN i >= 3 THEN ws[i-2]||' '||ws[i-1] END AS d3,
-       |    LEAST(3, i) AS topk
-       |  FROM (SELECT sid, lang, unnest(range(1, len(ws)+1)) AS i, ws
-       |    FROM ev)),
-       |j AS (SELECT p.sid, p.lang, p.topk,
-       |    n3.c AS cn3, n2.c AS cn2, n1.c AS cn1,
-       |    p3.c AS cd3, p2.c AS cd2, nt.n AS ntok
-       |  FROM pos p
-       |  LEFT JOIN c3 n3 ON n3.lang = p.lang AND n3.g = p.g3
-       |  LEFT JOIN c2 n2 ON n2.lang = p.lang AND n2.g = p.g2
-       |  LEFT JOIN c1 n1 ON n1.lang = p.lang AND n1.g = p.g1
-       |  LEFT JOIN c2 p3 ON p3.lang = p.lang AND p3.g = p.d3
-       |  LEFT JOIN c1 p2 ON p2.lang = p.lang AND p2.g = p.d2
-       |  LEFT JOIN nt ON nt.lang = p.lang),
-       |tok AS (SELECT sid,
-       |    CASE WHEN cn3 IS NOT NULL THEN 3 WHEN cn2 IS NOT NULL THEN 2
-       |         WHEN cn1 IS NOT NULL THEN 1 ELSE 0 END AS lvl,
-       |    coalesce(cn3, cn2, cn1, 0) AS num,
-       |    CASE WHEN cn3 IS NOT NULL THEN cd3
-       |         WHEN cn2 IS NOT NULL THEN cd2
-       |         WHEN cn1 IS NOT NULL THEN coalesce(ntok, 0)
-       |         ELSE 0 END AS den,
-       |    CASE WHEN cn3 IS NOT NULL THEN topk - 3
-       |         WHEN cn2 IS NOT NULL THEN topk - 2
-       |         ELSE topk - 1 END AS steps
-       |  FROM j),
-       |agg AS (SELECT sid, count(*) AS n_tokens,
-       |    sum((lvl = 3)::INT) AS n_hit3, sum((lvl = 2)::INT) AS n_hit2,
-       |    sum((lvl = 1)::INT) AS n_hit1, sum((lvl = 0)::INT) AS n_oov,
-       |    sum(num) AS sum_num, sum(den) AS sum_den,
-       |    sum(steps) AS sum_steps
-       |  FROM tok GROUP BY 1),
-       |stats AS (SELECT e.sid, e.lang,
-       |    CAST(coalesce(n_tokens, 0) AS BIGINT) AS n_tokens,
-       |    CAST(coalesce(n_hit3, 0) AS BIGINT) AS n_hit3,
-       |    CAST(coalesce(n_hit2, 0) AS BIGINT) AS n_hit2,
-       |    CAST(coalesce(n_hit1, 0) AS BIGINT) AS n_hit1,
-       |    CAST(coalesce(n_oov, 0) AS BIGINT) AS n_oov,
-       |    CAST(coalesce(sum_num, 0) AS BIGINT) AS sum_num,
-       |    CAST(coalesce(sum_den, 0) AS BIGINT) AS sum_den,
-       |    CAST(coalesce(sum_steps, 0) AS BIGINT) AS sum_steps
-       |  FROM ev e LEFT JOIN agg USING (sid))
-       |$tailSql""".stripMargin
-
-  private val p69Oracle: String = {
-    val c = "chr(13)||chr(10)"
-    val c2 = s"$c||$c"
-    s"""WITH RECURSIVE rec0 AS (SELECT source, doc_id,
-       |    text || CASE WHEN doc_id % 7 = 0
-       |      THEN $c2||'WARC/1.0'||$c||'WARC-Type: decoy'||$c
-       |        ||'Content-Length: 0'||$c2
-       |      ELSE '' END AS payload
-       |  FROM documents),
-       |rec AS (SELECT source, doc_id,
-       |    'WARC/1.0'||$c||'WARC-Type: conversion'||$c
-       |    ||'WARC-Target-URI: urn:doc:'||doc_id||$c
-       |    ||'WARC-Date: 2026-08-16T00:00:00Z'||$c
-       |    ||'Content-Length: '||strlen(payload)||$c2
-       |    ||payload||$c2 AS r
-       |  FROM rec0),
-       |blob AS (SELECT source, string_agg(r, '' ORDER BY doc_id)
-       |    ||'WARC/1.0'||$c||'Content-Length: 999999'||$c2||'oops'
-       |    AS raw
-       |  FROM rec GROUP BY source
-       |  UNION ALL
-       |  SELECT '__garbage' AS source,
-       |    'Not-A-Warc: decoy'||$c||'Content-Length: 3'||$c2||'abc'
-       |    AS raw),
-       |walk AS (
-       |  SELECT source, raw, CAST(-1 AS BIGINT) AS rec_index,
-       |    CAST(1 AS BIGINT) AS pos, CAST(NULL AS VARCHAR) AS rec_type,
-       |    CAST(NULL AS VARCHAR) AS uri,
-       |    CAST(NULL AS VARCHAR) AS warc_date,
-       |    CAST(NULL AS BIGINT) AS content_length,
-       |    CAST(NULL AS VARCHAR) AS payload, true AS valid
-       |  FROM blob
-       |  UNION ALL
-       |  SELECT source, raw, rec_index + 1,
-       |    CASE WHEN ok THEN pstart + clen + 4
-       |         ELSE strlen(raw) + 1 END,
-       |    rtype2, ruri2, rdate2, clen02,
-       |    CASE WHEN ok THEN substr(raw, pstart, clen)
-       |         WHEN NOT magic THEN substr(raw, pos0)
-       |         ELSE substr(raw, pstart) END,
-       |    ok
-       |  FROM (
-       |    SELECT source, raw, rec_index, pstart, pos0, magic,
-       |      magic AND clen0 IS NOT NULL
-       |        AND pstart + clen0 - 1 <= strlen(raw) AS ok,
-       |      COALESCE(clen0, 0) AS clen,
-       |      CASE WHEN magic THEN clen0 END AS clen02,
-       |      CASE WHEN magic THEN rtype END AS rtype2,
-       |      CASE WHEN magic THEN ruri END AS ruri2,
-       |      CASE WHEN magic THEN rdate END AS rdate2
-       |    FROM (
-       |      SELECT source, raw, rec_index, pos AS pos0,
-       |        substr(raw, pos, 5) = 'WARC/' AS magic,
-       |        pos + he + 3 AS pstart,
-       |        TRY_CAST(regexp_extract(hdrs,
-       |          'Content-Length: ([0-9]+)', 1) AS BIGINT) AS clen0,
-       |        NULLIF(regexp_extract(hdrs,
-       |          'WARC-Type: ([^\r]*)', 1), '') AS rtype,
-       |        NULLIF(regexp_extract(hdrs,
-       |          'WARC-Target-URI: ([^\r]*)', 1), '') AS ruri,
-       |        NULLIF(regexp_extract(hdrs,
-       |          'WARC-Date: ([^\r]*)', 1), '') AS rdate
-       |      FROM (
-       |        SELECT source, raw, rec_index, pos,
-       |          instr(substr(raw, pos), $c2) AS he,
-       |          substr(raw, pos, instr(substr(raw, pos), $c2) - 1)
-       |            AS hdrs
-       |        FROM walk WHERE valid AND pos <= strlen(raw)))))
-       |SELECT source, rec_index, rec_type, uri, warc_date,
-       |  content_length, md5(payload) AS payload_md5, valid
-       |FROM walk WHERE rec_index >= 0
-       |ORDER BY source, rec_index""".stripMargin
-  }
-
-  private lazy val p60Oracle: String = {
-    val p = Dedup.minhashP
-    val seeds = Dedup.minhashSeeds(32)
-    val mins = seeds.zipWithIndex.map { case ((a, b), i) =>
-      s"list_min(list_transform(hs, x -> ($a * x + $b) % $p)) AS m$i"
-    }.mkString(",\n    ")
-    val eqSum = (0 until 32).map(i => s"(a.m$i = b.m$i)::INT")
-      .mkString(" + ")
-    val bandJoins = (0 until 16).map { bi =>
-      s"""SELECT a.doc_id AS tid, b.doc_id AS eid, $eqSum AS eqc
-         |  FROM sigt a JOIN sige b
-         |    ON a.m${2 * bi} = b.m${2 * bi}
-         |    AND a.m${2 * bi + 1} = b.m${2 * bi + 1}""".stripMargin
-    }.mkString("\n  UNION ALL\n  ")
-    s"""WITH ws AS (SELECT doc_id,
-       |    list_filter(regexp_split_to_array(lower(text), '\\s+'),
-       |      x -> len(x) > 0) AS ws
-       |  FROM documents),
-       |sh0 AS (SELECT doc_id, list_distinct(list_transform(
-       |    range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]))
-       |    AS shingles FROM ws),
-       |hs0 AS (SELECT doc_id, list_transform(shingles,
-       |    s -> ${duckShingleHash(p)}) AS hs
-       |  FROM sh0 WHERE len(shingles) > 0),
-       |sig AS (SELECT doc_id,
-       |    $mins
-       |  FROM hs0),
-       |sigt AS (SELECT * FROM sig WHERE doc_id % 10 <> 0),
-       |sige AS (SELECT * FROM sig WHERE doc_id % 10 = 0),
-       |cand AS (
-       |  $bandJoins),
-       |agg AS (SELECT tid, eid, count(*) AS nb, max(eqc) AS eqc
-       |  FROM cand GROUP BY tid, eid),
-       |near AS (SELECT tid, CAST(count(*) AS BIGINT) AS n
-       |  FROM agg WHERE nb >= 2 AND eqc / 32.0 >= 0.35 GROUP BY tid)
-       |SELECT d.doc_id, coalesce(near.n, 0) AS n_near_eval,
-       |  coalesce(near.n, 0) > 0 AS contaminated
-       |FROM documents d LEFT JOIN near ON near.tid = d.doc_id
-       |WHERE d.doc_id % 10 <> 0
-       |ORDER BY d.doc_id""".stripMargin
-  }
-
-  /** Generated SimHash oracle: identical bit votes, 16-bit chunk LSH and
-    * hamming verify as Dedup.simhashPairs(maxHamming=8, portableHash). */
-  private lazy val p04Oracle: String = {
-    val sums = (0 until 64).map(i =>
-      s"sum(((h >> $i) & 1::UBIGINT)::BIGINT) AS b$i").mkString(",\n    ")
-    // literal powers of two: DuckDB's << evaluates in signed space and
-    // overflows at bit 63
-    val asm = (0 until 64).map(i =>
-      s"(CASE WHEN b$i * 2 > n THEN ${BigInt(1) << i}::UBIGINT " +
-        "ELSE 0::UBIGINT END)").mkString(" +\n    ")
-    s"""WITH w AS (SELECT doc_id,
-       |    unnest(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-       |      x -> len(x) > 0)) AS w
-       |  FROM documents),
-       |h AS (SELECT doc_id, ('0x'||substr(md5(w),1,16))::UBIGINT AS h
-       |  FROM w),
-       |bits AS (SELECT doc_id, count(*) AS n,
-       |    $sums
-       |  FROM h GROUP BY doc_id),
-       |sim AS (SELECT doc_id,
-       |    $asm AS sh
-       |  FROM bits),
-       |chunks AS (SELECT doc_id, sh, b AS chunk,
-       |    (sh >> (b * 16)) & 65535::UBIGINT AS key
-       |  FROM sim, unnest([0,1,2,3]) AS t(b)),
-       |pairs AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-       |    bit_count(xor(a.sh, b.sh)) AS hamming
-       |  FROM chunks a JOIN chunks b ON a.chunk = b.chunk
-       |    AND a.key = b.key AND a.doc_id < b.doc_id)
-       |SELECT id1, id2, hamming FROM pairs WHERE hamming <= 8
-       |ORDER BY id1, id2""".stripMargin
-  }
-
-  /** Generated LSH-ANN oracle: the hyperplane components are exact binary
-    * fractions, embedded as SQL literals; signature bits, 2-bit band keys
-    * and the cosine rank replicate Similarity.lshTopK(k=5, dim=64,
-    * nPlanes=16, bands=8) over queries vec_id < 5. */
-  private lazy val p10Oracle: String = {
-    val planes = Similarity.hyperplanes(16, 64)
-    def lits(pl: Seq[Double]): String =
-      pl.map(d => java.math.BigDecimal.valueOf(d).toPlainString)
-        .mkString("[", ", ", "]")
-    val sigs = planes.zipWithIndex.map { case (pl, i) =>
-      s"(CASE WHEN list_inner_product(v, ${lits(pl)}) >= 0 " +
-        s"THEN 1 ELSE 0 END) AS s$i"
-    }.mkString(",\n    ")
-    val keyCase = (0 until 8).map(b =>
-      s"WHEN $b THEN s${2 * b} + 2 * s${2 * b + 1}").mkString(" ")
-    s"""WITH e AS (SELECT vec_id,
-       |    list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-       |sig AS (SELECT vec_id, v,
-       |    $sigs
-       |  FROM e),
-       |banded AS (SELECT vec_id, v, b AS band,
-       |    CASE b $keyCase END AS key
-       |  FROM sig, unnest([0,1,2,3,4,5,6,7]) AS t(b)),
-       |cand AS (SELECT DISTINCT q.vec_id AS query_id, i.vec_id AS item_id,
-       |    list_inner_product(q.v, i.v) /
-       |      (sqrt(list_inner_product(q.v, q.v)) *
-       |       sqrt(list_inner_product(i.v, i.v))) AS score
-       |  FROM banded i JOIN banded q
-       |    ON i.band = q.band AND i.key = q.key
-       |    AND q.vec_id < 5 AND q.vec_id <> i.vec_id),
-       |ranked AS (SELECT query_id, item_id,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY score DESC, item_id ASC) AS rank
-       |  FROM cand)
-       |SELECT query_id, rank, item_id FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** IVF oracle: same deterministic quantizer (16 lowest-id centroids),
-    * assignment argmax, 4-cell probe and cosine rank as
-    * Similarity.ivfTopK(k=5, nCells=16, nProbe=4). */
-  private lazy val p14Oracle: String = {
-    def cos(a: String, b: String): String =
-      s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * " +
-        s"sqrt(list_inner_product($b, $b)))"
-    s"""WITH e AS (SELECT vec_id,
-       |    list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-       |cent AS (SELECT vec_id AS cell_id, v AS cvec FROM e
-       |  ORDER BY vec_id LIMIT 16),
-       |cells AS (SELECT cell_id, item_id, ivec FROM (
-       |  SELECT c.cell_id, i.vec_id AS item_id, i.v AS ivec,
-       |    ROW_NUMBER() OVER (PARTITION BY i.vec_id
-       |      ORDER BY ${cos("i.v", "c.cvec")} DESC, c.cell_id ASC) AS rn
-       |  FROM e i CROSS JOIN cent c) WHERE rn = 1),
-       |probes AS (SELECT query_id, qvec, cell_id FROM (
-       |  SELECT q.vec_id AS query_id, q.v AS qvec, c.cell_id,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${cos("q.v", "c.cvec")} DESC, c.cell_id ASC) AS rn
-       |  FROM e q CROSS JOIN cent c WHERE q.vec_id < 5) WHERE rn <= 4),
-       |scored AS (SELECT p.query_id, s.item_id,
-       |    ${cos("p.qvec", "s.ivec")} AS score
-       |  FROM probes p JOIN cells s ON p.cell_id = s.cell_id
-       |  WHERE p.query_id <> s.item_id),
-       |ranked AS (SELECT query_id, item_id,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY score DESC, item_id ASC) AS rank
-       |  FROM scored)
-       |SELECT query_id, rank, item_id FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** p27's oracle, built FROM the frozen merge table so Spark and
-    * DuckDB replay the identical ranks by construction. Encode model:
-    * each symbol rides as `US s US` (US = unit separator, chr(31)) so
-    * a pair pattern `US a US US b US` can never match across symbol
-    * boundaries or share characters with an adjacent occurrence;
-    * merges apply as one exhaustive `replace` per rank, in rank order
-    * — equivalent to the lowest-rank-first loop because a merge's
-    * product only occurs in later-trained pairs. One recursive-CTE
-    * step per rank over the DISTINCT words (the memoized shape of the
-    * Spark encode); token count = separator count / 2. */
-  private def bpeEncodeOracle: String = {
-    def esc(s: String) = s.replace("'", "''")
-    val values = graft.operators.Bpe.canonicalMerges.zipWithIndex
-      .map { case ((a, b), i) => s"(${i + 1},'${esc(a)}','${esc(b)}')" }
-      .mkString(",")
-    val n = graft.operators.Bpe.canonicalMerges.size
-    s"""WITH RECURSIVE merges(r, a, b) AS (VALUES $values),
-       |words AS (SELECT doc_id, w FROM (
-       |    SELECT doc_id,
-       |      unnest(regexp_split_to_array(lower(text), '\\s+')) AS w
-       |    FROM documents) WHERE w <> ''),
-       |dw AS (SELECT DISTINCT w FROM words),
-       |enc AS (
-       |  SELECT w,
-       |    regexp_replace(w, '(.)', chr(31) || '\\1' || chr(31), 'g')
-       |      || chr(31) || '</w>' || chr(31) AS s,
-       |    0 AS r
-       |  FROM dw
-       |  UNION ALL
-       |  SELECT e.w,
-       |    replace(e.s,
-       |      chr(31) || m.a || chr(31) || chr(31) || m.b || chr(31),
-       |      chr(31) || m.a || m.b || chr(31)),
-       |    e.r + 1
-       |  FROM enc e JOIN merges m ON m.r = e.r + 1),
-       |wtok AS (SELECT w,
-       |    (length(s) - length(replace(s, chr(31), ''))) // 2 AS n
-       |  FROM enc WHERE r = $n),
-       |per_doc AS (SELECT wo.doc_id, sum(wt.n) AS n
-       |  FROM words wo JOIN wtok wt USING (w) GROUP BY wo.doc_id)
-       |SELECT d.doc_id,
-       |  CAST(COALESCE(p.n, 0) AS BIGINT) AS n_tokens
-       |FROM documents d LEFT JOIN per_doc p USING (doc_id)
-       |ORDER BY d.doc_id""".stripMargin
-  }
-
-  /** The crawlUrl CASE, SQL-side (CASE for CASE with the Column above;
-    * plain string — no interpolation, so '$'/'\' need no doubling). */
-  private val crawlUrlCaseSql: String =
-    """CASE doc_id % 10
-      |      WHEN 0 THEN 'HTTP://WWW.Example' || (doc_id % 5) || '.COM:80/a/b/../c/./d.html?utm_source=feed&id=' || doc_id || '#frag'
-      |      WHEN 1 THEN 'https://Sub.Host' || (doc_id % 5) || '.co.uk:443/path//to/../x/?fbclid=abc' || doc_id
-      |      WHEN 2 THEN 'http://example' || (doc_id % 5) || '.org'
-      |      WHEN 3 THEN 'https://www.site' || (doc_id % 5) || '.com.au/deep/./../a/b/c?id=' || doc_id || '&utm_campaign=x&gclid=g'
-      |      WHEN 4 THEN 'http://192.168.1.' || (doc_id % 5) || ':8080/a/../b#x'
-      |      WHEN 5 THEN 'https://blog.example' || (doc_id % 5) || '.net/a/b/c/'
-      |      WHEN 6 THEN 'HTTPS://X' || (doc_id % 5) || '.IO:443/~user/../home?x=1&y=2'
-      |      WHEN 7 THEN 'HTTPS://Leitor:PW' || (doc_id % 5) || '@News.Portal' || (doc_id % 5) || '.COM.BR:443/artigo//' || doc_id || '?gclid=x'
-      |      WHEN 8 THEN 'http://Pages.Fan' || (doc_id % 5) || '.GitHub.IO/p/' || doc_id || '?utm_medium=x'
-      |      ELSE 'not a url at all ' || doc_id END""".stripMargin
-
-  /** PSL snapshot inlined as a VALUES table — generated from the SAME
-    * classpath resource the kernel loads (functions.UrlKernel.Psl), so
-    * Spark and DuckDB key eTLD+1 against one rule set by construction.
-    * kind: 'n' normal, 'w' wildcard base, 'e' exception base. */
-  private lazy val pslCteSql: String =
-    "psl AS (SELECT * FROM (VALUES " +
-      graft.functions.UrlKernel.Psl.rules.map { r =>
-        if (r.startsWith("!")) "('e','" + r.substring(1) + "')"
-        else if (r.startsWith("*.")) "('w','" + r.substring(2) + "')"
-        else "('n','" + r + "')"
-      }.mkString(",") + ") AS v(kind, base))"
-
-  /** Full PSL lookup, hb(doc_id, host) -> reg(doc_id, reg_host): the
-    * prevailing rule is an exception if one matches, else the longest
-    * (leftmost-start) normal/wildcard match, else the default rule
-    * (the bare TLD); registrable = public suffix + one label, and a
-    * host that IS a public suffix keys as itself (same contract as
-    * UrlKernel.registrableHost, branch for branch). */
-  private val regHostCtesSql: String =
-    """hl AS (SELECT doc_id, host, string_split(host, '.') AS labs,
-      |    len(string_split(host, '.')) AS n FROM hb),
-      |sfe AS (SELECT doc_id, i,
-      |    array_to_string(labs[i:n], '.') AS si,
-      |    CASE WHEN i < n THEN array_to_string(labs[i+1:n], '.') END AS si1
-      |  FROM (SELECT doc_id, labs, n, unnest(range(1, n + 1)) AS i
-      |        FROM hl)),
-      |mt AS (SELECT s.doc_id,
-      |    min(CASE WHEN e.base IS NOT NULL THEN s.i END) AS exc_i,
-      |    min(CASE WHEN nr.base IS NOT NULL THEN s.i END) AS norm_i,
-      |    min(CASE WHEN w.base IS NOT NULL THEN s.i END) AS wild_i
-      |  FROM sfe s
-      |  LEFT JOIN psl e ON e.kind = 'e' AND e.base = s.si
-      |  LEFT JOIN psl nr ON nr.kind = 'n' AND nr.base = s.si
-      |  LEFT JOIN psl w ON w.kind = 'w' AND w.base = s.si1
-      |  GROUP BY s.doc_id),
-      |reg AS (SELECT h.doc_id, CASE
-      |    WHEN h.host IS NULL THEN ''
-      |    WHEN regexp_matches(h.host,
-      |      '^[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+$') THEN h.host
-      |    ELSE array_to_string(h.labs[(greatest(1,
-      |      (CASE WHEN m.exc_i IS NOT NULL THEN m.exc_i + 1
-      |            WHEN least(coalesce(m.norm_i, 9999),
-      |                       coalesce(m.wild_i, 9999)) <= h.n
-      |              THEN least(coalesce(m.norm_i, 9999),
-      |                         coalesce(m.wild_i, 9999))
-      |            ELSE h.n END) - 1)):h.n], '.')
-      |    END AS reg_host
-      |  FROM hl h LEFT JOIN mt m USING (doc_id))""".stripMargin
-
-  /** Shared WITH prefix of the URL-pipeline oracles (the p53 gate and
-    * the p75 composed crawl pipeline): the crawlUrl template -> trim /
-    * fragment strip -> authority parse + lowering -> default-port drop
-    * -> path dot-segment FIX POINT (a recursive CTE iterating the
-    * IDENTICAL ordered regexp_replace composition
-    * functions.UrlKernel.pathStep applies) -> tracking-param filter ->
-    * canonical URL (CTE `canon`) -> bare host (CTE `hb`) -> inlined
-    * PSL rules -> registrable host (CTE `reg`). Rewrite for rewrite
-    * with the kernel, so cross-engine agreement is by construction. */
-  private lazy val urlPipeCtesSql: String = {
-      // one ordered rewrite pass (UrlKernel.pathStep), nested innermost
-      // -> outermost: // ; /./ ; trailing /. ; /seg/../ ; trailing
-      // /seg/.. ; leading /../ ; lone /.. — plain-string template with
-      // @P@ substitution (no interpolation: '$'/'\' stay single)
-      def step(p: String): String =
-        """regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-          |regexp_replace(regexp_replace(regexp_replace(@P@,
-          |  '//', '/', 'g'),
-          |  '/\./', '/', 'g'),
-          |  '/\.$', '/'),
-          |  '/(\.[^/.][^/]*|\.\.[^/]+|[^/.][^/]*)/\.\./', '/', 'g'),
-          |  '/(\.[^/.][^/]*|\.\.[^/]+|[^/.][^/]*)/\.\.$', '/'),
-          |  '^/\.\./', '/'),
-          |  '^/\.\.$', '/')""".stripMargin.replace("@P@", p)
-      """WITH RECURSIVE src AS (SELECT doc_id, @URL@ AS url
-        |  FROM documents),
-        |t AS (SELECT doc_id, trim(url) AS s0 FROM src),
-        |nf AS (SELECT doc_id, s0,
-        |    CASE WHEN strpos(s0, '#') > 0
-        |      THEN substr(s0, 1, strpos(s0, '#') - 1) ELSE s0 END AS s
-        |  FROM t),
-        |m AS (SELECT doc_id, s0, s,
-        |    regexp_matches(s, '^[A-Za-z][A-Za-z0-9+.-]*://') AS isurl,
-        |    lower(regexp_extract(s, '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?]*)(.*)$', 1)) AS sch,
-        |    regexp_extract(s, '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?]*)(.*)$', 2) AS rauth,
-        |    regexp_extract(s, '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?]*)(.*)$', 3) AS rest
-        |  FROM nf),
-        |lc AS (SELECT doc_id, s0, s, isurl, sch, rauth, rest,
-        |    CASE WHEN strpos(rauth, '@') > 0
-        |      THEN regexp_replace(rauth, '[^@]*$', '') ||
-        |           lower(regexp_replace(rauth, '^.*@', ''))
-        |      ELSE lower(rauth) END AS auth0
-        |  FROM m),
-        |a AS (SELECT doc_id, s0, isurl, sch, rauth,
-        |    CASE WHEN sch = 'http' AND auth0 LIKE '%:80'
-        |           THEN substr(auth0, 1, len(auth0) - 3)
-        |         WHEN sch = 'https' AND auth0 LIKE '%:443'
-        |           THEN substr(auth0, 1, len(auth0) - 4)
-        |         ELSE auth0 END AS auth,
-        |    CASE WHEN strpos(rest, '?') > 0
-        |      THEN substr(rest, 1, strpos(rest, '?') - 1)
-        |      ELSE rest END AS path0,
-        |    CASE WHEN strpos(rest, '?') > 0
-        |      THEN substr(rest, strpos(rest, '?') + 1)
-        |      ELSE NULL END AS qry
-        |  FROM lc),
-        |fx AS (
-        |  SELECT doc_id, CASE WHEN path0 = '' THEN '/' ELSE path0 END
-        |    AS p, 0 AS it FROM a WHERE isurl
-        |  UNION ALL
-        |  SELECT doc_id, @STEP@, it + 1 FROM fx
-        |  WHERE @STEP@ <> p),
-        |pf AS (SELECT doc_id, p FROM (
-        |    SELECT doc_id, p, row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY it DESC) AS rn FROM fx) WHERE rn = 1),
-        |qf AS (SELECT doc_id, CASE WHEN qry IS NULL THEN ''
-        |    ELSE coalesce('?' || nullif(array_to_string(list_filter(
-        |      string_split(qry, '&'),
-        |      x -> len(x) > 0
-        |        AND NOT starts_with(split_part(x, '=', 1), 'utm_')
-        |        AND split_part(x, '=', 1) NOT IN
-        |          ('gclid','fbclid','msclkid','mc_eid','igshid','ref_src')),
-        |      '&'), ''), '') END AS q2
-        |  FROM a),
-        |hb AS (SELECT doc_id, CASE
-        |    WHEN isurl THEN lower(regexp_replace(regexp_replace(rauth,
-        |      '^.*@', ''), ':[0-9]+$', ''))
-        |    WHEN regexp_matches(s0, '^[A-Za-z0-9.-]+$')
-        |      THEN lower(regexp_replace(s0, ':[0-9]+$', ''))
-        |    ELSE NULL END AS host
-        |  FROM a),
-        |@PSL@,
-        |@REGHOST@,
-        |canon AS (SELECT a.doc_id,
-        |    CASE WHEN NOT isurl THEN s0
-        |         ELSE sch || '://' || auth || pf.p || qf.q2 END
-        |      AS url_canon
-        |  FROM a LEFT JOIN pf USING (doc_id)
-        |    JOIN qf USING (doc_id))""".stripMargin
-        .replace("@URL@", crawlUrlCaseSql)
-        .replace("@STEP@", step("p"))
-        .replace("@PSL@", pslCteSql)
-        .replace("@REGHOST@", regHostCtesSql)
-  }
-
-  /** Shared CTE chain for the p78/p79 product-quantization oracles:
-    * doubles, deterministic lowest-id codebook, per-subspace argmin
-    * with the (d2, code_id) tie order, squared L2 spelled exactly as
-    * the operator's fixed-order dot-product identity. */
-  private def pqOracleCtes: String = {
-    def ip(a: String, b: String) = s"list_inner_product($a, $b)"
-    def d2(a: String, b: String, j: Int): String = {
-      val lo = j * 16 + 1; val hi = j * 16 + 16
-      val sa = s"$a[$lo:$hi]"; val sb = s"$b[$lo:$hi]"
-      s"${ip(sa, sa)} - 2 * ${ip(sa, sb)} + ${ip(sb, sb)}"
-    }
-    val aCols = (0 until 4)
-      .map(j => s"    ${d2("e.v", "cb.cv", j)} AS d2_$j").mkString(",\n")
-    val cCtes = (0 until 4).map(j =>
-      s"""c$j AS (SELECT item_id, code_id FROM (
-         |  SELECT item_id, code_id, ROW_NUMBER() OVER (
-         |      PARTITION BY item_id ORDER BY d2_$j ASC, code_id ASC
-         |    ) AS rn FROM a) WHERE rn = 1)""".stripMargin).mkString(",\n")
-    val codeCols = (0 until 4)
-      .map(j => s"    CAST(c$j.code_id AS INT) AS code_$j").mkString(",\n")
-    val codeJoins = (1 until 4)
-      .map(j => s"  JOIN c$j USING (item_id)").mkString("\n")
-    s"""WITH e AS (SELECT vec_id,
-       |    list_transform(embedding, x -> x::DOUBLE) AS v
-       |  FROM embeddings),
-       |cb AS (SELECT vec_id AS code_id, v AS cv FROM e
-       |  ORDER BY vec_id LIMIT 8),
-       |a AS (SELECT e.vec_id AS item_id, cb.code_id,
-       |$aCols
-       |  FROM e CROSS JOIN cb),
-       |$cCtes,
-       |codes AS (SELECT c0.item_id,
-       |$codeCols
-       |  FROM c0
-       |$codeJoins)""".stripMargin
-  }
-
-  private def pqTopkOracleTail: String = {
-    def ip(a: String, b: String) = s"list_inner_product($a, $b)"
-    def d2(a: String, b: String, j: Int): String = {
-      val lo = j * 16 + 1; val hi = j * 16 + 16
-      val sa = s"$a[$lo:$hi]"; val sb = s"$b[$lo:$hi]"
-      s"${ip(sa, sa)} - 2 * ${ip(sa, sb)} + ${ip(sb, sb)}"
-    }
-    val dtCols = (0 until 4)
-      .map(j => s"    ${d2("q.qv", "cb.cv", j)} AS qd2_$j").mkString(",\n")
-    val dtJoins = (1 until 4).map(j =>
-      s"  JOIN dt d$j ON d$j.query_id = d0.query_id" +
-        s" AND d$j.code_id = c.code_$j").mkString("\n")
-    s""",
-       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-       |dt AS (SELECT q.query_id, CAST(cb.code_id AS INT) AS code_id,
-       |$dtCols
-       |  FROM q CROSS JOIN cb),
-       |sc AS (SELECT d0.query_id, c.item_id,
-       |    d0.qd2_0 + d1.qd2_1 + d2.qd2_2 + d3.qd2_3 AS adc
-       |  FROM codes c
-       |  JOIN dt d0 ON d0.code_id = c.code_0
-       |$dtJoins
-       |  WHERE d0.query_id <> c.item_id),
-       |r AS (SELECT query_id, item_id, adc,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY adc ASC, item_id ASC) AS rank
-       |  FROM sc)
-       |SELECT query_id, CAST(rank AS INT) AS rank, item_id,
-       |  round(adc, 6) AS adc6
-       |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** The direct-path BM25 SQL — shared verbatim by p34 (direct) and
-    * p81 (persisted inverted index): the two paths are defined to be
-    * bit-identical, so they hash against the same oracle. */
-  private val bm25DirectSql: String =
-    """WITH ws AS (SELECT doc_id,
-      |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-      |      x -> len(x) > 0) AS ws
-      |  FROM documents),
-      |f AS (SELECT doc_id, len(ws) AS dl,
-      |    len(list_filter(ws, x -> x = 'dup')) AS tf0,
-      |    len(list_filter(ws, x -> x = 'join')) AS tf1,
-      |    len(list_filter(ws, x -> x = 'spark')) AS tf2
-      |  FROM ws),
-      |st AS (SELECT count(*) AS n, avg(dl) AS avgdl,
-      |    sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-      |    sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-      |    sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-      |  FROM f),
-      |sc AS (SELECT doc_id, dl, tf0 + tf1 + tf2 AS tf_total,
-      |    ln(1 + (n - df0 + 0.5)/(df0 + 0.5)) * (tf0 * 2.2) /
-      |      (tf0 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-      |  + ln(1 + (n - df1 + 0.5)/(df1 + 0.5)) * (tf1 * 2.2) /
-      |      (tf1 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-      |  + ln(1 + (n - df2 + 0.5)/(df2 + 0.5)) * (tf2 * 2.2) /
-      |      (tf2 + 1.2 * (0.25 + 0.75 * dl / avgdl)) AS score
-      |  FROM f, st WHERE tf0 + tf1 + tf2 > 0)
-      |SELECT CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id)
-      |    AS INT) AS rank,
-      |  doc_id, CAST(dl AS BIGINT) AS dl,
-      |  CAST(tf_total AS BIGINT) AS tf_total
-      |FROM sc ORDER BY score DESC, doc_id LIMIT 20""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-    "p27_bpe_tokens" -> bpeEncodeOracle,
-    "p15_neardup_components" ->
-      """WITH RECURSIVE ws AS (SELECT doc_id,
-        |    list_filter(string_split(lower(text),' '), x -> len(x)>0) AS ws
-        |  FROM documents),
-        |sh0 AS (SELECT doc_id, list_distinct(list_transform(
-        |    range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]))
-        |    AS shingles FROM ws),
-        |sh AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS s
-        |  FROM sh0),
-        |pairs AS (SELECT a.doc_id id1, b.doc_id id2, a.nsh n1, b.nsh n2,
-        |    count(*) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1,2,3,4),
-        |good AS (SELECT id1, id2 FROM pairs
-        |  WHERE common::DOUBLE/(n1+n2-common) >= 0.5),
-        |sym AS (SELECT id1 AS a, id2 AS b FROM good
-        |  UNION ALL SELECT id2, id1 FROM good),
-        |reach AS (SELECT a, b FROM sym
-        |  UNION SELECT r.a, s2.b FROM reach r JOIN sym s2 ON r.b = s2.a)
-        |SELECT d.doc_id,
-        |  CAST(LEAST(d.doc_id, COALESCE(MIN(r.b), d.doc_id)) AS BIGINT)
-        |    AS component
-        |FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin,
-
-    "p17_ngram_repetition" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(string_split(lower(text),' '), x -> len(x)>0) AS ws
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(greatest(len(ws)-1, 0) AS BIGINT) AS n_ngrams,
-        |  CASE WHEN len(ws) > 1 THEN
-        |    1.0 - len(list_distinct(list_transform(range(1, len(ws)),
-        |      i -> ws[i]||' '||ws[i+1])))::DOUBLE / (len(ws)-1)
-        |  ELSE 0.0 END AS dup_frac
-        |FROM ws ORDER BY doc_id""".stripMargin,
-
-    "p18_graph_triangles" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(string_split(lower(text),' '), x -> len(x)>0) AS ws
-        |  FROM documents),
-        |sh0 AS (SELECT doc_id, list_distinct(list_transform(
-        |    range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]))
-        |    AS shingles FROM ws),
-        |sh AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS s
-        |  FROM sh0),
-        |cand AS (SELECT a.doc_id id1, b.doc_id id2, a.nsh n1, b.nsh n2,
-        |    count(*) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1,2,3,4),
-        |pairs AS (SELECT id1, id2 FROM cand
-        |  WHERE common::DOUBLE/(n1+n2-common) >= 0.5),
-        |sym AS (SELECT id1 AS a, id2 AS b FROM pairs
-        |  UNION ALL SELECT id2, id1 FROM pairs),
-        |tri AS (SELECT s1.a AS v, COUNT(*) AS t
-        |  FROM sym s1 JOIN sym s2 ON s1.a = s2.a AND s1.b < s2.b
-        |  JOIN pairs e ON e.id1 = s1.b AND e.id2 = s2.b
-        |  GROUP BY s1.a)
-        |SELECT d.doc_id, CAST(COALESCE(t.t, 0) AS BIGINT) AS triangles
-        |FROM documents d LEFT JOIN tri t ON t.v = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "p16_events_asof" ->
-      """WITH u AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN event_type='view' THEN 0 ELSE 1 END AS src,
-        |    CASE WHEN event_type='view' THEN event_id END AS vid
-        |  FROM events WHERE event_type IN ('view','purchase')),
-        |w AS (SELECT user_id, ts, event_id, src,
-        |    LAST_VALUE(vid IGNORE NULLS) OVER (PARTITION BY user_id
-        |      ORDER BY ts, src, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS view_id
-        |  FROM u)
-        |SELECT user_id, event_id AS purchase_id,
-        |  CAST(view_id AS BIGINT) AS view_id
-        |FROM w WHERE src = 1 ORDER BY purchase_id""".stripMargin,
-
-    "p19_decontaminate" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |g0 AS (SELECT doc_id, list_distinct(list_transform(
-        |    range(1, len(ws)-3),
-        |    i -> ('0x'||substr(md5(ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '
-        |      ||ws[i+3]||' '||ws[i+4]),1,16))::UBIGINT)) AS gs
-        |  FROM ws),
-        |ev AS (SELECT DISTINCT unnest(gs) AS h FROM g0
-        |  WHERE doc_id % 10 = 0),
-        |tr AS (SELECT doc_id, unnest(gs) AS h FROM g0
-        |  WHERE doc_id % 10 <> 0),
-        |hits AS (SELECT tr.doc_id, count(*) AS n_hits
-        |  FROM tr JOIN ev USING (h) GROUP BY tr.doc_id)
-        |SELECT d.doc_id, CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-        |  COALESCE(h.n_hits, 0) > 0 AS contaminated
-        |FROM documents d LEFT JOIN hits h USING (doc_id)
-        |WHERE d.doc_id % 10 <> 0 ORDER BY d.doc_id""".stripMargin,
-
-    // the two-phase bloom path is EXACT (bloom scan + semi-join
-    // confirmation), so the oracle is the same exact-decontamination
-    // SQL as p19 — the bloom is an executor-memory optimization, not a
-    // semantics change
-    "p28_decontaminate_bloom" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |g0 AS (SELECT doc_id, list_distinct(list_transform(
-        |    range(1, len(ws)-3),
-        |    i -> ('0x'||substr(md5(ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '
-        |      ||ws[i+3]||' '||ws[i+4]),1,16))::UBIGINT)) AS gs
-        |  FROM ws),
-        |ev AS (SELECT DISTINCT unnest(gs) AS h FROM g0
-        |  WHERE doc_id % 10 = 0),
-        |tr AS (SELECT doc_id, unnest(gs) AS h FROM g0
-        |  WHERE doc_id % 10 <> 0),
-        |hits AS (SELECT tr.doc_id, count(*) AS n_hits
-        |  FROM tr JOIN ev USING (h) GROUP BY tr.doc_id)
-        |SELECT d.doc_id, CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-        |  COALESCE(h.n_hits, 0) > 0 AS contaminated
-        |FROM documents d LEFT JOIN hits h USING (doc_id)
-        |WHERE d.doc_id % 10 <> 0 ORDER BY d.doc_id""".stripMargin,
-
-    "p20_pack_sequences" ->
-      s"""WITH tok AS (SELECT doc_id, $duckSubwordTok AS n_tok
-         |    FROM documents),
-         |c AS (SELECT doc_id, n_tok,
-         |    CAST(SUM(n_tok) OVER (ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) - n_tok AS strt
-         |  FROM tok)
-         |SELECT doc_id, n_tok, strt // 2048 AS bin_id,
-         |  strt % 2048 AS bin_offset
-         |FROM c ORDER BY doc_id""".stripMargin,
-
-    "p21_mix_budget" ->
-      s"""WITH tok AS (SELECT doc_id, lang, $duckSubwordTok AS n_tok
-         |    FROM documents),
-         |c AS (SELECT doc_id, lang, n_tok,
-         |    CAST(SUM(n_tok) OVER (PARTITION BY lang
-         |      ORDER BY md5(doc_id::VARCHAR || ':42')
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) AS cum
-         |  FROM tok)
-         |SELECT doc_id, lang, n_tok FROM c WHERE cum <= 3000
-         |ORDER BY doc_id""".stripMargin,
-
-    "p22_pii_redact" ->
-      s"""WITH p AS (SELECT doc_id,
-         |    text || ' contact user' || doc_id || '@example.com or call '
-         |      || (doc_id*7919+10000000) AS text
-         |  FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text, '${Curation.emailRe}'))
-         |    + len(regexp_extract_all(
-         |        regexp_replace(text, '${Curation.emailRe}', ' ', 'g'),
-         |        '${Curation.numRe}')) AS BIGINT) AS n_pii,
-         |  regexp_replace(regexp_replace(text,
-         |      '${Curation.emailRe}', '<EMAIL>', 'g'),
-         |    '${Curation.numRe}', '<NUM>', 'g') AS redacted
-         |FROM p ORDER BY doc_id""".stripMargin,
-
-    "p23_seeded_shuffle" ->
-      """WITH h AS (SELECT doc_id, md5(doc_id::VARCHAR || ':42') AS hex
-        |  FROM documents),
-        |s AS (SELECT doc_id, hex,
-        |    CAST((('0x'||substr(hex,1,15))::UBIGINT % 32) AS INT) AS shard
-        |  FROM h)
-        |SELECT doc_id, shard,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY hex)
-        |    AS BIGINT) AS pos
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    "p24_leakage_split" ->
-      """WITH b AS (SELECT doc_id, source,
-        |    ('0x'||substr(md5(source || ':42'),1,15))::UBIGINT % 1000000
-        |      AS bucket
-        |  FROM documents)
-        |SELECT doc_id, source,
-        |  CASE WHEN bucket < 800000 THEN 'train'
-        |       WHEN bucket < 900000 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM b ORDER BY doc_id""".stripMargin,
-
-    "p25_chunk_documents" ->
-      """WITH w AS (SELECT doc_id, string_split(text, chr(32)) AS ws
-        |  FROM documents),
-        |g AS (SELECT doc_id, unnest(list_transform(
-        |    range(0, greatest((len(ws)+63)//64, 1)),
-        |    c -> struct_pack(chunk_id := c,
-        |      chunk_text := array_to_string(ws[c*64+1:c*64+64], chr(32)),
-        |      n_tokens := len(ws[c*64+1:c*64+64])))) AS ch FROM w)
-        |SELECT doc_id, CAST(ch.chunk_id AS BIGINT) AS chunk_id,
-        |  ch.chunk_text AS chunk_text, CAST(ch.n_tokens AS BIGINT)
-        |    AS n_tokens
-        |FROM g ORDER BY doc_id, chunk_id""".stripMargin,
-
-    "p26_duplicated_spans" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |g AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |    range(1, greatest(len(ws)-12, 1)),
-        |    i -> ('0x'||substr(md5(array_to_string(ws[i:i+13], chr(32))),
-        |      1,16))::UBIGINT))) AS h
-        |  FROM ws),
-        |b AS (SELECT h FROM g GROUP BY h
-        |  HAVING count(*) BETWEEN 2 AND 50)
-        |SELECT a.doc_id AS id1, c.doc_id AS id2, count(*) AS n_shared
-        |FROM g a JOIN b USING (h) JOIN g c USING (h)
-        |WHERE a.doc_id < c.doc_id
-        |GROUP BY 1, 2 ORDER BY id1, id2""".stripMargin,
-
-    "p03_minhash_pairs" -> p03Oracle,
-    "p67_train_classifier" ->
-      p67Oracle(buckets = 64, iters = 3, fracBits = 20, lrShift = 26),
-    "p60_decontaminate_neardup" -> p60Oracle,
-    "p68_dedup_incremental" -> p68Oracle,
-    "p69_warc_records" -> p69Oracle,
-
-    // p58's winner-election SQL with the (snapshot, id, pos)
-    // precedence key (wk = snap·10^12 + doc_id encodes the lex order;
-    // doc ids are far below 10^12 at every SF) — the ALL-AT-ONCE
-    // recomputation the incremental path must equal
-    "p70_incr_line_dedup" ->
-      """WITH l AS (SELECT doc_id, doc_id % 2 AS snap, unnest(ls)
-        |    AS line, generate_subscripts(ls, 1) AS i
-        |  FROM (SELECT doc_id,
-        |    string_split(replace(text, ' ', chr(10)), chr(10)) AS ls
-        |  FROM documents)),
-        |w1 AS (SELECT line,
-        |    min(snap * 1000000000000 + doc_id) AS wk
-        |  FROM l GROUP BY line),
-        |w AS (SELECT l.line, l.doc_id AS wd, min(l.i) AS wi
-        |  FROM l JOIN w1 ON l.line = w1.line
-        |    AND l.snap * 1000000000000 + l.doc_id = w1.wk
-        |  GROUP BY l.line, l.doc_id),
-        |kept AS (SELECT l.doc_id, l.line, l.i FROM l
-        |  JOIN w ON l.line = w.line AND l.doc_id = w.wd AND l.i = w.wi),
-        |r AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept_lines,
-        |    md5(string_agg(line, chr(10) ORDER BY i)) AS deduped_md5
-        |  FROM kept GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  coalesce(r.n_kept_lines, 0) AS n_kept_lines,
-        |  coalesce(r.deduped_md5, md5('')) AS deduped_md5
-        |FROM documents d LEFT JOIN r USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-    // one UNION ALL branch per profiled column, identical statistics
-    "p61_table_profile" ->
-      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
-        .map { c =>
-          s"""SELECT '$c' AS col_name,
-             |  CAST(count(*) FILTER ($c IS NULL) AS BIGINT) AS n_nulls,
-             |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
-             |  CAST(min($c) AS VARCHAR) AS min_s,
-             |  CAST(max($c) AS VARCHAR) AS max_s
-             |FROM orders""".stripMargin
-        }.mkString("", "\nUNION ALL\n", "\nORDER BY col_name"),
-    // p32's LM counting replayed, then exact integer rank bucketing:
-    // key = -(sum_c12*10^6 // n_bigrams), row_number per lang, bucket
-    // by (rank-1)*3 // n, within-bucket rank via ceil(b*n/3), quota 5
-    "p62_perplexity_buckets" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |bg AS (SELECT doc_id, unnest(list_transform(range(1, len(ws)),
-        |    i -> {'pair': ws[i] || ' ' || ws[i+1]})) AS u
-        |  FROM ws),
-        |pairs AS (SELECT doc_id, u.pair AS pair FROM bg),
-        |tb AS (SELECT pair, count(*) AS c12 FROM pairs
-        |  WHERE doc_id % 10 <> 0 GROUP BY 1),
-        |agg AS (SELECT p.doc_id, count(*) AS n_bigrams,
-        |    sum(coalesce(tb.c12, 0)) AS sum_c12
-        |  FROM pairs p LEFT JOIN tb USING (pair)
-        |  WHERE p.doc_id % 10 = 0 GROUP BY 1),
-        |scored AS (SELECT d.doc_id, d.lang,
-        |    CAST(coalesce(n_bigrams, 0) AS BIGINT) AS n_bigrams,
-        |    CAST(coalesce(sum_c12, 0) AS BIGINT) AS sum_c12
-        |  FROM documents d LEFT JOIN agg USING (doc_id)
-        |  WHERE d.doc_id % 10 = 0),
-        |keyed AS (SELECT *,
-        |    0 - ((sum_c12 * 1000000) // greatest(n_bigrams, 1))
-        |      AS ppl_proxy
-        |  FROM scored),
-        |ranked AS (SELECT *,
-        |    ROW_NUMBER() OVER (PARTITION BY lang
-        |      ORDER BY ppl_proxy, doc_id) AS rank_in_group,
-        |    COUNT(*) OVER (PARTITION BY lang) AS n_in_group
-        |  FROM keyed),
-        |bk AS (SELECT *,
-        |    ((rank_in_group - 1) * 3) // n_in_group AS bucket
-        |  FROM ranked),
-        |qr AS (SELECT *, rank_in_group -
-        |    ((bucket * n_in_group + 2) // 3) AS bucket_rank FROM bk)
-        |SELECT doc_id, lang, CAST(ppl_proxy AS BIGINT) AS ppl_proxy,
-        |  CAST(rank_in_group AS BIGINT) AS rank_in_group,
-        |  CAST(n_in_group AS BIGINT) AS n_in_group,
-        |  CAST(bucket AS BIGINT) AS bucket,
-        |  CASE bucket WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
-        |    ELSE 'tail' END AS bucket_name,
-        |  CAST(bucket_rank AS BIGINT) AS bucket_rank
-        |FROM qr WHERE bucket_rank <= 5 ORDER BY doc_id""".stripMargin,
-    "p04_simhash_pairs" -> p04Oracle,
-    "p10_embed_lsh" -> p10Oracle,
-    "p14_embed_ivf" -> p14Oracle,
-    "p01_dedup_exact" ->
-      """SELECT doc_id, n_chars FROM (
-        |  SELECT doc_id, n_chars,
-        |    ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-        |  FROM documents) WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    "p02_ngram_jaccard" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(string_split(lower(text),' '), x -> len(x)>0) AS ws
-        |  FROM documents),
-        |sh0 AS (SELECT doc_id, list_distinct(list_transform(
-        |    range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]))
-        |    AS shingles FROM ws),
-        |sh AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS s
-        |  FROM sh0),
-        |pairs AS (SELECT a.doc_id id1, b.doc_id id2, a.nsh n1, b.nsh n2,
-        |    count(*) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1,2,3,4)
-        |SELECT id1, id2, common::DOUBLE/(n1+n2-common) AS jaccard
-        |FROM pairs WHERE common::DOUBLE/(n1+n2-common) >= 0.5
-        |ORDER BY id1, id2""".stripMargin,
-
-    "p05_fingerprint_tokens" ->
-      """SELECT doc_id,
-        |  md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
-        |  len(list_filter(string_split(lower(text),' '), w -> len(w)>0))
-        |    AS n_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "p06_quality" ->
-      """SELECT doc_id,
-        |  len(list_filter(string_split(lower(text),' '), w -> len(w)>0))
-        |    AS n_tokens,
-        |  (len(text) - len(regexp_replace(text, '[[:punct:]]', '', 'g')))
-        |    ::DOUBLE / greatest(len(text), 1) AS punct_ratio,
-        |  (len(text) - len(regexp_replace(text, '[0-9]', '', 'g')))
-        |    ::DOUBLE / greatest(len(text), 1) AS digit_ratio,
-        |  (CASE WHEN len(list_filter(string_split(lower(text),' '),
-        |      w -> len(w)>0)) BETWEEN 5 AND 100000
-        |    THEN 1.0 ELSE 0.2 END)
-        |  * (1.0 - least((len(text) - len(regexp_replace(text,
-        |      '[[:punct:]]', '', 'g')))::DOUBLE / greatest(len(text),1)*2,
-        |      1.0))
-        |  * (1.0 - least((len(text) - len(regexp_replace(text, '[0-9]',
-        |      '', 'g')))::DOUBLE / greatest(len(text),1)*2, 1.0))
-        |    AS quality_score
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "p07_langid" ->
-      """WITH w AS (
-        |  SELECT doc_id, text,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, text,
-        |    len(list_filter(ws, x -> list_contains(['der','die','das','und','ist','nicht','mit','ein','eine','zu','den','von','im','auf','für'], x)))::DOUBLE / greatest(len(ws),1) AS r_de,
-        |    len(list_filter(ws, x -> list_contains(['the','and','of','to','a','in','is','that','it','for','was','on','are','with','as'], x)))::DOUBLE / greatest(len(ws),1) AS r_en,
-        |    len(list_filter(ws, x -> list_contains(['el','la','los','las','y','es','un','una','de','que','no','en','por','para','con'], x)))::DOUBLE / greatest(len(ws),1) AS r_es,
-        |    len(list_filter(ws, x -> list_contains(['le','la','les','et','est','un','une','des','du','que','pas','pour','dans','qui','sur'], x)))::DOUBLE / greatest(len(ws),1) AS r_fr,
-        |    (len(text) - len(regexp_replace(text, '[\x{4e00}-\x{9fff}]', '', 'g')))::DOUBLE / greatest(len(text),1) AS cjk
-        |  FROM w),
-        |f AS (
-        |  SELECT doc_id, cjk,
-        |    CASE WHEN r_de > 0.04 THEN r_de ELSE 0.04 END AS s1,
-        |    CASE WHEN r_de > 0.04 THEN 'de' ELSE 'en' END AS l1,
-        |    r_en, r_es, r_fr FROM r),
-        |f2 AS (SELECT doc_id, cjk, r_es, r_fr,
-        |    CASE WHEN r_en > s1 THEN r_en ELSE s1 END AS s2,
-        |    CASE WHEN r_en > s1 THEN 'en' ELSE l1 END AS l2 FROM f),
-        |f3 AS (SELECT doc_id, cjk, r_fr,
-        |    CASE WHEN r_es > s2 THEN r_es ELSE s2 END AS s3,
-        |    CASE WHEN r_es > s2 THEN 'es' ELSE l2 END AS l3 FROM f2),
-        |f4 AS (SELECT doc_id, cjk,
-        |    CASE WHEN r_fr > s3 THEN 'fr' ELSE l3 END AS l4 FROM f3)
-        |SELECT doc_id, CASE WHEN cjk > 0.05 THEN 'zh' ELSE l4 END
-        |  AS lang_pred
-        |FROM f4 ORDER BY doc_id""".stripMargin,
-
-    "p08_subword_count" ->
-      """SELECT doc_id, CAST(list_sum(list_transform(
-        |    list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-        |      p -> len(p) > 0),
-        |    p -> greatest(CAST(ceil(len(p)/4.0) AS BIGINT), 1)))
-        |  AS BIGINT) AS n_subwords
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "p09_embed_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qvec
-        |  FROM embeddings WHERE vec_id < 5),
-        |scored AS (SELECT q.query_id, e.vec_id AS item_id,
-        |    list_cosine_similarity(q.qvec, e.embedding) AS score
-        |  FROM q CROSS JOIN embeddings e WHERE e.vec_id <> q.query_id),
-        |ranked AS (SELECT query_id, item_id,
-        |    ROW_NUMBER() OVER (PARTITION BY query_id
-        |      ORDER BY score DESC, item_id ASC) AS rank
-        |  FROM scored)
-        |SELECT query_id, rank, item_id FROM ranked WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    "p12_multimodal_meta" ->
-      """WITH m AS (SELECT doc_id, text, md5(text) AS h FROM documents)
-        |SELECT doc_id AS media_id,
-        |  CAST(64 + ('0x'||substr(h,1,2))::BIGINT
-        |    + 256 * (('0x'||substr(h,3,2))::BIGINT % 4) AS BIGINT) AS width,
-        |  CAST(64 + ('0x'||substr(h,5,2))::BIGINT
-        |    + 256 * (('0x'||substr(h,7,2))::BIGINT % 4) AS BIGINT) AS height,
-        |  3 AS channels,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  substr(h, 1, 8) AS fp_prefix
-        |FROM m ORDER BY media_id""".stripMargin,
-
-    "p13_embed_neardup" ->
-      """WITH d AS (SELECT vec_id,
-        |    list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings)
-        |SELECT a.vec_id AS id1, b.vec_id AS id2,
-        |  round(list_inner_product(a.v, b.v) /
-        |    (sqrt(list_inner_product(a.v, a.v)) *
-        |     sqrt(list_inner_product(b.v, b.v))), 6) AS cos6
-        |FROM d a JOIN d b ON a.vec_id < b.vec_id
-        |WHERE list_inner_product(a.v, b.v) /
-        |  (sqrt(list_inner_product(a.v, a.v)) *
-        |   sqrt(list_inner_product(b.v, b.v))) >= 0.4
-        |ORDER BY id1, id2""".stripMargin,
-
-    "p11_events_sessionize" ->
-      """WITH g AS (SELECT user_id, event_id, ts,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |      OR epoch_us(ts) - epoch_us(LAG(ts) OVER w) > 1800000000
-        |      THEN 1 ELSE 0 END AS new_sess
-        |  FROM events WINDOW w AS (PARTITION BY user_id
-        |    ORDER BY ts, event_id)),
-        |s AS (SELECT user_id, ts,
-        |    SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_id
-        |  FROM g)
-        |SELECT user_id, CAST(sess_id AS BIGINT) AS sess_id,
-        |  COUNT(*) AS n_events, MIN(ts) AS sess_start
-        |FROM s GROUP BY user_id, sess_id
-        |ORDER BY user_id, sess_id""".stripMargin,
-
-    "p29_temperature_mix" ->
-      """WITH cnt AS (SELECT lang, COUNT(*)::DOUBLE AS c
-        |  FROM documents GROUP BY lang),
-        |w AS (SELECT lang, POW(c, 0.5) AS pw, c FROM cnt),
-        |tot AS (SELECT SUM(pw) AS s FROM w),
-        |r AS (SELECT lang, 600.0 * pw / s / c AS rate FROM w, tot),
-        |d AS (SELECT doc_id, dd.lang,
-        |    CAST(FLOOR(rate) AS BIGINT) +
-        |    CASE WHEN ('0x'||substr(md5(doc_id::VARCHAR || ':42'),1,15))
-        |        ::UBIGINT % 1000000
-        |      < CAST(FLOOR((rate - FLOOR(rate)) * 1e6) AS BIGINT)
-        |      THEN 1 ELSE 0 END AS n
-        |  FROM documents dd JOIN r USING (lang))
-        |SELECT doc_id, lang, unnest(range(n)) AS copy
-        |FROM d ORDER BY doc_id, copy""".stripMargin,
-
-    "p33_stratified_sample" ->
-      """SELECT doc_id, lang, rank FROM (
-        |  SELECT doc_id, lang, CAST(ROW_NUMBER() OVER (
-        |    PARTITION BY lang ORDER BY md5(doc_id::VARCHAR || ':42'))
-        |    AS BIGINT) AS rank
-        |  FROM documents) WHERE rank <= 10 ORDER BY doc_id""".stripMargin,
-
-    "p32_ngram_lm" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |bg AS (SELECT doc_id, unnest(list_transform(range(1, len(ws)),
-        |    i -> {'w1': ws[i], 'pair': ws[i] || ' ' || ws[i+1]})) AS u
-        |  FROM ws),
-        |pairs AS (SELECT doc_id, u.w1 AS w1, u.pair AS pair FROM bg),
-        |tb AS (SELECT pair, count(*) AS c12 FROM pairs
-        |  WHERE doc_id % 10 <> 0 GROUP BY 1),
-        |tu AS (SELECT w1, count(*) AS c1 FROM (
-        |    SELECT doc_id, unnest(ws) AS w1 FROM ws)
-        |  WHERE doc_id % 10 <> 0 GROUP BY 1),
-        |agg AS (SELECT p.doc_id, count(*) AS n_bigrams,
-        |    sum(CASE WHEN tb.c12 IS NULL THEN 1 ELSE 0 END) AS n_oov,
-        |    sum(coalesce(tb.c12, 0)) AS sum_c12,
-        |    sum(coalesce(tu.c1, 0)) AS sum_c1
-        |  FROM pairs p LEFT JOIN tb USING (pair) LEFT JOIN tu USING (w1)
-        |  WHERE p.doc_id % 10 = 0 GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(n_bigrams, 0) AS BIGINT) AS n_bigrams,
-        |  CAST(coalesce(n_oov, 0) AS BIGINT) AS n_oov,
-        |  CAST(coalesce(sum_c12, 0) AS BIGINT) AS sum_c12,
-        |  CAST(coalesce(sum_c1, 0) AS BIGINT) AS sum_c1
-        |FROM documents d LEFT JOIN agg USING (doc_id)
-        |WHERE d.doc_id % 10 = 0 ORDER BY d.doc_id""".stripMargin,
-
-    // order-3 stupid backoff replayed on gram STRINGS (Spark joins on
-    // 64-bit portable hashes — collision-approximate like p03/p32):
-    // numerator = count of the k-gram ending at position i, denominator
-    // = count of its (k-1)-prefix (same start), level = highest hit,
-    // steps = min(3, i) - level (OOV: min(3, i) - 1)
-    "p66_lm_backoff" -> lmBackoffOracle(minCount3 = 1),
-
-    // the pruned variant: identical replay, but the order-3 count
-    // table drops rows below minCount (KenLM singleton pruning) — an
-    // eval trigram over a pruned train trigram backs off instead of
-    // hitting. Orders 1–2 stay unpruned, exactly as the operator.
-    "p71_lm_backoff_pruned" -> lmBackoffOracle(minCount3 = 2),
-
-    // identical replay to p71: the gate saves the pruned model to disk
-    // and rescores through it, so a hash match IS the proof that the
-    // persisted-model path reproduces the in-line path bit-for-bit
-    "p72_lm_saved_model" -> lmBackoffOracle(minCount3 = 2),
-    // the 'zz' branch scores against NO model: every count join
-    // misses (the oracle's LEFT JOINs go all-NULL), so lvl=0, num=0,
-    // den=0, steps=topk−1 per token — the engine's documented
-    // degenerate path, hash-checked rather than spec-asserted
-    "p73_lm_perlang" -> lmPerLangOracle(minCount3 = 2,
-      evSql = """SELECT doc_id * 3 AS sid, lang, ws FROM ws0
-        |    WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id * 3 + 1 AS sid, 'en' AS lang, ws FROM ws0
-        |    WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id * 3 + 2 AS sid, 'zz' AS lang, ws FROM ws0
-        |    WHERE doc_id % 10 = 0""".stripMargin,
-      tailSql = """SELECT sid, lang, n_tokens, n_hit3, n_hit2, n_hit1,
-        |  n_oov, sum_num, sum_den, sum_steps
-        |FROM stats ORDER BY sid""".stripMargin),
-    // append == retrain-all: the oracle recomputes every language's
-    // tables from the full train slice AT ONCE — the engine side
-    // built the model incrementally (save without 'en', then append
-    // 'en'), so a hash match is the lifecycle equivalence proof
-    "p76_lm_addlang" -> lmPerLangOracle(minCount3 = 2,
-      evSql =
-        "SELECT doc_id AS sid, lang, ws FROM ws0 WHERE doc_id % 10 = 0",
-      tailSql = """SELECT sid AS doc_id, lang, n_tokens, n_hit3,
-        |  n_hit2, n_hit1, n_oov, sum_num, sum_den, sum_steps
-        |FROM stats ORDER BY doc_id""".stripMargin),
-
-    "p74_lm_perlang_buckets" -> lmPerLangOracle(minCount3 = 2,
-      evSql =
-        "SELECT doc_id AS sid, lang, ws FROM ws0 WHERE doc_id % 10 = 0",
-      tailSql = """, keyed AS (SELECT sid, lang,
-        |    (sum_steps * 1000000) // greatest(n_tokens, 1)
-        |      AS ppl_proxy
-        |  FROM stats),
-        |ranked AS (SELECT *,
-        |    ROW_NUMBER() OVER (PARTITION BY lang
-        |      ORDER BY ppl_proxy, sid) AS rank_in_group,
-        |    COUNT(*) OVER (PARTITION BY lang) AS n_in_group
-        |  FROM keyed),
-        |bk AS (SELECT *,
-        |    ((rank_in_group - 1) * 3) // n_in_group AS bucket
-        |  FROM ranked),
-        |qr AS (SELECT *, rank_in_group -
-        |    ((bucket * n_in_group + 2) // 3) AS bucket_rank FROM bk)
-        |SELECT sid AS doc_id, lang,
-        |  CAST(ppl_proxy AS BIGINT) AS ppl_proxy,
-        |  CAST(rank_in_group AS BIGINT) AS rank_in_group,
-        |  CAST(n_in_group AS BIGINT) AS n_in_group,
-        |  CAST(bucket AS BIGINT) AS bucket,
-        |  CASE bucket WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
-        |    ELSE 'tail' END AS bucket_name,
-        |  CAST(bucket_rank AS BIGINT) AS bucket_rank
-        |FROM qr WHERE bucket_rank <= 5
-        |ORDER BY doc_id""".stripMargin),
-
-    "p31_scrub_spans" ->
-      """WITH wsl AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |wso AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |g AS (SELECT doc_id,
-        |    unnest(list_transform(range(1, greatest(len(ws)-11, 1)),
-        |      i -> {'pos': i - 1,
-        |            'h': ('0x'||substr(md5(array_to_string(ws[i:i+12],
-        |              chr(32))),1,16))::UBIGINT})) AS u
-        |  FROM wsl),
-        |gp AS (SELECT doc_id, u.pos AS pos, u.h AS h FROM g),
-        |viral AS (SELECT h FROM (SELECT DISTINCT doc_id, h FROM gp)
-        |  GROUP BY h HAVING count(*) >= 2),
-        |cov AS (SELECT doc_id, list_sort(list(pos)) AS starts
-        |  FROM gp JOIN viral USING (h) GROUP BY doc_id),
-        |clean AS (SELECT w.doc_id,
-        |    coalesce(array_to_string(list_filter(w.ws,
-        |      (t, i) -> len(list_filter(coalesce(c.starts,
-        |        CAST([] AS BIGINT[])),
-        |        s -> s <= i - 1 AND i - 1 < s + 13)) = 0), chr(32)), '')
-        |      AS clean_text,
-        |    CAST(len(list_filter(w.ws,
-        |      (t, i) -> len(list_filter(coalesce(c.starts,
-        |        CAST([] AS BIGINT[])),
-        |        s -> s <= i - 1 AND i - 1 < s + 13)) > 0)) AS BIGINT)
-        |      AS n_tokens_dropped
-        |  FROM wso w LEFT JOIN cov c USING (doc_id))
-        |SELECT doc_id, clean_text, n_tokens_dropped FROM clean
-        |ORDER BY doc_id""".stripMargin,
-
-    "p30_curate_corpus" ->
-      """WITH dd AS (SELECT doc_id, text FROM (
-        |    SELECT doc_id, text,
-        |      ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-        |    FROM documents) WHERE rn = 1),
-        |q AS (SELECT doc_id, text,
-        |    len(list_filter(string_split(lower(text),' '), w -> len(w)>0))
-        |      AS n_tokens,
-        |    (CASE WHEN len(list_filter(string_split(lower(text),' '),
-        |        w -> len(w)>0)) BETWEEN 5 AND 100000
-        |      THEN 1.0 ELSE 0.2 END)
-        |    * (1.0 - least((len(text) - len(regexp_replace(text,
-        |        '[[:punct:]]', '', 'g')))::DOUBLE / greatest(len(text),1)*2,
-        |        1.0))
-        |    * (1.0 - least((len(text) - len(regexp_replace(text, '[0-9]',
-        |        '', 'g')))::DOUBLE / greatest(len(text),1)*2, 1.0))
-        |      AS score
-        |  FROM dd),
-        |tr AS (SELECT doc_id, text, n_tokens FROM q
-        |  WHERE score >= 0.5 AND doc_id % 10 <> 0),
-        |ws AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |ev AS (SELECT DISTINCT unnest(list_distinct(list_transform(
-        |    range(1, len(ws)-3),
-        |    i -> ('0x'||substr(md5(ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '
-        |      ||ws[i+3]||' '||ws[i+4]),1,16))::UBIGINT))) AS h
-        |  FROM ws),
-        |tg AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM tr),
-        |th AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |    range(1, len(ws)-3),
-        |    i -> ('0x'||substr(md5(ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '
-        |      ||ws[i+3]||' '||ws[i+4]),1,16))::UBIGINT))) AS h
-        |  FROM tg),
-        |bad AS (SELECT DISTINCT th.doc_id FROM th JOIN ev USING (h))
-        |SELECT tr.doc_id, CAST(tr.n_tokens AS BIGINT) AS n_tokens
-        |FROM tr WHERE tr.doc_id NOT IN (SELECT doc_id FROM bad)
-        |ORDER BY tr.doc_id""".stripMargin,
-
-    "p34_bm25_topk" -> bm25DirectSql,
-
-    // the index path must reproduce the DIRECT path bit-for-bit, so
-    // its oracle IS the direct path's SQL
-    "p81_bm25_index" -> bm25DirectSql,
-
-    // append == fresh build == direct rescans: same oracle again
-    "p83_bm25_index_append" -> bm25DirectSql,
-
-    "p84_token_fertility" ->
-      s"""WITH d AS (SELECT lang,
-         |    CAST(octet_length(encode(text)) AS BIGINT) AS b,
-         |    $duckSubwordTok AS t
-         |  FROM documents),
-         |a AS (SELECT lang, count(*) AS n_docs,
-         |    CAST(sum(b) AS BIGINT) AS total_bytes,
-         |    CAST(sum(t) AS BIGINT) AS total_tokens
-         |  FROM d GROUP BY lang)
-         |SELECT lang, n_docs, total_bytes, total_tokens,
-         |  CASE WHEN total_tokens > 0
-         |    THEN total_bytes::DOUBLE / total_tokens::DOUBLE
-         |    ELSE NULL END AS bytes_per_token
-         |FROM a ORDER BY lang""".stripMargin,
-
-    "p85_url_latest_wins" ->
-      """WITH d AS (SELECT doc_id,
-        |    'https://example.com/page/' || (doc_id % 50) AS url,
-        |    doc_id * 7 % 11 AS version
-        |  FROM documents),
-        |r AS (SELECT doc_id, url, ROW_NUMBER() OVER (
-        |    PARTITION BY url ORDER BY version DESC, doc_id DESC)
-        |    AS rn FROM d)
-        |SELECT doc_id, url, rn = 1 AS kept
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    "p82_soft_filter" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |f AS (SELECT doc_id,
-        |    len(list_filter(ws, x -> x = 'spark')) AS tf0,
-        |    len(list_filter(ws, x -> x = 'data')) AS tf1,
-        |    len(list_filter(ws, x -> x = 'join')) AS tf2,
-        |    len(list_filter(ws, x -> x = 'slow')) AS tf3,
-        |    len(list_filter(ws, x -> x = 'dup')) AS tf4
-        |  FROM ws),
-        |s AS (SELECT doc_id,
-        |    -0.5 + tf0 * 0.5 + tf1 * 0.25 + tf2 * 0.25
-        |      + tf3 * -0.5 + tf4 * -1.5 AS score
-        |  FROM f),
-        |c AS (SELECT doc_id, score,
-        |    CAST(floor(least(greatest(score, 0), 1) * 1048576)
-        |      AS BIGINT) AS keep_thr,
-        |    ('0x' || substr(md5(doc_id::VARCHAR || ':42'), 1, 15))
-        |      ::BIGINT % 1048576 AS u
-        |  FROM s)
-        |SELECT doc_id, score, keep_thr, u, u < keep_thr AS kept
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // hybrid RRF: p34's BM25 chain and p09's dense chain at k=50, full
-    // outer join on doc, 1/(60+rank) contributions added sparse-first
-    // (the operator's fixed fold order)
-    "p77_hybrid_rrf" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |f AS (SELECT doc_id, len(ws) AS dl,
-        |    len(list_filter(ws, x -> x = 'dup')) AS tf0,
-        |    len(list_filter(ws, x -> x = 'join')) AS tf1,
-        |    len(list_filter(ws, x -> x = 'spark')) AS tf2
-        |  FROM ws),
-        |st AS (SELECT count(*) AS n, avg(dl) AS avgdl,
-        |    sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-        |    sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-        |    sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-        |  FROM f),
-        |sc AS (SELECT doc_id,
-        |    ln(1 + (n - df0 + 0.5)/(df0 + 0.5)) * (tf0 * 2.2) /
-        |      (tf0 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |  + ln(1 + (n - df1 + 0.5)/(df1 + 0.5)) * (tf1 * 2.2) /
-        |      (tf1 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |  + ln(1 + (n - df2 + 0.5)/(df2 + 0.5)) * (tf2 * 2.2) /
-        |      (tf2 + 1.2 * (0.25 + 0.75 * dl / avgdl)) AS score
-        |  FROM f, st WHERE tf0 + tf1 + tf2 > 0),
-        |bm AS (SELECT doc_id, CAST(ROW_NUMBER() OVER (
-        |      ORDER BY score DESC, doc_id) AS INT) AS rank_0
-        |  FROM sc ORDER BY score DESC, doc_id LIMIT 50),
-        |qv AS (SELECT embedding AS q FROM embeddings WHERE vec_id = 0),
-        |ds AS (SELECT e.vec_id AS doc_id,
-        |    list_cosine_similarity(qv.q, e.embedding) AS cs
-        |  FROM embeddings e CROSS JOIN qv WHERE e.vec_id <> 0),
-        |dn AS (SELECT doc_id, CAST(ROW_NUMBER() OVER (
-        |      ORDER BY cs DESC, doc_id) AS INT) AS rank_1
-        |  FROM ds ORDER BY cs DESC, doc_id LIMIT 50),
-        |fu AS (SELECT COALESCE(bm.doc_id, dn.doc_id) AS doc_id,
-        |    bm.rank_0, dn.rank_1,
-        |    COALESCE(CAST(1 AS DOUBLE) / (60 + bm.rank_0), 0)
-        |      + COALESCE(CAST(1 AS DOUBLE) / (60 + dn.rank_1), 0)
-        |      AS score,
-        |    CAST(CASE WHEN bm.rank_0 IS NOT NULL THEN 1 ELSE 0 END
-        |      + CASE WHEN dn.rank_1 IS NOT NULL THEN 1 ELSE 0 END
-        |      AS INT) AS n_lists
-        |  FROM bm FULL OUTER JOIN dn ON bm.doc_id = dn.doc_id)
-        |SELECT CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id)
-        |    AS INT) AS rank,
-        |  doc_id, n_lists, COALESCE(rank_0, -1) AS rank_0,
-        |  COALESCE(rank_1, -1) AS rank_1, round(score, 6) AS rrf6
-        |FROM fu ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-
-    "p78_embed_pq_codes" ->
-      (pqOracleCtes + "\nSELECT * FROM codes ORDER BY item_id"),
-
-    "p79_embed_pq_topk" -> (pqOracleCtes + pqTopkOracleTail),
-
-    "p80_top_ngrams" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |g AS (SELECT doc_id, unnest(list_transform(
-        |    range(1, len(ws) - 1),
-        |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS ngram
-        |  FROM ws),
-        |agg AS (SELECT ngram, count(*) AS total_count,
-        |    count(DISTINCT doc_id) AS n_docs
-        |  FROM g GROUP BY ngram)
-        |SELECT CAST(ROW_NUMBER() OVER (ORDER BY total_count DESC,
-        |    ngram ASC) AS INT) AS rank,
-        |  ngram, CAST(n_docs AS BIGINT) AS n_docs,
-        |  CAST(total_count AS BIGINT) AS total_count
-        |FROM agg ORDER BY total_count DESC, ngram ASC
-        |LIMIT 20""".stripMargin,
-
-    "p35_linear_classifier" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |f AS (SELECT doc_id,
-        |    len(list_filter(ws, x -> x = 'spark')) AS tf0,
-        |    len(list_filter(ws, x -> x = 'data')) AS tf1,
-        |    len(list_filter(ws, x -> x = 'join')) AS tf2,
-        |    len(list_filter(ws, x -> x = 'slow')) AS tf3,
-        |    len(list_filter(ws, x -> x = 'dup')) AS tf4
-        |  FROM ws)
-        |SELECT doc_id,
-        |  CAST(tf0 + tf1 + tf2 + tf3 + tf4 AS BIGINT) AS n_hits,
-        |  -0.5 + tf0 * 0.5 + tf1 * 0.25 + tf2 * 0.25
-        |    + tf3 * -0.5 + tf4 * -1.5 AS score,
-        |  (-0.5 + tf0 * 0.5 + tf1 * 0.25 + tf2 * 0.25
-        |    + tf3 * -0.5 + tf4 * -1.5) >= 0 AS label
-        |FROM f ORDER BY doc_id""".stripMargin,
-
-    // SemDeDup: same deterministic lowest-id quantizer as the p14 oracle,
-    // within-cell pairwise cosine, drop any member with a lower-id
-    // cluster-mate at >= threshold
-    "p36_semantic_dedup" -> {
-      def cos(a: String, b: String): String =
-        s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * " +
-          s"sqrt(list_inner_product($b, $b)))"
-      s"""WITH e AS (SELECT vec_id,
-         |    list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-         |cent AS (SELECT vec_id AS cell_id, v AS cvec FROM e
-         |  ORDER BY vec_id LIMIT 16),
-         |cells AS (SELECT cell_id, vec_id, v FROM (
-         |  SELECT c.cell_id, i.vec_id, i.v,
-         |    ROW_NUMBER() OVER (PARTITION BY i.vec_id
-         |      ORDER BY ${cos("i.v", "c.cvec")} DESC, c.cell_id ASC) AS rn
-         |  FROM e i CROSS JOIN cent c) WHERE rn = 1),
-         |dropped AS (SELECT DISTINCT b.vec_id FROM cells a JOIN cells b
-         |  ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
-         |  WHERE ${cos("a.v", "b.v")} >= 0.4)
-         |SELECT c.vec_id, CAST(c.cell_id AS BIGINT) AS cell_id,
-         |  d.vec_id IS NULL AS kept
-         |FROM cells c LEFT JOIN dropped d ON c.vec_id = d.vec_id
-         |ORDER BY c.vec_id""".stripMargin
-    },
-
-    // contamination overlap fraction: p19's portable 5-gram hash sets,
-    // fraction instead of boolean
-    "p37_overlap_fraction" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |g0 AS (SELECT doc_id, list_distinct(list_transform(
-        |    range(1, len(ws)-3),
-        |    i -> ('0x'||substr(md5(ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '
-        |      ||ws[i+3]||' '||ws[i+4]),1,16))::UBIGINT)) AS gs
-        |  FROM ws),
-        |ev AS (SELECT DISTINCT unnest(gs) AS h FROM g0
-        |  WHERE doc_id % 10 = 0),
-        |tr AS (SELECT doc_id, unnest(gs) AS h FROM g0
-        |  WHERE doc_id % 10 <> 0),
-        |st AS (SELECT tr.doc_id, count(*) AS n_grams, count(ev.h) AS n_hits
-        |  FROM tr LEFT JOIN ev ON tr.h = ev.h GROUP BY tr.doc_id)
-        |SELECT d.doc_id, CAST(COALESCE(st.n_grams, 0) AS BIGINT) AS n_grams,
-        |  CAST(COALESCE(st.n_hits, 0) AS BIGINT) AS n_hits,
-        |  CASE WHEN COALESCE(st.n_grams, 0) = 0 THEN 0.0
-        |    ELSE COALESCE(st.n_hits, 0)::DOUBLE / st.n_grams END
-        |    AS overlap_frac
-        |FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
-        |WHERE d.doc_id % 10 <> 0 ORDER BY d.doc_id""".stripMargin,
-
-    // normalization pipeline replayed in DuckDB: same dirty suffix built
-    // from chr() codepoints (decomposed e+0301, BEL, composed e9, tab),
-    // nfc_normalize + identical RE2 passes
-    "p38_normalize_text" ->
-      """WITH dirty AS (SELECT doc_id, text || '  cafe' || chr(769) ||
-        |    chr(7) || ' ' || chr(233) || 'tude' || chr(9) AS t
-        |  FROM documents),
-        |norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(
-        |    nfc_normalize(t),
-        |    '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-        |    '\s+', ' ', 'g')) AS n FROM dirty)
-        |SELECT doc_id, md5(n) AS norm_md5, CAST(len(n) AS BIGINT) AS norm_len
-        |FROM norm ORDER BY doc_id""".stripMargin,
-
-    // corpus profile: exact percentiles via quantile_cont (the same
-    // linear-interpolation definition as Spark's percentile)
-    "p39_corpus_stats" ->
-      """WITH d AS (SELECT lang,
-        |    CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      w -> len(w) > 0)) AS BIGINT) AS n_tok,
-        |    CAST(len(text) AS BIGINT) AS n_chars
-        |  FROM documents)
-        |SELECT lang, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_tok) AS BIGINT) AS total_tokens,
-        |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-        |  MIN(n_tok) AS min_tokens, MAX(n_tok) AS max_tokens,
-        |  quantile_cont(n_tok, 0.5) AS p50_tokens,
-        |  quantile_cont(n_tok, 0.9) AS p90_tokens
-        |FROM d GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "p40_pagerank" -> p40Oracle,
-    "p41_random_project" -> p41Oracle,
-    "p42_corpus_overlap" -> p42Oracle,
-
-    // interleave: same seeded md5 rank-within-group + in-rank tiebreak
-    "p44_interleave" ->
-      """WITH r AS (SELECT doc_id, lang,
-        |    md5(doc_id::VARCHAR || ':42') AS key,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY lang
-        |      ORDER BY md5(doc_id::VARCHAR || ':42')) AS BIGINT)
-        |      AS grp_rank
-        |  FROM documents)
-        |SELECT doc_id, lang, grp_rank,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY grp_rank ORDER BY key)
-        |    AS BIGINT) AS ord_in_rank
-        |FROM r ORDER BY grp_rank, ord_in_rank""".stripMargin,
-
-    // p15's recursive-CTE components + p06's quality formula + a
-    // per-component argmax window
-    "p46_cluster_best" ->
-      """WITH RECURSIVE ws AS (SELECT doc_id,
-        |    list_filter(string_split(lower(text),' '), x -> len(x)>0) AS ws
-        |  FROM documents),
-        |sh0 AS (SELECT doc_id, list_distinct(list_transform(
-        |    range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]))
-        |    AS shingles FROM ws),
-        |sh AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS s
-        |  FROM sh0),
-        |prs AS (SELECT a.doc_id id1, b.doc_id id2, a.nsh n1, b.nsh n2,
-        |    count(*) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1,2,3,4),
-        |good AS (SELECT id1, id2 FROM prs
-        |  WHERE common::DOUBLE/(n1+n2-common) >= 0.5),
-        |sym AS (SELECT id1 AS a, id2 AS b FROM good
-        |  UNION ALL SELECT id2, id1 FROM good),
-        |reach AS (SELECT a, b FROM sym
-        |  UNION SELECT r.a, s2.b FROM reach r JOIN sym s2 ON r.b = s2.a),
-        |comp AS (SELECT d.doc_id,
-        |    CAST(LEAST(d.doc_id, COALESCE(MIN(r.b), d.doc_id)) AS BIGINT)
-        |      AS component
-        |  FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
-        |  GROUP BY d.doc_id),
-        |q AS (SELECT doc_id,
-        |  (CASE WHEN len(list_filter(string_split(lower(text),' '),
-        |      w -> len(w)>0)) BETWEEN 5 AND 100000
-        |    THEN 1.0 ELSE 0.2 END)
-        |  * (1.0 - least((len(text) - len(regexp_replace(text,
-        |      '[[:punct:]]', '', 'g')))::DOUBLE / greatest(len(text),1)*2,
-        |      1.0))
-        |  * (1.0 - least((len(text) - len(regexp_replace(text, '[0-9]',
-        |      '', 'g')))::DOUBLE / greatest(len(text),1)*2, 1.0))
-        |    AS quality_score
-        |  FROM documents),
-        |ranked AS (SELECT c.component, c.doc_id, q.quality_score,
-        |    ROW_NUMBER() OVER (PARTITION BY c.component
-        |      ORDER BY q.quality_score DESC, c.doc_id ASC) AS rn
-        |  FROM comp c JOIN q ON q.doc_id = c.doc_id)
-        |SELECT component, CAST(MIN(doc_id) FILTER (rn = 1) AS BIGINT)
-        |    AS rep_doc_id,
-        |  CAST(count(*) AS BIGINT) AS n_members,
-        |  round(max(quality_score), 6) AS best_q6
-        |FROM ranked GROUP BY component ORDER BY component""".stripMargin,
-
-    // p49's fingerprint CTE + an fp-keyed self-join
-    "p51_winnowing_pairs" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |h AS (SELECT doc_id, list_transform(range(1, len(ws) - 3),
-        |    i -> CAST(('0x' || substr(md5(ws[i]||' '||ws[i+1]||' '||
-        |        ws[i+2]||' '||ws[i+3]||' '||ws[i+4]), 1, 16))::UBIGINT
-        |      & CAST(9223372036854775807 AS UBIGINT) AS BIGINT)) AS hs
-        |  FROM ws),
-        |f AS (SELECT doc_id, CASE
-        |    WHEN len(hs) = 0 THEN CAST([] AS BIGINT[])
-        |    WHEN len(hs) < 8 THEN [list_min(hs)]
-        |    ELSE list_sort(list_distinct(list_transform(
-        |      range(1, len(hs) - 6), i -> list_min(hs[i:i+7])))) END
-        |    AS fps FROM h),
-        |u AS (SELECT doc_id, unnest(fps) AS fp FROM f),
-        |rare AS (SELECT fp FROM u GROUP BY fp HAVING count(*) <= 128),
-        |ur AS (SELECT u.doc_id, u.fp FROM u JOIN rare USING (fp))
-        |SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |  CAST(count(*) AS BIGINT) AS n_shared
-        |FROM ur a JOIN ur b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2 ORDER BY id1, id2""".stripMargin,
-
-    // p51's pair machinery + per-anchor extension: ALL occurrence-
-    // position pairs of the shared fp, sorted nearest-first by the
-    // struct key (|pa-pb|, pa, pb) — DuckDB sorts structs
-    // lexicographically by field order — sliced to the kernel's
-    // 256-pair budget (MatchPairCap), extend left/right to the first
-    // mismatching gram, max over the evaluated pairs; span tokens =
-    // grams + k - 1
-    "p52_winnowing_spans" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |h AS (SELECT doc_id, list_transform(range(1, len(ws) - 3),
-        |    i -> CAST(('0x' || substr(md5(ws[i]||' '||ws[i+1]||' '||
-        |        ws[i+2]||' '||ws[i+3]||' '||ws[i+4]), 1, 16))::UBIGINT
-        |      & CAST(9223372036854775807 AS UBIGINT) AS BIGINT)) AS hs
-        |  FROM ws),
-        |f AS (SELECT doc_id, hs, CASE
-        |    WHEN len(hs) = 0 THEN CAST([] AS BIGINT[])
-        |    WHEN len(hs) < 8 THEN [list_min(hs)]
-        |    ELSE list_sort(list_distinct(list_transform(
-        |      range(1, len(hs) - 6), i -> list_min(hs[i:i+7])))) END
-        |    AS fps FROM h),
-        |u AS (SELECT doc_id, hs, unnest(fps) AS fp FROM f),
-        |rare AS (SELECT fp FROM u GROUP BY fp HAVING count(*) <= 128),
-        |ur AS (SELECT u.doc_id, u.hs, u.fp FROM u JOIN rare USING (fp)),
-        |sp AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |  list_max(list_transform(
-        |    list_slice(list_sort(flatten(list_transform(
-        |      list_filter(range(1, len(a.hs) + 1), p -> a.hs[p] = a.fp),
-        |      pa -> list_transform(
-        |        list_filter(range(1, len(b.hs) + 1), q -> b.hs[q] = a.fp),
-        |        pb -> {'d': abs(pa - pb), 'pa': pa, 'pb': pb})))),
-        |      1, 256),
-        |    e ->
-        |        coalesce(list_min(list_filter(
-        |          range(1, least(e.pa, e.pb)),
-        |          s -> a.hs[e.pa-s] IS DISTINCT FROM b.hs[e.pb-s])),
-        |          least(e.pa, e.pb)) - 1
-        |        + 1 +
-        |        coalesce(list_min(list_filter(
-        |          range(1, least(len(a.hs)-e.pa, len(b.hs)-e.pb) + 1),
-        |          s -> a.hs[e.pa+s] IS DISTINCT FROM b.hs[e.pb+s])),
-        |          least(len(a.hs)-e.pa, len(b.hs)-e.pb) + 1) - 1
-        |      )) AS span
-        |  FROM ur a JOIN ur b ON a.fp = b.fp AND a.doc_id < b.doc_id)
-        |SELECT id1, id2, CAST(count(*) AS BIGINT) AS n_shared,
-        |  CAST(max(span) + 4 AS BIGINT) AS max_span_tokens
-        |FROM sp GROUP BY 1, 2 ORDER BY id1, id2""".stripMargin,
-
-    // the same trim/fragment/scheme/port/path-fixpoint/tracking-param
-    // pipeline as functions.UrlKernel, rewrite for rewrite; the path
-    // dot-segment resolution is the recursive-CTE fixpoint of the
-    // IDENTICAL ordered regexp_replace composition the kernel iterates
-    "p53_url_canonicalize" -> (urlPipeCtesSql + "\n" +
-      """SELECT c.doc_id, c.url_canon, r.reg_host
-        |FROM canon c JOIN reg r USING (doc_id)
-        |ORDER BY doc_id""".stripMargin),
-
-    // the composed crawl-pipeline oracle: the shared URL CTEs (canon +
-    // reg) → blocklist → the SAME multi-line reshaping as the gate →
-    // p63's (domain, line) boilerplate election → p54's gopher battery
-    // + p64's repetition chain ON THE SCRUBBED TEXT → p70's
-    // (snap, id, pos) all-at-once winner election over gate passers —
-    // every stage's CTEs are the per-stage oracles', composed
-    "p75_crawl_pipeline" -> (urlPipeCtesSql + ",\n" +
-      """fr AS (SELECT d.doc_id, d.text, c.url_canon, r.reg_host
-        |  FROM documents d JOIN canon c USING (doc_id)
-        |    JOIN reg r USING (doc_id)
-        |  WHERE r.reg_host NOT IN
-        |      ('site3.com.au', 'fan3.github.io', '192.168.1.4')
-        |    AND r.reg_host <> ''),
-        |lined AS (SELECT doc_id, url_canon, reg_host,
-        |    'welcome to ' || reg_host || chr(10) || text || chr(10) ||
-        |    'xline ' || (doc_id // 2) || chr(10) ||
-        |    'buddy ' || (doc_id // 20) ||
-        |    CASE WHEN doc_id % 3 = 0
-        |      THEN chr(10) || substr(text, 1, 50) || chr(10) ||
-        |           substr(text, 1, 50) || chr(10) || substr(text, 1, 50)
-        |      ELSE '' END AS t0
-        |  FROM fr),
-        |bl AS (SELECT doc_id, reg_host, unnest(ls) AS line,
-        |    generate_subscripts(ls, 1) AS i
-        |  FROM (SELECT doc_id, reg_host, string_split(t0, chr(10)) AS ls
-        |        FROM lined)),
-        |bo AS (SELECT reg_host, line FROM (
-        |    SELECT reg_host, line, count(DISTINCT doc_id) AS nd
-        |    FROM bl GROUP BY 1, 2) WHERE nd >= 3),
-        |kp AS (SELECT b.doc_id, b.line, b.i FROM bl b
-        |  LEFT JOIN bo ON b.reg_host = bo.reg_host AND b.line = bo.line
-        |  WHERE bo.line IS NULL),
-        |cl AS (SELECT doc_id, count(*) AS n_kept0,
-        |    string_agg(line, chr(10) ORDER BY i) AS cleaned
-        |  FROM kp GROUP BY doc_id),
-        |cd AS (SELECT li.doc_id, li.reg_host, li.url_canon,
-        |    CAST(len(string_split(li.t0, chr(10))) -
-        |      coalesce(cl.n_kept0, 0) AS BIGINT) AS n_dropped_lines,
-        |    coalesce(cl.cleaned, '') AS t2
-        |  FROM lined li LEFT JOIN cl USING (doc_id)),
-        |lu AS (SELECT doc_id, t2,
-        |    string_split(t2, chr(10)) AS ls,
-        |    string_split(t2, chr(10) || chr(10)) AS ps,
-        |    list_filter(regexp_split_to_array(lower(t2), '\s+'),
-        |      x -> len(x) > 0) AS ws,
-        |    len(t2) AS total_chars
-        |  FROM cd),
-        |gq AS (SELECT doc_id,
-        |    CAST(len(ws) AS BIGINT) AS n_words,
-        |    CAST(coalesce(list_sum(list_transform(ws, w -> len(w))), 0)
-        |      AS BIGINT) AS sum_word_len,
-        |    CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]')))
-        |      AS BIGINT) AS n_alpha_words,
-        |    CAST(len(t2) - len(replace(t2, '#', '')) AS BIGINT)
-        |      AS n_hash,
-        |    CAST((len(t2) - len(replace(t2, '...', ''))) // 3
-        |      AS BIGINT) AS n_ellipsis,
-        |    CAST(len(list_intersect(list_distinct(ws),
-        |      ['the','be','to','of','and','that','have','with']))
-        |      AS BIGINT) AS n_stopwords
-        |  FROM lu),
-        |gv AS (SELECT doc_id, n_words,
-        |    (n_words >= 50 AND n_words <= 100000
-        |     AND sum_word_len >= n_words * 3
-        |     AND sum_word_len <= n_words * 10
-        |     AND n_hash * 10 <= n_words AND n_ellipsis * 10 <= n_words
-        |     AND n_alpha_words * 5 >= n_words * 4
-        |     AND n_stopwords >= 1) AS gopher_pass
-        |  FROM gq),
-        |lx AS (SELECT doc_id, unnest(ls) AS u,
-        |    generate_subscripts(ls, 1) AS i FROM lu),
-        |lw AS (SELECT doc_id, u, min(i) AS wi FROM lx GROUP BY 1, 2),
-        |ldp AS (SELECT x.doc_id, count(*) AS n_lines,
-        |    count(*) FILTER (x.i > w.wi) AS n_dup_lines,
-        |    coalesce(sum(len(x.u)) FILTER (x.i > w.wi), 0)
-        |      AS chars_dup_lines
-        |  FROM lx x JOIN lw w ON x.doc_id = w.doc_id AND x.u = w.u
-        |  GROUP BY 1),
-        |px AS (SELECT doc_id, unnest(ps) AS u,
-        |    generate_subscripts(ps, 1) AS i FROM lu),
-        |pw AS (SELECT doc_id, u, min(i) AS wi FROM px GROUP BY 1, 2),
-        |pd AS (SELECT x.doc_id, count(*) AS n_paras,
-        |    count(*) FILTER (x.i > w.wi) AS n_dup_paras,
-        |    coalesce(sum(len(x.u)) FILTER (x.i > w.wi), 0)
-        |      AS chars_dup_paras
-        |  FROM px x JOIN pw w ON x.doc_id = w.doc_id AND x.u = w.u
-        |  GROUP BY 1),
-        |w2 AS (SELECT doc_id, ws[i] || ' ' || ws[i+1] AS g,
-        |    len(ws[i]) + len(ws[i+1]) + 1 AS gl
-        |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i
-        |        FROM lu)),
-        |t2a AS (SELECT doc_id, max(cnt * gl) AS top2_chars FROM (
-        |    SELECT doc_id, g, gl, count(*) AS cnt FROM w2
-        |    GROUP BY 1, 2, 3) GROUP BY 1),
-        |g5 AS (SELECT doc_id, i, array_to_string(ws[i:i+4], ' ') AS g
-        |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws) - 3)) AS i
-        |        FROM lu)),
-        |d5 AS (SELECT doc_id, g FROM g5 GROUP BY 1, 2
-        |  HAVING count(*) >= 2),
-        |st AS (SELECT DISTINCT g5.doc_id, g5.i FROM g5
-        |  JOIN d5 USING (doc_id, g)),
-        |cov AS (SELECT doc_id, list_sort(list(i)) AS starts FROM st
-        |  GROUP BY 1),
-        |d5c AS (SELECT l.doc_id,
-        |    coalesce(list_sum(list_transform(
-        |      list_filter(range(1, len(l.ws) + 1),
-        |        p -> len(list_filter(coalesce(c.starts,
-        |          CAST([] AS BIGINT[])),
-        |          s -> s <= p AND p <= s + 4)) > 0),
-        |      p -> len(l.ws[p]))), 0) AS dup5_chars
-        |  FROM lu l LEFT JOIN cov c USING (doc_id)),
-        |rv AS (SELECT l.doc_id,
-        |    CAST(ldp.n_lines AS BIGINT) AS n_lines,
-        |    (ldp.n_dup_lines * 10 <= ldp.n_lines * 3 AND
-        |     pd.n_dup_paras * 10 <= pd.n_paras * 3 AND
-        |     ldp.chars_dup_lines * 5 <= l.total_chars AND
-        |     pd.chars_dup_paras * 5 <= l.total_chars AND
-        |     coalesce(t2a.top2_chars, 0) * 5 <= l.total_chars AND
-        |     d5c.dup5_chars * 20 <= l.total_chars * 3) AS rep_pass
-        |  FROM lu l JOIN ldp USING (doc_id) JOIN pd USING (doc_id)
-        |  LEFT JOIN t2a USING (doc_id) JOIN d5c USING (doc_id)),
-        |sv AS (SELECT cd.doc_id FROM cd
-        |  JOIN gv USING (doc_id) JOIN rv USING (doc_id)
-        |  WHERE gv.gopher_pass AND rv.rep_pass),
-        |dl AS (SELECT k.doc_id, k.doc_id % 2 AS snap, k.line, k.i
-        |  FROM kp k JOIN sv USING (doc_id)),
-        |wn1 AS (SELECT line, min(snap * 1000000000000 + doc_id) AS wk
-        |  FROM dl GROUP BY line),
-        |wn AS (SELECT d2.line, d2.doc_id AS wd, min(d2.i) AS wi
-        |  FROM dl d2 JOIN wn1 ON d2.line = wn1.line
-        |    AND d2.snap * 1000000000000 + d2.doc_id = wn1.wk
-        |  GROUP BY d2.line, d2.doc_id),
-        |kept2 AS (SELECT d2.doc_id, d2.line, d2.i FROM dl d2
-        |  JOIN wn ON d2.line = wn.line AND d2.doc_id = wn.wd
-        |    AND d2.i = wn.wi),
-        |ddp AS (SELECT doc_id,
-        |    CAST(count(*) AS BIGINT) AS n_kept_lines,
-        |    md5(string_agg(line, chr(10) ORDER BY i)) AS final_md5
-        |  FROM kept2 GROUP BY doc_id)
-        |SELECT cd.doc_id, cd.reg_host, cd.url_canon,
-        |  cd.n_dropped_lines, gv.n_words, gv.gopher_pass,
-        |  rv.n_lines, rv.rep_pass,
-        |  CASE WHEN gv.gopher_pass AND rv.rep_pass
-        |    THEN coalesce(ddp.n_kept_lines, CAST(0 AS BIGINT))
-        |    ELSE CAST(-1 AS BIGINT) END AS n_kept_lines,
-        |  CASE WHEN gv.gopher_pass AND rv.rep_pass
-        |    THEN coalesce(ddp.final_md5, md5('')) ELSE '' END
-        |    AS final_md5
-        |FROM cd JOIN gv USING (doc_id) JOIN rv USING (doc_id)
-        |LEFT JOIN ddp USING (doc_id)
-        |ORDER BY cd.doc_id""".stripMargin),
-
-    // p53's authority/registrable-host CTEs + p54's verdict (with the
-    // composition's minStopwords=1) + p50's seeded cumulative cap,
-    // composed; the path/query CTEs are not needed — only the host key
-    // survives into the cap
-    "p55_crawl_curate" ->
-      """WITH src AS (SELECT doc_id, text, @URL@ AS url
-        |  FROM documents),
-        |t AS (SELECT doc_id, text, trim(url) AS s0 FROM src),
-        |nf AS (SELECT doc_id, text, s0,
-        |    CASE WHEN strpos(s0, '#') > 0
-        |      THEN substr(s0, 1, strpos(s0, '#') - 1) ELSE s0 END AS s
-        |  FROM t),
-        |m AS (SELECT doc_id, text, s0,
-        |    regexp_matches(s, '^[A-Za-z][A-Za-z0-9+.-]*://') AS isurl,
-        |    regexp_extract(s, '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?]*)(.*)$', 2) AS rauth
-        |  FROM nf),
-        |hb AS (SELECT doc_id, text, CASE
-        |    WHEN isurl THEN lower(regexp_replace(regexp_replace(rauth,
-        |      '^.*@', ''), ':[0-9]+$', ''))
-        |    WHEN regexp_matches(s0, '^[A-Za-z0-9.-]+$')
-        |      THEN lower(regexp_replace(s0, ':[0-9]+$', ''))
-        |    ELSE NULL END AS host
-        |  FROM m),
-        |@PSL@,
-        |@REGHOST@,
-        |tok AS (SELECT h.doc_id, rg.reg_host, h.text,
-        |    list_filter(regexp_split_to_array(lower(h.text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM hb h JOIN reg rg USING (doc_id)),
-        |gq AS (SELECT doc_id, reg_host,
-        |    CAST(len(ws) AS BIGINT) AS n_words,
-        |    CAST(coalesce(list_sum(list_transform(ws, w -> len(w))), 0)
-        |      AS BIGINT) AS sum_word_len,
-        |    CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]')))
-        |      AS BIGINT) AS n_alpha_words,
-        |    CAST(len(text) - len(replace(text, '#', '')) AS BIGINT)
-        |      AS n_hash,
-        |    CAST((len(text) - len(replace(text, '...', ''))) // 3
-        |      AS BIGINT) AS n_ellipsis,
-        |    CAST(len(list_intersect(list_distinct(ws),
-        |      ['the','be','to','of','and','that','have','with']))
-        |      AS BIGINT) AS n_stopwords
-        |  FROM tok),
-        |good AS (SELECT doc_id, reg_host FROM gq
-        |  WHERE n_words >= 50 AND n_words <= 100000
-        |    AND sum_word_len >= n_words * 3
-        |    AND sum_word_len <= n_words * 10
-        |    AND n_hash * 10 <= n_words AND n_ellipsis * 10 <= n_words
-        |    AND n_alpha_words * 5 >= n_words * 4
-        |    AND n_stopwords >= 1 AND reg_host <> ''),
-        |r AS (SELECT doc_id, reg_host,
-        |    CAST(COUNT(*) OVER (PARTITION BY reg_host
-        |      ORDER BY md5(doc_id::VARCHAR || ':7')
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS rn
-        |  FROM good)
-        |SELECT doc_id, reg_host FROM r WHERE rn <= 5
-        |ORDER BY doc_id""".stripMargin
-        .replace("@URL@", crawlUrlCaseSql)
-        .replace("@PSL@", pslCteSql)
-        .replace("@REGHOST@", regHostCtesSql),
-
-    // same lowered whitespace tokens; every stat an exact integer, the
-    // verdict integer comparisons only (mean-word-length bounds as
-    // 3n <= sum <= 10n)
-    "p54_gopher_quality" ->
-      """WITH ws AS (SELECT doc_id, text,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |m AS (SELECT doc_id,
-        |    CAST(len(ws) AS BIGINT) AS n_words,
-        |    CAST(coalesce(list_sum(list_transform(ws, w -> len(w))), 0)
-        |      AS BIGINT) AS sum_word_len,
-        |    CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]')))
-        |      AS BIGINT) AS n_alpha_words,
-        |    CAST(len(text) - len(replace(text, '#', '')) AS BIGINT)
-        |      AS n_hash,
-        |    CAST((len(text) - len(replace(text, '...', ''))) // 3
-        |      AS BIGINT) AS n_ellipsis,
-        |    CAST(len(list_intersect(list_distinct(ws),
-        |      ['the','be','to','of','and','that','have','with']))
-        |      AS BIGINT) AS n_stopwords
-        |  FROM ws)
-        |SELECT doc_id, n_words, sum_word_len, n_alpha_words, n_hash,
-        |  n_ellipsis, n_stopwords,
-        |  (n_words >= 50 AND n_words <= 100000
-        |   AND sum_word_len >= n_words * 3
-        |   AND sum_word_len <= n_words * 10
-        |   AND n_hash * 10 <= n_words AND n_ellipsis * 10 <= n_words
-        |   AND n_alpha_words * 5 >= n_words * 4
-        |   AND n_stopwords >= 1) AS gopher_pass
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    // first-occurrence-ordered line dedup: min(subscript) per distinct
-    // line, string_agg back in that order (array_distinct's documented
-    // first-occurrence order, replayed explicitly)
-    "p56_scrub_repeated_lines" ->
-      """WITH l AS (SELECT doc_id,
-        |    string_split(replace(text, ' ', chr(10)), chr(10)) AS ls
-        |  FROM documents),
-        |u AS (SELECT doc_id, unnest(ls) AS line,
-        |    generate_subscripts(ls, 1) AS i FROM l),
-        |f AS (SELECT doc_id, line, min(i) AS fi
-        |  FROM u GROUP BY doc_id, line),
-        |s AS (SELECT doc_id, count(*) AS nd,
-        |    md5(string_agg(line, chr(10) ORDER BY fi)) AS m
-        |  FROM f GROUP BY doc_id)
-        |SELECT l.doc_id, CAST(len(l.ls) AS BIGINT) AS n_lines,
-        |  CAST(s.nd AS BIGINT) AS n_distinct_lines, s.m AS scrubbed_md5
-        |FROM l JOIN s USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    // chunk windows replayed as char-based substr (byte-identical on
-    // the ASCII corpus), same %2 sampling; empty payloads produce the
-    // classified error row with md5('')
-    "p59_frame_extract" ->
-      """WITH src AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 97 = 0 THEN '' ELSE text END AS payload
-        |  FROM documents),
-        |f AS (SELECT doc_id, payload,
-        |    unnest(range(0, (len(payload) + 63) // 64)) AS i
-        |  FROM src WHERE len(payload) > 0)
-        |SELECT doc_id, CAST(i AS INT) AS frame_no,
-        |  md5(substr(payload, CAST(1 + i * 64 AS INT), 64)) AS frame_md5,
-        |  '' AS error
-        |FROM f WHERE i % 2 = 0
-        |UNION ALL
-        |SELECT doc_id, -1 AS frame_no, md5('') AS frame_md5,
-        |  'decode failed: empty payload' AS error
-        |FROM src WHERE len(payload) = 0
-        |ORDER BY doc_id, frame_no""".stripMargin,
-
-    // winner per line = lexicographic min (doc_id, pos), replayed as a
-    // two-step min; docs reassembled with an ordered string_agg; docs
-    // losing every line join to NULL -> '' (md5('') both engines)
-    "p58_global_line_dedup" ->
-      """WITH l AS (SELECT doc_id, unnest(ls) AS line,
-        |    generate_subscripts(ls, 1) AS i
-        |  FROM (SELECT doc_id,
-        |    string_split(replace(text, ' ', chr(10)), chr(10)) AS ls
-        |  FROM documents)),
-        |w1 AS (SELECT line, min(doc_id) AS wd FROM l GROUP BY line),
-        |w AS (SELECT l.line, l.doc_id AS wd, min(l.i) AS wi
-        |  FROM l JOIN w1 ON l.line = w1.line AND l.doc_id = w1.wd
-        |  GROUP BY l.line, l.doc_id),
-        |kept AS (SELECT l.doc_id, l.line, l.i FROM l
-        |  JOIN w ON l.line = w.line AND l.doc_id = w.wd AND l.i = w.wi),
-        |r AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept_lines,
-        |    md5(string_agg(line, chr(10) ORDER BY i)) AS deduped_md5
-        |  FROM kept GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  coalesce(r.n_kept_lines, 0) AS n_kept_lines,
-        |  coalesce(r.deduped_md5, md5('')) AS deduped_md5
-        |FROM documents d LEFT JOIN r USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // the same host chain + PSL lookup as p53/p55, then a NOT IN over
-    // the blocklist ('' non-URL hosts pass: filter what is provably
-    // blocked)
-    "p57_domain_blocklist" ->
-      """WITH src AS (SELECT doc_id, @URL@ AS url FROM documents),
-        |t AS (SELECT doc_id, trim(url) AS s0 FROM src),
-        |nf AS (SELECT doc_id, s0,
-        |    CASE WHEN strpos(s0, '#') > 0
-        |      THEN substr(s0, 1, strpos(s0, '#') - 1) ELSE s0 END AS s
-        |  FROM t),
-        |m AS (SELECT doc_id, s0,
-        |    regexp_matches(s, '^[A-Za-z][A-Za-z0-9+.-]*://') AS isurl,
-        |    regexp_extract(s, '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?]*)(.*)$', 2) AS rauth
-        |  FROM nf),
-        |hb AS (SELECT doc_id, CASE
-        |    WHEN isurl THEN lower(regexp_replace(regexp_replace(rauth,
-        |      '^.*@', ''), ':[0-9]+$', ''))
-        |    WHEN regexp_matches(s0, '^[A-Za-z0-9.-]+$')
-        |      THEN lower(regexp_replace(s0, ':[0-9]+$', ''))
-        |    ELSE NULL END AS host
-        |  FROM m),
-        |@PSL@,
-        |@REGHOST@
-        |SELECT r.doc_id, r.reg_host FROM reg r
-        |WHERE r.reg_host NOT IN
-        |  ('site3.com.au', 'fan3.github.io', '192.168.1.4')
-        |ORDER BY r.doc_id""".stripMargin
-        .replace("@URL@", crawlUrlCaseSql)
-        .replace("@PSL@", pslCteSql)
-        .replace("@REGHOST@", regHostCtesSql),
-
-    // the p54 gopher CTEs + the p64 repetition chain on the SAME
-    // wrapped corpus, aggregated per source — verdict counts and the
-    // integer volume/repetition-mass sums, all exact
-    "p65_curation_report" ->
-      """WITH base AS (SELECT doc_id, source,
-        |    CASE WHEN doc_id % 3 = 0 THEN text || chr(10) ||
-        |      'repeat me' || chr(10) || 'repeat me' || chr(10) ||
-        |      chr(10) || substr(text, 1, 50) || chr(10) || chr(10) ||
-        |      substr(text, 1, 50)
-        |    ELSE text || chr(10) || 'uq' || doc_id || chr(10) ||
-        |      chr(10) || 'uq2' || doc_id END AS t2
-        |  FROM documents),
-        |lu AS (SELECT doc_id, t2,
-        |    string_split(t2, chr(10)) AS ls,
-        |    string_split(t2, chr(10) || chr(10)) AS ps,
-        |    list_filter(regexp_split_to_array(lower(t2), '\s+'),
-        |      x -> len(x) > 0) AS ws,
-        |    len(t2) AS total_chars
-        |  FROM base),
-        |g AS (SELECT doc_id,
-        |    CAST(len(ws) AS BIGINT) AS n_words,
-        |    CAST(coalesce(list_sum(list_transform(ws, w -> len(w))), 0)
-        |      AS BIGINT) AS sum_word_len,
-        |    CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]')))
-        |      AS BIGINT) AS n_alpha_words,
-        |    CAST(len(t2) - len(replace(t2, '#', '')) AS BIGINT)
-        |      AS n_hash,
-        |    CAST((len(t2) - len(replace(t2, '...', ''))) // 3
-        |      AS BIGINT) AS n_ellipsis,
-        |    CAST(len(list_intersect(list_distinct(ws),
-        |      ['the','be','to','of','and','that','have','with']))
-        |      AS BIGINT) AS n_stopwords
-        |  FROM lu),
-        |gp AS (SELECT doc_id, n_words,
-        |    (n_words >= 50 AND n_words <= 100000
-        |     AND sum_word_len >= n_words * 3
-        |     AND sum_word_len <= n_words * 10
-        |     AND n_hash * 10 <= n_words AND n_ellipsis * 10 <= n_words
-        |     AND n_alpha_words * 5 >= n_words * 4
-        |     AND n_stopwords >= 1) AS gopher_pass
-        |  FROM g),
-        |lx AS (SELECT doc_id, unnest(ls) AS u,
-        |    generate_subscripts(ls, 1) AS i FROM lu),
-        |lw AS (SELECT doc_id, u, min(i) AS wi FROM lx GROUP BY 1, 2),
-        |ld AS (SELECT x.doc_id, count(*) AS n_lines,
-        |    count(*) FILTER (x.i > w.wi) AS n_dup_lines,
-        |    coalesce(sum(len(x.u)) FILTER (x.i > w.wi), 0)
-        |      AS chars_dup_lines
-        |  FROM lx x JOIN lw w ON x.doc_id = w.doc_id AND x.u = w.u
-        |  GROUP BY 1),
-        |px AS (SELECT doc_id, unnest(ps) AS u,
-        |    generate_subscripts(ps, 1) AS i FROM lu),
-        |pw AS (SELECT doc_id, u, min(i) AS wi FROM px GROUP BY 1, 2),
-        |pd AS (SELECT x.doc_id, count(*) AS n_paras,
-        |    count(*) FILTER (x.i > w.wi) AS n_dup_paras,
-        |    coalesce(sum(len(x.u)) FILTER (x.i > w.wi), 0)
-        |      AS chars_dup_paras
-        |  FROM px x JOIN pw w ON x.doc_id = w.doc_id AND x.u = w.u
-        |  GROUP BY 1),
-        |w2 AS (SELECT doc_id, ws[i] || ' ' || ws[i+1] AS gm,
-        |    len(ws[i]) + len(ws[i+1]) + 1 AS gl
-        |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i
-        |        FROM lu)),
-        |t2a AS (SELECT doc_id, max(cnt * gl) AS top2_chars FROM (
-        |    SELECT doc_id, gm, gl, count(*) AS cnt FROM w2
-        |    GROUP BY 1, 2, 3) GROUP BY 1),
-        |g5 AS (SELECT doc_id, i, array_to_string(ws[i:i+4], ' ') AS gm
-        |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws) - 3)) AS i
-        |        FROM lu)),
-        |d5 AS (SELECT doc_id, gm FROM g5 GROUP BY 1, 2
-        |  HAVING count(*) >= 2),
-        |st AS (SELECT DISTINCT g5.doc_id, g5.i FROM g5
-        |  JOIN d5 USING (doc_id, gm)),
-        |cov AS (SELECT doc_id, list_sort(list(i)) AS starts FROM st
-        |  GROUP BY 1),
-        |d5c AS (SELECT l.doc_id,
-        |    coalesce(list_sum(list_transform(
-        |      list_filter(range(1, len(l.ws) + 1),
-        |        p -> len(list_filter(coalesce(c.starts,
-        |          CAST([] AS BIGINT[])),
-        |          s -> s <= p AND p <= s + 4)) > 0),
-        |      p -> len(l.ws[p]))), 0) AS dup5_chars
-        |  FROM lu l LEFT JOIN cov c USING (doc_id)),
-        |rp AS (SELECT l.doc_id, ld.n_dup_lines, d5c.dup5_chars,
-        |    l.total_chars,
-        |    (ld.n_dup_lines * 10 <= ld.n_lines * 3 AND
-        |     pd.n_dup_paras * 10 <= pd.n_paras * 3 AND
-        |     ld.chars_dup_lines * 5 <= l.total_chars AND
-        |     pd.chars_dup_paras * 5 <= l.total_chars AND
-        |     coalesce(t2a.top2_chars, 0) * 5 <= l.total_chars AND
-        |     d5c.dup5_chars * 20 <= l.total_chars * 3) AS rep_pass
-        |  FROM lu l JOIN ld USING (doc_id) JOIN pd USING (doc_id)
-        |  LEFT JOIN t2a USING (doc_id) JOIN d5c USING (doc_id))
-        |SELECT b.source,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(CASE WHEN gp.gopher_pass THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_gopher_pass,
-        |  CAST(sum(CASE WHEN rp.rep_pass THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_rep_pass,
-        |  CAST(sum(CASE WHEN gp.gopher_pass AND rp.rep_pass
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_pass_both,
-        |  CAST(sum(gp.n_words) AS BIGINT) AS total_words,
-        |  CAST(sum(rp.total_chars) AS BIGINT) AS total_chars,
-        |  CAST(sum(rp.n_dup_lines) AS BIGINT) AS total_dup_lines,
-        |  CAST(sum(rp.dup5_chars) AS BIGINT) AS total_dup5_chars
-        |FROM base b JOIN gp USING (doc_id) JOIN rp USING (doc_id)
-        |GROUP BY 1 ORDER BY b.source""".stripMargin,
-
-    // the repetition kernel replayed relationally: min-subscript dup
-    // detection for lines ('\n') and paragraphs ('\n\n'), grouped
-    // 2-gram count-x-length max, and the p31-style coverage union for
-    // duplicated 5-grams; verdict = the same integer comparisons
-    "p64_repetition_signals" ->
-      """WITH base AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN text || chr(10) ||
-        |      'repeat me' || chr(10) || 'repeat me' || chr(10) ||
-        |      chr(10) || substr(text, 1, 50) || chr(10) || chr(10) ||
-        |      substr(text, 1, 50)
-        |    ELSE text || chr(10) || 'uq' || doc_id || chr(10) ||
-        |      chr(10) || 'uq2' || doc_id END AS t2
-        |  FROM documents),
-        |lu AS (SELECT doc_id, t2,
-        |    string_split(t2, chr(10)) AS ls,
-        |    string_split(t2, chr(10) || chr(10)) AS ps,
-        |    list_filter(regexp_split_to_array(lower(t2), '\s+'),
-        |      x -> len(x) > 0) AS ws,
-        |    len(t2) AS total_chars
-        |  FROM base),
-        |lx AS (SELECT doc_id, unnest(ls) AS u,
-        |    generate_subscripts(ls, 1) AS i FROM lu),
-        |lw AS (SELECT doc_id, u, min(i) AS wi FROM lx GROUP BY 1, 2),
-        |ld AS (SELECT x.doc_id, count(*) AS n_lines,
-        |    count(*) FILTER (x.i > w.wi) AS n_dup_lines,
-        |    coalesce(sum(len(x.u)) FILTER (x.i > w.wi), 0)
-        |      AS chars_dup_lines
-        |  FROM lx x JOIN lw w ON x.doc_id = w.doc_id AND x.u = w.u
-        |  GROUP BY 1),
-        |px AS (SELECT doc_id, unnest(ps) AS u,
-        |    generate_subscripts(ps, 1) AS i FROM lu),
-        |pw AS (SELECT doc_id, u, min(i) AS wi FROM px GROUP BY 1, 2),
-        |pd AS (SELECT x.doc_id, count(*) AS n_paras,
-        |    count(*) FILTER (x.i > w.wi) AS n_dup_paras,
-        |    coalesce(sum(len(x.u)) FILTER (x.i > w.wi), 0)
-        |      AS chars_dup_paras
-        |  FROM px x JOIN pw w ON x.doc_id = w.doc_id AND x.u = w.u
-        |  GROUP BY 1),
-        |w2 AS (SELECT doc_id, ws[i] || ' ' || ws[i+1] AS g,
-        |    len(ws[i]) + len(ws[i+1]) + 1 AS gl
-        |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i
-        |        FROM lu)),
-        |t2a AS (SELECT doc_id, max(cnt * gl) AS top2_chars FROM (
-        |    SELECT doc_id, g, gl, count(*) AS cnt FROM w2
-        |    GROUP BY 1, 2, 3) GROUP BY 1),
-        |g5 AS (SELECT doc_id, i, array_to_string(ws[i:i+4], ' ') AS g
-        |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws) - 3)) AS i
-        |        FROM lu)),
-        |d5 AS (SELECT doc_id, g FROM g5 GROUP BY 1, 2
-        |  HAVING count(*) >= 2),
-        |st AS (SELECT DISTINCT g5.doc_id, g5.i FROM g5
-        |  JOIN d5 USING (doc_id, g)),
-        |cov AS (SELECT doc_id, list_sort(list(i)) AS starts FROM st
-        |  GROUP BY 1),
-        |d5c AS (SELECT l.doc_id,
-        |    coalesce(list_sum(list_transform(
-        |      list_filter(range(1, len(l.ws) + 1),
-        |        p -> len(list_filter(coalesce(c.starts,
-        |          CAST([] AS BIGINT[])),
-        |          s -> s <= p AND p <= s + 4)) > 0),
-        |      p -> len(l.ws[p]))), 0) AS dup5_chars
-        |  FROM lu l LEFT JOIN cov c USING (doc_id)),
-        |fin AS (SELECT l.doc_id,
-        |    ld.n_lines, ld.n_dup_lines, ld.chars_dup_lines,
-        |    pd.n_paras, pd.n_dup_paras, pd.chars_dup_paras,
-        |    l.total_chars,
-        |    coalesce(t2a.top2_chars, 0) AS top2_chars,
-        |    d5c.dup5_chars
-        |  FROM lu l JOIN ld USING (doc_id) JOIN pd USING (doc_id)
-        |  LEFT JOIN t2a USING (doc_id) JOIN d5c USING (doc_id))
-        |SELECT doc_id,
-        |  CAST(n_lines AS BIGINT) AS n_lines,
-        |  CAST(n_dup_lines AS BIGINT) AS n_dup_lines,
-        |  CAST(chars_dup_lines AS BIGINT) AS chars_dup_lines,
-        |  CAST(n_paras AS BIGINT) AS n_paras,
-        |  CAST(n_dup_paras AS BIGINT) AS n_dup_paras,
-        |  CAST(chars_dup_paras AS BIGINT) AS chars_dup_paras,
-        |  CAST(total_chars AS BIGINT) AS total_chars,
-        |  CAST(top2_chars AS BIGINT) AS top2_chars,
-        |  CAST(dup5_chars AS BIGINT) AS dup5_chars,
-        |  (n_dup_lines * 10 <= n_lines * 3 AND
-        |   n_dup_paras * 10 <= n_paras * 3 AND
-        |   chars_dup_lines * 5 <= total_chars AND
-        |   chars_dup_paras * 5 <= total_chars AND
-        |   top2_chars * 5 <= total_chars AND
-        |   dup5_chars * 20 <= total_chars * 3) AS rep_pass
-        |FROM fin ORDER BY doc_id""".stripMargin,
-
-    // p53's host chain + PSL lookup for the domain key, then the
-    // boilerplate election replayed: count(DISTINCT doc_id) per
-    // (reg_host, line), drop cells >= 3, rejoin survivors in order
-    "p63_boilerplate_lines" ->
-      """WITH src AS (SELECT doc_id, @URL@ AS url FROM documents),
-        |t AS (SELECT doc_id, trim(url) AS s0 FROM src),
-        |nf AS (SELECT doc_id, s0,
-        |    CASE WHEN strpos(s0, '#') > 0
-        |      THEN substr(s0, 1, strpos(s0, '#') - 1) ELSE s0 END AS s
-        |  FROM t),
-        |m AS (SELECT doc_id, s0,
-        |    regexp_matches(s, '^[A-Za-z][A-Za-z0-9+.-]*://') AS isurl,
-        |    regexp_extract(s, '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?]*)(.*)$', 2) AS rauth
-        |  FROM nf),
-        |hb AS (SELECT doc_id, CASE
-        |    WHEN isurl THEN lower(regexp_replace(regexp_replace(rauth,
-        |      '^.*@', ''), ':[0-9]+$', ''))
-        |    WHEN regexp_matches(s0, '^[A-Za-z0-9.-]+$')
-        |      THEN lower(regexp_replace(s0, ':[0-9]+$', ''))
-        |    ELSE NULL END AS host
-        |  FROM m),
-        |@PSL@,
-        |@REGHOST@,
-        |lined AS (SELECT d.doc_id, r.reg_host,
-        |    'welcome to ' || r.reg_host || chr(10) || d.text ||
-        |      chr(10) || 'buddy ' || (d.doc_id // 20) AS text2
-        |  FROM documents d JOIN reg r USING (doc_id)),
-        |l AS (SELECT doc_id, reg_host, unnest(ls) AS line,
-        |    generate_subscripts(ls, 1) AS i
-        |  FROM (SELECT doc_id, reg_host,
-        |    string_split(text2, chr(10)) AS ls FROM lined)),
-        |b AS (SELECT reg_host, line FROM (
-        |    SELECT reg_host, line, count(DISTINCT doc_id) AS nd
-        |    FROM l GROUP BY 1, 2) WHERE nd >= 3),
-        |kept AS (SELECT l.doc_id, l.line, l.i FROM l
-        |  LEFT JOIN b ON l.reg_host = b.reg_host AND l.line = b.line
-        |  WHERE b.line IS NULL),
-        |r2 AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-        |    md5(string_agg(line, chr(10) ORDER BY i)) AS cleaned_md5
-        |  FROM kept GROUP BY doc_id),
-        |tot AS (SELECT doc_id, reg_host,
-        |    len(string_split(text2, chr(10))) AS n_lines FROM lined)
-        |SELECT d.doc_id, t2.reg_host,
-        |  CAST(t2.n_lines - coalesce(r2.n_kept, 0) AS BIGINT)
-        |    AS n_dropped_lines,
-        |  coalesce(r2.cleaned_md5, md5('')) AS cleaned_md5
-        |FROM documents d JOIN tot t2 USING (doc_id)
-        |LEFT JOIN r2 USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin
-        .replace("@URL@", crawlUrlCaseSql)
-        .replace("@PSL@", pslCteSql)
-        .replace("@REGHOST@", regHostCtesSql),
-
-    // the cap is a count-cumulative <= N over the same seeded md5 order
-    "p50_cap_per_group" ->
-      """WITH r AS (SELECT doc_id, source,
-        |    CAST(COUNT(*) OVER (PARTITION BY source
-        |      ORDER BY md5(doc_id::VARCHAR || ':42')
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS rn
-        |  FROM documents)
-        |SELECT doc_id, source FROM r WHERE rn <= 17
-        |ORDER BY doc_id""".stripMargin,
-
-    // winnowing replayed: same 5-gram text, same md5-prefix hash masked
-    // to 63 bits (so UBIGINT and signed-long window minima agree), same
-    // w=8 sliding window, same sorted-distinct fingerprint set
-    "p49_winnowing" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |h AS (SELECT doc_id, list_transform(range(1, len(ws) - 3),
-        |    i -> CAST(('0x' || substr(md5(ws[i]||' '||ws[i+1]||' '||
-        |        ws[i+2]||' '||ws[i+3]||' '||ws[i+4]), 1, 16))::UBIGINT
-        |      & CAST(9223372036854775807 AS UBIGINT) AS BIGINT)) AS hs
-        |  FROM ws),
-        |f AS (SELECT doc_id, CASE
-        |    WHEN len(hs) = 0 THEN CAST([] AS BIGINT[])
-        |    WHEN len(hs) < 8 THEN [list_min(hs)]
-        |    ELSE list_sort(list_distinct(list_transform(
-        |      range(1, len(hs) - 6), i -> list_min(hs[i:i+7])))) END
-        |    AS fps FROM h)
-        |SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_fps,
-        |  md5(array_to_string(list_transform(fps,
-        |    x -> CAST(x AS VARCHAR)), ',')) AS fps_md5
-        |FROM f ORDER BY doc_id""".stripMargin,
-
-    // same bigram text, same md5 prefix read as UBIGINT, same
-    // power-of-two modulus -> same buckets as the engine's pmod on the
-    // signed value (2^64 = 0 mod 4096)
-    "p48_dsir_importance" ->
-      """WITH ws AS (SELECT doc_id, source,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0) AS ws
-        |  FROM documents),
-        |g AS (SELECT doc_id, source,
-        |    unnest(list_transform(range(1, len(ws)),
-        |      i -> ('0x'||substr(md5(ws[i]||' '||ws[i+1]),1,16))::UBIGINT
-        |           % 4096)) AS b
-        |  FROM ws),
-        |tb AS (SELECT b, count(*) AS tb FROM g WHERE source = 'src0'
-        |  GROUP BY 1),
-        |rb AS (SELECT b, count(*) AS rb FROM g WHERE source <> 'src0'
-        |  GROUP BY 1),
-        |agg AS (SELECT doc_id, count(*) AS n_grams,
-        |    sum(coalesce(tb.tb, 0)) AS sum_tb,
-        |    sum(rb.rb) AS sum_rb,
-        |    sum(CASE WHEN tb.tb IS NULL THEN 1 ELSE 0 END) AS n_zero_t
-        |  FROM g LEFT JOIN tb USING (b) LEFT JOIN rb USING (b)
-        |  WHERE g.source <> 'src0' GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(n_grams, 0) AS BIGINT) AS n_grams,
-        |  CAST(coalesce(sum_tb, 0) AS BIGINT) AS sum_tb,
-        |  CAST(coalesce(sum_rb, 0) AS BIGINT) AS sum_rb,
-        |  CAST(coalesce(n_zero_t, 0) AS BIGINT) AS n_zero_t
-        |FROM documents d LEFT JOIN agg USING (doc_id)
-        |WHERE d.source <> 'src0' ORDER BY d.doc_id""".stripMargin,
-
-    // the oracle predicts the box walk's output from the same doc_id
-    // formulas the blob generator used (timescale pinned to 1 so
-    // duration is exact integer seconds; 176/288 are the fixed v0/v1
-    // skeleton sizes)
-    "p47_video_meta" ->
-      """SELECT doc_id AS media_id,
-        |  CASE WHEN doc_id % 97 = 0 THEN '' ELSE 'isom' END AS brand,
-        |  CAST(CASE WHEN doc_id % 97 = 0 THEN -1 ELSE 1 END AS BIGINT)
-        |    AS timescale,
-        |  CAST(CASE WHEN doc_id % 97 = 0 THEN -1
-        |    ELSE 60 + doc_id % 86400 END AS BIGINT) AS duration_s,
-        |  CAST(CASE WHEN doc_id % 97 = 0 THEN -1
-        |    WHEN doc_id % 2 = 1 THEN 2 ELSE 1 END AS INTEGER)
-        |    AS track_count,
-        |  CAST(CASE WHEN doc_id % 97 = 0 THEN -1
-        |    ELSE 320 + 16 * (doc_id % 8) END AS INTEGER) AS width,
-        |  CAST(CASE WHEN doc_id % 97 = 0 THEN -1
-        |    ELSE 180 + 9 * (doc_id % 8) END AS INTEGER) AS height,
-        |  CAST(CASE WHEN doc_id % 97 = 0
-        |      THEN 8 + octet_length(encode(text))
-        |    WHEN doc_id % 2 = 1 THEN 288 ELSE 176 END AS BIGINT)
-        |    AS n_bytes,
-        |  (doc_id % 97 = 0) AS is_err
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    // total-variation replayed: same tokenization, HUGEINT products so
-    // the integer numerator never wraps, one double division at the end
-    "p45_distribution_shift" ->
-      """WITH tok AS (SELECT source AS grp,
-        |    unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> len(x) > 0)) AS w
-        |  FROM documents),
-        |c AS (SELECT grp, w, count(*)::BIGINT AS c FROM tok
-        |  GROUP BY grp, w),
-        |t AS (SELECT grp, sum(c)::BIGINT AS n, count(*)::BIGINT AS n_words
-        |  FROM c GROUP BY grp),
-        |r AS (SELECT w, c AS cr FROM c WHERE grp = 'src0'),
-        |rn AS (SELECT n AS nr FROM t WHERE grp = 'src0'),
-        |p AS (SELECT c.grp,
-        |    sum(abs(c.c::HUGEINT * (SELECT nr FROM rn)
-        |      - coalesce(r.cr, 0)::HUGEINT * t.n)) AS tvp,
-        |    sum(coalesce(r.cr, 0))::BIGINT AS overlap_ref
-        |  FROM c JOIN t USING (grp) LEFT JOIN r USING (w)
-        |  GROUP BY c.grp)
-        |SELECT t.grp AS source, t.n AS n_tokens, t.n_words,
-        |  p.overlap_ref,
-        |  (p.tvp + t.n::HUGEINT *
-        |    ((SELECT nr FROM rn) - p.overlap_ref))::BIGINT AS tv_num,
-        |  round((p.tvp + t.n::HUGEINT *
-        |      ((SELECT nr FROM rn) - p.overlap_ref))::DOUBLE
-        |    / (2.0 * t.n * (SELECT nr FROM rn)), 6) AS tv6
-        |FROM t JOIN p USING (grp) ORDER BY source""".stripMargin,
-
-    // markup stripping replayed in DuckDB: same wrap, same RE2 passes,
-    // same entity-decode order
-    "p43_strip_markup" ->
-      """WITH w AS (SELECT doc_id,
-        |    '<html><head><style>p{color:red}</style></head><body><p id="x">'
-        |    || text ||
-        |    '</p><!-- note --> &amp;lt; tail &nbsp;</body></html>' AS t
-        |  FROM documents),
-        |s1 AS (SELECT doc_id, regexp_replace(t,
-        |    '(?is)<(script|style)[^>]*>.*?</(script|style)>', ' ', 'g')
-        |    AS t FROM w),
-        |s2 AS (SELECT doc_id, regexp_replace(t, '(?s)<!--.*?-->', ' ', 'g')
-        |    AS t FROM s1),
-        |s3 AS (SELECT doc_id, regexp_replace(t, '<[^>]+>', ' ', 'g') AS t
-        |    FROM s2),
-        |s4 AS (SELECT doc_id, replace(replace(replace(replace(replace(
-        |    replace(t, '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-        |    '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&') AS t FROM s3),
-        |n AS (SELECT doc_id, trim(regexp_replace(t, '\s+', ' ', 'g')) AS t
-        |    FROM s4)
-        |SELECT doc_id, md5(t) AS strip_md5, CAST(len(t) AS BIGINT)
-        |  AS strip_len
-        |FROM n ORDER BY doc_id""".stripMargin
-  )
-
-  /** Generated PageRank oracle: the p02 string-shingle pair graph, then 5
-    * unrolled power iterations of rank = 0.15 + 0.85·Σ rank/deg (the same
-    * fixed-iteration recurrence as GraphAnalytics.pageRank). */
-  private lazy val p40Oracle: String = {
-    // the reset constant is printed from the SAME Scala arithmetic the
-    // engine runs (1.0 - 0.85 = 0.15000000000000002, one ulp off a 0.15
-    // literal) so both engines iterate bit-identical recurrences
-    val reset = 1.0 - 0.85
-    val iters = (1 to 5).map { i =>
-      s"""pr$i AS (SELECT n.id, $reset + 0.85 * COALESCE(a.contrib, 0.0) AS r
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT s.b AS id, SUM(p.r / dg.c) AS contrib
-         |    FROM pr${i - 1} p JOIN sym s ON p.id = s.a
-         |      JOIN deg dg ON dg.a = s.a
-         |    GROUP BY s.b) a ON a.id = n.id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH ws AS (SELECT doc_id,
-       |    list_filter(string_split(lower(text),' '), x -> len(x)>0) AS ws
-       |  FROM documents),
-       |sh0 AS (SELECT doc_id, list_distinct(list_transform(
-       |    range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]))
-       |    AS shingles FROM ws),
-       |sh AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS s
-       |  FROM sh0),
-       |pairs AS (SELECT a.doc_id id1, b.doc_id id2, a.nsh n1, b.nsh n2,
-       |    count(*) AS common
-       |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-       |  GROUP BY 1,2,3,4),
-       |sel AS (SELECT id1, id2 FROM pairs
-       |  WHERE common::DOUBLE/(n1+n2-common) >= 0.5),
-       |sym AS (SELECT id1 AS a, id2 AS b FROM sel
-       |  UNION SELECT id2, id1 FROM sel),
-       |deg AS (SELECT a, COUNT(*)::DOUBLE AS c FROM sym GROUP BY a),
-       |nodes AS (SELECT doc_id AS id FROM documents),
-       |pr0 AS (SELECT id, CAST(1.0 AS DOUBLE) AS r FROM nodes),
-       |$iters
-       |SELECT id AS doc_id, round(r, 6) AS rank6 FROM pr5
-       |ORDER BY doc_id""".stripMargin
-  }
-
-  /** Generated random-projection oracle: the engine's deterministic
-    * hyperplanes embedded as literal arrays (every component is an exact
-    * binary fraction, so the literals parse back bit-identically). */
-  private lazy val p41Oracle: String = {
-    val planes = Similarity.hyperplanes(4, 64)
-    def arr(p: Seq[Double]): String =
-      p.map(_.toString).mkString("[", ", ", "]")
-    val comps = planes.zipWithIndex.map { case (p, i) =>
-      s"round(list_inner_product(v, ${arr(p)}), 6) AS d$i"
-    }.mkString(",\n  ")
-    s"""WITH e AS (SELECT vec_id,
-       |    list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings)
-       |SELECT vec_id,
-       |  $comps
-       |FROM e ORDER BY vec_id""".stripMargin
-  }
-
-  /** Generated corpus-overlap oracle: the p03 portable shingle hash and
-    * permutations, but the mins run over each corpus HALF's whole gram
-    * stream instead of per-document. */
-  private lazy val p42Oracle: String = {
-    val p = Dedup.minhashP
-    val seeds = Dedup.minhashSeeds(32)
-    def mins = seeds.zipWithIndex.map { case ((a, b), i) =>
-      s"min(($a * x + $b) % $p) AS m$i"
-    }.mkString(",\n    ")
-    val eqSum = (0 until 32).map(i => s"(sa.m$i = sb.m$i)::INT")
-      .mkString(" + ")
-    s"""WITH ws AS (SELECT doc_id,
-       |    list_filter(regexp_split_to_array(lower(text), '\\s+'),
-       |      x -> len(x) > 0) AS ws
-       |  FROM documents),
-       |sh0 AS (SELECT doc_id, list_distinct(list_transform(
-       |    range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]))
-       |    AS shingles FROM ws),
-       |hs0 AS (SELECT doc_id, list_transform(shingles,
-       |    s -> ${duckShingleHash(p)}) AS hs
-       |  FROM sh0 WHERE len(shingles) > 0),
-       |g AS (SELECT doc_id, unnest(hs) AS x FROM hs0),
-       |sa AS (SELECT
-       |    $mins
-       |  FROM g WHERE doc_id % 2 = 0),
-       |sb AS (SELECT
-       |    $mins
-       |  FROM g WHERE doc_id % 2 = 1)
-       |SELECT 32 AS h, CAST($eqSum AS BIGINT) AS n_equal,
-       |  ($eqSum)::DOUBLE / 32 AS est_jaccard
-       |FROM sa, sb""".stripMargin
-  }
+  val oracles: Map[String, String] =
+    registry.map { case (n, g) => n -> g.oracle }
 }

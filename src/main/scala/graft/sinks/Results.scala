@@ -199,8 +199,12 @@ object Results {
     w.toString
   }
 
-  def toAskJson(result: Boolean): String =
-    s"""{"head":{},"boolean":$result}"""
+  /** SPARQL results JSON for an ASK; `callback` wraps in JSON-P like
+    * [[toJson]]. */
+  def toAskJson(result: Boolean, callback: String = ""): String = {
+    val json = s"""{"head":{},"boolean":$result}"""
+    if (callback.isEmpty) json else s"$callback($json);"
+  }
 
   private def xmlEscape(s: String): String = s.flatMap {
     case '<' => "&lt;"; case '>' => "&gt;"; case '&' => "&amp;"

@@ -33,10 +33,12 @@ object PlanCache {
   /** answers with more rows than this are not kept */
   val MaxRows = 1000
 
-  /** A built query: its frame and whether it answers with a graph
-    * (CONSTRUCT / DESCRIBE) rather than solutions. */
+  /** A built query: its frame, whether it answers with a graph
+    * (CONSTRUCT / DESCRIBE) rather than solutions, and whether it is an
+    * ASK (a one-row `ask` frame that answers with a boolean). */
   final class Prepared private[PlanCache] (val df: DataFrame,
-                                           val graph: Boolean) {
+                                           val graph: Boolean,
+                                           val ask: Boolean) {
     @volatile private[PlanCache] var kept: Array[Row] = _
   }
 
@@ -76,7 +78,7 @@ object PlanCache {
     def built(): (Query, Prepared) = {
       val (q, df) = build
       (q, new Prepared(df, q.isInstanceOf[ConstructQ] ||
-        q.isInstanceOf[DescribeQ]))
+        q.isInstanceOf[DescribeQ], q.isInstanceOf[AskQ]))
     }
     // below opt level 3 the reference skips its query cache
     // (query-cache.c:270); same gate here

@@ -1,6 +1,5 @@
 package graft
 
-import graft.queries.RelationalQueries
 import graft.operators.Dedup
 import graft.rdf._
 import org.apache.spark.sql.functions._
@@ -20,7 +19,7 @@ class PlanSpec extends SparkTestBase {
 
   test("filters and projection push down to the parquet scan") {
     val plan = planOf(
-      RelationalQueries.queries("q01_scan_filter_project")(spark, sf))
+      SparkEntry.queries("q01_scan_filter_project")(spark, sf))
     assert(plan.contains("PushedFilters:") &&
       plan.contains("l_quantity"), s"no pushdown in:\n$plan")
     // projection pruning: scan must not read all 11 lineitem columns
@@ -30,7 +29,7 @@ class PlanSpec extends SparkTestBase {
 
   test("small dimension joins broadcast") {
     val plan = planOf(
-      RelationalQueries.queries("q03_join_customer_nation_region")(spark, sf))
+      SparkEntry.queries("q03_join_customer_nation_region")(spark, sf))
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), "dims should broadcast:\n" + plan)
   }
@@ -51,7 +50,7 @@ class PlanSpec extends SparkTestBase {
     // without it for this probe
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val df = RelationalQueries.queries("q02_agg_pricing_summary")(spark, sf)
+      val df = SparkEntry.queries("q02_agg_pricing_summary")(spark, sf)
       val codegen = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("codegen"))
       assert(codegen.contains("WholeStageCodegen subtrees") &&

@@ -29,6 +29,13 @@ class QueryCliSpec extends SparkTestBase {
       Seq("Alice", "Bob"))
   }
 
+  test("json format types an IRI binding as a uri, a literal as a literal") {
+    val out = QueryCli.run(spark, st, "json",
+      Seq("SELECT ?s ?n WHERE { ?s <urn:name> ?n } ORDER BY ?n")).mkString
+    assert(out.contains(""""s":{"type":"uri","value":"urn:a"}"""), out)
+    assert(out.contains(""""type":"literal","value":"Alice""""), out)
+  }
+
   test("xml format is a SPARQL results document") {
     val out = QueryCli.run(spark, st, "xml", Seq(q)).mkString("\n")
     assert(out.contains("<sparql xmlns=\"http://www.w3.org/2005/sparql-results#\">"))

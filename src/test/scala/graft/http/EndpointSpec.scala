@@ -1134,6 +1134,24 @@ class EndpointSpec extends SparkTestBase {
     } finally ep.stop()
   }
 
+  test("ASK answers json and xml in the SPARQL 1.1 boolean form") {
+    val ep = new Endpoint(spark, QuadStore.fromTerms(spark, people), 0)
+      .start()
+    try {
+      val base = s"http://localhost:${ep.boundPort}"
+      val yes = enc("ASK { ?s <urn:name> \"Alice\" }")
+      val no = enc("ASK { ?s <urn:name> \"Zed\" }")
+      val (cj, bj) = req(s"$base/sparql/?query=$yes&output=json")
+      assert(cj == 200 && bj.contains("\"boolean\":true") &&
+        !bj.contains("bindings"), bj)
+      val (cx, bx) = req(s"$base/sparql/?query=$no&output=xml")
+      assert(cx == 200 && bx.contains("<boolean>false</boolean>") &&
+        !bx.contains("<results>"), bx)
+      val (_, bp) = req(s"$base/sparql/?query=$yes&output=json&callback=cb")
+      assert(bp == """cb({"head":{},"boolean":true});""", bp)
+    } finally ep.stop()
+  }
+
   test("an apikey request hits the cache: the repeat submits 0 jobs") {
     val store = QuadStore.fromTerms(spark, people, graph = "urn:open")
       .union(QuadStore.fromTerms(spark, Seq(
