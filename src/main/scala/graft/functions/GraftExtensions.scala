@@ -61,13 +61,14 @@ object GraftFunctions {
       case Seq(t) => DMetaphoneCodes(t)
     },
     fn("graft_shingle_hashes",
-      "graft_shingle_hashes(text, k) — distinct 63-bit hashes of " +
-        "word k-shingles") {
+      "graft_shingle_hashes(text, k) — distinct 64-bit MD5-prefix " +
+        "hashes of word k-shingles") {
       case Seq(t, k) =>
         ShingleHashes(t, litInt(k, "graft_shingle_hashes", "k"))
     },
     fn("graft_word_hashes",
-      "graft_word_hashes(text) — per-word 63-bit hashes in order") {
+      "graft_word_hashes(text) — per-word 64-bit MD5-prefix hashes in " +
+        "order") {
       case Seq(t) => WordHashes(t)
     },
     fn("graft_simhash",

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,8 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *     `lower`/`split`)
   *   - shingle = k consecutive words joined by a single space; documents
   *     with fewer than k words produce no shingles
-  *   - hash    = xxhash64 with Spark's seed 42 (identical to
-  *     `functions.xxhash64`)
+  *   - hash    = [[TextHash.md5be64]], the first 8 MD5 digest bytes read
+  *     big-endian — the one text hash, reproducible in any SQL engine
   *   - distinct (ShingleHashes only) = first-occurrence order, by hash —
   *     collision-approximate exactly like Dedup.ngramJaccardPairs
   *     documents.
@@ -54,9 +54,6 @@ object TextHash {
     }
   }
 
-  private def hash(s: String): Long =
-    XXH64.hashUTF8String(UTF8String.fromString(s), 42L)
-
   private val md5Local =
     ThreadLocal.withInitial[java.security.MessageDigest](() =>
       java.security.MessageDigest.getInstance("MD5"))
@@ -75,12 +72,8 @@ object TextHash {
     h
   }
 
-  private def hashOf(s: String, md5: Boolean): Long =
-    if (md5) md5be64(s) else hash(s)
-
-  /** Distinct hashed k-word shingles of `text`, first-occurrence order.
-    * `md5` selects the portable hash over xxhash64(seed 42). */
-  def shingleHashes(text: UTF8String, k: Int, md5: Boolean): ArrayData = {
+  /** Distinct hashed k-word shingles of `text`, first-occurrence order. */
+  def shingleHashes(text: UTF8String, k: Int): ArrayData = {
     val ws = words(text)
     val n = ws.length
     if (n < k) return new GenericArrayData(Array.emptyLongArray)
@@ -96,7 +89,7 @@ object TextHash {
         sb.append(ws(i + j))
         j += 1
       }
-      val h = hashOf(sb.toString, md5)
+      val h = md5be64(sb.toString)
       if (seen.add(h)) { out(m) = h; m += 1 }
       i += 1
     }
@@ -106,7 +99,7 @@ object TextHash {
   /** POSITIONAL hashed k-word shingles: element i = hash of the gram
     * starting at token i (no distinct — alignment with token positions
     * is the point; [[ScrubSpans]] consumes the matched positions). */
-  def shinglePosHashes(text: UTF8String, k: Int, md5: Boolean): ArrayData = {
+  def shinglePosHashes(text: UTF8String, k: Int): ArrayData = {
     val ws = words(text)
     val n = ws.length
     if (n < k) return new GenericArrayData(Array.emptyLongArray)
@@ -120,7 +113,7 @@ object TextHash {
         sb.append(ws(i + j))
         j += 1
       }
-      out(i) = hashOf(sb.toString, md5)
+      out(i) = md5be64(sb.toString)
       i += 1
     }
     new GenericArrayData(out)
@@ -135,8 +128,8 @@ object TextHash {
     * `array_sort(array_distinct(transform(sequence, array_min(slice))))`
     * formulation: fewer grams than one window → the single whole-doc
     * minimum; no grams → empty. */
-  def winnowFps(text: UTF8String, k: Int, w: Int, md5: Boolean): ArrayData = {
-    val hsData = shinglePosHashes(text, k, md5)
+  def winnowFps(text: UTF8String, k: Int, w: Int): ArrayData = {
+    val hsData = shinglePosHashes(text, k)
     val n = hsData.numElements()
     if (n == 0) return new GenericArrayData(Array.emptyLongArray)
     val hs = new Array[Long](n)
@@ -179,8 +172,7 @@ object TextHash {
     * words() runs once and each position's gram strings share their
     * prefix builds (the order-k gram at start i extends the order-k−1
     * gram at i by one token). */
-  def shinglePosHashesUpTo(text: UTF8String, maxK: Int,
-                           md5: Boolean): ArrayData = {
+  def shinglePosHashesUpTo(text: UTF8String, maxK: Int): ArrayData = {
     val ws = words(text)
     val n = ws.length
     val arrs = new Array[Array[Long]](maxK)
@@ -197,7 +189,7 @@ object TextHash {
       while (j < maxK && i + j < n) {
         if (j > 0) sb.append(' ')
         sb.append(ws(i + j))
-        arrs(j)(i) = hashOf(sb.toString, md5)
+        arrs(j)(i) = md5be64(sb.toString)
         j += 1
       }
       i += 1
@@ -354,11 +346,11 @@ object TextHash {
 
   /** Hash of every word occurrence of `text` (multiplicity kept —
     * SimHash's majority vote weighs repeated words). */
-  def wordHashes(text: UTF8String, md5: Boolean): ArrayData = {
+  def wordHashes(text: UTF8String): ArrayData = {
     val ws = words(text)
     val out = new Array[Long](ws.length)
     var i = 0
-    while (i < ws.length) { out(i) = hashOf(ws(i), md5); i += 1 }
+    while (i < ws.length) { out(i) = md5be64(ws(i)); i += 1 }
     new GenericArrayData(out)
   }
 
@@ -751,8 +743,6 @@ object TextHash {
   }
 }
 
-/** `shingle_hashes(text, k)`: array<long> of distinct hashed k-shingles.
-  * `md5` selects the portable (SQL-reproducible) hash. */
 /** `lang_id(text)`: heuristic language ID in one pass — CJK codepoint
   * share first (>5% → "zh"), else the language whose stopword hit
   * ratio strictly exceeds the running best (languages in sorted order,
@@ -838,8 +828,8 @@ final case class RepStats(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-final case class ShingleHashes(child: Expression, k: Int,
-                               md5: Boolean = false)
+/** `shingle_hashes(text, k)`: array<long> of distinct hashed k-shingles. */
+final case class ShingleHashes(child: Expression, k: Int)
     extends UnaryExpression {
   require(k >= 1, s"shingle size must be >= 1, got $k")
   override def checkInputDataTypes(): TypeCheckResult =
@@ -849,10 +839,10 @@ final case class ShingleHashes(child: Expression, k: Int,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "shingle_hashes"
   override protected def nullSafeEval(input: Any): Any =
-    TextHash.shingleHashes(input.asInstanceOf[UTF8String], k, md5)
+    TextHash.shingleHashes(input.asInstanceOf[UTF8String], k)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextHash.shingleHashes($c, $k, $md5)")
+      s"graft.functions.TextHash.shingleHashes($c, $k)")
   override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
     copy(child = newChild)
 }
@@ -860,8 +850,7 @@ final case class ShingleHashes(child: Expression, k: Int,
 /** `shingle_pos_hashes(text, k)`: array<long> of POSITIONAL hashed
   * k-shingles — element i is the gram starting at token i, duplicates
   * kept so positions align with the token stream. */
-final case class ShinglePosHashes(child: Expression, k: Int,
-                                  md5: Boolean = false)
+final case class ShinglePosHashes(child: Expression, k: Int)
     extends UnaryExpression {
   require(k >= 1, s"shingle size must be >= 1, got $k")
   override def checkInputDataTypes(): TypeCheckResult =
@@ -871,10 +860,10 @@ final case class ShinglePosHashes(child: Expression, k: Int,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "shingle_pos_hashes"
   override protected def nullSafeEval(input: Any): Any =
-    TextHash.shinglePosHashes(input.asInstanceOf[UTF8String], k, md5)
+    TextHash.shinglePosHashes(input.asInstanceOf[UTF8String], k)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextHash.shinglePosHashes($c, $k, $md5)")
+      s"graft.functions.TextHash.shinglePosHashes($c, $k)")
   override protected def withNewChildInternal(newChild: Expression)
       : ShinglePosHashes = copy(child = newChild)
 }
@@ -883,8 +872,7 @@ final case class ShinglePosHashes(child: Expression, k: Int,
   * k (1-based) is [[TextHash.shinglePosHashes]](text, k); one
   * tokenize pass serves every order (see
   * [[TextHash.shinglePosHashesUpTo]]). */
-final case class ShinglePosHashesUpTo(child: Expression, maxK: Int,
-                                      md5: Boolean = false)
+final case class ShinglePosHashesUpTo(child: Expression, maxK: Int)
     extends UnaryExpression {
   require(maxK >= 1 && maxK <= 16,
     s"maxK must be in [1,16], got $maxK")
@@ -898,12 +886,11 @@ final case class ShinglePosHashesUpTo(child: Expression, maxK: Int,
       containsNull = false)
   override def prettyName: String = "shingle_pos_hashes_upto"
   override protected def nullSafeEval(input: Any): Any =
-    TextHash.shinglePosHashesUpTo(input.asInstanceOf[UTF8String], maxK,
-      md5)
+    TextHash.shinglePosHashesUpTo(input.asInstanceOf[UTF8String], maxK)
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextHash.shinglePosHashesUpTo($c, $maxK, $md5)")
+      s"graft.functions.TextHash.shinglePosHashesUpTo($c, $maxK)")
   override protected def withNewChildInternal(newChild: Expression)
       : ShinglePosHashesUpTo = copy(child = newChild)
 }
@@ -1039,8 +1026,8 @@ final case class WordsArray(child: Expression) extends UnaryExpression {
 /** `winnow_fps(text, k, w)`: sorted-distinct winnowing window minima
   * over 63-bit-masked positional k-gram hashes
   * (see [[TextHash.winnowFps]]). */
-final case class WinnowFps(child: Expression, k: Int, w: Int,
-                           md5: Boolean) extends UnaryExpression {
+final case class WinnowFps(child: Expression, k: Int, w: Int)
+    extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     if (!child.dataType.isInstanceOf[StringType])
       TypeCheckResult.TypeCheckFailure(
@@ -1052,10 +1039,10 @@ final case class WinnowFps(child: Expression, k: Int, w: Int,
     ArrayType(LongType, containsNull = false)
   override def prettyName: String = "winnow_fps"
   override protected def nullSafeEval(input: Any): Any =
-    TextHash.winnowFps(input.asInstanceOf[UTF8String], k, w, md5)
+    TextHash.winnowFps(input.asInstanceOf[UTF8String], k, w)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextHash.winnowFps($c, $k, $w, $md5)")
+      s"graft.functions.TextHash.winnowFps($c, $k, $w)")
   override protected def withNewChildInternal(newChild: Expression): WinnowFps =
     copy(child = newChild)
 }
@@ -1139,8 +1126,7 @@ final case class SubwordCount(child: Expression) extends UnaryExpression {
 }
 
 /** `word_hashes(text)`: array<long> of hashed word occurrences. */
-final case class WordHashes(child: Expression, md5: Boolean = false)
-    extends UnaryExpression {
+final case class WordHashes(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
@@ -1148,10 +1134,10 @@ final case class WordHashes(child: Expression, md5: Boolean = false)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "word_hashes"
   override protected def nullSafeEval(input: Any): Any =
-    TextHash.wordHashes(input.asInstanceOf[UTF8String], md5)
+    TextHash.wordHashes(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextHash.wordHashes($c, $md5)")
+      s"graft.functions.TextHash.wordHashes($c)")
   override protected def withNewChildInternal(newChild: Expression): WordHashes =
     copy(child = newChild)
 }

@@ -192,17 +192,15 @@ object F {
   private def c(e: Expression): Column = ColumnBridge.column(e)
   private def e(col: Column): Expression = ColumnBridge.expression(col)
 
-  def shingleHashes(text: Column, k: Int, md5: Boolean = false): Column =
-    c(ShingleHashes(e(text), k, md5))
-  def shinglePosHashes(text: Column, k: Int, md5: Boolean = false): Column =
-    c(ShinglePosHashes(e(text), k, md5))
-  def shinglePosHashesUpTo(text: Column, maxK: Int,
-                           md5: Boolean = false): Column =
-    c(ShinglePosHashesUpTo(e(text), maxK, md5))
+  def shingleHashes(text: Column, k: Int): Column =
+    c(ShingleHashes(e(text), k))
+  def shinglePosHashes(text: Column, k: Int): Column =
+    c(ShinglePosHashes(e(text), k))
+  def shinglePosHashesUpTo(text: Column, maxK: Int): Column =
+    c(ShinglePosHashesUpTo(e(text), maxK))
   def scrubSpans(text: Column, starts: Column, k: Int): Column =
     c(ScrubSpans(e(text), e(starts), k))
-  def wordHashes(text: Column, md5: Boolean = false): Column =
-    c(WordHashes(e(text), md5))
+  def wordHashes(text: Column): Column = c(WordHashes(e(text)))
   def wordsArray(text: Column): Column = c(WordsArray(e(text)))
   /** Word n-grams as strings. NULL-PROPAGATING (ADVICE_r17): null text
     * yields null, unlike the pre-r17 HOF formulation which returned [].
@@ -211,9 +209,8 @@ object F {
     * assume []. */
   def ngramStrings(text: Column, n: Int): Column =
     c(NgramStrings(e(text), n))
-  def winnowFps(text: Column, k: Int, w: Int,
-                md5: Boolean = false): Column =
-    c(WinnowFps(e(text), k, w, md5))
+  def winnowFps(text: Column, k: Int, w: Int): Column =
+    c(WinnowFps(e(text), k, w))
   def subwordCount(text: Column): Column = c(SubwordCount(e(text)))
   def enStopHits(text: Column): Column = c(EnStopHits(e(text)))
   def charClassStats(text: Column): Column = c(CharClassStats(e(text)))

@@ -51,8 +51,8 @@ object Chunking {
     * so detection runs as one hash shuffle instead of a global suffix
     * sort).
     *
-    * Gram hashing is [[Dedup.shingleHashRows]] (native codegen kernel;
-    * `portableHash` = oracle-reproducible MD5). Grams appearing in more
+    * Gram hashing is [[Dedup.shingleHashRows]] (native codegen kernel,
+    * oracle-reproducible MD5-derived hash). Grams appearing in more
     * than `maxDocs` documents are dropped as boilerplate/stop-spans —
     * the cap that keeps a viral span from exploding quadratically, per
     * the LSH-bucket discipline. Collision-approximate in the same sense
@@ -79,11 +79,10 @@ object Chunking {
     * pass. No stage ever holds more than (positions of one partition)
     * in memory. */
   def scrubDuplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-                           k: Int, minDocs: Int = 10,
-                           portableHash: Boolean = false): DataFrame = {
+                           k: Int, minDocs: Int = 10): DataFrame = {
     val F = graft.functions.F
     val pos = df.select(col(idCol).as("id"),
-        F.shinglePosHashes(col(textCol), k, portableHash).as("hs"))
+        F.shinglePosHashes(col(textCol), k).as("hs"))
       .select(col("id"), posexplode(col("hs")).as(Seq("pos", "h")))
     val viral = pos.select("id", "h").distinct()
       .groupBy("h").agg(count(lit(1)).as("nd"))
@@ -107,9 +106,8 @@ object Chunking {
   }
 
   def duplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-                      k: Int, maxDocs: Int = 50,
-                      portableHash: Boolean = false): DataFrame = {
-    val grams = Dedup.shingleHashRows(df, idCol, textCol, k, portableHash)
+                      k: Int, maxDocs: Int = 50): DataFrame = {
+    val grams = Dedup.shingleHashRows(df, idCol, textCol, k)
       .select(col("id"), col("h"))
     val buckets = grams.groupBy("h")
       .agg(collect_list("id").as("ids"))

@@ -29,12 +29,11 @@ object Decontaminate {
     * Documents with fewer than k words have no grams and report 0.
     */
   def flag(train: DataFrame, eval: DataFrame, idCol: String,
-           textCol: String, k: Int = 8,
-           portableHash: Boolean = false): DataFrame = {
+           textCol: String, k: Int = 8): DataFrame = {
     val evalGrams = Dedup
-      .shingleHashRows(eval, idCol, textCol, k, portableHash)
+      .shingleHashRows(eval, idCol, textCol, k)
       .select("h").distinct()
-    val hits = Dedup.shingleHashRows(train, idCol, textCol, k, portableHash)
+    val hits = Dedup.shingleHashRows(train, idCol, textCol, k)
       .join(broadcast(evalGrams), "h")
       // shingleHashRows emits each (id, h) once, so a plain count IS the
       // distinct-gram hit count — no count_distinct shuffle needed
@@ -77,17 +76,14 @@ object Decontaminate {
   def nearDupFlag(train: DataFrame, eval: DataFrame, idCol: String,
                   textCol: String, k: Int = 3, h: Int = 32,
                   bands: Int = 16, threshold: Double = 0.35,
-                  minBands: Int = 2,
-                  portableHash: Boolean = false): DataFrame = {
+                  minBands: Int = 2): DataFrame = {
     require(bands > 0 && h % bands == 0,
       s"nearDupFlag: bands=$bands must be positive and divide h=$h " +
         "(a non-divisor silently drops trailing signature positions " +
         "from banding; bands > h makes every band slice empty)")
     val rows = h / bands
-    val sigT = Dedup.minhashSignatures(train, idCol, textCol, k, h,
-      portableHash)
-    val sigE = Dedup.minhashSignatures(eval, idCol, textCol, k, h,
-      portableHash)
+    val sigT = Dedup.minhashSignatures(train, idCol, textCol, k, h)
+    val sigE = Dedup.minhashSignatures(eval, idCol, textCol, k, h)
     def banded(sig: DataFrame): DataFrame =
       sig.select(col("id"),
         posexplode(Dedup.bandBucketArray(col("sig"), bands, rows)))
@@ -126,12 +122,11 @@ object Decontaminate {
     * (map-side combined) aggregation shuffle.
     */
   def overlapFraction(train: DataFrame, eval: DataFrame, idCol: String,
-                      textCol: String, k: Int = 8,
-                      portableHash: Boolean = false): DataFrame = {
+                      textCol: String, k: Int = 8): DataFrame = {
     val evalGrams = Dedup
-      .shingleHashRows(eval, idCol, textCol, k, portableHash)
+      .shingleHashRows(eval, idCol, textCol, k)
       .select("h").distinct().withColumn("__hit", lit(1))
-    val stats = Dedup.shingleHashRows(train, idCol, textCol, k, portableHash)
+    val stats = Dedup.shingleHashRows(train, idCol, textCol, k)
       .join(broadcast(evalGrams), Seq("h"), "left_outer")
       .groupBy("id").agg(count(lit(1)).as("n_grams"),
         count(col("__hit")).as("n_hits"))
@@ -150,32 +145,24 @@ object Decontaminate {
     * every benchmark at once): the eval grams collapse into a fixed-size
     * bit array (`fpp` false-positive rate), so executor memory is
     * constant regardless of eval size. One-sided error in the SCAN -- a
-    * gram the bloom rejects is DEFINITELY not in eval -- and by default
-    * (`confirm = true`) the few bloom-surviving grams are then
-    * exact-checked with a semi-join against the true gram set, so the
-    * RESULT is exact: two-phase, constant executor memory. The bloom
-    * prunes the train gram stream to roughly true-hits + fpp BEFORE
-    * anything shuffles; the confirmation join then moves the full eval
-    * gram set once but only the tiny candidate stream on the train
-    * side -- never a broadcast of the eval grams, which is the whole
-    * premise of this variant. `confirm = false` keeps the raw one-pass
-    * scan (exact negatives; `n_hits` over-reports by at most `fpp` per
-    * gram) for workloads that only consume the `false` slice.
+    * gram the bloom rejects is DEFINITELY not in eval -- and the few
+    * bloom-surviving grams are then exact-checked with a semi-join
+    * against the true gram set, so the RESULT is exact: two-phase,
+    * constant executor memory. The bloom prunes the train gram stream
+    * to roughly true-hits + fpp BEFORE anything shuffles; the
+    * confirmation join then moves the full eval gram set once but only
+    * the tiny candidate stream on the train side -- never a broadcast
+    * of the eval grams, which is the whole premise of this variant.
     */
   def flagBloom(train: DataFrame, eval: DataFrame, idCol: String,
-                textCol: String, k: Int = 8, fpp: Double = 0.001,
-                portableHash: Boolean = false,
-                confirm: Boolean = true): DataFrame = {
-    val (evalGrams, bc) =
-      evalBloom(eval, idCol, textCol, k, fpp, portableHash)
+                textCol: String, k: Int = 8,
+                fpp: Double = 0.001): DataFrame = {
+    val (evalGrams, bc) = evalBloom(eval, idCol, textCol, k, fpp)
     val might = udf((h: Long) => bc.value.mightContainLong(h))
-    val candidates = Dedup
-      .shingleHashRows(train, idCol, textCol, k, portableHash)
+    val hits = Dedup
+      .shingleHashRows(train, idCol, textCol, k)
       .filter(might(col("h")))
-    val confirmed =
-      if (confirm) candidates.join(evalGrams, Seq("h"), "left_semi")
-      else candidates
-    val hits = confirmed
+      .join(evalGrams, Seq("h"), "left_semi")
       .groupBy("id").agg(count(lit(1)).as("n_hits"))
     train.select(col(idCol).as("id"))
       .join(hits, Seq("id"), "left_outer")
@@ -188,8 +175,7 @@ object Decontaminate {
     * eval k-gram hashes (column `h`) and a broadcast bloom filter over
     * them at false-positive rate `fpp`. */
   private[graft] def evalBloom(eval: DataFrame, idCol: String,
-                               textCol: String, k: Int, fpp: Double,
-                               portableHash: Boolean)
+                               textCol: String, k: Int, fpp: Double)
       : (DataFrame, Broadcast[BloomFilter]) = {
     // pinned: the gram set feeds multiple actions (size for bloom
     // sizing, the bloom build, and flagBloom's confirmation join). Lazy
@@ -198,7 +184,7 @@ object Decontaminate {
     // releases; checkpoint blocks are freed by the ContextCleaner as
     // soon as the result (and with it this RDD) becomes unreachable.
     val evalGrams = Dedup
-      .shingleHashRows(eval, idCol, textCol, k, portableHash)
+      .shingleHashRows(eval, idCol, textCol, k)
       .select("h").distinct().localCheckpoint(eager = false)
     val n = math.max(evalGrams.count(), 1L)
     val bloom = evalGrams.stat.bloomFilter("h", n, fpp)

@@ -568,11 +568,10 @@ object Dedup {
     * InferFiltersFromGenerate from duplicating the kernel into a scan-side
     * filter; the cheap IS NOT NULL drops shingle-less docs instead. */
   def shingleHashRows(df: DataFrame, idCol: String, textCol: String,
-                      k: Int, portableHash: Boolean = false): DataFrame = {
+                      k: Int): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     df.select(col(idCol).as("id"),
-        graft.functions.F.shingleHashes(col(textCol), k, portableHash)
-          .as("hs"))
+        graft.functions.F.shingleHashes(col(textCol), k).as("hs"))
       .repartition(par)
       .select(col("id"), size(col("hs")).as("nsh"),
         explode_outer(col("hs")).as("h"))
@@ -583,8 +582,7 @@ object Dedup {
     * POSITIONAL 63-bit-masked gram hashes, fps = the sorted-distinct
     * window minima. */
   private def winnowBase(df: DataFrame, idCol: String, textCol: String,
-                         k: Int, w: Int,
-                         portableHash: Boolean): DataFrame = {
+                         k: Int, w: Int): DataFrame = {
     require(k >= 1 && w >= 1, s"k=$k w=$w must be positive")
     // r17: fps come from the native WinnowFps kernel — the previous
     // array_sort(array_distinct(transform(sequence, array_min(slice))))
@@ -601,12 +599,10 @@ object Dedup {
     // only on the spans path; folding hs+fps into one struct-returning
     // kernel would save it at the cost of defeating Catalyst's hs
     // pruning for the fps-only consumers, which dominate.
-    val hs0 = graft.functions.F
-      .shinglePosHashes(col(textCol), k, portableHash)
+    val hs0 = graft.functions.F.shinglePosHashes(col(textCol), k)
     val hs = transform(hs0, h => h.bitwiseAND(lit(Long.MaxValue)))
     df.select(col(idCol).as("id"), hs.as("hs"),
-      graft.functions.F.winnowFps(col(textCol), k, w, portableHash)
-        .as("fps"))
+      graft.functions.F.winnowFps(col(textCol), k, w).as("fps"))
   }
 
   /** Winnowing document fingerprints (Schleimer, Wilkerson, Aiken 2003
@@ -629,9 +625,8 @@ object Dedup {
     * no shuffle, no UDF. Fingerprint-set size per doc is bounded by the
     * gram count / ~(w/2) windows-per-selection expectation. */
   def winnowingFingerprints(df: DataFrame, idCol: String, textCol: String,
-                            k: Int = 5, w: Int = 8,
-                            portableHash: Boolean = false): DataFrame =
-    winnowBase(df, idCol, textCol, k, w, portableHash)
+                            k: Int = 5, w: Int = 8): DataFrame =
+    winnowBase(df, idCol, textCol, k, w)
       .select(col("id"), col("fps"))
 
   /** Candidate pairs from shared winnowing fingerprints: documents that
@@ -659,9 +654,8 @@ object Dedup {
     * does not apply — same calculus as minhashSignatures' explode-
     * before-aggregate formulation). */
   def winnowingPairs(df: DataFrame, idCol: String, textCol: String,
-                     k: Int = 5, w: Int = 8, maxDf: Int = 128,
-                     portableHash: Boolean = false): DataFrame = {
-    val u0 = winnowingFingerprints(df, idCol, textCol, k, w, portableHash)
+                     k: Int = 5, w: Int = 8, maxDf: Int = 128): DataFrame = {
+    val u0 = winnowingFingerprints(df, idCol, textCol, k, w)
       .localCheckpoint(eager = false)
       .select(col("id"), explode(col("fps")).as("fp"))
     pairsFrom(u0, maxDf)
@@ -719,9 +713,8 @@ object Dedup {
     * boilerplate first (e.g. [[graft.operators.Chunking.scrubSpans]])
     * or raise the cap. */
   def winnowingSpans(df: DataFrame, idCol: String, textCol: String,
-                     k: Int = 5, w: Int = 8, maxDf: Int = 128,
-                     portableHash: Boolean = false): DataFrame = {
-    val base = winnowBase(df, idCol, textCol, k, w, portableHash)
+                     k: Int = 5, w: Int = 8, maxDf: Int = 128): DataFrame = {
+    val base = winnowBase(df, idCol, textCol, k, w)
       .localCheckpoint(eager = false)
     val u0 = base.select(col("id"), col("hs"),
       explode(col("fps")).as("fp"))
@@ -759,16 +752,14 @@ object Dedup {
     * and no interpreted array-HOF lambdas (the nested-HOF formulation
     * rehashed every shingle h times: 115 s for 5k docs). */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        k: Int, h: Int,
-                        portableHash: Boolean = false): DataFrame = {
+                        k: Int, h: Int): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     // the whole signature is ONE in-row kernel pass over the shingle-hash
     // array (graft.functions.MinHashSig): map-only, no explode/groupBy
     // shuffle anywhere in the signature stage. The 63-bit mask inside the
     // kernel makes signed-Long and unsigned-SQL reads of the hash agree.
     df.select(col(idCol).as("id"),
-        graft.functions.F.shingleHashes(col(textCol), k, portableHash)
-          .as("hs"))
+        graft.functions.F.shingleHashes(col(textCol), k).as("hs"))
       .repartition(par)
       .select(col("id"),
         graft.functions.F.minhashSig(col("hs"), minhashSeeds(h), minhashP)
@@ -785,15 +776,14 @@ object Dedup {
     */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    k: Int = 3, h: Int = 32, bands: Int = 16,
-                   threshold: Double = 0.5, minBands: Int = 1,
-                   portableHash: Boolean = false): DataFrame = {
+                   threshold: Double = 0.5, minBands: Int = 1): DataFrame = {
     require(bands > 0 && h % bands == 0,
       s"minhashPairs: bands=$bands must be positive and divide h=$h " +
         "(a non-divisor silently drops trailing signature positions " +
         "from banding; bands > h makes every band slice empty)")
     val rows = h / bands
     val sig =
-      minhashSignatures(df, idCol, textCol, k, h, portableHash).cache()
+      minhashSignatures(df, idCol, textCol, k, h).cache()
     // statically unrolled band hashes (xxhash64 hashes array<long> slices
     // directly): pure codegen, no interpreted per-band lambda, no string
     // concat riding the bucket-join shuffle
@@ -830,11 +820,10 @@ object Dedup {
     * ONE in-row kernel pass over the word-hash array
     * ([[graft.functions.SimHash64]]) — map-only, no explode/groupBy
     * shuffle; the repartition spreads single-file inputs over all cores. */
-  def simhash(df: DataFrame, idCol: String, textCol: String,
-              portableHash: Boolean = false): DataFrame = {
+  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     df.select(col(idCol).as("id"),
-        graft.functions.F.wordHashes(col(textCol), portableHash).as("whs"))
+        graft.functions.F.wordHashes(col(textCol)).as("whs"))
       .repartition(par)
       .select(col("id"), graft.functions.F.simhash64(col("whs"))
         .as("simhash"))
@@ -845,12 +834,11 @@ object Dedup {
     * Hamming distance <= maxHamming shares at least one chunk when
     * maxHamming < 4), verified with bit_count(xor). */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 6,
-                   portableHash: Boolean = false): DataFrame = {
+                   maxHamming: Int = 6): DataFrame = {
     // cache: the LSH self-join reads the chunked signatures on both
     // sides, and AQE's broadcast conversion defeats ReuseExchange — the
     // signature kernel would run twice per row otherwise
-    val sh = simhash(df, idCol, textCol, portableHash)
+    val sh = simhash(df, idCol, textCol)
     val chunked = sh.select(col("id"), col("simhash"),
       posexplode(array((0 until 4).map(c =>
         shiftrightunsigned(col("simhash"), c * 16)
@@ -917,9 +905,10 @@ object Dedup {
     * common shingles per pair, Jaccard = common / (|A| + |B| - common).
     * Only pairs sharing >= 1 shingle are ever materialized.
     *
-    * COLLISION-APPROXIMATE: shingles are collapsed to 64-bit xxhash64
-    * before the join, so two distinct shingles can alias and inflate
-    * `common` (possibly creating spurious pairs). With S distinct shingles
+    * COLLISION-APPROXIMATE: shingles are collapsed to the 64-bit
+    * [[graft.functions.TextHash.md5be64]] hash before the join, so two
+    * distinct shingles can alias and inflate `common` (possibly
+    * creating spurious pairs). With S distinct shingles
     * corpus-wide the expected number of aliased shingle pairs is ~S²/2⁶⁵ —
     * negligible below ~10⁹ shingles, and at 100 TB scale it perturbs a
     * similarity *estimate* already used with a threshold. Callers needing
@@ -1020,9 +1009,8 @@ object Dedup {
     * sketches union for free — the property that makes cross-corpus
     * comparison O(sketch) instead of O(corpus join)). */
   def corpusSignature(df: DataFrame, idCol: String, textCol: String,
-                      k: Int = 3, h: Int = 32,
-                      portableHash: Boolean = false): DataFrame = {
-    val sigs = minhashSignatures(df, idCol, textCol, k, h, portableHash)
+                      k: Int = 3, h: Int = 32): DataFrame = {
+    val sigs = minhashSignatures(df, idCol, textCol, k, h)
     val mins = (0 until h).map(i =>
       min(element_at(col("sig"), i + 1)).as(s"m$i"))
     sigs.agg(mins.head, mins.tail: _*)
@@ -1037,10 +1025,10 @@ object Dedup {
     * crawl snapshot at sketch cost — two map-side passes and two 1-row
     * aggregates, nothing ever co-shuffles. */
   def corpusOverlapEstimate(a: DataFrame, b: DataFrame, idCol: String,
-                            textCol: String, k: Int = 3, h: Int = 32,
-                            portableHash: Boolean = false): DataFrame = {
-    val sa = corpusSignature(a, idCol, textCol, k, h, portableHash)
-    val sb = corpusSignature(b, idCol, textCol, k, h, portableHash)
+                            textCol: String, k: Int = 3,
+                            h: Int = 32): DataFrame = {
+    val sa = corpusSignature(a, idCol, textCol, k, h)
+    val sb = corpusSignature(b, idCol, textCol, k, h)
     val eq = (0 until h).map(i =>
         when(sa(s"m$i") === sb(s"m$i"), 1).otherwise(0))
       .reduce(_ + _)
@@ -1064,10 +1052,12 @@ object Dedup {
     * snapshots landed: replay-safe, spec-proven. CALLER REQUIREMENT
     * for that: snapshot ids must sort lexicographically in processing
     * order (date-shaped ids do) — the same contract
-    * [[compactDedupIndex]] keys on. A params sidecar pins
-    * k/h/bands/portableHash fail-closed: a probe with different
-    * parameters would silently match nothing. CONCURRENCY: probes and
-    * compaction are SINGLE-WRITER per index — each runs under an
+    * [[compactDedupIndex]] keys on. A params sidecar pins k/h/bands
+    * and the hash stamp `portable=true` fail-closed: a probe with
+    * different parameters, or against an index stamped
+    * `portable=false` (xxhash64 signatures), would silently match
+    * nothing. CONCURRENCY: probes and compaction are SINGLE-WRITER
+    * per index — each runs under an
     * atomic-create `lock` file in `indexDir` and fails closed when it
     * is held (serialize your crawl drops; distinct-snapshot probes
     * commute semantically, so serializing them costs ordering only).
@@ -1117,8 +1107,7 @@ object Dedup {
   def dedupAgainstIndex(snapshot: DataFrame, idCol: String,
                         textCol: String, indexDir: String,
                         snapshotId: String, k: Int = 3, h: Int = 32,
-                        bands: Int = 16,
-                        portableHash: Boolean = false): DataFrame = {
+                        bands: Int = 16): DataFrame = {
     require(bands > 0 && h % bands == 0,
       s"dedupAgainstIndex: bands=$bands must be positive and divide " +
         s"h=$h (a non-divisor silently drops trailing signature " +
@@ -1128,7 +1117,7 @@ object Dedup {
         "and must be non-empty")
     withIndexLock(indexDir, "dedupAgainstIndex") {
     checkIndexParams(indexDir, "fp", "dedupAgainstIndex",
-      s"fp=md5norm k=$k h=$h bands=$bands portable=$portableHash")
+      s"fp=md5norm k=$k h=$h bands=$bands portable=true")
     val spark = snapshot.sparkSession
     val rows = h / bands
     // pinned: probed against the index, min-reduced intra-snapshot,
@@ -1155,7 +1144,7 @@ object Dedup {
         TextAnalysis.fingerprintMd5(col(textCol)).as("fp"))
       .localCheckpoint(false)
     val banded =
-      minhashSignatures(snapshot, idCol, textCol, k, h, portableHash)
+      minhashSignatures(snapshot, idCol, textCol, k, h)
         .select(col("id"),
           posexplode(bandBucketArray(col("sig"), bands, rows)))
         .withColumnRenamed("pos", "band")

@@ -197,15 +197,14 @@ object TextAnalysis {
     * broadcast needed (the count tables stay distributed; AQE
     * broadcasts them when small). */
   def ngramLmScore(train: DataFrame, score: DataFrame, idCol: String,
-                   textCol: String, addK: Double = 0.1,
-                   portableHash: Boolean = false): DataFrame = {
+                   textCol: String, addK: Double = 0.1): DataFrame = {
     val F = graft.functions.F
     // (id, h1, h2) per bigram OCCURRENCE: h2 = hash of "w_i w_{i+1}",
     // h1 = hash of w_i — position-aligned via ONE multi-order kernel
     // call per doc (per-order calls would re-tokenize per order)
     def bigramRows(df: DataFrame) =
       df.select(col(idCol).as("id"),
-          F.shinglePosHashesUpTo(col(textCol), 2, portableHash)
+          F.shinglePosHashesUpTo(col(textCol), 2)
             .as("am"))
         .select(col("id"), element_at(col("am"), 1).as("h1s"),
           posexplode(element_at(col("am"), 2)).as(Seq("i", "h2")))
@@ -215,8 +214,8 @@ object TextAnalysis {
     // unigram join, AND the vocab-size action — one train scan + one
     // shuffle for all three (the count() materializes the checkpoint;
     // consumers re-scan the blocks)
-    val fused = lmCountTables(train, textCol, order = 2, minCount = 1,
-      portableHash = portableHash).localCheckpoint(eager = false)
+    val fused = lmCountTables(train, textCol, order = 2, minCount = 1)
+      .localCheckpoint(eager = false)
     val c12 = fused.filter(col("k") === 2)
       .select(col("h").as("h2"), col("c").as("c12"))
     val c1 = fused.filter(col("k") === 1)
@@ -288,7 +287,6 @@ object TextAnalysis {
     * name its model trains none of them). */
   private[graft] def lmCountTables(train: DataFrame, textCol: String,
                                    order: Int, minCount: Int,
-                                   portableHash: Boolean,
                                    langCol: Option[String] = None)
       : DataFrame = {
     val F = graft.functions.F
@@ -298,7 +296,7 @@ object TextAnalysis {
     val src = langCol.fold(train)(lc => train.filter(col(lc).isNotNull))
     val fused = src
       .select(langKey(langCol), posexplode(
-          F.shinglePosHashesUpTo(col(textCol), order, portableHash))
+          F.shinglePosHashesUpTo(col(textCol), order))
         .as(Seq("k0", "arr")))
       .select(col("lang"), (col("k0") + 1).as("k"),
         explode(col("arr")).as("h"))
@@ -407,7 +405,6 @@ object TextAnalysis {
                           idCol: String, textCol: String, order: Int = 3,
                           alphaNum: Int = 2, alphaDen: Int = 5,
                           minCount: Int = 1,
-                          portableHash: Boolean = false,
                           langCol: Option[String] = None,
                           broadcastModel: Boolean = true): DataFrame = {
     require(order >= 2 && order <= 6,
@@ -418,14 +415,14 @@ object TextAnalysis {
       s"ngramLmScoreBackoff: minCount=$minCount must be >= 1")
     // ONE fused count pass (plan-gated via lmCountTables), pinned: the
     // per-order views feed 2·order−1 joins plus the (N, V) step
-    val fused = lmCountTables(train, textCol, order, minCount,
-      portableHash, langCol).localCheckpoint(eager = false)
+    val fused = lmCountTables(train, textCol, order, minCount, langCol)
+      .localCheckpoint(eager = false)
     // per-language (N, V): a languages-sized frame, broadcast into the
     // scoring positions — never collected
     val nv = fused.filter(col("k") === 1).groupBy("lang")
       .agg(sum(col("c")).as("__n"), count(lit(1)).as("__v"))
     lmBackoffScore(score, idCol, textCol, lmOrderTables(fused, order), nv,
-      order, alphaNum, alphaDen, portableHash, langCol, broadcastModel)
+      order, alphaNum, alphaDen, langCol, broadcastModel)
   }
 
   /** The scoring half of [[ngramLmScoreBackoff]], shared with the
@@ -455,7 +452,6 @@ object TextAnalysis {
                              textCol: String, cnts: Seq[DataFrame],
                              nv: DataFrame, order: Int,
                              alphaNum: Int, alphaDen: Int,
-                             portableHash: Boolean,
                              langCol: Option[String],
                              broadcastModel: Boolean): DataFrame = {
     val F = graft.functions.F
@@ -470,7 +466,7 @@ object TextAnalysis {
     // the Generate as a single attribute — never a shuffle.
     val arrs = score.select(col(idCol).as("id"),
         langKey(langCol, opaque = true),
-        F.shinglePosHashesUpTo(col(textCol), order, portableHash)
+        F.shinglePosHashesUpTo(col(textCol), order)
           .as("am"))
       .select(Seq(col("id"), col("lang")) ++
         (1 to order).map(k => element_at(col("am"), k).as(s"a$k")) :+
@@ -576,14 +572,15 @@ object TextAnalysis {
     * under and its per-language (lang, n, v) totals — one [[OneLang]]
     * row for a single-language model. */
   private final case class LmSidecar(order: Int, minCount: Int,
-                                     portableHash: Boolean,
                                      perLang: Boolean,
                                      langNv: Seq[(String, Long, Long)]) {
     /** The sidecar text: one header line; a single-language model puts
       * its n and v on it, a per-language model marks it `perlang=true`
-      * and adds one `lang= n= v=` line per language, in lang order. */
+      * and adds one `lang= n= v=` line per language, in lang order.
+      * `portable=true` stamps the gram hash
+      * ([[graft.functions.TextHash.md5be64]]). */
     def text: String = {
-      val head = s"order=$order minCount=$minCount portable=$portableHash"
+      val head = s"order=$order minCount=$minCount portable=true"
       if (perLang)
         (s"$head perlang=true" +: langNv.sortBy(_._1).map {
           case (l, n, v) => s"lang=$l n=$n v=$v" }).mkString("\n")
@@ -593,14 +590,21 @@ object TextAnalysis {
 
   /** Read a COMPLETE model's sidecar. None when params.lm.txt is
     * absent; the CALLER owns the error shape (scoring fails closed as
-    * an illegal state, appending as an illegal argument). */
+    * an illegal state, appending as an illegal argument). A model
+    * stamped other than `portable=true` was counted under xxhash64
+    * gram hashes, which no scorer computes: refused as an illegal
+    * state. */
   private def readLmSidecar(modelDir: String): Option[LmSidecar] = {
     val meta = java.nio.file.Paths.get(modelDir, "params.lm.txt")
     Option.when(java.nio.file.Files.exists(meta)) {
       val head +: langs = Sidecar.read(meta)
+      val stamp = head.getOrElse("portable", "")
+      if (stamp != "true") throw new IllegalStateException(
+        s"$meta is stamped portable=$stamp: its counts hash grams with " +
+          "xxhash64, not the MD5-derived hash every scorer uses — " +
+          "retrain the model")
       val perLang = head.get("perlang").contains("true")
-      LmSidecar(head("order").toInt, head("minCount").toInt,
-        head("portable").toBoolean, perLang,
+      LmSidecar(head("order").toInt, head("minCount").toInt, perLang,
         if (perLang) langs.map(m => (m("lang"), m("n").toLong, m("v").toLong))
         else Seq((OneLang, head("n").toLong, head("v").toLong)))
     }
@@ -678,7 +682,6 @@ object TextAnalysis {
     * race the overwrite like any file replaced under a reader. */
   def saveLmModel(train: DataFrame, textCol: String, modelDir: String,
                   order: Int = 3, minCount: Int = 1,
-                  portableHash: Boolean = false,
                   langCol: Option[String] = None): Unit = {
     require(order >= 2 && order <= 6,
       s"saveLmModel: order=$order out of [2,6]")
@@ -692,9 +695,9 @@ object TextAnalysis {
       // pass (reading N/V back from disk would also die on the
       // zero-file parquet dir an empty corpus produces — schema
       // inference, not the real error)
-      val fused = lmCountTables(train, textCol, order, minCount,
-        portableHash, langCol).localCheckpoint(eager = false)
-      val model = withLangTotals(LmSidecar(order, minCount, portableHash,
+      val fused = lmCountTables(train, textCol, order, minCount, langCol)
+        .localCheckpoint(eager = false)
+      val model = withLangTotals(LmSidecar(order, minCount,
         langCol.isDefined, Nil), fused, "saveLmModel", textCol, modelDir)
       // a single-language model's constant lang key stays off disk
       (if (model.perLang) fused.write.partitionBy("lang", "k")
@@ -747,7 +750,7 @@ object TextAnalysis {
         "single-language — only per-language models (saved with " +
         "langCol) can grow languages")
     val fused = lmCountTables(train, textCol, model.order, model.minCount,
-      model.portableHash, Some(langCol)).localCheckpoint(eager = false)
+      Some(langCol)).localCheckpoint(eager = false)
     val grown = withLangTotals(model, fused, "addLmModelLanguages",
       textCol, modelDir)
     // new partitions FIRST: dynamic overwrite touches only the lang=
@@ -825,8 +828,7 @@ object TextAnalysis {
       org.apache.spark.sql.types.StructType.fromDDL(
         "lang STRING, __n BIGINT, __v BIGINT"))
     lmBackoffScore(score, idCol, textCol, lmOrderTables(counts, model.order),
-      nv, model.order, alphaNum, alphaDen, model.portableHash, langCol,
-      broadcastModel)
+      nv, model.order, alphaNum, alphaDen, langCol, broadcastModel)
   }
 
   /** The saved-model count READ of [[ngramLmScoreWithModel]], pruned to
@@ -905,13 +907,12 @@ object TextAnalysis {
     * are bounded. */
   def dsirImportance(raw: DataFrame, target: DataFrame, idCol: String,
                      textCol: String, buckets: Int = 4096,
-                     addK: Double = 1.0,
-                     portableHash: Boolean = false): DataFrame = {
+                     addK: Double = 1.0): DataFrame = {
     require(buckets > 0 && (buckets & (buckets - 1)) == 0,
       s"buckets must be a power of two, got $buckets")
-    val tb = dsirCounts(target, textCol, buckets, portableHash, "tb")
+    val tb = dsirCounts(target, textCol, buckets, "tb")
       .localCheckpoint(eager = false) // consumed by total + scoring join
-    val rb = dsirCounts(raw, textCol, buckets, portableHash, "rb")
+    val rb = dsirCounts(raw, textCol, buckets, "rb")
       .localCheckpoint(eager = false)
     def total(df: DataFrame, c: String): Double =
       df.agg(sum(col(c))).collect()(0) match {
@@ -920,8 +921,7 @@ object TextAnalysis {
       }
     val tTot = total(tb, "tb")
     val rTot = total(rb, "rb")
-    val scored = dsirBuckets(raw, col(idCol), textCol, buckets,
-        portableHash)
+    val scored = dsirBuckets(raw, col(idCol), textCol, buckets)
       .join(broadcast(tb), Seq("b"), "left_outer")
       .join(broadcast(rb), Seq("b"), "left_outer") // always hits: b ∈ raw
       .withColumn("lw",
@@ -946,18 +946,17 @@ object TextAnalysis {
   /** (id, b) rows: one per bigram occurrence in `textCol`, `b` its
     * hashed bucket. */
   private def dsirBuckets(df: DataFrame, id: Column, textCol: String,
-                          buckets: Int, portableHash: Boolean): DataFrame =
+                          buckets: Int): DataFrame =
     df.select(id.as("id"), explode(graft.functions.F
-        .shinglePosHashes(col(textCol), 2, portableHash)).as("h"))
+        .shinglePosHashes(col(textCol), 2)).as("h"))
       .select(col("id"), pmod(col("h"), lit(buckets.toLong)).as("b"))
 
   /** [[dsirImportance]]'s count table of one corpus: (b, `name`) — each
     * hashed-bigram bucket and its occurrence count, at most `buckets`
     * rows whatever the corpus size. */
   private[graft] def dsirCounts(df: DataFrame, textCol: String,
-                                buckets: Int, portableHash: Boolean,
-                                name: String): DataFrame =
-    dsirBuckets(df, lit(0L), textCol, buckets, portableHash)
+                                buckets: Int, name: String): DataFrame =
+    dsirBuckets(df, lit(0L), textCol, buckets)
       .groupBy("b").agg(count(lit(1)).as(name))
 
   /** Linear bag-of-words classifier scoring — the fastText-style quality
@@ -1081,8 +1080,7 @@ object TextAnalysis {
   def trainLinearClassifier(df: DataFrame, idCol: String, textCol: String,
                             labelCol: String, buckets: Int = 64,
                             iters: Int = 3, fracBits: Int = 20,
-                            lrShift: Int = 26,
-                            portableHash: Boolean = false): DataFrame = {
+                            lrShift: Int = 26): DataFrame = {
     require(buckets > 0 && (buckets & (buckets - 1)) == 0 &&
       buckets <= (1 << 20),
       s"trainLinearClassifier: buckets=$buckets must be a power of two " +
@@ -1124,7 +1122,7 @@ object TextAnalysis {
     // twice (margin groupBy + residual join).
     val feat = df.select(col(idCol).as("id"),
         col(labelCol).cast("long").as("y"),
-        explode(F.wordHashes(col(textCol), portableHash)).as("h"))
+        explode(F.wordHashes(col(textCol))).as("h"))
       .select(col("id"), col("y"),
         pmod(col("h"), lit(buckets.toLong)).as("b"))
       .groupBy("id", "y", "b").agg(count(lit(1)).as("x"))
@@ -1175,8 +1173,7 @@ object TextAnalysis {
     * rejected for exactly that reason; persist the dense frame — it is
     * B-bounded (≤ 2^20 rows) by the trainer's own contract. */
   def linearScoreHashed(df: DataFrame, idCol: String, textCol: String,
-                        weights: DataFrame, buckets: Int,
-                        portableHash: Boolean = false): DataFrame = {
+                        weights: DataFrame, buckets: Int): DataFrame = {
     require(buckets > 0 && (buckets & (buckets - 1)) == 0,
       s"linearScoreHashed: buckets=$buckets must be a power of two")
     val F = graft.functions.F
@@ -1205,7 +1202,7 @@ object TextAnalysis {
       warr(b) = r.getDouble(1)
     }
     val tok = df.select(col(idCol),
-      explode_outer(F.wordHashes(col(textCol), portableHash)).as("h"))
+      explode_outer(F.wordHashes(col(textCol))).as("h"))
     tok.select(col(idCol),
         when(col("h").isNotNull,
           element_at(typedLit(warr), pmod(col("h"), lit(buckets.toLong))

@@ -414,8 +414,7 @@ object CurationGates {
         .filter(col("quality_score") >= 0.5)
       val train = kept.filter(col("doc_id") % 10 =!= 0)
       val eval = docs.filter(col("doc_id") % 10 === 0)
-      graft.operators.Decontaminate.flag(train, eval, "doc_id", "text",
-          k = 5, portableHash = true)
+      graft.operators.Decontaminate.flag(train, eval, "doc_id", "text", k = 5)
         .filter(!col("contaminated"))
         .join(train.select(col("doc_id"), col("n_tokens")),
           col("id") === col("doc_id"))

@@ -81,11 +81,10 @@ object DedupGates {
         .orderBy("doc_id")
     },
 
-    // MinHash-LSH near-dup candidates. portableHash (MD5-derived) lets a
-    // generated DuckDB oracle replicate the exact permutations + banding.
+    // MinHash-LSH near-dup candidates. The MD5-derived shingle hash lets
+    // a generated DuckDB oracle replicate the exact permutations + banding.
     // Generated MinHash oracle: identical permutations + band structure as
-    // Dedup.minhashPairs(k=3, h=32, bands=16, threshold=0.35, minBands=2,
-    // portableHash=true).
+    // Dedup.minhashPairs(k=3, h=32, bands=16, threshold=0.35, minBands=2).
     Gate("p03_minhash_pairs", {
       val p = Dedup.minhashP
       val seeds = Dedup.minhashSeeds(32)
@@ -113,15 +112,14 @@ object DedupGates {
          |ORDER BY id1, id2""".stripMargin
     }) { (s, d) =>
       Dedup.minhashPairs(t(s, d, "documents"), "doc_id", "text",
-          k = 3, h = 32, bands = 16, threshold = 0.35, minBands = 2,
-          portableHash = true)
+          k = 3, h = 32, bands = 16, threshold = 0.35, minBands = 2)
         .select("id1", "id2")
         .orderBy("id1", "id2")
     },
 
     // SimHash near-dup candidates (portable hash -> oracle-checked)
     // Generated SimHash oracle: identical bit votes, 16-bit chunk LSH and
-    // hamming verify as Dedup.simhashPairs(maxHamming=8, portableHash).
+    // hamming verify as Dedup.simhashPairs(maxHamming=8).
     Gate("p04_simhash_pairs", {
       val sums = (0 until 64).map(i =>
         s"sum(((h >> $i) & 1::UBIGINT)::BIGINT) AS b$i").mkString(",\n    ")
@@ -153,7 +151,7 @@ object DedupGates {
          |ORDER BY id1, id2""".stripMargin
     }) { (s, d) =>
       Dedup.simhashPairs(t(s, d, "documents"), "doc_id", "text",
-          maxHamming = 8, portableHash = true)
+          maxHamming = 8)
         .orderBy("id1", "id2")
     },
 
@@ -164,7 +162,7 @@ object DedupGates {
       graft.operators.Decontaminate.flag(
           docs.filter(col("doc_id") % 10 =!= 0),
           docs.filter(col("doc_id") % 10 === 0),
-          "doc_id", "text", k = 5, portableHash = true)
+          "doc_id", "text", k = 5)
         .select(col("id").as("doc_id"), col("n_hits"), col("contaminated"))
         .orderBy("doc_id")
     },
@@ -183,7 +181,7 @@ object DedupGates {
         |WHERE a.doc_id < c.doc_id
         |GROUP BY 1, 2 ORDER BY id1, id2""".stripMargin) { (s, d) =>
       Chunking.duplicatedSpans(t(s, d, "documents"), "doc_id", "text",
-          k = 14, maxDocs = 50, portableHash = true)
+          k = 14, maxDocs = 50)
         .orderBy("id1", "id2")
     },
 
@@ -196,7 +194,7 @@ object DedupGates {
       val eval = docs.filter(col("doc_id") % 10 === 0)
       val train = docs.filter(col("doc_id") % 10 =!= 0)
       graft.operators.Decontaminate.flagBloom(train, eval, "doc_id",
-          "text", k = 5, fpp = 0.001, portableHash = true)
+          "text", k = 5, fpp = 0.001)
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id")
     },
@@ -239,7 +237,7 @@ object DedupGates {
         |SELECT doc_id, clean_text, n_tokens_dropped FROM clean
         |ORDER BY doc_id""".stripMargin) { (s, d) =>
       Chunking.scrubDuplicatedSpans(t(s, d, "documents"), "doc_id",
-          "text", k = 13, minDocs = 2, portableHash = true)
+          "text", k = 13, minDocs = 2)
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id")
     },
@@ -261,7 +259,7 @@ object DedupGates {
       graft.operators.Decontaminate.overlapFraction(
           docs.filter(col("doc_id") % 10 =!= 0),
           docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-          k = 5, portableHash = true)
+          k = 5)
         .select(col("id").as("doc_id"), col("n_grams"), col("n_hits"),
           col("overlap_frac"))
         .orderBy("doc_id")
@@ -296,7 +294,7 @@ object DedupGates {
       Dedup.corpusOverlapEstimate(
         docs.filter(col("doc_id") % 2 === 0),
         docs.filter(col("doc_id") % 2 === 1),
-        "doc_id", "text", k = 3, h = 32, portableHash = true)
+        "doc_id", "text", k = 3, h = 32)
     },
 
     // winnowing fingerprints (MOSS): per-doc local fingerprint set,
@@ -312,7 +310,7 @@ object DedupGates {
         |    x -> CAST(x AS VARCHAR)), ',')) AS fps_md5
         |FROM f ORDER BY doc_id""".stripMargin) { (s, d) =>
       Dedup.winnowingFingerprints(t(s, d, "documents"),
-          "doc_id", "text", k = 5, w = 8, portableHash = true)
+          "doc_id", "text", k = 5, w = 8)
         .select(col("id").as("doc_id"),
           size(col("fps")).cast("long").as("n_fps"),
           md5(concat_ws(",",
@@ -334,7 +332,7 @@ object DedupGates {
         |FROM ur a JOIN ur b ON a.fp = b.fp AND a.doc_id < b.doc_id
         |GROUP BY 1, 2 ORDER BY id1, id2""".stripMargin) { (s, d) =>
       Dedup.winnowingPairs(t(s, d, "documents"), "doc_id", "text",
-          k = 5, w = 8, portableHash = true)
+          k = 5, w = 8)
         .select(col("id1"), col("id2"),
           col("n_shared").cast("long").as("n_shared"))
         .orderBy("id1", "id2")
@@ -385,7 +383,7 @@ object DedupGates {
         |  CAST(max(span) + 4 AS BIGINT) AS max_span_tokens
         |FROM sp GROUP BY 1, 2 ORDER BY id1, id2""".stripMargin) { (s, d) =>
       Dedup.winnowingSpans(t(s, d, "documents"), "doc_id", "text",
-          k = 5, w = 8, portableHash = true)
+          k = 5, w = 8)
         .select(col("id1"), col("id2"),
           col("n_shared").cast("long").as("n_shared"),
           col("max_span_tokens"))
@@ -503,7 +501,7 @@ object DedupGates {
       graft.operators.Decontaminate.nearDupFlag(
           docs.filter(col("doc_id") % 10 =!= 0),
           docs.filter(col("doc_id") % 10 === 0),
-          "doc_id", "text", portableHash = true)
+          "doc_id", "text")
         .select(col("id").as("doc_id"), col("n_near_eval"),
           col("contaminated"))
         .orderBy("doc_id")
@@ -572,10 +570,10 @@ object DedupGates {
         .createTempDirectory("graft-p68-").toString
       val decA = Dedup.dedupAgainstIndex(
         docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-        dir, "snapA", portableHash = true)
+        dir, "snapA")
       val decB = Dedup.dedupAgainstIndex(
         docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-        dir, "snapB", portableHash = true)
+        dir, "snapB")
       decA.unionByName(decB)
         .select(col("id").as("doc_id"), col("fp"), col("verdict"))
         .orderBy("doc_id")

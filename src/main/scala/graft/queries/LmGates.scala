@@ -28,7 +28,7 @@ object LmGates {
       val docs = t(s, d, "documents")
       TextAnalysis.ngramLmScore(docs.filter(col("doc_id") % 10 =!= 0),
         docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-        addK = 0.1, portableHash = true).cache()
+        addK = 0.1).cache()
     })
   }
 
@@ -389,7 +389,7 @@ object LmGates {
       TextAnalysis.dsirImportance(
           docs.filter(col("source") =!= "src0"),
           docs.filter(col("source") === "src0"),
-          "doc_id", "text", buckets = 4096, portableHash = true)
+          "doc_id", "text", buckets = 4096)
         .select(col("id").as("doc_id"), col("n_grams"), col("sum_tb"),
           col("sum_rb"), col("n_zero_t"))
         .orderBy("doc_id")
@@ -477,7 +477,7 @@ object LmGates {
       TextAnalysis.ngramLmScoreBackoff(
           docs.filter(col("doc_id") % 10 =!= 0),
           docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-          order = 3, portableHash = true)
+          order = 3)
         .select(col("id").as("doc_id"), col("n_tokens"), col("n_hit3"),
           col("n_hit2"), col("n_hit1"), col("n_oov"), col("sum_num"),
           col("sum_den"), col("sum_steps"))
@@ -495,7 +495,7 @@ object LmGates {
       TextAnalysis.trainLinearClassifier(
           docs.withColumn("y", col("lang") === "en"),
           "doc_id", "text", "y", buckets = 64, iters = 3,
-          fracBits = 20, lrShift = 26, portableHash = true)
+          fracBits = 20, lrShift = 26)
         .select(col("b"), col("w"))
         .orderBy("b")
     },
@@ -516,7 +516,7 @@ object LmGates {
       TextAnalysis.ngramLmScoreBackoff(
           docs.filter(col("doc_id") % 10 =!= 0),
           docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-          order = 3, minCount = 2, portableHash = true)
+          order = 3, minCount = 2)
         .select(col("id").as("doc_id"), col("n_tokens"), col("n_hit3"),
           col("n_hit2"), col("n_hit1"), col("n_oov"), col("sum_num"),
           col("sum_den"), col("sum_steps"))
@@ -539,7 +539,7 @@ object LmGates {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-p72-").toString
       TextAnalysis.saveLmModel(docs.filter(col("doc_id") % 10 =!= 0),
-        "text", dir, order = 3, minCount = 2, portableHash = true)
+        "text", dir, order = 3, minCount = 2)
       TextAnalysis.ngramLmScoreWithModel(dir,
           docs.filter(col("doc_id") % 10 === 0), "doc_id", "text")
         .select(col("id").as("doc_id"), col("n_tokens"), col("n_hit3"),
@@ -583,8 +583,7 @@ object LmGates {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-p73-").toString
       TextAnalysis.saveLmModel(docs.filter(col("doc_id") % 10 =!= 0),
-        "text", dir, order = 3, minCount = 2, portableHash = true,
-        langCol = Some("lang"))
+        "text", dir, order = 3, minCount = 2, langCol = Some("lang"))
       val ev = docs.filter(col("doc_id") % 10 === 0)
       val tripled = ev.select((col("doc_id") * 3).as("sid"),
           col("lang"), col("text"))
@@ -637,8 +636,7 @@ object LmGates {
       val scored = TextAnalysis.ngramLmScoreBackoff(
           docs.filter(col("doc_id") % 10 =!= 0),
           docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-          order = 3, minCount = 2, portableHash = true,
-          langCol = Some("lang"))
+          order = 3, minCount = 2, langCol = Some("lang"))
         .withColumn("ppl_proxy", expr(
           "(sum_steps * 1000000L) DIV greatest(n_tokens, 1L)"))
         .select("id", "lang", "n_tokens", "sum_steps", "ppl_proxy")
@@ -674,8 +672,7 @@ object LmGates {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-p76-").toString
       TextAnalysis.saveLmModel(train.filter(col("lang") =!= "en"),
-        "text", dir, order = 3, minCount = 2, portableHash = true,
-        langCol = Some("lang"))
+        "text", dir, order = 3, minCount = 2, langCol = Some("lang"))
       TextAnalysis.addLmModelLanguages(
         train.filter(col("lang") === "en"), "text", dir, "lang")
       TextAnalysis.ngramLmScoreWithModel(dir,

@@ -46,4 +46,14 @@ class BenchSpec extends SparkTestBase {
     for (k <- Seq("jobs", "stages", "tasks"))
       assert(count.get(k).asInt() >= 1, k)
   }
+
+  test("an unfiltered Bench run whose ingest fails reports it under " +
+      "errors as ingest") {
+    val noLineitem = Files.createTempDirectory("bench-no-lineitem")
+    val (full, _) = Bench.run(spark, noLineitem.toString, "4", Map.empty,
+      None, Files.createTempDirectory("bench-out"))
+    val errors = new ObjectMapper().readTree(full).get("errors")
+    assert(errors.fieldNames().asScala.toSeq == Seq("ingest"), full)
+    assert(errors.get("ingest").asText().nonEmpty, full)
+  }
 }

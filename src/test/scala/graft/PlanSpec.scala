@@ -362,18 +362,9 @@ class PlanSpec extends SparkTestBase {
     val docs = graft.core.Tables.t(spark, sf, "documents")
     val eval = docs.filter(col("doc_id") % 10 === 0)
     val train = docs.filter(col("doc_id") % 10 =!= 0)
-    // scan-only variant: the gram PROBE must be filter-shaped (no join
-    // of the FULL train gram stream against an eval-gram table)
-    val scanPlan = planOf(graft.operators.Decontaminate.flagBloom(
-      train, eval, "doc_id", "text", k = 5, confirm = false))
-    assert(!scanPlan.contains("SortMergeJoin(h") &&
-      !scanPlan.contains("ShuffledHashJoin(h"),
-      s"bloom probe turned into a gram join:\n$scanPlan")
-    assert(scanPlan.contains("Filter"), scanPlan)
-    // default two-phase exact variant: the confirmation semi-join is
-    // allowed, but it must sit ABOVE the bloom filter — i.e. only the
-    // bloom-surviving candidate stream reaches the h-join, so the
-    // train side still never shuffles its full gram stream
+    // the confirmation semi-join must sit ABOVE the bloom filter — i.e.
+    // only the bloom-surviving candidate stream reaches the h-join, so
+    // the train side never shuffles its full gram stream
     val exactPlan = planOf(graft.operators.Decontaminate.flagBloom(
       train, eval, "doc_id", "text", k = 5))
     val joinAt = exactPlan.indexOf("LeftSemi")
@@ -650,7 +641,7 @@ class PlanSpec extends SparkTestBase {
     val plan = planOf(graft.operators.TextAnalysis.ngramLmScoreBackoff(
       docs.filter(col("doc_id") % 10 =!= 0),
       docs.filter(col("doc_id") % 10 === 0),
-      "doc_id", "text", order = 3, portableHash = true))
+      "doc_id", "text", order = 3))
     val finalPlan = plan.split("== Initial Plan ==")(0)
     // the score side explodes ONCE (positions carry extracted 64-bit
     // keys, never the parent arrays) — a second Generate would mean the
@@ -681,7 +672,7 @@ class PlanSpec extends SparkTestBase {
       "for all orders (fused tagged count pass), map-side combined") {
     val docs = graft.core.Tables.t(spark, sf, "documents")
     val plan = planOf(graft.operators.TextAnalysis.lmCountTables(
-      docs, "text", order = 3, minCount = 2, portableHash = true))
+      docs, "text", order = 3, minCount = 2))
     val finalPlan = plan.split("== Initial Plan ==")(0)
     // one parquet scan of the train text — the fusion's whole point
     // (the per-order formulation scanned and shuffled `order` times)
@@ -709,8 +700,7 @@ class PlanSpec extends SparkTestBase {
     // shuffle — that is the whole point of one-pass multilingual
     // training vs CCNet's per-language corpus loop
     val cPlan = planOf(graft.operators.TextAnalysis.lmCountTables(
-        docs, "text", order = 3, minCount = 2, portableHash = true,
-        langCol = Some("lang")))
+        docs, "text", order = 3, minCount = 2, langCol = Some("lang")))
       .split("== Initial Plan ==")(0)
     val scans = "Scan parquet".r.findAllIn(cPlan).size
     assert(scans == 1, s"expected 1 train scan, got $scans:\n$cPlan")
@@ -725,8 +715,7 @@ class PlanSpec extends SparkTestBase {
     val sPlan = planOf(graft.operators.TextAnalysis.ngramLmScoreBackoff(
         docs.filter(col("doc_id") % 10 =!= 0),
         docs.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", order = 3, portableHash = true,
-        langCol = Some("lang")))
+        "doc_id", "text", order = 3, langCol = Some("lang")))
       .split("== Initial Plan ==")(0)
     val gens = "Generate posexplode".r.findAllIn(sPlan).size
     assert(gens == 1, s"expected 1 scoring explode, got $gens:\n$sPlan")

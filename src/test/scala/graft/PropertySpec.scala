@@ -97,26 +97,26 @@ class PropertySpec extends SparkTestBase {
       val u = UTF8String.fromString(s)
       val words = functions.TextHash.words(u)
       assert(words.forall(_.nonEmpty))
-      val hs = functions.TextHash.shingleHashes(u, k, false)
+      val hs = functions.TextHash.shingleHashes(u, k)
       val n = hs.numElements()
       if (words.length < k) assert(n == 0)
       else assert(n <= words.length - k + 1 && n >= 1)
       assert(hs.toLongArray.toSeq ==
-        functions.TextHash.shingleHashes(u, k, false).toLongArray.toSeq)
+        functions.TextHash.shingleHashes(u, k).toLongArray.toSeq)
     }
   }
 
   test("shinglePosHashesUpTo element k equals shinglePosHashes(k) on " +
-      "random input, both hash flavors (the LM kernel-fusion invariant)") {
-    for (s <- samples; md5 <- Seq(false, true)) {
+      "random input (the LM kernel-fusion invariant)") {
+    for (s <- samples) {
       val u = UTF8String.fromString(s)
-      val multi = functions.TextHash.shinglePosHashesUpTo(u, 6, md5)
+      val multi = functions.TextHash.shinglePosHashesUpTo(u, 6)
       assert(multi.numElements() == 6)
       for (k <- 1 to 6) {
-        val per = functions.TextHash.shinglePosHashes(u, k, md5)
+        val per = functions.TextHash.shinglePosHashes(u, k)
         assert(multi.getArray(k - 1).toLongArray.toSeq ==
           per.toLongArray.toSeq,
-          s"order $k diverged (md5=$md5) on: ${s.take(60)}")
+          s"order $k diverged on: ${s.take(60)}")
       }
     }
   }

@@ -25,6 +25,12 @@ class FunctionsSpec extends SparkTestBase {
   private def hofWords(c: org.apache.spark.sql.Column) =
     filter(split(lower(c), "\\s+"), w => length(w) > 0)
 
+  /** The text hash computed by Spark SQL's own md5 — the DuckDB oracle
+    * form `('0x' || substr(md5(s), 1, 16))::UBIGINT`, independent of the
+    * kernel under test. */
+  private def sqlMd5(s: org.apache.spark.sql.Column) =
+    conv(substring(md5(s), 1, 16), 16, -10).cast("long")
+
   test("WordsArray matches the HOF tokenizer (filter(split(lower)))") {
     val df = texts.toDF("id", "text")
     val expected = df.select(col("id"), hofWords(col("text")).as("ws"))
@@ -68,8 +74,8 @@ class FunctionsSpec extends SparkTestBase {
       (200L, ("lorem ipsum dolor sit amet " * 20).trim),
       (201L, ("spam spam spam spam spam spam spam spam " * 4).trim))
     val df = withLong.toDF("id", "text")
-    for (md5 <- Seq(false, true); k <- Seq(1, 3, 5); w <- Seq(1, 4, 8)) {
-      val hs = transform(F.shinglePosHashes(col("text"), k, md5),
+    for (k <- Seq(1, 3, 5); w <- Seq(1, 4, 8)) {
+      val hs = transform(F.shinglePosHashes(col("text"), k),
         h => h.bitwiseAND(lit(Long.MaxValue)))
       val hofFps = when(size(hs) === 0, array().cast("array<bigint>"))
         .when(size(hs) < w, array(array_min(hs)))
@@ -79,9 +85,9 @@ class FunctionsSpec extends SparkTestBase {
       val expected = df.select(col("id"), hofFps.as("fps"))
         .as[(Long, Seq[Long])].collect().toMap
       val actual = df.select(col("id"),
-          F.winnowFps(col("text"), k, w, md5).as("fps"))
+          F.winnowFps(col("text"), k, w).as("fps"))
         .as[(Long, Seq[Long])].collect().toMap
-      assert(actual == expected, s"k=$k w=$w md5=$md5")
+      assert(actual == expected, s"k=$k w=$w")
     }
     // null in, null out (the HOF chain also nulls through)
     val edge = Seq((0L, None: Option[String])).toDF("id", "text")
@@ -169,7 +175,7 @@ class FunctionsSpec extends SparkTestBase {
             transform(sequence(lit(0), size(ws) - k),
               i => concat_ws(" ", slice(ws, i + 1, lit(k))))))
       val expected = df.select(col("id"),
-        transform(hofShingles, s => xxhash64(s)).as("hs"))
+        transform(hofShingles, s => sqlMd5(s)).as("hs"))
         .as[(Long, Seq[Long])].collect().toMap
       val actual = df.select(col("id"), F.shingleHashes(col("text"), k).as("hs"))
         .as[(Long, Seq[Long])].collect().toMap
@@ -178,17 +184,17 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("ShinglePosHashesUpTo element k is bit-identical to the " +
-      "per-order ShinglePosHashes, both hash flavors, null-safe") {
+      "per-order ShinglePosHashes, null-safe") {
     val df = texts.toDF("id", "text")
-    for (md5 <- Seq(false, true); maxK <- Seq(1, 3, 5)) {
+    for (maxK <- Seq(1, 3, 5)) {
       val expected = df.select(col("id"),
           array((1 to maxK).map(k =>
-            F.shinglePosHashes(col("text"), k, md5)): _*).as("a"))
+            F.shinglePosHashes(col("text"), k)): _*).as("a"))
         .as[(Long, Seq[Seq[Long]])].collect().toMap
       val actual = df.select(col("id"),
-          F.shinglePosHashesUpTo(col("text"), maxK, md5).as("a"))
+          F.shinglePosHashesUpTo(col("text"), maxK).as("a"))
         .as[(Long, Seq[Seq[Long]])].collect().toMap
-      assert(actual == expected, s"maxK=$maxK md5=$md5")
+      assert(actual == expected, s"maxK=$maxK")
     }
     // null in, null out; short/empty docs yield empty inner arrays
     val edge = Seq((0L, Some("solo")), (1L, None), (2L, Some("")))
@@ -203,10 +209,10 @@ class FunctionsSpec extends SparkTestBase {
       .getSeq[scala.collection.Seq[Long]](1).forall(_.isEmpty))
   }
 
-  test("WordHashes matches xxhash64 over the HOF word array") {
+  test("WordHashes matches Spark SQL md5 over the HOF word array") {
     val df = texts.toDF("id", "text")
     val expected = df.select(col("id"),
-      transform(hofWords(col("text")), w => xxhash64(w)).as("hs"))
+      transform(hofWords(col("text")), w => sqlMd5(w)).as("hs"))
       .as[(Long, Seq[Long])].collect().toMap
     val actual = df.select(col("id"), F.wordHashes(col("text")).as("hs"))
       .as[(Long, Seq[Long])].collect().toMap

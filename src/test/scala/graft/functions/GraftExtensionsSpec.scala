@@ -46,6 +46,28 @@ class GraftExtensionsSpec extends SparkTestBase {
     assert(sqlRow.getSeq[Long](3) == apiRow.getSeq[Long](3))
   }
 
+  test("SQL hash functions compute the gate hash: graft_word_hashes is " +
+      "SQL md5 of each word, graft_minhash_sig is Dedup.minhashSignatures") {
+    import spark.implicits._
+    val md5Words = spark.sql(
+      """SELECT transform(array('foo', 'bar'),
+        |  w -> CAST(conv(substr(md5(w), 1, 16), 16, -10) AS BIGINT))"""
+        .stripMargin).first().getSeq[Long](0)
+    assert(spark.sql("SELECT graft_word_hashes('Foo bar')").first()
+      .getSeq[Long](0) == md5Words)
+    val docs = Seq((1L, "the quick brown fox jumps"),
+      (2L, "a b c a b c d"), (3L, "jumps over the lazy dog"))
+      .toDF("id", "t")
+    docs.createOrReplaceTempView("gx_docs")
+    val sqlSigs = spark.sql(
+      "SELECT id, graft_minhash_sig(t, 3, 8) AS sig FROM gx_docs")
+      .as[(Long, Seq[Long])].collect().toMap
+    val opSigs = graft.operators.Dedup.minhashSignatures(docs, "id", "t",
+        k = 3, h = 8)
+      .as[(Long, Seq[Long])].collect().toMap
+    assert(sqlSigs.size == 3 && sqlSigs == opSigs)
+  }
+
   test("vector kernels work from SQL on float arrays") {
     val got = spark.sql(
       """SELECT graft_vec_dot(CAST(array(1.0, 2.0) AS ARRAY<FLOAT>),

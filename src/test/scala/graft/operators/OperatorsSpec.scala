@@ -564,8 +564,7 @@ class OperatorsSpec extends SparkTestBase {
     val d = Seq((1L, "excellent excellent", true), (2L, "spam", false))
       .toDF("id", "text", "y")
     val w = TextAnalysis.trainLinearClassifier(d, "id", "text", "y",
-        buckets = 64, iters = 2, fracBits = 20, lrShift = 20,
-        portableHash = true)
+        buckets = 64, iters = 2, fracBits = 20, lrShift = 20)
       .collect().map(r => r.getAs[Long]("b") -> r.getAs[Long]("w")).toMap
     // iter 1: z=0 -> sigma4S = 2S; R = ∓2S; G55 = -2S*2, G57 = +2S;
     //   W55 = -floor(-4S/P) = 4, W57 = -floor(2S/P) = -2  (P = 2^20 = S)
@@ -589,15 +588,14 @@ class OperatorsSpec extends SparkTestBase {
     }
     val d = rows.toDF("id", "text", "y")
     val model = TextAnalysis.trainLinearClassifier(d, "id", "text", "y",
-      buckets = 64, iters = 3, fracBits = 20, lrShift = 12,
-      portableHash = true)
+      buckets = 64, iters = 3, fracBits = 20, lrShift = 12)
     val w = model.collect()
       .map(r => r.getAs[Long]("b") -> r.getAs[Long]("w")).toMap
     assert(w(55L) > 0L, s"planted positive key got w=${w(55L)}")
     assert(w(57L) < 0L, s"planted negative key got w=${w(57L)}")
     // round-trip: score with the trained model, threshold at 0
     val scored = TextAnalysis.linearScoreHashed(d, "id", "text",
-        model, buckets = 64, portableHash = true)
+        model, buckets = 64)
       .collect().map(r => r.getAs[Long]("id") ->
         r.getAs[Boolean]("label")).toMap
     rows.foreach { case (id, _, y) =>
@@ -605,8 +603,7 @@ class OperatorsSpec extends SparkTestBase {
     }
     // determinism: retraining yields bit-identical weights
     val w2 = TextAnalysis.trainLinearClassifier(d, "id", "text", "y",
-        buckets = 64, iters = 3, fracBits = 20, lrShift = 12,
-        portableHash = true)
+        buckets = 64, iters = 3, fracBits = 20, lrShift = 12)
       .collect().map(r => r.getAs[Long]("b") -> r.getAs[Long]("w")).toMap
     assert(w == w2, "training must be deterministic")
   }
@@ -617,14 +614,14 @@ class OperatorsSpec extends SparkTestBase {
       (2L, "other text", None)).toDF("id", "text", "y")
     val e = intercept[IllegalArgumentException] {
       TextAnalysis.trainLinearClassifier(withNull, "id", "text", "y",
-        buckets = 64, iters = 1, portableHash = true)
+        buckets = 64, iters = 1)
     }
     assert(e.getMessage.contains("NULL"))
     val nonCastable = Seq((1L, "good text", "yes"))
       .toDF("id", "text", "y")
     intercept[IllegalArgumentException] {
       TextAnalysis.trainLinearClassifier(nonCastable, "id", "text", "y",
-        buckets = 64, iters = 1, portableHash = true)
+        buckets = 64, iters = 1)
     }
     // numeric but out of {0,1}: a multi-class column passed by
     // mistake would corrupt the residual silently, so it fails too
@@ -632,7 +629,7 @@ class OperatorsSpec extends SparkTestBase {
       .toDF("id", "text", "y")
     val e3 = intercept[IllegalArgumentException] {
       TextAnalysis.trainLinearClassifier(multiClass, "id", "text", "y",
-        buckets = 64, iters = 1, portableHash = true)
+        buckets = 64, iters = 1)
     }
     assert(e3.getMessage.contains("{0,1}"))
   }
@@ -1016,7 +1013,7 @@ class OperatorsSpec extends SparkTestBase {
     val before = spark.sparkContext.getPersistentRDDs.size
     intercept[Exception] {
       TextAnalysis.trainLinearClassifier(d, "id", "text", "y",
-        buckets = 64, iters = 2, portableHash = true)
+        buckets = 64, iters = 2)
     }
     assert(spark.sparkContext.getPersistentRDDs.size == before,
       "feature cache leaked after a failed GD stage")
@@ -1026,20 +1023,20 @@ class OperatorsSpec extends SparkTestBase {
       "different bucket width (driver AIOOBE otherwise)") {
     val d = Seq((1L, "hello world", true)).toDF("id", "text", "y")
     val model = TextAnalysis.trainLinearClassifier(d, "id", "text", "y",
-      buckets = 128, iters = 1, portableHash = true)
+      buckets = 128, iters = 1)
     val e = intercept[IllegalArgumentException] {
       TextAnalysis.linearScoreHashed(d, "id", "text", model,
-        buckets = 64, portableHash = true)
+        buckets = 64)
     }
     assert(e.getMessage.contains("width"))
     // the other direction is just as wrong and previously SILENT:
     // scoring at a LARGER width than the model was trained at lands
     // tokens (pmod at a different modulus) in never-trained buckets
     val small = TextAnalysis.trainLinearClassifier(d, "id", "text", "y",
-      buckets = 32, iters = 1, portableHash = true)
+      buckets = 32, iters = 1)
     val e2 = intercept[IllegalArgumentException] {
       TextAnalysis.linearScoreHashed(d, "id", "text", small,
-        buckets = 64, portableHash = true)
+        buckets = 64)
     }
     assert(e2.getMessage.contains("width"))
   }
@@ -1677,8 +1674,7 @@ class OperatorsSpec extends SparkTestBase {
     // subset property: every fingerprint is one of the doc's own
     // (masked) gram hashes
     val grams = df.filter(col("doc_id") === 1L)
-      .select(graft.functions.F.shinglePosHashes(col("text"), 5,
-        md5 = false).as("hs"))
+      .select(graft.functions.F.shinglePosHashes(col("text"), 5).as("hs"))
       .select(explode(col("hs"))).collect()
       .map(r => r.getLong(0) & Long.MaxValue).toSet
     assert(out(1L).subsetOf(grams), "fps must be selected gram hashes")
@@ -2016,7 +2012,7 @@ class OperatorsSpec extends SparkTestBase {
     val raw = Seq((1L, "a b c"), (2L, "x y"), (3L, "solo"))
       .toDF("doc_id", "text")
     val out = TextAnalysis.dsirImportance(raw, target, "doc_id", "text",
-        buckets = 4096, addK = 1.0, portableHash = true)
+        buckets = 4096, addK = 1.0)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
          r.getDouble(5))).toMap
@@ -2513,10 +2509,6 @@ class OperatorsSpec extends SparkTestBase {
       Dedup.dedupAgainstIndex(docs, "doc_id", "text", dir, "s2",
         bands = 8) // different banding would silently match nothing
     }
-    intercept[IllegalArgumentException] {
-      Dedup.dedupAgainstIndex(docs, "doc_id", "text", dir, "s2",
-        portableHash = true)
-    }
     val ldir = p68TmpDir()
     Dedup.dedupLinesAgainstIndex(
       Seq((0L, "a\nb")).toDF("doc_id", "text"), "doc_id", "text",
@@ -2526,6 +2518,52 @@ class OperatorsSpec extends SparkTestBase {
         Seq((1L, "a b")).toDF("doc_id", "text"), "doc_id", "text",
         ldir, "s2", sep = " ")
     }
+  }
+
+  test("dedup indexes and LM models keep their portable=true stamp " +
+      "and still open; a portable=false (xxhash64) stamp is refused") {
+    def sidecar(dir: String, name: String): java.nio.file.Path =
+      java.nio.file.Paths.get(dir, name)
+    def read(f: java.nio.file.Path) =
+      new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    // the index sidecar is byte-identical to the one MD5-hashed indexes
+    // have always carried, and such an index keeps answering probes
+    val dir = p68TmpDir()
+    Dedup.dedupAgainstIndex(docs, "doc_id", "text", dir, "s1")
+    assert(read(sidecar(dir, "params.fp.txt")) ==
+      "fp=md5norm k=3 h=32 bands=16 portable=true")
+    assert(Dedup.dedupAgainstIndex(docs, "doc_id", "text", dir, "s2")
+      .select("verdict").as[String].collect().forall(_ == "drop_exact"))
+    val xdir = p68TmpDir()
+    java.nio.file.Files.write(sidecar(xdir, "params.fp.txt"),
+      "fp=md5norm k=3 h=32 bands=16 portable=false".getBytes("UTF-8"))
+    val staleIndex = intercept[IllegalArgumentException] {
+      Dedup.dedupAgainstIndex(docs, "doc_id", "text", xdir, "s1")
+    }
+    assert(staleIndex.getMessage.contains("portable=false"),
+      staleIndex.getMessage)
+    // same for the LM model sidecar head
+    val train = Seq((1L, "a b c"), (2L, "a b c"), (3L, "z b d"))
+      .toDF("id", "text")
+    val mdir = java.nio.file.Files
+      .createTempDirectory("graft-lm-stamp-").toString
+    TextAnalysis.saveLmModel(train, "text", mdir, order = 3)
+    val meta = sidecar(mdir, "params.lm.txt")
+    assert(read(meta) == "order=3 minCount=1 portable=true n=9 v=5")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getAs[Long]("id") -> r.toSeq).toMap
+    assert(rows(TextAnalysis.ngramLmScoreWithModel(mdir, train, "id",
+        "text")) ==
+      rows(TextAnalysis.ngramLmScoreBackoff(train, train, "id", "text",
+        order = 3)))
+    java.nio.file.Files.write(meta,
+      read(meta).replace("portable=true", "portable=false")
+        .getBytes("UTF-8"))
+    val staleModel = intercept[IllegalStateException] {
+      TextAnalysis.ngramLmScoreWithModel(mdir, train, "id", "text")
+    }
+    assert(staleModel.getMessage.contains("portable=false"),
+      staleModel.getMessage)
   }
 
   test("dedup indexes are single-writer: a held lock fails closed, " +
@@ -2721,7 +2759,7 @@ class OperatorsSpec extends SparkTestBase {
       java.nio.file.Paths.get(dir))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "params.txt"),
-      "fp=md5norm k=3 h=32 bands=16 portable=false".getBytes("UTF-8"))
+      "fp=md5norm k=3 h=32 bands=16 portable=true".getBytes("UTF-8"))
     // matching parameters pass through the legacy sidecar
     Dedup.dedupAgainstIndex(docs, "doc_id", "text", dir, "s1")
     // mismatched parameters still fail closed against it
